@@ -62,13 +62,8 @@ object Dedup {
     */
   private def widenByDoc(docs: DataFrame): DataFrame = {
     val sc = docs.sparkSession.sparkContext
-    val key = "graft.shingle.partitionsPerCore"
-    val raw = docs.sparkSession.conf.getOption(key)
-    val perCore = try raw.map(_.trim.toInt).getOrElse(0)
-    catch {
-      case e: NumberFormatException => throw new IllegalArgumentException(
-        s"malformed $key = '${raw.get}' (expected an integer)", e)
-    }
+    val perCore =
+      graft.GraftConf.int(docs.sparkSession, "graft.shingle.partitionsPerCore", 0)
     if (perCore > 0)
       docs.repartition(sc.defaultParallelism * perCore, col("doc_id"))
     else docs.repartition(col("doc_id"))

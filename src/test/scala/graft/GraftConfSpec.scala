@@ -1,0 +1,88 @@
+package graft
+
+import graft.sources.Snapshots
+import org.apache.spark.sql.functions.col
+
+/** A malformed numeric `graft.*` setting fails on the path that reads
+  * it with an error naming the key — never a bare
+  * NumberFormatException, never a silent fallback to the default.
+  */
+class GraftConfSpec extends SparkSpec {
+
+  private def frame(n: Int) = {
+    val s = spark
+    import s.implicits._
+    (0 until n).map(i => (i.toLong, s"t$i")).toDF("id", "tag")
+  }
+
+  /** Run `body` with `key` set to "x" and assert it refuses naming
+    * the key.
+    */
+  private def refusesNaming(key: String)(body: => Any): Unit = {
+    spark.conf.set(key, "x")
+    val e = try intercept[IllegalArgumentException](body)
+    finally spark.conf.unset(key)
+    assert(e.getMessage.contains(key), s"error must name $key: ${e.getMessage}")
+  }
+
+  test("every numeric graft.* key refuses a malformed value naming the key") {
+    val dir = TempDirs.create("graft-conf")
+    Snapshots.commit(frame(40).coalesce(1), dir, "overwrite",
+      statsColumns = Seq("id"))
+    // read before the publish: the commit is refused, nothing lands
+    refusesNaming("graft.checkpoint.autoEvery") {
+      Snapshots.commit(frame(5), dir, "append")
+    }
+    assert(Snapshots.latestVersion(spark, dir) === Some(0L))
+    refusesNaming("graft.dv.maxRowsPerFile") {
+      Snapshots.deleteWhere(spark, dir, col("id") === 1L)
+    }
+    assert(Snapshots.latestVersion(spark, dir) === Some(0L))
+    refusesNaming("graft.probe.maxKeys") {
+      Snapshots.readVersionKeys(spark, dir, "id", Seq(1L))
+    }
+    // the masked read path checks both purge-warning thresholds
+    Snapshots.deleteWhere(spark, dir, col("id") === 1L)
+    refusesNaming("graft.dv.purgeWarnMinRows") {
+      Snapshots.readVersion(spark, dir)
+    }
+    refusesNaming("graft.dv.purgeWarnRatio") {
+      Snapshots.readVersion(spark, dir)
+    }
+    refusesNaming("graft.txn.feedGraceMs") {
+      val s = spark
+      import s.implicits._
+      Snapshots.changeFeedBatches(dir)((_, _, _) => ())(
+        Seq(0L).toDF("version"), 0L)
+    }
+    val bucketed = TempDirs.create("graft-conf-bucketed")
+    Snapshots.commit(frame(40), bucketed, "overwrite",
+      bucketBy = Some(("id", 4)))
+    refusesNaming("graft.aligned.splitBucketBytes") {
+      Snapshots.bucketAlignedAggregate(spark, bucketed,
+        Seq(("count", "*", "n"))).collect()
+    }
+    refusesNaming("graft.shingle.partitionsPerCore") {
+      graft.operators.Dedup.ngramJaccardDocs(
+        frame(3).withColumnRenamed("id", "doc_id")
+          .withColumnRenamed("tag", "text"))
+    }
+  }
+
+  test("Tables.load serves the schema of a file rewritten at the same path") {
+    val s = spark
+    import s.implicits._
+    val sf = TempDirs.create("graft-tables")
+    val p = s"$sf/region.parquet"
+    Seq((1L, "a")).toDF("r_regionkey", "r_name").coalesce(1)
+      .write.mode("overwrite").parquet(p)
+    assert(Tables.region(spark, sf).columns.toSeq === Seq("r_regionkey", "r_name"))
+    // the rewrite lands with a later mtime; wait out coarse clocks
+    Thread.sleep(1100)
+    Seq((1L, "a", "c")).toDF("r_regionkey", "r_name", "r_comment").coalesce(1)
+      .write.mode("overwrite").parquet(p)
+    val again = Tables.region(spark, sf)
+    assert(again.columns.toSeq === Seq("r_regionkey", "r_name", "r_comment"))
+    assert(again.collect().head.getString(2) === "c")
+  }
+}

@@ -700,8 +700,12 @@ class ManifestShardingSpec extends SparkSpec {
     val expected = m.files.filter(rel => m.fileBytes(rel) < minBytes).toSet
     assert(expected.nonEmpty && expected.size < m.files.size,
       "the fixture needs both small and large files")
-    val got = Snapshots.smallCandidatesCheckpointed(spark, dir, v, minBytes)
-      .getOrElse(fail("a covering checkpoint exists — must plan through it"))
+    // compactSmall's candidate verdict over the planning walk, which
+    // plans through the covering checkpoint here
+    val got = Snapshots.liveEntriesCheckpointed(spark, dir, v,
+        (r: Snapshots.CkptFile) => r.bytes.forall(_ < minBytes))
+      .getOrElse(fail("a sharded manifest must plan"))
+      .map(e => e.file -> e.bytes.get).toMap
     assert(got.keySet === expected,
       "checkpoint-planned candidates must equal the driver ledger walk")
     assert(got.forall { case (rel, sz) => m.fileBytes(rel) == sz },

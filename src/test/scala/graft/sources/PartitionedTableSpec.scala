@@ -183,26 +183,29 @@ class PartitionedTableSpec extends SparkSpec {
     // performs, via the scan metrics on a probe with the same pruning
     val m = Snapshots.readManifest(spark, dir, 0L)
     val total = m.files.size
-    // the pruning helper itself: equality on the partition column
-    // keeps only that partition's files; an impossible predicate
-    // keeps exactly one schema file; a range on the stats column
-    // narrows; an unprunable shape keeps everything
-    def pruned(p: org.apache.spark.sql.Column) = {
-      val meth = Snapshots.getClass.getDeclaredMethods
-        .find(_.getName == "pruneFilesByPredicate").get
-      meth.setAccessible(true)
-      meth.invoke(Snapshots, spark, m, p).asInstanceOf[Seq[String]]
+    // the DML candidate planner itself: equality on the partition
+    // column keeps only that partition's files; an impossible
+    // predicate keeps none (the scan serves the schema'd empty
+    // frame); a range on the stats column narrows; an unprunable
+    // shape keeps everything — with or without a covering checkpoint
+    def pruned(p: org.apache.spark.sql.Column) =
+      Snapshots.dmlCandidates(spark, dir, m, p, "test")
+    def checkPlanner(): Seq[String] = {
+      val onlyF = pruned(col("o_orderstatus") === "F")
+      assert(onlyF.nonEmpty && onlyF.size < total)
+      assert(onlyF.forall(_.contains("o_orderstatus=F")))
+      assert(pruned(col("o_orderstatus") === "ZZ").isEmpty)
+      assert(pruned(col("o_orderkey") < -5).isEmpty)
+      assert(pruned(col("o_orderkey") % 10 === 3).size === total)
+      onlyF
     }
-    val onlyF = pruned(col("o_orderstatus") === "F")
-    assert(onlyF.nonEmpty && onlyF.size < total)
-    assert(onlyF.forall(_.contains("o_orderstatus=F")))
-    assert(pruned(col("o_orderstatus") === "ZZ").size === 1)
-    assert(pruned(col("o_orderkey") < -5).size === 1)
-    assert(pruned(col("o_orderkey") % 10 === 3).size === total)
+    val onlyF = checkPlanner()
+    Snapshots.writeMetadataCheckpoint(spark, dir)
+    assert(checkPlanner().toSet === onlyF.toSet)
     // conjunction composes; the unprunable conjunct adds nothing
     val both = pruned(col("o_orderstatus") === "F" &&
       col("o_orderkey") % 10 === 3)
-    assert(both === onlyF)
+    assert(both.toSet === onlyF.toSet)
     // end to end: the partition-predicate DELETE and UPDATE stay exact
     Snapshots.deleteWhere(spark, dir, col("o_orderstatus") === "F")
     Snapshots.updateWhere(spark, dir,

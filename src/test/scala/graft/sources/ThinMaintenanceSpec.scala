@@ -3,15 +3,19 @@ package graft.sources
 import graft.SparkSpec
 import org.apache.spark.sql.functions._
 
-/** Segment-diff maintenance publishes (VERDICT r15 task #1): the thin
-  * paths of [[Snapshots.compactSmall]] / [[Snapshots.clusterTail]] /
-  * [[Snapshots.purgeDeletes]] must plan candidates through the
-  * checkpoint, resolve their base THIN, and publish a manifest DELTA —
-  * never consulting a segment the rewrite does not touch. The proof is
-  * [[Snapshots.segmentTouchHook]]: it observes every `cachedSegment`
-  * call (cache hits included), so "untouched segments untouched" is a
-  * recorded fact, not an inference — the driver-side twin of
-  * [[CountingLocalFs]]'s getFileStatus ledger proof.
+/** One path per table DML and maintenance operation: the append
+  * commit, [[Snapshots.deleteWhere]], [[Snapshots.updateWhere]],
+  * [[Snapshots.mergeOnRead]], [[Snapshots.purgeDeletes]],
+  * [[Snapshots.clusterTail]] and [[Snapshots.compactSmall]] each plan
+  * candidates with [[Snapshots.liveEntriesCheckpointed]] (a covering
+  * checkpoint, else the driver walk over every segment), resolve
+  * their base THIN and publish a manifest DELTA — and with a covering
+  * checkpoint never consult a segment the operation does not touch.
+  * The proof is [[Snapshots.segmentTouchHook]]: it observes every
+  * `cachedSegment` call (cache hits included), so "untouched segments
+  * untouched" is a recorded fact, not an inference — the driver-side
+  * twin of [[CountingLocalFs]]'s getFileStatus ledger proof. Tables
+  * with and without a checkpoint must agree map-for-map.
   */
 class ThinMaintenanceSpec extends SparkSpec {
 
@@ -36,15 +40,27 @@ class ThinMaintenanceSpec extends SparkSpec {
   }
 
   /** The segments owning `rels` at `version`, via the same planning
-    * walk the thin operators use.
+    * walk the operators use.
     */
   private def owningSegs(dir: String, version: Long,
                          rels: Set[String]): Set[String] = {
     val all = Snapshots.liveEntriesCheckpointed(spark, dir, version,
       (_: Snapshots.CkptFile) => true)
-      .getOrElse(fail("fixture must have a covering checkpoint"))
+      .getOrElse(fail("fixture must not be a legacy inline manifest"))
     all.filter(e => rels.contains(e.file)).map(_.seg).toSet
   }
+
+  private def content(d: String): Set[(Long, String)] =
+    Snapshots.readVersion(spark, d)
+      .collect().map(r => (r.getLong(0), r.getString(1))).toSet
+
+  /** Three range-sliced commits with key stats → three segments. */
+  private def seedSlices(d: String): Unit =
+    (0 until 3).foreach { i =>
+      Snapshots.commit(frame(i * 1000 until i * 1000 + 1000, s"b$i")
+          .coalesce(1), d,
+        if (i == 0) "overwrite" else "append", statsColumns = Seq("id"))
+    }
 
   test("thin compactSmall: untouched segments never consulted, masks " +
     "consolidated, ledger exact, carried metadata intact") {
@@ -81,7 +97,7 @@ class ThinMaintenanceSpec extends SparkSpec {
     }
     assert(v1 === v0 + 1)
     assert(touched.nonEmpty && touched.subsetOf(expectedSegs),
-      s"thin compactSmall consulted segments beyond the smalls' own: " +
+      s"compactSmall consulted segments beyond the smalls' own: " +
         s"touched=$touched expected⊆$expectedSegs")
 
     val m1 = Snapshots.readManifest(spark, dir, v1)
@@ -105,7 +121,7 @@ class ThinMaintenanceSpec extends SparkSpec {
     // per-file ledgers cover every live file
     assert(m1.files.forall(m1.fileBytes.contains) &&
       m1.files.forall(m1.fileRows.contains))
-    // idempotence through the thin path: nothing small left
+    // idempotent: nothing small left
     assert(Snapshots.compactSmall(spark, dir, minBytes) === v1)
   }
 
@@ -172,7 +188,7 @@ class ThinMaintenanceSpec extends SparkSpec {
     }
     assert(v1 === v0 + 1)
     assert(touched.nonEmpty && touched.subsetOf(expectedSegs),
-      s"thin clusterTail consulted segments beyond the tail's own: " +
+      s"clusterTail consulted segments beyond the tail's own: " +
         s"touched=$touched expected⊆$expectedSegs")
     val m1 = Snapshots.readManifest(spark, dir, v1)
     assert(m1.files.forall(m1.buckets.contains),
@@ -188,7 +204,7 @@ class ThinMaintenanceSpec extends SparkSpec {
     val post = Snapshots.readVersion(spark, dir)
       .collect().map(r => (r.getLong(0), r.getString(1))).toSet
     assert(post === pre)
-    // idempotent through the thin path
+    // idempotent
     assert(Snapshots.clusterTail(spark, dir) === v1)
   }
 
@@ -212,7 +228,7 @@ class ThinMaintenanceSpec extends SparkSpec {
     }
     assert(v1 === v0 + 1)
     assert(touched.subsetOf(expectedSegs),
-      s"thin purge consulted segments beyond the masked file's own: " +
+      s"purge consulted segments beyond the masked file's own: " +
         s"touched=$touched expected⊆$expectedSegs")
     val m1 = Snapshots.readManifest(spark, dir, v1)
     assert(m1.dvs.isEmpty && m1.dvRows === 0L)
@@ -222,20 +238,20 @@ class ThinMaintenanceSpec extends SparkSpec {
       "purge must inherit stat coverage onto the rewritten files")
     assert(m1.dataRows === 290L)
     assert(Snapshots.readVersion(spark, dir).count() === 290L)
-    // maskless purge through the thin path: a pure-metadata version
+    // maskless purge: a pure-metadata version
     // bump that carries EVERY segment verbatim — zero touches
     val (v2, touched2) = recordTouches { Snapshots.purgeDeletes(spark, dir) }
     assert(v2 === v1 + 1)
     assert(touched2.isEmpty,
-      s"a maskless thin purge must consult no segment, got $touched2")
+      s"a maskless purge must consult no segment, got $touched2")
     assert(Snapshots.readVersion(spark, dir).count() === 290L)
   }
 
-  test("thin appends (r16): an append consults ZERO segments, carries " +
-    "masks and metadata verbatim, and equals the full publish " +
-    "map-for-map") {
-    val thinDir = freshDir()
-    val fullDir = freshDir()
+  test("appends (r16): an append consults ZERO segments, carries masks " +
+    "and metadata verbatim, and a checkpointed and an uncheckpointed " +
+    "twin agree map-for-map") {
+    val ckDir = freshDir()
+    val plainDir = freshDir()
     def seed(d: String): Unit = {
       Snapshots.commit(frame(0 until 500, "a").coalesce(1), d, "overwrite",
         statsColumns = Seq("id"), bloomColumns = Seq("id"),
@@ -244,220 +260,300 @@ class ThinMaintenanceSpec extends SparkSpec {
         statsColumns = Seq("id"))
       Snapshots.deleteWhere(spark, d, col("id").isin(3L, 501L))
     }
-    seed(thinDir); seed(fullDir)
+    seed(ckDir); seed(plainDir)
+    Snapshots.writeMetadataCheckpoint(spark, ckDir)
     val batch = frame(2000 until 2100, "tail").coalesce(1)
-    // thin side: the append must touch NO segment (no candidates, no
-    // folds — refs carried verbatim)
-    val (_, touched) = recordTouches {
-      Snapshots.commit(batch, thinDir, "append", statsColumns = Seq("id"))
+    // an append has no candidates and no folds: segment refs are
+    // carried verbatim with or without a checkpoint
+    Seq(ckDir, plainDir).foreach { d =>
+      val (_, touched) = recordTouches {
+        Snapshots.commit(batch, d, "append", statsColumns = Seq("id"))
+      }
+      assert(touched.isEmpty, s"an append must consult no segment, got $touched")
     }
-    assert(touched.isEmpty,
-      s"a thin append must consult no segment, got $touched")
-    // full side: same append with the thin path disabled
-    try {
-      spark.conf.set("graft.commit.thinAppend.enabled", "false")
-      Snapshots.commit(batch, fullDir, "append", statsColumns = Seq("id"))
-    } finally spark.conf.unset("graft.commit.thinAppend.enabled")
-    val mT = Snapshots.readManifest(spark, thinDir,
-      Snapshots.latestVersion(spark, thinDir).get)
-    val mF = Snapshots.readManifest(spark, fullDir,
-      Snapshots.latestVersion(spark, fullDir).get)
+    val mC = Snapshots.readManifest(spark, ckDir,
+      Snapshots.latestVersion(spark, ckDir).get)
+    val mP = Snapshots.readManifest(spark, plainDir,
+      Snapshots.latestVersion(spark, plainDir).get)
     // map-for-map equality up to the dirs' own uuid'd file names:
     // counts, ledgers, stat/bloom coverage, mask accounting
-    assert(mT.files.size === mF.files.size)
-    assert(mT.dataRows === mF.dataRows && mT.dvRows === mF.dvRows)
-    assert(mT.stats.size === mF.stats.size)
-    assert(mT.blooms.size === mF.blooms.size)
-    assert(mT.ndvs.size === mF.ndvs.size)
-    assert(mT.fileRows.values.toSeq.sorted ===
-      mF.fileRows.values.toSeq.sorted)
-    assert(mT.schema === mF.schema)
-    // content identical, masks survived the thin carry
-    val a = Snapshots.readVersion(spark, thinDir)
-      .collect().map(r => (r.getLong(0), r.getString(1))).toSet
-    val b = Snapshots.readVersion(spark, fullDir)
-      .collect().map(r => (r.getLong(0), r.getString(1))).toSet
-    assert(a === b)
+    assert(mC.files.size === mP.files.size)
+    assert(mC.dataRows === mP.dataRows && mC.dvRows === mP.dvRows)
+    assert(mC.stats.size === mP.stats.size)
+    assert(mC.blooms.size === mP.blooms.size)
+    assert(mC.ndvs.size === mP.ndvs.size)
+    assert(mC.fileRows.values.toSeq.sorted ===
+      mP.fileRows.values.toSeq.sorted)
+    assert(mC.schema === mP.schema)
+    // content identical, masks survived the verbatim carry
+    val a = content(ckDir)
+    assert(a === content(plainDir))
     assert(!a.exists(_._1 == 3L) && !a.exists(_._1 == 501L),
-      "masked rows must stay masked through a thin append")
+      "masked rows must stay masked through an append")
     // the new files' fresh metadata landed in the delta's segment
-    val fresh = mT.files.filterNot(r => r.contains("v000000") ||
+    val fresh = mC.files.filterNot(r => r.contains("v000000") ||
       r.contains("v000001"))
-    assert(fresh.nonEmpty && fresh.forall(r => mT.stats.contains((r, "id"))))
-    // a WIDENING append falls back to the full publish (carried
-    // blooms/stats must filter per the widening rules) and still
-    // lands exactly — pinned on a fresh int-keyed table
-    val wDir = freshDir()
-    Snapshots.commit(frame(0 until 100, "x").coalesce(1)
-        .select(col("id").cast("int").as("id"), col("tag")),
-      wDir, "overwrite", statsColumns = Seq("id"))
-    val (_, wTouched) = recordTouches {
-      Snapshots.commit(frame(100 until 150, "y").coalesce(1)
-          .select(col("id").cast("long").as("id"), col("tag")),
-        wDir, "append", statsColumns = Seq("id"))
-    }
-    assert(wTouched.nonEmpty,
-      "a widening append must take the full path (carried stats filter)")
-    val mW = Snapshots.readManifest(spark, wDir, 1L)
-    assert(mW.schema.get("id").dataType ===
-      org.apache.spark.sql.types.LongType)
-    assert(Snapshots.readVersion(spark, wDir).count() === 150L)
+    assert(fresh.nonEmpty && fresh.forall(r => mC.stats.contains((r, "id"))))
   }
 
-  test("thin DML (r17): a MERGE consults only the key range's " +
-    "segments, an UPDATE only the predicate's, both publish " +
-    "zero-removal deltas that equal the full path map-for-map") {
+  test("DML (r17): a checkpoint-covered MERGE and UPDATE consult ZERO " +
+    "segments and publish zero-removal deltas that equal an " +
+    "uncheckpointed twin's map-for-map") {
     val s = spark
     import s.implicits._
-    def seed(d: String): Unit = {
-      // three range-sliced commits with key stats → three segments
-      (0 until 3).foreach { i =>
-        Snapshots.commit(frame(i * 1000 until i * 1000 + 1000, s"b$i")
-            .coalesce(1), d,
-          if (i == 0) "overwrite" else "append", statsColumns = Seq("id"))
-      }
-      Snapshots.writeMetadataCheckpoint(spark, d)
-    }
-    val thinDir = freshDir(); val fullDir = freshDir()
-    seed(thinDir); seed(fullDir)
+    val ckDir = freshDir(); val plainDir = freshDir()
+    seedSlices(ckDir); seedSlices(plainDir)
+    Snapshots.writeMetadataCheckpoint(spark, ckDir)
     // the CDC batch: one update + one delete in slice 1, one insert
     def batch() = Seq(
       (1005L, "U", "upd"), (1006L, "D", null), (9999L, "I", "ins"))
       .toDF("id", "op", "tag").select(col("id"), col("tag"), col("op"))
-    val v0 = Snapshots.latestVersion(spark, thinDir).get
-    // with a covering checkpoint the thin merge consults NO segment:
-    // mask candidates come from the checkpoint job, the publish
-    // carries every ref verbatim (zero removals)
-    val (vT, touched) = recordTouches {
-      Snapshots.mergeOnRead(spark, thinDir, batch(), "id",
+    val v0 = Snapshots.latestVersion(spark, ckDir).get
+    // with a covering checkpoint the merge consults NO segment: mask
+    // candidates come from the checkpoint, the publish carries every
+    // ref verbatim (zero removals)
+    val (vC, touched) = recordTouches {
+      Snapshots.mergeOnRead(spark, ckDir, batch(), "id",
         statsColumns = Seq("id"))
     }
-    assert(vT === v0 + 1)
+    assert(vC === v0 + 1)
     assert(touched.isEmpty,
-      s"a checkpoint-covered thin merge must consult no segment, " +
-        s"got $touched")
-    val vF = try {
-      spark.conf.set("graft.commit.thinDml.enabled", "false")
-      Snapshots.mergeOnRead(spark, fullDir, batch(), "id",
+      s"a checkpoint-covered merge must consult no segment, got $touched")
+    // sensitivity: the uncheckpointed twin walks its segments on the
+    // driver — the zero-touch assertion above measures a real
+    // difference, not a blind hook
+    val (vP, pTouched) = recordTouches {
+      Snapshots.mergeOnRead(spark, plainDir, batch(), "id",
         statsColumns = Seq("id"))
-    } finally spark.conf.unset("graft.commit.thinDml.enabled")
-    val mT = Snapshots.readManifest(spark, thinDir, vT)
-    val mF = Snapshots.readManifest(spark, fullDir, vF)
-    assert(mT.files.size === mF.files.size)
-    assert(mT.dataRows === mF.dataRows && mT.dvRows === mF.dvRows)
-    assert(mT.stats.size === mF.stats.size)
-    assert(mT.fileRows.values.toSeq.sorted === mF.fileRows.values.toSeq.sorted)
-    assert(mT.schema === mF.schema)
-    def content(d: String) = Snapshots.readVersion(spark, d)
-      .collect().map(r => (r.getLong(0), r.getString(1))).toSet
-    val cT = content(thinDir)
-    assert(cT === content(fullDir))
-    assert(cT.contains((1005L, "upd")) && cT.contains((9999L, "ins")) &&
-      !cT.exists(_._1 == 1006L),
-      "merge semantics must hold through the thin path")
+    }
+    assert(pTouched.nonEmpty,
+      "the uncheckpointed twin's merge must consult segments (hook sanity)")
+    val mC = Snapshots.readManifest(spark, ckDir, vC)
+    val mP = Snapshots.readManifest(spark, plainDir, vP)
+    assert(mC.files.size === mP.files.size)
+    assert(mC.dataRows === mP.dataRows && mC.dvRows === mP.dvRows)
+    assert(mC.stats.size === mP.stats.size)
+    assert(mC.fileRows.values.toSeq.sorted === mP.fileRows.values.toSeq.sorted)
+    assert(mC.schema === mP.schema)
+    val cC = content(ckDir)
+    assert(cC === content(plainDir))
+    assert(cC.contains((1005L, "upd")) && cC.contains((9999L, "ins")) &&
+      !cC.exists(_._1 == 1006L), "merge semantics must hold")
     // UPDATE under a fresh covering checkpoint: same zero-touch
     // contract; the predicate's range hints prune candidates inside
-    // the checkpoint job
-    val v1 = Snapshots.latestVersion(spark, thinDir).get
-    Snapshots.writeMetadataCheckpoint(spark, thinDir)
-    val m1 = Snapshots.readManifest(spark, thinDir, v1)
+    // the checkpoint walk
+    val v1 = Snapshots.latestVersion(spark, ckDir).get
+    Snapshots.writeMetadataCheckpoint(spark, ckDir)
+    val m1 = Snapshots.readManifest(spark, ckDir, v1)
     val (vU, uTouched) = recordTouches {
-      Snapshots.updateWhere(spark, thinDir,
+      Snapshots.updateWhere(spark, ckDir,
         col("id").between(10L, 20L), Map("tag" -> lit("patched")))
     }
     assert(vU === v1 + 1)
     assert(uTouched.isEmpty,
-      s"a checkpoint-covered thin update must consult no segment, " +
-        s"got $uTouched")
-    try {
-      spark.conf.set("graft.commit.thinDml.enabled", "false")
-      Snapshots.updateWhere(spark, fullDir,
+      s"a checkpoint-covered update must consult no segment, got $uTouched")
+    val (_, puTouched) = recordTouches {
+      Snapshots.updateWhere(spark, plainDir,
         col("id").between(10L, 20L), Map("tag" -> lit("patched")))
-    } finally spark.conf.unset("graft.commit.thinDml.enabled")
-    assert(content(thinDir) === content(fullDir),
-      "update content must match the full path")
-    assert((10L to 20L).forall(i => content(thinDir).contains((i, "patched"))))
-    val mU = Snapshots.readManifest(spark, thinDir, vU)
+    }
+    assert(puTouched.nonEmpty,
+      "the uncheckpointed twin's update must consult segments (hook sanity)")
+    assert(content(ckDir) === content(plainDir),
+      "update content must match the uncheckpointed twin")
+    assert((10L to 20L).forall(i => content(ckDir).contains((i, "patched"))))
+    val mU = Snapshots.readManifest(spark, ckDir, vU)
     // zero-removal delta: every pre-existing live file still live
     assert(m1.files.forall(mU.files.contains),
-      "a thin UPDATE must carry every base file by reference")
-    // sensitivity check: with the thin path disabled the SAME merge
-    // takes the full publish, whose base resolve consults segments —
-    // proving the zero-touch assertions above measure a real
-    // difference, not a blind hook
-    val (_, fTouched) = recordTouches {
-      try {
-        spark.conf.set("graft.commit.thinDml.enabled", "false")
-        Snapshots.mergeOnRead(spark, thinDir, batch(), "id",
-          statsColumns = Seq("id"))
-      } finally spark.conf.unset("graft.commit.thinDml.enabled")
-    }
-    assert(fTouched.nonEmpty,
-      "the full merge path must consult segments (hook sanity)")
+      "an UPDATE must carry every base file by reference")
   }
 
-  test("thin DELETE (r18): a checkpoint-covered predicate DELETE " +
-    "consults ZERO segments, publishes a zero-removal dv delta that " +
-    "equals the full path, and the full path still consults segments") {
+  test("DELETE (r18): a checkpoint-covered predicate DELETE consults " +
+    "ZERO segments and publishes a zero-removal dv delta equal to an " +
+    "uncheckpointed twin's, which consults segments") {
+    val ckDir = freshDir(); val plainDir = freshDir()
+    seedSlices(ckDir); seedSlices(plainDir)
+    Snapshots.writeMetadataCheckpoint(spark, ckDir)
+    val v0 = Snapshots.latestVersion(spark, ckDir).get
+    // the retention shape: a range predicate whose stat verdicts prune
+    // candidates inside the checkpoint walk; the driver consults NO
+    // segment, the publish carries every ref verbatim
+    val pred = col("id").between(1005L, 1020L)
+    val (vC, touched) = recordTouches {
+      Snapshots.deleteWhere(spark, ckDir, pred)
+    }
+    assert(vC === v0 + 1)
+    assert(touched.isEmpty,
+      s"a checkpoint-covered delete must consult no segment, got $touched")
+    // sensitivity: without a checkpoint every segment is tail
+    val (vP, pTouched) = recordTouches {
+      Snapshots.deleteWhere(spark, plainDir, pred)
+    }
+    assert(pTouched.nonEmpty,
+      "the uncheckpointed twin's delete must consult segments (hook sanity)")
+    val mC = Snapshots.readManifest(spark, ckDir, vC)
+    val mP = Snapshots.readManifest(spark, plainDir, vP)
+    // zero-removal delta: every base file carried live, only dv refs new
+    assert(mC.files.size === mP.files.size &&
+      mC.dataRows === mP.dataRows && mC.dvRows === mP.dvRows)
+    assert(mC.dvRows === 16L)
+    assert(mC.stats.size === mP.stats.size)
+    val cC = content(ckDir)
+    assert(cC === content(plainDir), "delete content must match the twin")
+    assert(!cC.exists(t => t._1 >= 1005L && t._1 <= 1020L) &&
+      cC.exists(_._1 == 1004L) && cC.exists(_._1 == 1021L),
+      "exactly the predicate's rows must be masked")
+    // a nothing-matched DELETE stays a no-op (no empty commit)
+    val (vN, nTouched) = recordTouches {
+      Snapshots.deleteWhere(spark, ckDir, col("id") === 999999L)
+    }
+    assert(vN === vC && nTouched.isEmpty)
+  }
+
+  test("a table at the 32-segment-ref cap folds every live entry into " +
+    "one fresh segment on its next DML, metadata intact") {
+    val dir = freshDir()
+    (0 until 32).foreach { i =>
+      Snapshots.commit(frame(i * 10 until i * 10 + 10, s"c$i").coalesce(1),
+        dir, if (i == 0) "overwrite" else "append", statsColumns = Seq("id"))
+    }
+    val v0 = Snapshots.latestVersion(spark, dir).get
+    val m0 = Snapshots.readManifest(spark, dir, v0)
+    assert(m0.segments.size === 32, "one segment per commit up to the cap")
+    val pre = content(dir)
+    val v1 = Snapshots.deleteWhere(spark, dir, col("id") === 5L)
+    val m1 = Snapshots.readManifest(spark, dir, v1)
+    assert(m1.segments.size === 1, "the capped ref list must fold")
+    assert(m1.files.toSet === m0.files.toSet)
+    assert(m1.stats === m0.stats && m1.fileRows === m0.fileRows &&
+      m1.fileBytes === m0.fileBytes, "folded entries keep their metadata")
+    assert(content(dir) === pre.filterNot(_._1 == 5L))
+    assert(m1.dataRows - m1.dvRows === pre.size - 1L)
+  }
+
+  test("widening merge, update and append drop the widened columns' " +
+    "carried blooms/NDVs and scale-widened stats, keep the rest, and " +
+    "land exactly") {
+    import org.apache.spark.sql.types._
+    def seed(): String = {
+      val d = freshDir()
+      val df = spark.range(0, 40).select(col("id"),
+        col("id").cast("int").as("v"),
+        (col("id") / 4).cast("decimal(9,2)").as("amt"))
+      Snapshots.commit(df.repartition(2), d, "overwrite",
+        statsColumns = Seq("id", "amt"), bloomColumns = Seq("v"),
+        ndvColumns = Seq("v"))
+      d
+    }
+    def wide(df: org.apache.spark.sql.DataFrame) = df.select(col("id"),
+      col("v").cast("long").as("v"), col("amt").cast("decimal(12,4)").as("amt"))
+    def check(d: String, expectRows: Long): Unit = {
+      val m0 = Snapshots.readManifest(spark, d, 0L)
+      val m = Snapshots.readManifest(spark, d,
+        Snapshots.latestVersion(spark, d).get)
+      assert(m.schema.get("v").dataType === LongType)
+      assert(m.schema.get("amt").dataType === DecimalType(12, 4))
+      val carried = m0.files.filter(m.files.contains)
+      assert(carried.nonEmpty)
+      assert(carried.forall(r => m0.stats.contains((r, "amt")) &&
+        m0.blooms.contains((r, "v")) && m0.ndvs.contains((r, "v"))),
+        "the seed must carry the metadata the widening drops")
+      assert(carried.forall(r => !m.blooms.contains((r, "v")) &&
+        !m.ndvs.contains((r, "v"))), "widened blooms/NDVs must drop")
+      assert(carried.forall(r => !m.stats.contains((r, "amt"))),
+        "scale-widened decimal stats must drop")
+      assert(carried.forall(r => m.stats.get((r, "id")) === m0.stats.get((r, "id"))),
+        "stats of columns that did not widen must survive")
+      assert(Snapshots.readVersion(spark, d).count() === expectRows)
+      assert(m.dataRows - m.dvRows === expectRows)
+    }
     val s = spark
     import s.implicits._
-    def seed(d: String): Unit = {
-      (0 until 3).foreach { i =>
-        Snapshots.commit(frame(i * 1000 until i * 1000 + 1000, s"b$i")
-            .coalesce(1), d,
-          if (i == 0) "overwrite" else "append", statsColumns = Seq("id"))
+    val ap = seed()
+    Snapshots.commit(wide(spark.range(100, 110).select(col("id"),
+        col("id").cast("int").as("v"), lit(1).cast("decimal(9,2)").as("amt"))),
+      ap, "append")
+    check(ap, 50L)
+    val mg = seed()
+    Snapshots.mergeOnRead(spark, mg,
+      wide(Seq((3L, 3, BigDecimal("0.75")), (200L, 7, BigDecimal("1.00")))
+        .toDF("id", "v", "amt")).withColumn("op", lit("U")), "id")
+    check(mg, 41L)
+    val up = seed()
+    Snapshots.updateWhere(spark, up, col("id") < 5L,
+      Map("v" -> col("v").cast("long"), "amt" -> col("amt").cast("decimal(12,4)")))
+    check(up, 40L)
+    assert(Snapshots.readVersion(spark, up).filter(col("id") < 5L).count() === 5L)
+  }
+
+  test("legacy bases are refused naming the missing field, and accepted " +
+    "after compact rewrites them") {
+    import java.nio.charset.StandardCharsets.UTF_8
+    import java.nio.file.{Files, Paths}
+    def manifestFile(d: String) = Paths.get(d, "_manifests", "v000000.manifest")
+    def lines(p: java.nio.file.Path) =
+      new String(Files.readAllBytes(p), UTF_8).linesIterator.toSeq
+    def write(p: java.nio.file.Path, ls: Seq[String]): Unit =
+      Files.write(p, (ls.mkString("\n") + "\n").getBytes(UTF_8))
+    def seeded(): String = {
+      val d = freshDir()
+      Snapshots.commit(frame(0 until 20, "x").coalesce(1), d, "overwrite",
+        statsColumns = Seq("id"))
+      d
+    }
+    // the per-file lines of the table's one segment, re-keyed by file
+    def segmentLines(d: String): (String, Seq[String]) = {
+      val rel = lines(manifestFile(d)).find(_.startsWith("segment="))
+        .get.stripPrefix("segment=").split('\t').head
+      (rel, lines(Paths.get(d, rel)).drop(1))
+    }
+    val shapes: Seq[(String, String => Unit)] = Seq(
+      "inline file= lines" -> { d =>
+        val (rel, seg) = segmentLines(d)
+        val file = seg.head.stripPrefix("file=")
+        val inline = seg.map { l =>
+          if (l.startsWith("file=")) l
+          else { val Array(k, v) = l.split("=", 2); s"$k=$file\t$v" }
+        }
+        write(manifestFile(d), lines(manifestFile(d))
+          .filterNot(_.startsWith(s"segment=$rel")) ++ inline)
+      },
+      "segment live counts" -> { d =>
+        write(manifestFile(d), lines(manifestFile(d)).map(l =>
+          if (l.startsWith("segment=")) l.split('\t').head else l))
+      },
+      "schema" -> { d =>
+        write(manifestFile(d), lines(manifestFile(d))
+          .filterNot(_.startsWith("schema=")))
+      },
+      "row ledger" -> { d =>
+        write(manifestFile(d), lines(manifestFile(d))
+          .filterNot(_.startsWith("rows=")))
+      },
+      "row/byte ledger" -> { d =>
+        // segments are immutable and cached by path: the bytes-less
+        // copy gets a new name and the manifest is re-pointed at it
+        val (rel, seg) = segmentLines(d)
+        val legacyRel = rel + "-legacy"
+        write(Paths.get(d, legacyRel), "graft-segment-v1" +: seg.map(l =>
+          if (l.startsWith("frow=")) l.split('\t').head else l))
+        write(manifestFile(d), lines(manifestFile(d)).map(_.replace(rel, legacyRel)))
+      })
+    shapes.foreach { case (field, mutate) =>
+      val d = seeded()
+      mutate(d)
+      val e = intercept[IllegalArgumentException] {
+        Snapshots.deleteWhere(spark, d, col("id") === 1L)
       }
-      Snapshots.writeMetadataCheckpoint(spark, d)
+      assert(e.getMessage.contains(field) && e.getMessage.contains(d) &&
+        e.getMessage.contains("Snapshots.compact"),
+        s"refusal must name the table, '$field' and the upgrade: ${e.getMessage}")
+      assert(Snapshots.latestVersion(spark, d) === Some(0L),
+        s"a refused operation must leave the table untouched ($field)")
+      Snapshots.compact(spark, d, 1)
+      Snapshots.deleteWhere(spark, d, col("id") === 1L)
+      assert(content(d) === (0 until 20).filterNot(_ == 1)
+        .map(i => (i.toLong, "x")).toSet, s"after compact ($field)")
     }
-    val thinDir = freshDir(); val fullDir = freshDir()
-    seed(thinDir); seed(fullDir)
-    val v0 = Snapshots.latestVersion(spark, thinDir).get
-    // the retention shape: a range predicate whose stat verdicts prune
-    // candidates inside the checkpoint job; the driver consults NO
-    // segment — mask candidates come from the planning job, the
-    // publish carries every ref verbatim
-    val pred = col("id").between(1005L, 1020L)
-    val (vT, touched) = recordTouches {
-      Snapshots.deleteWhere(spark, thinDir, pred)
-    }
-    assert(vT === v0 + 1)
-    assert(touched.isEmpty,
-      s"a checkpoint-covered thin delete must consult no segment, " +
-        s"got $touched")
-    val vF = try {
-      spark.conf.set("graft.commit.thinDml.enabled", "false")
-      Snapshots.deleteWhere(spark, fullDir, pred)
-    } finally spark.conf.unset("graft.commit.thinDml.enabled")
-    val mT = Snapshots.readManifest(spark, thinDir, vT)
-    val mF = Snapshots.readManifest(spark, fullDir, vF)
-    // zero-removal delta: every base file carried live, only dv refs new
-    assert(mT.files.size === mF.files.size &&
-      mT.dataRows === mF.dataRows && mT.dvRows === mF.dvRows)
-    assert(mT.dvRows === 16L)
-    assert(mT.stats.size === mF.stats.size)
-    def content(d: String) = Snapshots.readVersion(spark, d)
-      .collect().map(r => (r.getLong(0), r.getString(1))).toSet
-    val cT = content(thinDir)
-    assert(cT === content(fullDir), "delete content must match full path")
-    assert(!cT.exists(t => t._1 >= 1005L && t._1 <= 1020L) &&
-      cT.exists(_._1 == 1004L) && cT.exists(_._1 == 1021L),
-      "exactly the predicate's rows must be masked")
-    // a nothing-matched DELETE stays a no-op (no empty commit) on the
-    // thin path too
-    val (vN, nTouched) = recordTouches {
-      Snapshots.deleteWhere(spark, thinDir, col("id") === 999999L)
-    }
-    assert(vN === vT && nTouched.isEmpty)
-    // sensitivity: the full path's base resolve consults segments —
-    // the zero-touch assertions above measure a real difference
-    val (_, fTouched) = recordTouches {
-      try {
-        spark.conf.set("graft.commit.thinDml.enabled", "false")
-        Snapshots.deleteWhere(spark, thinDir, col("id") === 42L)
-      } finally spark.conf.unset("graft.commit.thinDml.enabled")
-    }
-    assert(fTouched.nonEmpty,
-      "the full delete path must consult segments (hook sanity)")
   }
 
   test("randomized thin-vs-full parity: identical op sequences on a " +
@@ -465,12 +561,12 @@ class ThinMaintenanceSpec extends SparkSpec {
     "observable state") {
     val rnd = new scala.util.Random(411)
     (0 until 2).foreach { trial =>
-      val thinDir = freshDir()
-      val fullDir = freshDir()
+      val ckDir = freshDir()
+      val plainDir = freshDir()
       var lo = 0
       def nextSlab(n: Int): Range = { val r = lo until lo + n; lo += n; r }
       def bothCommit(ids: Range, tag: String): Unit =
-        Seq(thinDir, fullDir).foreach { d =>
+        Seq(ckDir, plainDir).foreach { d =>
           Snapshots.commit(frame(ids, tag).coalesce(1), d,
             if (ids.start == 0) "overwrite" else "append",
             statsColumns = Seq("id"))
@@ -479,29 +575,29 @@ class ThinMaintenanceSpec extends SparkSpec {
       (0 until 4).foreach(i => bothCommit(nextSlab(10 + rnd.nextInt(20)), s"s$i"))
       // random masks, same predicate both sides
       val cut = rnd.nextInt(40)
-      Seq(thinDir, fullDir).foreach(d =>
+      Seq(ckDir, plainDir).foreach(d =>
         Snapshots.deleteWhere(spark, d, col("id") % 97L === cut.toLong))
-      // only thinDir gets a checkpoint → its maintenance goes delta
-      Snapshots.writeMetadataCheckpoint(spark, thinDir)
-      val mT = Snapshots.readManifest(spark, thinDir,
-        Snapshots.latestVersion(spark, thinDir).get)
-      val sizes = mT.files.map(mT.fileBytes)
+      // only ckDir gets a checkpoint → its maintenance plans through it
+      Snapshots.writeMetadataCheckpoint(spark, ckDir)
+      val mC = Snapshots.readManifest(spark, ckDir,
+        Snapshots.latestVersion(spark, ckDir).get)
+      val sizes = mC.files.map(mC.fileBytes)
       val minBytes = (sizes.min + sizes.max) / 2
       val op = rnd.nextInt(2)
-      Seq(thinDir, fullDir).foreach { d =>
+      Seq(ckDir, plainDir).foreach { d =>
         if (op == 0) Snapshots.compactSmall(spark, d, minBytes,
           statsColumns = Seq("id"))
         else Snapshots.purgeDeletes(spark, d, statsColumns = Seq("id"))
       }
-      val a = Snapshots.readVersion(spark, thinDir)
+      val a = Snapshots.readVersion(spark, ckDir)
         .collect().map(r => (r.getLong(0), r.getString(1))).toSet
-      val b = Snapshots.readVersion(spark, fullDir)
+      val b = Snapshots.readVersion(spark, plainDir)
         .collect().map(r => (r.getLong(0), r.getString(1))).toSet
       assert(a === b, s"trial $trial op $op: content diverged")
-      val m1 = Snapshots.readManifest(spark, thinDir,
-        Snapshots.latestVersion(spark, thinDir).get)
-      val m2 = Snapshots.readManifest(spark, fullDir,
-        Snapshots.latestVersion(spark, fullDir).get)
+      val m1 = Snapshots.readManifest(spark, ckDir,
+        Snapshots.latestVersion(spark, ckDir).get)
+      val m2 = Snapshots.readManifest(spark, plainDir,
+        Snapshots.latestVersion(spark, plainDir).get)
       assert(m1.dataRows === m2.dataRows, s"trial $trial: dataRows diverged")
       assert(m1.dvRows === m2.dvRows, s"trial $trial: dvRows diverged")
       assert(m1.files.size === m2.files.size,
