@@ -20,18 +20,16 @@ import org.apache.spark.sql.functions._
   */
 object LogLake {
 
-  /** ETL sink (reference: ingest_logs.py:63-70). `date` is written as a
-    * STRING directory name (`date=YYYY-MM-DD/`, like the reference's
-    * layout); note Spark's partition-column TYPE INFERENCE re-reads it
-    * as DateType in readLake — schema-sensitive consumers should cast,
-    * or disable spark.sql.sources.partitionColumnTypeInference.enabled.
-    */
   /** Salt buckets per date partition: enough parallelism inside a single
     * day's write without exploding the file count. On a real cluster
     * size this to (day volume / target file size).
     */
   val WriteBucketsPerDate = 8
 
+  /** ETL sink (reference: ingest_logs.py:63-70). `date` is written as a
+    * `date=YYYY-MM-DD/` directory name, like the reference's layout;
+    * readLake reads it back as the staging model's DateType.
+    */
   def writePartitioned(stg: DataFrame, root: String): Unit =
     stg
       .withColumn("date", date_format(col("ts"), "yyyy-MM-dd"))
@@ -64,8 +62,12 @@ object LogLake {
     * partition discovery turns `date=…` dirs back into a column; kept
     * LAZY (no eager full materialization) so date filters prune partitions
     * — the reference materializes all partitions into DuckDB and loses
-    * pruning, which we deliberately do not reproduce.
+    * pruning, which we deliberately do not reproduce. The schema is the
+    * staging model's ([[LogModels.stgSchema]]), so the read starts no
+    * footer-inference job; the frame has the columns and types partition
+    * inference would give, `date` (DateType) last.
     */
   def readLake(spark: SparkSession, root: String): DataFrame =
-    spark.read.option("basePath", root).parquet(root)
+    spark.read.schema(LogModels.stgSchema(spark))
+      .option("basePath", root).parquet(root)
 }

@@ -1,8 +1,8 @@
 package graft.logs
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.IntegerType
+import org.apache.spark.sql.types.{IntegerType, StringType, StructField, StructType}
 
 /** The reference warehouse models, re-expressed as DataFrame transforms.
   * DAG (dbt `ref()` lineage): stgLogs → {dimClient, dimEndpoint,
@@ -32,6 +32,23 @@ object LogModels {
       date_format(col("ts"), "HH").as("hour"),
       when(col("status") >= 400, 1).otherwise(0).cast(IntegerType).as("is_error")
     )
+
+  /** [[stgLogs]] over a parse of no lines: its plan is analyzed, never run. */
+  private def emptyStg(spark: SparkSession): DataFrame =
+    stgLogs(LogParser.parse(spark.createDataFrame(java.util.List.of[Row](),
+      StructType(Seq(StructField("value", StringType))))))
+
+  /** The schema of [[stgLogs]]'s output, taken from its analyzed plan, so
+    * a reader of the staging lake needs no footer-inference job.
+    */
+  def stgSchema(spark: SparkSession): StructType = emptyStg(spark).schema
+
+  /** The schema of [[fctRequestsHourly]]'s output, taken from its
+    * analyzed plan, so a reader of the persisted fact needs no
+    * footer-inference job.
+    */
+  def fctSchema(spark: SparkSession): StructType =
+    fctRequestsHourly(emptyStg(spark)).schema
 
   /** Distinct client dimension (reference: models/marts/dim_client.sql:1). */
   def dimClient(stg: DataFrame): DataFrame =

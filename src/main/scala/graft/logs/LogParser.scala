@@ -1,8 +1,8 @@
 package graft.logs
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.IntegerType
+import org.apache.spark.sql.types.{IntegerType, LongType}
 
 /** Nginx "combined"-format access-log parser.
   *
@@ -21,13 +21,11 @@ import org.apache.spark.sql.types.IntegerType
   *
   * ANSI safety: Spark 4 defaults `spark.sql.ansi.enabled=true`, so a plain
   * `cast`/`to_timestamp` on a garbage token would THROW instead of yielding
-  * null. We (a) prefilter with `rlike` so only grammar-matching lines reach
-  * the extractors, and (b) use `try_to_timestamp` for the timestamp so a
-  * line whose bracketed field matches `[^\]]+` but is not a real datetime is
-  * dropped rather than crashing the job.
+  * null. Only grammar-matching lines reach the casts, and the timestamp and
+  * bytes use `try_` forms, so a line whose bracketed field matches `[^\]]+`
+  * but is not a real datetime is dropped rather than crashing the job.
   *
-  * Implementation is pure Catalyst expressions (`regexp_extract`,
-  * `try_to_timestamp`, `when`) — whole-stage-codegen'd, no UDF, fully
+  * Implementation is Catalyst expressions and generators, no UDF, fully
   * parallel over however many input splits the text scan produces. At
   * 100 TB of raw logs this is a map-only stage: no shuffle, scales linearly
   * with executors.
@@ -42,48 +40,51 @@ object LogParser {
   val LogPattern: String =
     """^(\S+)\s+\S+\s+\S+\s+\[([^\]]+)\]\s+"(\S+)\s+(\S+)\s+([^"]+)"\s+(\d{3})\s+(\d+|-)\s+"[^"]*"\s+"([^"]*)"$"""
 
+  /** Names of [[LogPattern]]'s capture groups, in group order. */
+  private val GroupNames: Seq[String] = Seq("client_ip", "ts_text", "method",
+    "request_path", "proto", "status_text", "bytes_text", "user_agent")
+
   /** Raw lines (`value: string`) → typed parsed records.
-    * Columns: client_ip, ts, method, request_path, proto, status,
-    * bytes_sent, user_agent. Malformed lines dropped, never errored.
+    * Columns: client_ip, ts, method, request_path, status, bytes_sent,
+    * user_agent. Malformed lines dropped, never errored.
+    *
+    * The grammar and the timestamp are each evaluated ONCE per line.
+    * Neither drop can be a `Filter`: Catalyst pushes a filter beneath
+    * the projection that computes its input and copies the expression
+    * into it, so a `select → filter → select` formulation runs the
+    * match once in the filter and again for every extracted field. Both
+    * drops are therefore steps that emit zero or one row:
+    *   1. [[graft.functions.RegexpGroups]] generates the capture groups
+    *      of a matching line and nothing for any other;
+    *   2. the typed record is built once, inside a one-element array
+    *      whose `filter` keeps it only when the timestamp and the bytes
+    *      parsed, and `inline` emits what is left.
+    * Every cast sits behind the match, so each sees grammar-shaped
+    * input (ANSI-safe): `status` is three digits; the timestamp and the
+    * bytes use `try_` forms, so a bracketed field that is not a real
+    * datetime, or a >19-digit bytes token, yields NULL and the line is
+    * dropped rather than crashing the job.
     */
   def parse(lines: DataFrame): DataFrame = {
-    val v = trim(col("value"))
-    // ONE regex execution per line: a builtins formulation costs eight
-    // (rlike prefilter + regexp_extract per group — Catalyst shares no
-    // Matcher state across expressions), and on a 100 TB raw scan the
-    // regex is the dominant map-stage cost. The native expression
-    // ([[graft.functions.RegexpGroups]], codegen'd) matches once and
-    // returns all capture groups; its NULL-on-no-match doubles as the
-    // malformed-line drop and still guarantees every downstream cast
-    // sees grammar-shaped input (ANSI-safe)
-    val groups = {
-      import org.apache.spark.sql.graftbridge.Bridge
-      Bridge.column(graft.functions.RegexpGroups(
-        Bridge.expression(v), LogPattern))
-    }
-    def g(i: Int): Column = element_at(col("__g"), i)
+    import org.apache.spark.sql.graftbridge.Bridge
+    val groups = Bridge.column(graft.functions.RegexpGroups(
+      Bridge.expression(trim(col("value"))), LogPattern, GroupNames))
+    val bytes = col("bytes_text")
+    val record = struct(
+      col("client_ip"),
+      // TZ offset discarded: take the part before the space
+      try_to_timestamp(substring_index(col("ts_text"), " ", 1),
+        lit("dd/MMM/yyyy:HH:mm:ss")).as("ts"),
+      col("method"),
+      col("request_path"),
+      col("status_text").cast(IntegerType).as("status"),
+      when(bytes === "-", lit("0")).otherwise(bytes).try_cast(LongType)
+        .as("bytes_sent"),
+      col("user_agent"))
     lines
-      .select(groups.as("__g"))
-      .filter(col("__g").isNotNull)
-      .select(
-        g(1).as("client_ip"),
-        // TZ offset discarded: take the part before the space
-        try_to_timestamp(
-          substring_index(g(2), " ", 1), lit("dd/MMM/yyyy:HH:mm:ss")).as("ts"),
-        g(3).as("method"),
-        g(4).as("request_path"),
-        g(6).cast(IntegerType).as("status"),
-        when(g(7) === "-", lit("0")).otherwise(g(7)).as("bytes_raw"),
-        g(8).as("user_agent")
-      )
-      // try_cast: a >19-digit bytes token would overflow an ANSI cast and
-      // crash the job; here it becomes null and the line is dropped
-      .withColumn("bytes_sent", expr("try_cast(bytes_raw AS BIGINT)"))
-      .drop("bytes_raw")
-      // bracketed field matched [^\]]+ but wasn't a real datetime → drop
-      .filter(col("ts").isNotNull && col("bytes_sent").isNotNull)
-      .select("client_ip", "ts", "method", "request_path", "status",
-        "bytes_sent", "user_agent")
+      .select(groups)
+      .select(inline(filter(array(record),
+        r => r("ts").isNotNull && r("bytes_sent").isNotNull)))
   }
 
   /** Text-file scan + parse (reference: etl/ingest_logs.py:41-47). */

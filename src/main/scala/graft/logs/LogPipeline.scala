@@ -24,9 +24,7 @@ object LogPipeline {
     */
   def run(spark: SparkSession, rawPath: String, warehouseDir: String,
           resume: Boolean = false): Seq[(String, String, Int)] = {
-    val flow = new graft.Flow("log-warehouse",
-      stateDir = Some(warehouseDir),
-      maxRetries = sys.env.getOrElse("GRAFT_FLOW_RETRIES", "2").toInt)
+    val flow = new graft.Flow("log-warehouse", stateDir = Some(warehouseDir))
     if (!resume) flow.clearState()
 
     // 1. ETL (reference: ingest_logs.py main) — the parse is PINNED
@@ -59,7 +57,8 @@ object LogPipeline {
     // still prove the warehouse it leaves behind passes the contract,
     // so the gate re-runs even when steps 1-2 were skipped.
     val lakeStg = LogLake.readLake(spark, s"$warehouseDir/lake")
-    val fct = spark.read.parquet(s"$warehouseDir/fct_requests_hourly")
+    val fct = spark.read.schema(LogModels.fctSchema(spark))
+      .parquet(s"$warehouseDir/fct_requests_hourly")
     val violations = LogQuality.runAll(lakeStg, fct).filter(_._2 > 0)
     require(violations.isEmpty, s"quality checks failed: $violations")
 
@@ -73,14 +72,8 @@ object LogPipeline {
       sys.exit(2)
     }
     val Array(raw, wh) = args
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.GraftSession.local(
+      sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     run(spark, raw, wh)
     spark.stop()

@@ -1,6 +1,6 @@
 package graft.logs
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 /** Data-quality checks — the reference's dbt tests re-expressed as
@@ -12,40 +12,49 @@ import org.apache.spark.sql.functions._
   */
 object LogQuality {
 
+  /** A row violates the non-null contract on `columns`; false for none. */
+  private def anyNull(columns: Seq[String]): Column =
+    columns.map(c => col(c).isNull).reduceOption(_ || _).getOrElse(lit(false))
+
+  /** A status outside [100, 599]. */
+  private val statusOutOfRange: Column = !col("status").between(100, 599)
+
   /** dbt `not_null` generic test: violations of non-null contract.
-    * Zero columns means zero violations (not an empty.reduce crash).
+    * Zero columns means zero violations.
     */
   def notNullViolations(df: DataFrame, columns: Seq[String]): DataFrame =
-    columns.map(c => col(c).isNull).reduceOption(_ || _)
-      .fold(df.limit(0))(df.filter)
+    df.filter(anyNull(columns))
 
   /** Singular test: statuses outside [100, 599]. */
   def statusRangeViolations(stg: DataFrame): DataFrame =
-    stg.filter(!col("status").between(100, 599))
+    stg.filter(statusOutOfRange)
 
   /** The reference's full test suite over stg + fct; returns
-    * (check name → violation count). All checks run as ONE Spark job:
-    * the violation frames are unioned with a check label and counted
-    * in a single grouped aggregation — one job per run instead of one
-    * job per check. (The union plans independent subtrees, so an input
-    * appearing in two checks is still scanned twice within that job;
-    * callers that need single-scan semantics should cache stg first.)
+    * (check name → violation count). Each input is scanned once and all
+    * checks run as ONE Spark job: the rows violating any of an input's
+    * checks (a filter the Parquet scan can push down) become one row per
+    * check they violate, labelled with the check's name; the two inputs'
+    * label rows are unioned and one grouped count tallies them. A clean
+    * warehouse yields no label rows, so the count's result stage is
+    * skipped as empty.
     */
   def runAll(stg: DataFrame, fct: DataFrame): Map[String, Long] = {
-    import org.apache.spark.sql.functions.lit
-    val labeled = Seq(
-      "stg_not_null" -> notNullViolations(
-        stg, Seq("ts", "status", "bytes_sent", "endpoint")),
-      "fct_not_null" -> notNullViolations(
-        fct, Seq("date", "hour", "endpoint", "requests", "errors")),
-      "status_range" -> statusRangeViolations(stg)
-    )
-    val unioned = labeled
-      .map { case (name, df) => df.select(lit(name).as("check")) }
-      .reduce(_ union _)
-    val counts = unioned.groupBy("check").count()
+    val stgChecks = Seq(
+      "stg_not_null" -> anyNull(Seq("ts", "status", "bytes_sent", "endpoint")),
+      "status_range" -> statusOutOfRange)
+    val fctChecks = Seq(
+      "fct_not_null" -> anyNull(Seq("date", "hour", "endpoint", "requests", "errors")))
+    def labels(df: DataFrame, checks: Seq[(String, Column)]): DataFrame =
+      df.filter(checks.map(_._2).reduce(_ || _))
+        .select(explode(array(
+          checks.map { case (name, violated) => when(violated, lit(name)) }: _*))
+          .as("check"))
+        .filter(col("check").isNotNull)
+    val counts = labels(stg, stgChecks).union(labels(fct, fctChecks))
+      .groupBy("check").count()
       .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
-    labeled.map { case (name, _) => name -> counts.getOrElse(name, 0L) }.toMap
+    (stgChecks ++ fctChecks).map { case (name, _) =>
+      name -> counts.getOrElse(name, 0L) }.toMap
   }
 
   /** ETL inline asserts (reference: ingest_logs.py:55-57). */

@@ -141,4 +141,18 @@ class LogGoldenSpec extends SparkSpec {
       when(col("endpoint") === "/health", lit(9999)).otherwise(col("status")))
     assert(!LogQuality.statusRangeViolations(bad).isEmpty)
   }
+
+  test("quality gate counts each injected violation under its own check") {
+    val stg = LogFixture.stg(spark)
+    val fct = LogFixture.fct(spark)
+    val badStg = stg
+      .withColumn("ts", when(col("endpoint") === "/auth/login", lit(null))
+        .otherwise(col("ts")))
+      .withColumn("status", when(col("endpoint") === "/health" &&
+        col("status") === 503, lit(9999)).otherwise(col("status")))
+    val badFct = fct.withColumn("hour", when(col("endpoint") === "/auth/login",
+      lit(null)).otherwise(col("hour")))
+    assert(LogQuality.runAll(badStg, badFct) ===
+      Map("stg_not_null" -> 1L, "status_range" -> 1L, "fct_not_null" -> 1L))
+  }
 }

@@ -17,6 +17,10 @@ class LogLakeSpec extends SparkSpec {
 
     val back = LogLake.readLake(spark, dir)
     assert(back.count() === 7)
+    // the known schema is the one partition inference reads from the footers
+    val inferred = spark.read.option("basePath", dir).parquet(dir).schema
+    assert(back.schema === inferred)
+    assert(back.schema("date").dataType === org.apache.spark.sql.types.DateType)
 
     val oneDay = back.filter(col("date") === "2025-11-10")
     assert(oneDay.count() === 5)

@@ -49,4 +49,18 @@ class LogParserPropertySpec extends SparkSpec {
     val n = LogParser.parse(lines.toDS().toDF("value")).count()
     assert(n === lines.length)
   }
+
+  test("the optimized parse plan evaluates the grammar and the timestamp once") {
+    import org.apache.spark.sql.catalyst.expressions.{Expression, GetTimestamp}
+    // a text scan, as in the pipeline: over a local relation the optimizer
+    // would fold the whole parse away
+    val raw = java.nio.file.Files.createTempFile("nginx", ".log")
+    java.nio.file.Files.write(raw, LogFixture.lines.mkString("\n").getBytes)
+    val plan = LogParser.readLogs(spark, raw.toString).queryExecution.optimizedPlan
+    def count(p: Expression => Boolean): Int =
+      plan.collect { case op => op.expressions.map(_.collect {
+        case e if p(e) => e }.size).sum }.sum
+    assert(count(_.isInstanceOf[graft.functions.RegexpGroups]) === 1, plan.toString)
+    assert(count(_.isInstanceOf[GetTimestamp]) === 1, plan.toString)
+  }
 }
