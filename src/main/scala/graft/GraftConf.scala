@@ -2,25 +2,33 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 
-/** Typed reads of the engine's numeric `graft.*` session settings. An
-  * unset key yields the default; a value that does not parse fails
-  * with an IllegalArgumentException naming the key and the value —
-  * never a bare NumberFormatException, never a silent fallback.
+/** Typed reads of the engine's numeric `graft.*` session settings and
+  * of the mains' numeric environment variables. An unset key yields the
+  * default; a value that does not parse fails with an
+  * IllegalArgumentException naming the key and the value — never a
+  * bare NumberFormatException, never a silent fallback.
   */
 object GraftConf {
 
   def int(spark: SparkSession, key: String, default: Int): Int =
-    parse(spark, key, default, "an integer")(_.toInt)
+    parse(key, spark.conf.getOption(key), default, "an integer")(_.toInt)
 
   def long(spark: SparkSession, key: String, default: Long): Long =
-    parse(spark, key, default, "an integer")(_.toLong)
+    parse(key, spark.conf.getOption(key), default, "an integer")(_.toLong)
 
   def double(spark: SparkSession, key: String, default: Double): Double =
-    parse(spark, key, default, "a number")(_.toDouble)
+    parse(key, spark.conf.getOption(key), default, "a number")(_.toDouble)
 
-  private def parse[T](spark: SparkSession, key: String, default: T,
+  /** An integer environment variable of a main (for example
+    * `SPARK_GRAFT_CPUS`): unset yields the default, a malformed value
+    * fails naming the variable and the value.
+    */
+  def envInt(name: String, default: Int, env: Map[String, String] = sys.env): Int =
+    parse(name, env.get(name), default, "an integer")(_.toInt)
+
+  private def parse[T](key: String, value: Option[String], default: T,
                        expected: String)(read: String => T): T =
-    spark.conf.getOption(key) match {
+    value match {
       case None => default
       case Some(raw) =>
         try read(raw.trim)

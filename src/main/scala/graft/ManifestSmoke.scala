@@ -21,8 +21,8 @@ object ManifestSmoke {
     val factor = if (args.length > 1) args(1).toInt else 10
     val iters = if (args.length > 2) args(2).toInt else 5
 
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = GraftSession.local(cpus.toInt).getOrCreate()
+    val cpus = GraftConf.envInt("SPARK_GRAFT_CPUS", 8)
+    val spark = GraftSession.local(cpus).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     import spark.implicits._
 

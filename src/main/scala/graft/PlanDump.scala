@@ -14,8 +14,8 @@ object PlanDump {
     val suffix = args(1)
     val names = args(2).split(',').toSeq
     val sfDir = if (args.length > 3) args(3) else "/root/testdata/sf0.001"
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = GraftSession.local(cpus.toInt).getOrCreate()
+    val cpus = GraftConf.envInt("SPARK_GRAFT_CPUS", 4)
+    val spark = GraftSession.local(cpus).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     Files.createDirectories(Paths.get(outDir))
     names.foreach { name =>

@@ -222,8 +222,8 @@ object ScaleSmoke {
       .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
     val picked = heavy.filter(n => only.forall(_.contains(n)))
 
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = GraftSession.local(cpus.toInt).getOrCreate()
+    val cpus = GraftConf.envInt("SPARK_GRAFT_CPUS", 4)
+    val spark = GraftSession.local(cpus).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
 
     // ---- derive the K× corpus (documents + embeddings) if absent ----
@@ -238,11 +238,11 @@ object ScaleSmoke {
       replicate(docs, "doc_id", (df, k) =>
         if (k == 0) df
         else df.withColumn("text", regexp_replace(col("text"), "(\\S+)", s"$$1_$k")))
-        .repartition(cpus.toInt)
+        .repartition(cpus)
         .write.mode("overwrite").parquet(s"$outDir/documents.parquet")
       val emb = spark.read.parquet(s"$baseDir/embeddings.parquet")
       replicate(emb, "vec_id", (df, _) => df)
-        .repartition(cpus.toInt)
+        .repartition(cpus)
         .write.mode("overwrite").parquet(s"$outDir/embeddings.parquet")
     }
     // orders replicate verbatim with offset keys (the snapshot demos
@@ -252,7 +252,7 @@ object ScaleSmoke {
     if (!new java.io.File(s"$outDir/orders.parquet").exists()) {
       val orders = spark.read.parquet(s"$baseDir/orders.parquet")
       replicate(orders, "o_orderkey", (df, _) => df)
-        .repartition(cpus.toInt)
+        .repartition(cpus)
         .write.mode("overwrite").parquet(s"$outDir/orders.parquet")
     }
     // lineitem replicates with the SAME key offset as orders, so each
@@ -261,7 +261,7 @@ object ScaleSmoke {
     if (!new java.io.File(s"$outDir/lineitem.parquet").exists()) {
       val li = spark.read.parquet(s"$baseDir/lineitem.parquet")
       replicate(li, "l_orderkey", (df, _) => df)
-        .repartition(cpus.toInt)
+        .repartition(cpus)
         .write.mode("overwrite").parquet(s"$outDir/lineitem.parquet")
     }
     // customer copies VERBATIM (o_custkey is untouched by replication):
@@ -269,7 +269,7 @@ object ScaleSmoke {
     // cluster shape the plan-stats/broadcast claim is about
     if (!new java.io.File(s"$outDir/customer.parquet").exists()) {
       spark.read.parquet(s"$baseDir/customer.parquet")
-        .repartition(cpus.toInt)
+        .repartition(cpus)
         .write.mode("overwrite").parquet(s"$outDir/customer.parquet")
     }
     // nation copies verbatim too (tiny fixed dim, the u45 star's apex)
@@ -283,7 +283,7 @@ object ScaleSmoke {
     if (!new java.io.File(s"$outDir/events.parquet").exists()) {
       val events = spark.read.parquet(s"$baseDir/events.parquet")
       replicate(events, "event_id", (df, _) => df)
-        .repartition(cpus.toInt)
+        .repartition(cpus)
         .write.mode("overwrite").parquet(s"$outDir/events.parquet")
     }
 

@@ -9,8 +9,8 @@ object Verify {
     // optional 3rd arg: comma-separated query names (fast iteration)
     val only: Option[Set[String]] =
       if (args.length > 2) Some(args(2).split(",").toSet) else None
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = GraftSession.local(cpus.toInt).getOrCreate()
+    val cpus = GraftConf.envInt("SPARK_GRAFT_CPUS", 4)
+    val spark = GraftSession.local(cpus).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     new java.io.File(outDir).mkdirs()
     var failed = List.empty[String]

@@ -1,6 +1,6 @@
 package graft.logs
 
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, Observation, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Lake storage layer: Hive-style date-partitioned Parquet, mirroring the
@@ -28,9 +28,15 @@ object LogLake {
 
   /** ETL sink (reference: ingest_logs.py:63-70). `date` is written as a
     * `date=YYYY-MM-DD/` directory name, like the reference's layout;
-    * readLake reads it back as the staging model's DateType.
+    * readLake reads it back as the staging model's DateType. Returns the
+    * number of rows written, counted by an observation inside the write
+    * job, so no second job reads `stg` to count it. The observation sits
+    * above the repartition's exchange: when the exchange comes out
+    * empty, AQE replaces the plan beneath it with an empty relation, and
+    * an observation there would report nothing at all.
     */
-  def writePartitioned(stg: DataFrame, root: String): Unit =
+  def writePartitioned(stg: DataFrame, root: String): Long = {
+    val written = Observation()
     stg
       .withColumn("date", date_format(col("ts"), "yyyy-MM-dd"))
       // SALTED repartition: (date, hash(ts) % buckets). Repartitioning by
@@ -38,11 +44,14 @@ object LogLake {
       // scale-killer at 100 TB (one executor writes an entire date).
       .repartition(col("date"), pmod(hash(col("ts"), col("client_ip")),
         lit(WriteBucketsPerDate)))
+      .observe(written, count(lit(1)).as("rows"))
       .write
       .partitionBy("date")
       .option("partitionOverwriteMode", "dynamic")
       .mode(SaveMode.Overwrite)
       .parquet(root)
+    written.get("rows").asInstanceOf[Long]
+  }
 
   /** Catalog materialization (reference: dbt `materialized='table'`,
     * dbt_project.yml:8-13 — every model persisted as a warehouse table).

@@ -56,9 +56,12 @@ object LogParser {
     * drops are therefore steps that emit zero or one row:
     *   1. [[graft.functions.RegexpGroups]] generates the capture groups
     *      of a matching line and nothing for any other;
-    *   2. the typed record is built once, inside a one-element array
-    *      whose `filter` keeps it only when the timestamp and the bytes
-    *      parsed, and `inline` emits what is left.
+    *   2. the typed record is built once, in its own projection
+    *      beneath the second generator, so whole-stage codegen compiles
+    *      its casts and its timestamp parse; above it a one-element
+    *      array's `filter` keeps the record only when the timestamp and
+    *      the bytes parsed, and `inline` emits what is left (only that
+    *      null test runs interpreted).
     * Every cast sits behind the match, so each sees grammar-shaped
     * input (ANSI-safe): `status` is three digits; the timestamp and the
     * bytes use `try_` forms, so a bracketed field that is not a real
@@ -83,7 +86,8 @@ object LogParser {
       col("user_agent"))
     lines
       .select(groups)
-      .select(inline(filter(array(record),
+      .select(record.as("r"))
+      .select(inline(filter(array(col("r")),
         r => r("ts").isNotNull && r("bytes_sent").isNotNull)))
   }
 

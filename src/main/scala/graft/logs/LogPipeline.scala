@@ -5,9 +5,10 @@ import org.apache.spark.sql.{SaveMode, SparkSession}
 /** End-to-end pipeline main, mirroring the reference's orchestrated flow
   * (reference: orchestration/flow.py:29-35 — etl → dbt run → dbt test):
   *
-  *   raw log file → parse (drop malformed) → ingest asserts →
-  *   date-partitioned lake → stg → dims + hourly fact persisted as
-  *   parquet tables (closes the S6 materialization gap) → quality gate.
+  *   raw log file → parse (drop malformed) → date-partitioned lake
+  *   (its write enforces the ingest asserts) → stg → dims + hourly
+  *   fact persisted as parquet tables (closes the S6 materialization
+  *   gap) → quality gate.
   *
   * One command produces the queryable warehouse; serving queries
   * (LogQueries) then read the small persisted fact, not the raw lake —
@@ -27,18 +28,16 @@ object LogPipeline {
     val flow = new graft.Flow("log-warehouse", stateDir = Some(warehouseDir))
     if (!resume) flow.clearState()
 
-    // 1. ETL (reference: ingest_logs.py main) — the parse is PINNED
-    // once: the ingest asserts take two actions and the lake write a
-    // third, and without the persist each re-executes the raw text
-    // scan + regex parse, tripling the pipeline's dominant stage
+    // 1. ETL (reference: ingest_logs.py main) — one query reads the drop,
+    // so the parse needs no pin: the status contract is a guard beneath
+    // the lake write (a violating row aborts the write job, and dynamic
+    // partition overwrite publishes nothing from it), and the write
+    // counts the rows it wrote for the non-empty contract
     flow.task("etl") {
-      val parsed = LogParser.readLogs(spark, rawPath)
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      try {
-        LogQuality.assertIngest(parsed)
-        val stg = LogModels.stgLogs(parsed)
-        LogLake.writePartitioned(stg, s"$warehouseDir/lake")
-      } finally parsed.unpersist(false)
+      val stg = LogModels.stgLogs(LogParser.readLogs(spark, rawPath))
+      val rows = LogLake.writePartitioned(LogQuality.guardStatus(stg),
+        s"$warehouseDir/lake")
+      require(rows > 0, LogQuality.NoRowsMessage)
     }
 
     // 2. Model build from the lake (reference: dbt run) — read back so
@@ -73,7 +72,7 @@ object LogPipeline {
     }
     val Array(raw, wh) = args
     val spark = graft.GraftSession.local(
-      sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt).getOrCreate()
+      graft.GraftConf.envInt("SPARK_GRAFT_CPUS", 4)).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     run(spark, raw, wh)
     spark.stop()

@@ -19,6 +19,11 @@ object LogQuality {
   /** A status outside [100, 599]. */
   private val statusOutOfRange: Column = !col("status").between(100, 599)
 
+  private val StatusRangeMessage = "status out of [100,599]"
+
+  /** The failure of an ingest that parsed no rows. */
+  val NoRowsMessage = "no rows parsed from log file"
+
   /** dbt `not_null` generic test: violations of non-null contract.
     * Zero columns means zero violations.
     */
@@ -57,9 +62,26 @@ object LogQuality {
       name -> counts.getOrElse(name, 0L) }.toMap
   }
 
-  /** ETL inline asserts (reference: ingest_logs.py:55-57). */
+  /** The ingest status contract inside the query that consumes `df`:
+    * `status` passes through unchanged, and a row outside [100, 599]
+    * raises an error naming the contract, which fails the job that
+    * reads it. The pipeline puts this beneath its lake write, so one
+    * violating row aborts the write and dynamic partition overwrite
+    * publishes nothing.
+    */
+  def guardStatus(df: DataFrame): DataFrame =
+    df.withColumn("status",
+      when(statusOutOfRange, raise_error(lit(StatusRangeMessage)))
+        .otherwise(col("status")))
+
+  /** ETL inline asserts (reference: ingest_logs.py:55-57), eagerly, for
+    * a caller that holds a parsed frame: two jobs over it. The pipeline
+    * enforces the same two contracts inside its one lake write instead
+    * ([[guardStatus]] and the row count `LogLake.writePartitioned`
+    * returns), so the parse is read once.
+    */
   def assertIngest(parsed: DataFrame): Unit = {
-    require(!parsed.isEmpty, "no rows parsed from log file")
-    require(statusRangeViolations(parsed).isEmpty, "status out of [100,599]")
+    require(!parsed.isEmpty, NoRowsMessage)
+    require(statusRangeViolations(parsed).isEmpty, StatusRangeMessage)
   }
 }

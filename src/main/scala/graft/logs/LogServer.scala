@@ -262,7 +262,7 @@ object LogServe {
     val dir = args(0)
     val port = if (args.length > 1) args(1).toInt else 8080
     val spark = graft.GraftSession.local(
-      sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt).getOrCreate()
+      graft.GraftConf.envInt("SPARK_GRAFT_CPUS", 4)).getOrCreate()
     val isGraft = new org.apache.hadoop.fs.Path(dir, "_manifests")
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
       .exists(new org.apache.hadoop.fs.Path(dir, "_manifests"))

@@ -69,6 +69,15 @@ class GraftConfSpec extends SparkSpec {
     }
   }
 
+  test("a malformed SPARK_GRAFT_CPUS fails naming the variable and the value") {
+    val name = "SPARK_GRAFT_CPUS"
+    assert(GraftConf.envInt(name, 4, Map.empty) === 4)
+    assert(GraftConf.envInt(name, 8, Map(name -> " 16 ")) === 16)
+    val e = intercept[IllegalArgumentException](
+      GraftConf.envInt(name, 4, Map(name -> "x")))
+    assert(e.getMessage.contains(name) && e.getMessage.contains("'x'"), e.getMessage)
+  }
+
   test("Tables.load serves the schema of a file rewritten at the same path") {
     val s = spark
     import s.implicits._

@@ -2,18 +2,24 @@ package graft.logs
 
 import graft.SparkSpec
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.execution.{FileSourceScanExec, QueryExecution, SparkPlan}
+import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
+import org.apache.spark.sql.util.QueryExecutionListener
 import java.nio.file.Files
+import scala.jdk.CollectionConverters._
 
 /** Lake round-trip: partitioned write → partition-discovered read →
   * pruning visible in the physical plan; salted write produces multiple
-  * files per date partition.
+  * files per date partition. The pipeline enforces the ingest contracts
+  * inside its one read of the raw drop.
   */
 class LogLakeSpec extends SparkSpec {
 
   test("write/read round-trip preserves rows; date filter prunes partitions") {
     val dir = Files.createTempDirectory("lake").toString
     val stg = LogFixture.stg(spark)
-    LogLake.writePartitioned(stg, dir)
+    assert(LogLake.writePartitioned(stg, dir) === 7)
 
     val back = LogLake.readLake(spark, dir)
     assert(back.count() === 7)
@@ -41,6 +47,69 @@ class LogLakeSpec extends SparkSpec {
       LogPipeline.run(spark, raw.toString, wh)
     }
     assert(e.getMessage.contains("no rows parsed"))
+  }
+
+  /** Every file under `root`, by relative path, with its bytes. */
+  private def filesUnder(root: String): Map[String, Seq[Byte]] = {
+    val base = java.nio.file.Paths.get(root)
+    val walk = Files.walk(base)
+    try walk.iterator().asScala.filter(Files.isRegularFile(_)).map(p =>
+      base.relativize(p).toString -> Files.readAllBytes(p).toSeq).toMap
+    finally walk.close()
+  }
+
+  test("pipeline refuses a status out of range and leaves the warehouse as it was") {
+    val raw = Files.createTempFile("nginx", ".log")
+    Files.write(raw, LogFixture.lines.mkString("\n").getBytes)
+    val wh = Files.createTempDirectory("whstatus").toString
+    LogPipeline.run(spark, raw.toString, wh)
+    val lakeBefore = filesUnder(s"$wh/lake")
+
+    val bad = Files.createTempFile("nginx-bad", ".log")
+    Files.write(bad, (LogFixture.lines :+
+      """127.0.0.1 - - [10/Nov/2025:13:00:00 +0530] "GET /health HTTP/1.1" 999 16 "-" "curl/8.1.2"""")
+      .mkString("\n").getBytes)
+    val e = intercept[Exception](LogPipeline.run(spark, bad.toString, wh))
+    assert(e.getMessage.contains("status out of [100,599]"), e.getMessage)
+    assert(filesUnder(s"$wh/lake") == lakeBefore,
+      "an aborted ingest must leave every lake file as it was")
+    assert(spark.read.parquet(s"$wh/fct_requests_hourly").count() === 6)
+  }
+
+  test("pipeline scans the raw drop once") {
+    val raw = Files.createTempFile("nginx-once", ".log")
+    Files.write(raw, LogFixture.lines.mkString("\n").getBytes)
+    val wh = Files.createTempDirectory("whonce").toString
+    val marker = "scan-count-marker"
+    val seenMarker = new java.util.concurrent.CountDownLatch(1)
+    val textScans = new java.util.concurrent.atomic.AtomicInteger()
+    def leaves(p: SparkPlan): Seq[SparkPlan] = p match {
+      case a: AdaptiveSparkPlanExec => leaves(a.executedPlan)
+      case q: QueryStageExec => leaves(q.plan)
+      case m: InMemoryTableScanExec => leaves(m.relation.cachedPlan)
+      case _ if p.children.isEmpty => Seq(p)
+      case _ => p.children.flatMap(leaves)
+    }
+    val listener = new QueryExecutionListener {
+      override def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit = {
+        if (qe.analyzed.toString.contains(marker)) seenMarker.countDown()
+        else if (leaves(qe.executedPlan).exists {
+          case s: FileSourceScanExec =>
+            s.relation.location.rootPaths.exists(_.getName == raw.getFileName.toString)
+          case _ => false
+        }) textScans.incrementAndGet()
+      }
+      override def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    spark.listenerManager.register(listener)
+    try {
+      LogPipeline.run(spark, raw.toString, wh)
+      // listener events arrive in order: once the marker query is seen,
+      // every query of the pipeline has been counted
+      spark.range(1).select(lit(marker)).collect()
+      assert(seenMarker.await(60, java.util.concurrent.TimeUnit.SECONDS))
+    } finally spark.listenerManager.unregister(listener)
+    assert(textScans.get === 1)
   }
 
   test("end-to-end pipeline main: raw → lake → models → quality gate") {

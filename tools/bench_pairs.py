@@ -7,7 +7,7 @@ Usage:
       --seeds 402-411 [--seconds 5] [--trace 0] --out RUNS_DIR
   python3 tools/bench_pairs.py --out RUNS_DIR          # summarize only
 
-DIR is a checkout (for example a `git worktree` of the parent commit and
+DIR is a checkout (for example a `git archive` of the parent commit and
 the working tree of the change); each side runs its own lakebench/run.py.
 Pair i runs both sides on seed i, the base first on even pairs and the
 change first on odd ones. Every run's two JSON lines (counts, result) are
@@ -18,8 +18,9 @@ For each workload and end-to-end metric of BENCHMARK.json the summary
 prints each side's median and quartiles, the pairs the change won (ties
 count for neither side), whether it passes the gain rule (wins >= 9/10 of
 the pairs and the medians differ by more than the base's quartile
-distance), and whether its median is worse than the base's by more than
-the metric's bound. It also lists every deterministic count that differs
+distance), whether its median is worse than the base's by more than the
+metric's bound, and each pair's change/base ratio by seed, so a tie or a
+loss shows on its seed. It also lists every deterministic count that differs
 between the sides on one seed. The benchmark's own files are only read.
 """
 import argparse
@@ -105,6 +106,9 @@ def summarize(out, spec):
                 line += f"  worse-by {worse:+.3f} (bound {m['bound']}: " \
                         f"{'EXCEEDED' if worse > m['bound'] else 'ok'})"
             print(line)
+            print("   change/base by seed: " + "  ".join(
+                f"{s} {c / b:.3f}" if b else f"{s} -"
+                for s, b, c in zip(seeds, vals["base"], vals["change"])))
         for s in seeds:
             cb, cc = (runs[(workload, trace, s, side)].get("counts", {}) for side in SIDES)
             diff = {k: (cb.get(k), cc.get(k)) for k in sorted(set(cb) | set(cc))
