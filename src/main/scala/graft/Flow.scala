@@ -11,7 +11,9 @@ import java.nio.file.{Files, Paths}
   *   - per-task RETRY with exponential backoff (a transient failure —
   *     an executor OOM, a flaky filesystem — re-runs the task, not the
   *     flow; pair with idempotent task bodies: the snapshot layer's
-  *     CAS commits and txn watermarks make replays safe by design);
+  *     CAS commits and txn watermarks make replays safe by design). A
+  *     DETERMINISTIC failure — a broken contract ([[Flow.deterministic]])
+  *     — fails on its first attempt: a retry would fail the same way;
   *   - per-task timing + attempt accounting ([[Flow.report]] — the
   *     observability a scheduler UI would render);
   *   - optional CHECKPOINTED RESUME: with a `stateDir`, each completed
@@ -55,8 +57,9 @@ final class Flow(val name: String,
     * failure (exponential backoff), skipped entirely — returning None,
     * the body not re-run — when a resume marker says a previous run
     * completed it (stateDir flows only). Throws the LAST failure when
-    * retries are exhausted; the flow stops at the failed task and a
-    * stateful re-run resumes there.
+    * retries are exhausted, and a deterministic failure
+    * ([[Flow.deterministic]]) on its first attempt; the flow stops at
+    * the failed task and a stateful re-run resumes there.
     */
   def task[T](taskName: String)(body: => T): Option[T] = {
     if (isDone(taskName)) {
@@ -75,7 +78,8 @@ final class Flow(val name: String,
         markDone(taskName)
         return Some(out)
       } catch {
-        case scala.util.control.NonFatal(e) if attempt <= maxRetries =>
+        case scala.util.control.NonFatal(e)
+            if attempt <= maxRetries && !Flow.deterministic(e) =>
           val wait = backoffMs * (1L << (attempt - 1))
           log.warn(s"task $taskName attempt $attempt failed " +
             s"(${e.getMessage}); retrying in ${wait}ms")
@@ -106,5 +110,22 @@ final class Flow(val name: String,
         finally listing.close()
         Files.deleteIfExists(root)
       }
+    }
+}
+
+object Flow {
+
+  /** A failure that re-running cannot fix: somewhere in its cause
+    * chain a broken `require` (IllegalArgumentException) or a Spark
+    * error raised by the data itself (`raise_error`, condition
+    * USER_RAISED_EXCEPTION — e.g. an ingest contract enforced inside
+    * the write).
+    */
+  def deterministic(e: Throwable): Boolean =
+    Iterator.iterate(e)(_.getCause).takeWhile(_ != null).take(32).exists {
+      case _: IllegalArgumentException => true
+      case st: org.apache.spark.SparkThrowable =>
+        st.getCondition == "USER_RAISED_EXCEPTION"
+      case _ => false
     }
 }

@@ -170,8 +170,9 @@ object Snapshots {
     * cold read parses each immutable segment once (process-wide
     * cache). The in-memory `Manifest` stays the assembled whole-table
     * view: `files`/`stats`/`blooms`/... are always fully populated;
-    * `segments` records where the per-file rows CAME from so the next
-    * [[publishManifest]] can diff against them.
+    * `segments` records where the per-file rows CAME from (the
+    * [[ManifestShell]] of the same parse adds their live counts and
+    * tombstones for the next publish).
     */
   /** `colMap`/`retiredCols` are COLUMN MAPPING (the table formats'
     * rename/drop-without-rewrite): `colMap` maps a column's LOGICAL
@@ -1065,21 +1066,22 @@ object Snapshots {
     // producer's ingest progress or the table's quality contract
     // the predecessor to build on is the last LIVE one — a dead or
     // in-flight txn manifest at the head is skipped (forcing the
-    // decision, see manifestLive), never silently adopted. The
-    // resolve is THIN (r16): every pre-write check below needs only
-    // version-level facts (schema, checks, txns, specs, column
-    // mapping, ledgers), so the per-file metadata — ~KB/file bloom
-    // payloads at the extreme — is never assembled.
-    val prevAny =
+    // decision, see manifestLive), never silently adopted. Its
+    // manifest file is parsed once and never assembled (r16): every
+    // pre-write check below needs only version-level facts (schema,
+    // checks, txns, specs, column mapping, ledgers), so the per-file
+    // metadata — ~KB/file bloom payloads at the extreme — stays on disk.
+    val prevBase =
       if (version > 0 && f.exists(manifestPath(tableDir, version - 1)))
-        lastLive(spark, tableDir, version - 1, forWrite = true, thin = true)
-          .map(_._2)
+        lastLive(spark, tableDir, version - 1, forWrite = true)
       else None
-    val prev = prevAny.filter(_ => mode == "append")
+    val prevAny = prevBase.map(_.header)
     // an append builds on its predecessor's segment refs (the delta
     // publish at the commit point); a legacy predecessor is refused
     // here, before any data is written
-    val base = prev.map(p => currentShell(f, tableDir, p, "append"))
+    val base = prevBase.filter(_ => mode == "append")
+    base.foreach(b => refuseLegacy(tableDir, "append", legacyField(b)))
+    val prev = base.map(_.header)
     // table-level CHECK constraints are enforced on EVERY data commit
     // — append (the new batch), overwrite (the full new snapshot),
     // and therefore also MERGE results, compaction and purge rewrites,
@@ -1324,8 +1326,7 @@ object Snapshots {
       partitionCols = partitionCols, colMap = colMap,
       retiredCols = carriedRetired, features = features)
     val published = publishManifestDelta(f, tableDir, mPub,
-      base.getOrElse(ManifestShell(Nil, Set.empty, hasInline = false)),
-      Map.empty,
+      base.getOrElse(EmptyBase), Map.empty,
       freshSegEntries(mPub, written, newStats, newNulls, newFileMeta,
         newBuckets, newSorted, newBlooms, newNdvs, newKlls),
       widenedCols, scaleWidened)
@@ -1569,22 +1570,21 @@ object Snapshots {
   // manifest references segments by path and masks individual dead
   // files with per-segment tombstones, so a commit writes O(batch)
   // metadata instead of rewriting the O(table) file list with its
-  // ~KB/file bloom payloads. Publishing diffs the in-memory manifest
-  // against its carried segments: unchanged-covered files keep their
-  // segment; a segment at-most-half alive has its survivors folded
-  // forward into the commit's fresh segment and its ref dropped
-  // (bounding tombstone accumulation); files that are new OR whose
-  // metadata changed (widening drops blooms, clones re-key stats) go
-  // to the fresh segment. Invariant: readManifest ∘ publishManifest
-  // is the identity on Manifest, up to file order.
+  // ~KB/file bloom payloads. Every commit publishes a DELTA on its
+  // base manifest ([[publishManifestDelta]]): untouched refs carry
+  // verbatim; a segment some of whose files the commit removed keeps
+  // its ref with fresh tombstones while more than half alive, else its
+  // survivors fold forward into the commit's fresh segment and its ref
+  // drops (bounding tombstone accumulation); the commit's new or
+  // edited entries go to the fresh segment. Invariant: every live
+  // file has exactly one un-tombstoned segment ref.
   // ------------------------------------------------------------------
 
   private val SegHeader = "graft-segment-v1"
 
   /** Cap on a manifest's segment-ref count: hitting it folds every
     * live entry into the commit's fresh segment (amortized
-    * O(files/cap) metadata per commit — see the compaction comment in
-    * [[publishManifest]]).
+    * O(files/cap) metadata per commit — see [[publishManifestDelta]]).
     */
   private val MaxManifestSegments = 32
 
@@ -1634,58 +1634,35 @@ object Snapshots {
     }
   }
 
-  /** The manifest-file facts the DELTA publish needs beyond
-    * [[readManifestThin]]'s version-level view: the segment refs WITH
-    * their recorded live counts (carried verbatim for untouched
-    * segments), the tombstone set, and whether any legacy inline
-    * `file=` lines exist (inline entries have no segment to carry —
-    * [[deltaBase]] refuses them). O(manifest file) like
-    * [[manifestSkeleton]] — no segment is parsed.
+  /** One parsed manifest file ([[parseManifest]]): the version-level
+    * `header` (schema, txns, checks, dvs, ledgers, specs, column
+    * mapping, features, pending marker; its per-file maps hold only
+    * legacy inline lines) plus what the segments' contents are NOT
+    * needed to know — the segment refs WITH their recorded live counts
+    * (-1 for a count-less legacy ref), the tombstone set, and any
+    * legacy INLINE per-file entries (logical names). [[assemble]]
+    * turns it into the whole-table view; the delta publish carries its
+    * refs and tombstones verbatim; the planning walk
+    * ([[liveEntriesCheckpointed]]) filters by them. O(manifest file)
+    * driver work — no segment is parsed.
     */
-  private final case class ManifestShell(segRefs: Seq[(String, Int)],
-                                         tombs: Set[(String, String)],
-                                         hasInline: Boolean)
-
-  private def manifestShell(f: FileSystem, tableDir: String,
-                            version: Long): ManifestShell = {
-    val p = manifestPath(tableDir, version)
-    require(f.exists(p), s"no version $version at $tableDir")
-    val r = new BufferedReader(
-      new InputStreamReader(f.open(p), StandardCharsets.UTF_8))
-    try {
-      require(r.readLine() == Header, s"unrecognized manifest format in $p")
-      val refs = ArrayBuffer.empty[(String, Int)]
-      val tombs = scala.collection.mutable.HashSet.empty[(String, String)]
-      var inline = false
-      var line = r.readLine()
-      while (line != null) {
-        if (line.startsWith("segment=")) {
-          line.stripPrefix("segment=").split('\t') match {
-            case Array(rel, n) => refs += ((rel, n.toInt))
-            // count-less refs predate the live-count line — the delta
-            // publish needs the count to carry it verbatim, so a -1
-            // here makes [[deltaBase]] refuse the legacy base
-            case Array(rel) => refs += ((rel, -1))
-            case _ => ()
-          }
-        } else if (line.startsWith("removed="))
-          line.stripPrefix("removed=").split('\t') match {
-            case Array(rel, file) => tombs += ((rel, file))
-            case _ => ()
-          }
-        else if (line.startsWith("file=")) inline = true
-        line = r.readLine()
-      }
-      ManifestShell(refs.toSeq, tombs.toSet, inline)
-    } finally r.close()
+  private[sources] final case class ManifestShell(header: Manifest,
+      segRefs: Seq[(String, Int)], tombs: Set[(String, String)],
+      inline: Seq[CkptFile] = Nil) {
+    def hasInline: Boolean = inline.nonEmpty
   }
+
+  /** The base of a table's first commit (or of an overwrite, which
+    * carries no predecessor ref): no segment, no tombstone.
+    */
+  private val EmptyBase = ManifestShell(Manifest(-1L, Nil), Nil, Set.empty)
 
   /** The one refusal of a LEGACY base: a table written before the
     * current format lacks a fact the delta publish or its ledger
-    * arithmetic needs (`missing` names it). Every DML and maintenance
-    * operation refuses such a table loudly rather than keeping a
-    * second code path for it; [[compact]] rewrites it into the
-    * current format.
+    * arithmetic needs (`missing` names it). Every DML, maintenance and
+    * metadata-only operation refuses such a table loudly rather than
+    * keeping a second code path for it; [[compact]] rewrites it into
+    * the current format.
     */
   private def refuseLegacy(tableDir: String, op: String,
                            missing: Option[String]): Unit =
@@ -1695,43 +1672,38 @@ object Snapshots {
           "Snapshots.compact rewrites it into the current format")
     }
 
-  /** The shell of `m`'s manifest, refused when the base is legacy:
-    * inline `file=` lines, count-less `segment=` refs, no `schema=`
-    * or no row ledger.
+  /** The legacy fact a base manifest lacks, if any: inline `file=`
+    * lines, count-less `segment=` refs, no `schema=` or no row ledger.
     */
-  private def currentShell(f: FileSystem, tableDir: String, m: Manifest,
-                           op: String): ManifestShell = {
-    val sh = manifestShell(f, tableDir, m.version)
-    refuseLegacy(tableDir, op,
-      if (sh.hasInline) Some("segment refs: inline file= lines")
-      else if (sh.segRefs.exists(_._2 < 0)) Some("segment live counts")
-      else if (m.schema.isEmpty) Some("schema")
-      else if (m.dataRows < 0) Some("row ledger")
-      else None)
-    sh
-  }
+  private def legacyField(base: ManifestShell): Option[String] =
+    if (base.hasInline) Some("segment refs: inline file= lines")
+    else if (base.segRefs.exists(_._2 < 0)) Some("segment live counts")
+    else if (base.header.schema.isEmpty) Some("schema")
+    else if (base.header.dataRows < 0) Some("row ledger")
+    else None
 
-  /** The base every table DML and maintenance operation builds on:
-    * the next version, the last live manifest (version-level lines
-    * only — [[resolveForWriteThin]]) and its shell for the delta
-    * publish. A legacy base is refused here.
+  /** The base every table DML, maintenance and metadata-only
+    * operation builds on: the next version and the last live manifest
+    * file, parsed once ([[resolveForWrite]]). A legacy base is refused
+    * here.
     */
   private def deltaBase(spark: SparkSession, tableDir: String,
-                        op: String): (Long, Manifest, ManifestShell) = {
-    val (version, m) = resolveForWriteThin(spark, tableDir)
-    (version, m, currentShell(fs(spark, tableDir), tableDir, m, op))
+                        op: String): (Long, ManifestShell) = {
+    val (version, base) = resolveForWrite(spark, tableDir)
+    refuseLegacy(tableDir, op, legacyField(base))
+    (version, base)
   }
 
-  /** The live entries of `m` matching `pred` ([[liveEntriesCheckpointed]]),
+  /** The live entries of `base` matching `pred` ([[liveEntriesCheckpointed]]),
     * refused when a candidate lacks its per-file row or byte ledger
     * (an entry written before per-file accounting).
     */
   private def liveCandidates(spark: SparkSession, tableDir: String,
-                             m: Manifest, op: String,
+                             base: ManifestShell, op: String,
                              pred: CkptFile => Boolean,
                              withStats: Boolean = false): Seq[LiveEntry] = {
     // inline lines were refused with the base, so the walk always runs
-    val entries = liveEntriesCheckpointed(spark, tableDir, m.version,
+    val entries = liveEntriesCheckpointed(spark, tableDir, base,
       pred, withStats).getOrElse(Nil)
     refuseLegacy(tableDir, op,
       entries.find(e => e.rows.isEmpty || e.bytes.isEmpty)
@@ -1762,17 +1734,20 @@ object Snapshots {
     * is tail: the same driver walk over cached segments that
     * [[readManifest]] runs. `pred` must be a serializable pure
     * function of the row (capture plain values, not enclosing state).
-    * Returns None only when the manifest still carries legacy inline
-    * lines (no segment positions to report).
+    * The caller's parse of the manifest (`base`) supplies the refs and
+    * tombstones — the manifest file is not read again. Returns None
+    * only when the manifest still carries legacy inline lines (no
+    * segment positions to report).
     */
   private[sources] def liveEntriesCheckpointed(
-      spark: SparkSession, tableDir: String, version: Long,
+      spark: SparkSession, tableDir: String, base: ManifestShell,
       pred: CkptFile => Boolean, withStats: Boolean = false)
       : Option[Seq[LiveEntry]] = {
+    if (base.hasInline) return None // legacy inline: no segments
     val f = fs(spark, tableDir)
-    val (segV, tombsV, _, _, inlineV) = manifestSkeleton(f, tableDir, version)
-    if (inlineV.nonEmpty) return None // legacy inline: no segments
-    val ck = newestCheckpointAtOrBefore(f, tableDir, version)
+    val segV = base.segRefs.map(_._1)
+    val tombsV = base.tombs
+    val ck = newestCheckpointAtOrBefore(f, tableDir, base.header.version)
       .map(checkpointDir(tableDir, _))
     val covered = ck.map(checkpointCoveredSegs(f, _)).getOrElse(Set.empty)
     val segSet = segV.toSet
@@ -1818,10 +1793,9 @@ object Snapshots {
           cf.rows, cf.bytes, e.sortedBy,
           if (ws) cf.stats.keys.toSeq.sorted else Nil) }
     }.toSeq
-    // first-ref-wins dedup cannot double-count here: a live file has
-    // exactly ONE live (segment, file) position (publishManifest
-    // tombstones later duplicates at write time), and ckpt rows and
-    // tail rows draw from disjoint segment sets
+    // no dedup needed: a live file has exactly ONE live (segment,
+    // file) position ([[publishManifestDelta]]'s invariant), and ckpt
+    // rows and tail rows draw from disjoint segment sets
     Some(fromCkpt ++ fromTail)
   }
 
@@ -1993,90 +1967,6 @@ object Snapshots {
                             blooms: Map[String, CkptBloom] = Map.empty,
                             sortedBy: Option[String] = None)
 
-  /** The light half of [[readManifest]]: manifest-file lines ONLY —
-    * segment refs in order, tombstones, the column mapping, retired
-    * names, and any legacy INLINE per-file metadata — without parsing
-    * a single segment. O(manifest file), which is O(segments +
-    * schema + dvs), not O(files).
-    */
-  private def manifestSkeleton(f: FileSystem, tableDir: String, version: Long)
-      : (Seq[String], Set[(String, String)], Map[String, String],
-         Set[String], Seq[CkptFile]) = {
-    val p = manifestPath(tableDir, version)
-    require(f.exists(p), s"no version $version at $tableDir")
-    val r = new BufferedReader(
-      new InputStreamReader(f.open(p), StandardCharsets.UTF_8))
-    try {
-      require(r.readLine() == Header, s"unrecognized manifest format in $p")
-      val segRefs = ArrayBuffer.empty[String]
-      val tombs = scala.collection.mutable.HashSet.empty[(String, String)]
-      val colMap = scala.collection.mutable.Map.empty[String, String]
-      val retired = ArrayBuffer.empty[String]
-      val files = ArrayBuffer.empty[String]
-      val stats = scala.collection.mutable.Map.empty[(String, String), CkptStat]
-      val buckets = scala.collection.mutable.Map.empty[String, Int]
-      val fileRows = scala.collection.mutable.Map.empty[String, Long]
-      val fileBytes = scala.collection.mutable.Map.empty[String, Long]
-      val nulls = scala.collection.mutable.Map.empty[(String, String), Long]
-      var line = r.readLine()
-      while (line != null) {
-        if (line.startsWith("segment="))
-          segRefs += line.stripPrefix("segment=").split('\t').head
-        else if (line.startsWith("removed="))
-          line.stripPrefix("removed=").split('\t') match {
-            case Array(rel, file) => tombs += ((rel, file))
-            case _ => ()
-          }
-        else if (line.startsWith("colmap="))
-          line.stripPrefix("colmap=").split('\t') match {
-            case Array(l, ph) => colMap(l) = ph
-            case _ => ()
-          }
-        else if (line.startsWith("retired="))
-          retired += line.stripPrefix("retired=")
-        else if (line.startsWith("file=")) files += line.stripPrefix("file=")
-        else if (line.startsWith("stat="))
-          line.stripPrefix("stat=").split('\t') match {
-            case Array(file, c, kind, min, max) =>
-              stats((file, c)) = CkptStat(kind, min, max)
-            case _ => ()
-          }
-        else if (line.startsWith("bucket="))
-          line.stripPrefix("bucket=").split('\t') match {
-            case Array(rel, b) => buckets(rel) = b.toInt
-            case _ => ()
-          }
-        else if (line.startsWith("frow="))
-          line.stripPrefix("frow=").split('\t') match {
-            case Array(rel, n, b) =>
-              fileRows(rel) = n.toLong; fileBytes(rel) = b.toLong
-            case Array(rel, n) => fileRows(rel) = n.toLong
-            case _ => ()
-          }
-        else if (line.startsWith("nulls="))
-          line.stripPrefix("nulls=").split('\t') match {
-            case Array(rel, c, n) => nulls((rel, c)) = n.toLong
-            case _ => ()
-          }
-        line = r.readLine()
-      }
-      // legacy inline lines speak LOGICAL names already. Group the
-      // stat/null maps by file ONCE — a per-file scan of the whole map
-      // would be O(files × stats), quadratic on a large legacy flat
-      // manifest (paid at checkpoint build AND every checkpointed read)
-      val statsByFile = stats.groupBy { case ((r0, _), _) => r0 }
-      val nullsByFile = nulls.groupBy { case ((r0, _), _) => r0 }
-      val inline = files.toSeq.map { rel =>
-        CkptFile(rel, buckets.get(rel), fileRows.get(rel), fileBytes.get(rel),
-          statsByFile.getOrElse(rel, Map.empty)
-            .map { case ((_, c), st) => c -> st }.toMap,
-          nullsByFile.getOrElse(rel, Map.empty)
-            .map { case ((_, c), n) => c -> n }.toMap)
-      }
-      (segRefs.toSeq, tombs.toSet, colMap.toMap, retired.toSet, inline)
-    } finally r.close()
-  }
-
   private def checkpointDir(tableDir: String, version: Long): Path =
     new Path(tableDir, f"_manifests/checkpoints/ckpt-v$version%06d")
 
@@ -2106,8 +1996,9 @@ object Snapshots {
     val stale = f.exists(out)
     if (stale && f.exists(new Path(out, CoveredSegsFile)))
       return out.toString
-    val (segRefs, _, _, _, inline) =
-      manifestSkeleton(f, tableDir, v)
+    val base = parseManifest(spark, tableDir, v)
+    val segRefs = base.segRefs.map(_._1)
+    val inline = base.inline
     // hadoop conf rides to executors as plain pairs (Configuration is
     // Writable, not Java-serializable)
     val confPairs: Seq[(String, String)] = {
@@ -2481,9 +2372,11 @@ object Snapshots {
     val ck = checkpointDir(tableDir, cv)
     val segs = checkpointSketchSegs(f, ck, sidecar).getOrElse(return None)
     val covered = checkpointCoveredSegs(f, ck)
-    val (segV, tombsV, colMapV, retiredV, inlineV) =
-      manifestSkeleton(f, tableDir, version)
-    if (inlineV.nonEmpty) return None // legacy inline: no segments
+    val base = parseManifest(spark, tableDir, version)
+    if (base.hasInline) return None // legacy inline: no segments
+    val segV = base.segRefs.map(_._1)
+    val tombsV = base.tombs
+    val retiredV = base.header.retiredCols.toSet
     val dirtySegs = tombsV.iterator.map(_._1).toSet
     val (clean, parsed) = segV.partition(rel =>
       covered.contains(rel) && !dirtySegs.contains(rel))
@@ -2534,7 +2427,7 @@ object Snapshots {
       .map(c => c -> ((payloads.getOrElse(c, ArrayBuffer.empty).toSeq,
         values.getOrElse(c, ArrayBuffer.empty).toSeq)))
       .toMap,
-      colMapV.map(_.swap)))
+      base.header.logicalOf))
   }
 
   /** [[mergedNdv]]'s checkpoint-served twin — table-level NDV per
@@ -2579,12 +2472,10 @@ object Snapshots {
     * the idempotent HLL union, the per-segment folds may only serve
     * when each live file reaches the merge EXACTLY ONCE. That
     * exactness is structural, not assumed:
-    *   - [[publishManifest]] gives every live file exactly one
-    *     un-tombstoned segment ref in every manifest it writes (its
-    *     `covered` first-ref-wins walk TOMBSTONES duplicate refs at
-    *     the publish that created them), and every commit path —
-    *     append, overwrite, MERGE, maintenance, restore — funnels
-    *     through it;
+    *   - [[publishManifestDelta]] gives every live file exactly one
+    *     un-tombstoned segment ref in every manifest it writes, and
+    *     every commit path — append, overwrite, MERGE, maintenance,
+    *     metadata-only commits, restore — funnels through it;
     *   - a sidecar fold is served only for segments the checkpoint
     *     covered that NO tombstone of the read version touches: such
     *     a segment's entries are ALL live through it, and by the
@@ -2667,7 +2558,7 @@ object Snapshots {
                                               tableDir: String,
                                               version: Long)
       : Option[Map[String, (String, String, Option[Long])]] = {
-    val schema = readManifestThin(spark, tableDir, version).schema
+    val schema = parseManifest(spark, tableDir, version).header.schema
       .getOrElse(return None) // eligibility needs the column types
     val eligible = rangeEligible(schema)
     // per-physical-column accumulator of the partial folds
@@ -2749,9 +2640,9 @@ object Snapshots {
   }
 
   /** [[readVersionPruned]]'s checkpoint-planned twin, O(result) in the
-    * driver END TO END: version resolution and liveness use the THIN
-    * manifest parse (small file only — schema, column mapping, DV
-    * refs, pending marker; the sharded per-file metadata is never
+    * driver END TO END: version resolution and liveness read the
+    * manifest file's header only (schema, column mapping, DV refs,
+    * pending marker; the sharded per-file metadata is never
     * assembled), pruning runs as a Spark job over the checkpoint
     * ([[pruneFilesCheckpointed]]), and only the surviving file names
     * reach the driver to build the scan. Schema, column mapping and
@@ -2762,40 +2653,16 @@ object Snapshots {
   def readVersionCheckpointed(spark: SparkSession, tableDir: String,
                               version: Option[Long],
                               preds: Seq[(String, Any, Any)]): DataFrame = {
-    val thin = resolveForReadThin(spark, tableDir, version)
-    val keep = pruneFilesCheckpointed(spark, tableDir, Some(thin.version), preds)
+    val head = resolveForRead(spark, tableDir, version).header
+    val keep = pruneFilesCheckpointed(spark, tableDir, Some(head.version), preds)
     // an all-pruned read legitimately serves the schema'd EMPTY frame:
     // the stats PROVED no file overlaps, and the caller re-applies the
     // row filter anyway (readFiles needs the recorded schema for the
     // zero-file case and refuses loudly without one). NOTE this
     // deliberately diverges from [[readVersionPruned]], which refuses
     // on all-pruned — see its scaladoc for the contract rationale.
-    readFiles(spark, tableDir, thin, keep)
+    readFiles(spark, tableDir, head, keep)
   }
-
-  /** [[resolveForRead]]'s THIN twin — same explicit-version liveness
-    * gate, same latest-live walk, but through [[readManifestThin]]:
-    * the sharded per-file metadata is never assembled in the driver.
-    */
-  private def resolveForReadThin(spark: SparkSession, tableDir: String,
-                                 version: Option[Long]): Manifest =
-    version match {
-      case Some(v) =>
-        require(fs(spark, tableDir).exists(manifestPath(tableDir, v)),
-          s"no version $v at $tableDir")
-        val t = readManifestThin(spark, tableDir, v)
-        require(manifestLive(spark, t, forWrite = false),
-          s"version $v of $tableDir belongs to an uncommitted or aborted " +
-            "transaction")
-        t
-      case None =>
-        val raw = latestVersion(spark, tableDir).getOrElse(
-          throw new IllegalArgumentException(
-            s"no committed version at $tableDir"))
-        lastLive(spark, tableDir, raw, forWrite = false, thin = true)
-          .map(_._2).getOrElse(throw new IllegalArgumentException(
-            s"no live version at $tableDir"))
-    }
 
   /** Newest SERVABLE checkpointed version at or below `v`, from the
     * checkpoint dir listing — O(checkpoints), no manifest reads. Only
@@ -2850,14 +2717,16 @@ object Snapshots {
     // also the format gate: a sidecar-less checkpoint predates the
     // verbatim-transcription semantics and refuses loudly
     val covered = checkpointCoveredSegs(f, ck)
-    val (segV, tombsV, colMapV, retiredV, inlineV) =
-      manifestSkeleton(f, tableDir, v)
-    val revV = colMapV.map(_.swap)
+    val base = parseManifest(spark, tableDir, v)
+    val segV = base.segRefs.map(_._1)
+    val tombsV = base.tombs
+    val retiredV = base.header.retiredCols.toSet
+    val revV = base.header.logicalOf
     val segSet = segV.toSet
     // decimal-typed (or unknown-typed with decimal bounds) columns
     // never range-stat-prune ([[rangeStatsComparable]]): their
     // predicate keeps every file, identically to [[pruneFiles]]
-    val schemaV = readManifestThin(spark, tableDir, v).schema
+    val schemaV = base.header.schema
     val ps = preds.filter { case (c, lo, hi) =>
       rangeStatsComparable(
         schemaV.flatMap(_.fields.find(_.name == c)).map(_.dataType), lo, hi)
@@ -2909,7 +2778,7 @@ object Snapshots {
         .map(toLogical).filter(surviving).map(_.file)
     }.toSeq
     // legacy inline manifest lines speak logical names at v already
-    val fromInline = inlineV.filter(surviving).map(_.file)
+    val fromInline = base.inline.filter(surviving).map(_.file)
     (fromCkpt ++ fromTail ++ fromInline).distinct.sorted
   }
 
@@ -3043,10 +2912,13 @@ object Snapshots {
         s"$tableDir at or below v$v — run writeMetadataCheckpoint"))
     val ck = checkpointDir(tableDir, cv)
     val covered = checkpointCoveredSegs(f, ck)
-    val (segV, tombsV, colMapV, _, inlineV) = manifestSkeleton(f, tableDir, v)
-    // bucket spec + schema come from the THIN manifest parse (small
-    // file only); per-file bucket ids ride the checkpoint rows
-    val thin = readManifestThin(spark, tableDir, v)
+    // bucket spec + schema come from the manifest file's header;
+    // per-file bucket ids ride the checkpoint rows
+    val base = parseManifest(spark, tableDir, v)
+    val segV = base.segRefs.map(_._1)
+    val tombsV = base.tombs
+    val colMapV = base.header.colMap
+    val head = base.header
     import spark.implicits._
     val cachedRows = cachedCkptRows(spark, ck)
     // a pure-range call never consults a bloom — don't decode the
@@ -3074,10 +2946,10 @@ object Snapshots {
     val plans: Seq[ProbePlan] = probes.map { case (key, keys) =>
       // statType keeps the None (type unknown) signal statMayContain
       // needs; keyType concretizes for the hash probes only
-      val statType = thin.schema.map(_(key).dataType)
+      val statType = head.schema.map(_(key).dataType)
       val keyType = statType.getOrElse(
         org.apache.spark.sql.types.StringType)
-      val bucketWanted: Option[Set[Int]] = thin.bucketSpec match {
+      val bucketWanted: Option[Set[Int]] = head.bucketSpec match {
         case Some((bk, n)) if bk == key =>
           Some(bucketIdsOf(spark, keys, keyType, n))
         case _ => None
@@ -3120,7 +2992,7 @@ object Snapshots {
     // the serving read's row filter owns it
     val statRanges = ranges.filter { case (c, lo, hi) =>
       rangeStatsComparable(
-        thin.schema.flatMap(_.fields.find(_.name == c)).map(_.dataType),
+        head.schema.flatMap(_.fields.find(_.name == c)).map(_.dataType),
         lo, hi) }
     val rangesPhys = statRanges.map { case (c, lo, hi) =>
       (colMapV.getOrElse(c, c), lo, hi) }
@@ -3135,7 +3007,7 @@ object Snapshots {
     // shared [[statMayContain]], so decimal probes prune identically
     // on both paths); the conjunction folds across columns and the
     // range conjuncts AND in exactly as pruneFilesCheckpointed's
-    val decTrusted = thin.decimalStatsTrusted
+    val decTrusted = head.decimalStatsTrusted
     def survivesPlan(p: ProbePlan, probeCol: String)(r: CkptFile): Boolean = {
       p.bucketWanted.forall(w => r.bucket.forall(w.contains)) &&
       (p.degraded || (
@@ -3184,7 +3056,7 @@ object Snapshots {
           rangeSurvives(rangesPhys)(r))
         .map(_.file)
     }.toSeq
-    val fromInline = inlineV
+    val fromInline = base.inline
       .filter(r => plans.forall(p => survivesPlan(p, p.logical)(r)) &&
         rangeSurvives(statRanges)(r))
       .map(_.file)
@@ -3210,10 +3082,10 @@ object Snapshots {
       "readVersionCheckpointedKeys keys must be non-null (SQL NULL never " +
         "equals NULL — an isin probe cannot match it, and the index probes " +
         "cannot hash it)")
-    val thin = resolveForReadThin(spark, tableDir, version)
+    val head = resolveForRead(spark, tableDir, version).header
     val keep = pruneFilesCheckpointedKeys(
-      spark, tableDir, Some(thin.version), key, keys)
-    readFiles(spark, tableDir, thin, keep).filter(col(key).isin(keys: _*))
+      spark, tableDir, Some(head.version), key, keys)
+    readFiles(spark, tableDir, head, keep).filter(col(key).isin(keys: _*))
   }
 
   /** [[readVersionCheckpointedKeys]]' CONJUNCTIVE generalization — the
@@ -3238,10 +3110,10 @@ object Snapshots {
           "never equals NULL — an isin probe cannot match it, and the " +
           "index probes cannot hash it)")
     }
-    val thin = resolveForReadThin(spark, tableDir, version)
+    val head = resolveForRead(spark, tableDir, version).header
     val keep = pruneFilesCheckpointedProbes(
-      spark, tableDir, Some(thin.version), probes, ranges)
-    val keyed = probes.foldLeft(readFiles(spark, tableDir, thin, keep)) {
+      spark, tableDir, Some(head.version), probes, ranges)
+    val keyed = probes.foldLeft(readFiles(spark, tableDir, head, keep)) {
       case (df, (c, ks)) => df.filter(col(c).isin(ks: _*))
     }
     // the row filter re-applies the range conjuncts with the planner's
@@ -3817,71 +3689,66 @@ object Snapshots {
     * task #7): when a servable metadata checkpoint covers the read
     * version, the per-bucket file lists are planned BY A SPARK JOB
     * over the checkpoint plus the cached tail — the driver never runs
-    * the full manifest parse that materializes every file's
+    * the segment assembly that materializes every file's
     * stat/bloom/sketch payloads (~KB/file; the planning row is ~100
     * bytes). The job also applies the range window's file pruning
     * (the same [[FileStat.overlaps]] verdicts [[pruneFiles]] renders,
     * against the segments' physical stat keys), so with a window only
     * O(window) file names reach the driver. Returns a PLANNING
-    * manifest: the thin version-level metadata plus per-file
+    * manifest: the version-level header plus per-file
     * bucket/rows/bytes/sorted-marker maps for exactly the surviving
     * files — every downstream aligned consumer (ordered reads,
     * skip-sort eligibility, sub-bucket splits, the all-clustered
     * refusal) reads it like the eager manifest. Unclustered live
     * files are collected REGARDLESS of the window (the operators'
     * refusal must see them exactly as the eager path does). Falls
-    * back to the eager [[resolveForRead]] when no checkpoint covers
-    * the version, the manifest carries legacy inline lines, or
-    * `graft.aligned.checkpointPlan.enabled = false`.
+    * back to the eager [[assemble]] of the same parse when no
+    * checkpoint covers the version or the manifest carries legacy
+    * inline lines.
     */
   private def resolveAlignedRead(spark: SparkSession, tableDir: String,
                                  version: Option[Long],
                                  ranges: Seq[(String, Any, Any)])
       : Manifest = {
-    val enabled = spark.conf
-      .getOption("graft.aligned.checkpointPlan.enabled")
-      .forall(_.trim.equalsIgnoreCase("true"))
-    if (!enabled) return resolveForRead(spark, tableDir, version)
     val f = fs(spark, tableDir)
-    val thin = resolveForReadThin(spark, tableDir, version)
-    if (newestCheckpointAtOrBefore(f, tableDir, thin.version).isEmpty)
-      return resolveForRead(spark, tableDir, version)
+    val base = resolveForRead(spark, tableDir, version)
+    val head = base.header
+    if (base.hasInline ||
+        newestCheckpointAtOrBefore(f, tableDir, head.version).isEmpty)
+      return assemble(spark, tableDir, base)
     // only well-formed comparable ranges prune here; a malformed range
     // (unknown column, missing bound) is [[alignedWindow]]'s loud
     // refusal, which still runs on the planning manifest
-    val schema = thin.schema.getOrElse(
-      return resolveForRead(spark, tableDir, version))
+    val schema = head.schema.getOrElse(return assemble(spark, tableDir, base))
     val physRanges = ranges.collect {
       case (c, lo, hi) if schema.fieldNames.contains(c) &&
           lo != null && hi != null &&
           rangeStatsComparable(Some(schema(c).dataType), lo, hi) =>
-        (thin.physOf(c), lo, hi)
+        (head.physOf(c), lo, hi)
     }
     val pred: CkptFile => Boolean = { r =>
       r.bucket.isEmpty || physRanges.forall { case (c, lo, hi) =>
         r.stats.get(c).forall(s =>
           FileStat(s.kind, s.min, s.max).overlaps(lo, hi)) }
     }
-    liveEntriesCheckpointed(spark, tableDir, thin.version, pred) match {
-      case None => resolveForRead(spark, tableDir, version)
-      case Some(entries) =>
-        val retired = thin.retiredCols.toSet
-        val rev = thin.logicalOf
-        thin.copy(
-          files = entries.map(_.file),
-          buckets = entries.iterator
-            .flatMap(e => e.bucket.map(e.file -> _)).toMap,
-          fileRows = entries.iterator
-            .flatMap(e => e.rows.map(e.file -> _)).toMap,
-          fileBytes = entries.iterator
-            .flatMap(e => e.bytes.map(e.file -> _)).toMap,
-          // markers translate through the read version's mapping and
-          // retired set — the exact assembly [[parseManifest]] runs
-          sortedFiles = entries.iterator.flatMap(e =>
-            e.sortedBy.flatMap(v => truncateSortMarker(v,
-              retired.contains, c => rev.getOrElse(c, c))
-              .map(e.file -> _))).toMap)
-    }
+    // inline manifests returned above, so the walk always plans
+    val entries = liveEntriesCheckpointed(spark, tableDir, base, pred).get
+    val retired = head.retiredCols.toSet
+    val rev = head.logicalOf
+    head.copy(
+      files = entries.map(_.file),
+      buckets = entries.iterator
+        .flatMap(e => e.bucket.map(e.file -> _)).toMap,
+      fileRows = entries.iterator
+        .flatMap(e => e.rows.map(e.file -> _)).toMap,
+      fileBytes = entries.iterator
+        .flatMap(e => e.bytes.map(e.file -> _)).toMap,
+      // markers translate through the read version's mapping and
+      // retired set — the exact translation [[assemble]] applies
+      sortedFiles = entries.iterator.flatMap(e =>
+        e.sortedBy.flatMap(v => truncateSortMarker(v,
+          retired.contains, c => rev.getOrElse(c, c))
+          .map(e.file -> _))).toMap)
   }
 
   def bucketAlignedJoin(spark: SparkSession,
@@ -4398,7 +4265,7 @@ object Snapshots {
         else {
           // manifest path: range stats seed the key pruner — the
           // same conjunction the checkpoint job evaluates
-          val m = resolveForRead(spark, factDir, Some(v))
+          val m = readLiveManifest(spark, factDir, v)
           val keep = pruneForProbes(spark, m,
             pruneFiles(m, factRanges), Seq(factKey -> keys))
           val keepNE = if (keep.nonEmpty) keep else m.files.take(1)
@@ -5437,128 +5304,13 @@ object Snapshots {
       pruneForKeys(spark, m, keep, key, keys)
     }
 
-  /** Serialize + atomically publish `m` as `tableDir`'s manifest for
-    * its version, sharding per-file metadata into segments (section
-    * comment above). Returns false (after cleaning its temp file AND
-    * the segment it wrote) when a concurrent writer already published
-    * that version — the caller owns any data-dir cleanup and the
-    * conflict signaling.
-    */
-  private def publishManifest(f: FileSystem, tableDir: String,
-                              m: Manifest): Boolean = {
-    // ---- diff the per-file metadata against the carried segments ----
-    val fileSet = m.files.toSet
-    val statsByFile = m.stats.groupBy(_._1._1)
-    val bloomsByFile = m.blooms.groupBy(_._1._1)
-    val retired = m.retiredCols.toSet
-    val nullsByFile = m.nullCounts.groupBy(_._1._1)
-    val ndvsByFile = m.ndvs.groupBy(_._1._1)
-    val kllsByFile = m.klls.groupBy(_._1._1)
-    // segments store PHYSICAL column names (rename = O(1) manifest
-    // commit, no per-file metadata moves); the in-memory maps speak
-    // logical — translate on the way out and when comparing
-    def entryOf(file: String): SegEntry = SegEntry(file,
-      statsByFile.getOrElse(file, Map.empty).iterator
-        .map { case ((_, c), st) => m.physOf(c) -> st }.toSeq,
-      m.buckets.get(file), m.fileRows.get(file), m.fileBytes.get(file),
-      bloomsByFile.getOrElse(file, Map.empty).iterator
-        .map { case ((_, c), b) => m.physOf(c) -> b }.toSeq,
-      nullsByFile.getOrElse(file, Map.empty).iterator
-        .map { case ((_, c), n) => m.physOf(c) -> n }.toSeq,
-      ndvsByFile.getOrElse(file, Map.empty).iterator
-        .map { case ((_, c), sk) => m.physOf(c) -> sk }.toSeq,
-      kllsByFile.getOrElse(file, Map.empty).iterator
-        .map { case ((_, c), sk) => m.physOf(c) -> sk }.toSeq,
-      m.sortedFiles.get(file).map(mapSortMarker(_)(m.physOf)))
-    // the in-memory manifest is the source of truth: a covered file
-    // whose CURRENT metadata differs from its segment entry is treated
-    // as removed-and-readded (rewritten into the fresh segment). A
-    // DROPPED column's entries are ignored on both sides — they stay
-    // in old segments, masked by the retired list, never a mismatch.
-    def matches(e: SegEntry): Boolean = {
-      val ms = statsByFile.getOrElse(e.file, Map.empty)
-      val mb = bloomsByFile.getOrElse(e.file, Map.empty)
-      val mn = nullsByFile.getOrElse(e.file, Map.empty)
-      val mv = ndvsByFile.getOrElse(e.file, Map.empty)
-      val mq = kllsByFile.getOrElse(e.file, Map.empty)
-      val eStats = e.stats.filterNot { case (c, _) => retired.contains(c) }
-      val eBlooms = e.blooms.filterNot { case (c, _) => retired.contains(c) }
-      val eNulls = e.nulls.filterNot { case (c, _) => retired.contains(c) }
-      val eNdvs = e.ndvs.filterNot { case (c, _) => retired.contains(c) }
-      val eKlls = e.klls.filterNot { case (c, _) => retired.contains(c) }
-      mq.size == eKlls.size &&
-        eKlls.forall { case (c, sk) =>
-          mq.get((e.file, m.logicalOf.getOrElse(c, c))).exists(x =>
-            (x eq sk) || java.util.Arrays.equals(x, sk)) } &&
-      mv.size == eNdvs.size &&
-        eNdvs.forall { case (c, sk) =>
-          mv.get((e.file, m.logicalOf.getOrElse(c, c))).exists(x =>
-            (x eq sk) || java.util.Arrays.equals(x, sk)) } &&
-        mn.size == eNulls.size &&
-        eNulls.forall { case (c, n) =>
-          mn.get((e.file, m.logicalOf.getOrElse(c, c))).contains(n) } &&
-        ms.size == eStats.size &&
-        eStats.forall { case (c, st) =>
-          ms.get((e.file, m.logicalOf.getOrElse(c, c))).contains(st) } &&
-        mb.size == eBlooms.size &&
-        eBlooms.forall { case (c, b) =>
-          mb.get((e.file, m.logicalOf.getOrElse(c, c))).exists(x =>
-            (x eq b) || (x.mBits == b.mBits && x.k == b.k &&
-              java.util.Arrays.equals(x.words, b.words))) } &&
-        m.buckets.get(e.file) == e.bucket &&
-        m.fileRows.get(e.file) == e.rows &&
-        m.fileBytes.get(e.file) == e.bytes &&
-        // sorted markers diff like any per-file metadata (a retired
-        // sort column truncates the segment side's marker exactly as
-        // the parse does — a dead column's order can neither help
-        // nor mismatch; the surviving prefix still must agree)
-        m.sortedFiles.get(e.file).map(mapSortMarker(_)(m.physOf)) ==
-          e.sortedBy.flatMap(
-            truncateSortMarker(_, retired.contains, identity))
-    }
-    val covered = scala.collection.mutable.HashSet.empty[String]
-    val keptRefs = ArrayBuffer.empty[(String, Int)] // (rel, live count)
-    val tombstones = ArrayBuffer.empty[(String, String)] // (segRel, file)
-    m.segments.foreach { rel =>
-      val sd = cachedSegment(f, tableDir, rel)
-      val liveSet = sd.entries.iterator.filter(e =>
-        fileSet.contains(e.file) && !covered.contains(e.file) && matches(e))
-        .map(_.file).toSet
-      if (liveSet.size * 2 > sd.entries.size) {
-        keptRefs += ((rel, liveSet.size))
-        covered ++= liveSet
-        sd.entries.foreach(e =>
-          if (!liveSet.contains(e.file)) tombstones += ((rel, e.file)))
-      }
-      // else: at most half alive — ref dropped; survivors stay
-      // uncovered and fold into this commit's fresh segment
-    }
-    // segment-list compaction (the Delta-checkpoint / Iceberg
-    // rewrite-manifests role): a long append history accumulates one
-    // segment per commit — the ref list and a cold read's parse count
-    // would grow with COMMIT COUNT, not data. Past the cap, fold
-    // everything into this commit's fresh segment: O(table) metadata
-    // once per ~cap commits = amortized O(files/cap) per commit, and
-    // the manifest stays a bounded list however long the history.
-    if (keptRefs.size >= MaxManifestSegments) {
-      keptRefs.clear(); tombstones.clear(); covered.clear()
-    }
-    val newFiles = m.files.filterNot(covered)
-    val newSeg =
-      if (newFiles.isEmpty) None
-      else Some(writeSegment(f, tableDir, m.version, newFiles.map(entryOf)))
-    val segRefs = keptRefs.toSeq ++ newSeg.map(r => (r, newFiles.size))
-    publishManifestFile(f, tableDir, m, segRefs, tombstones.toSeq, newSeg)
-  }
-
-  /** The WRITE half of [[publishManifest]], shared with the
-    * maintenance delta path ([[publishManifestDelta]]): serialize the
+  /** The WRITE half of [[publishManifestDelta]]: serialize the
     * version-level lines of `m` plus the given segment refs and
     * tombstones, publish atomically, and on success restamp + write
     * the feed marker + run the opt-in auto-checkpoint. On a CAS loss
     * the freshly written segment (this commit's only new metadata
     * file) is unpublished. Never consults `m`'s per-file maps — a
-    * THIN manifest serves it completely.
+    * manifest header serves it completely.
     */
   private def publishManifestFile(f: FileSystem, tableDir: String,
                                   m: Manifest,
@@ -5639,43 +5391,51 @@ object Snapshots {
     ok
   }
 
-  /** The DELTA publish every data commit, DML and maintenance
-    * operation lands through: publish a new version as a DIFF against
-    * the base manifest (`base`, [[ManifestShell]]) instead of
-    * re-deriving every segment's liveness from a fully materialized
-    * [[Manifest]]. Untouched segment refs are carried VERBATIM with
-    * their recorded live counts and existing tombstones — never
-    * parsed, never even consulted ([[segmentTouchHook]] observes
+  /** THE manifest publisher — every data commit, DML, maintenance and
+    * metadata-only operation lands through it: publish a new version
+    * as a DIFF against the base manifest (`base`, [[ManifestShell]])
+    * instead of re-deriving every segment's liveness from a fully
+    * materialized [[Manifest]]. Untouched segment refs are carried
+    * VERBATIM with their recorded live counts and existing tombstones —
+    * never parsed, never even consulted ([[segmentTouchHook]] observes
     * this); a segment some of whose files this commit removed is
     * touched: parsed (O(that segment)), kept with fresh tombstones
     * while more than half alive, or folded — its survivors copied
     * verbatim (they are already in segment vocabulary: physical stat
     * keys, marker truncation applied at read) into this commit's
-    * fresh segment alongside `freshEntries` (the commit's own files,
-    * physical keys). Driver memory and metadata I/O are O(touched
-    * segments + fresh files); a 3-file compaction on a 10⁷-file table
-    * writes ~3 entries and reads nothing else.
+    * fresh segment alongside `freshEntries` (the commit's own files or
+    * edited copies of the removed entries, physical keys). Driver
+    * memory and metadata I/O are O(touched segments + fresh files); a
+    * 3-file compaction on a 10⁷-file table writes ~3 entries and reads
+    * nothing else, and a header-only commit (schema change, CHECK,
+    * restore) reads and writes no segment at all.
     *
-    * Two rules touch more than the removals' segments, both shared
-    * with [[publishManifest]]:
-    *  - a WIDENING batch (`widened`, logical names) drops the carried
+    * Two rules touch more than the removals' segments:
+    *  - a WIDENING (`widened`, logical names) drops the carried
     *    blooms and NDV sketches of the widened columns, and the
     *    carried min/max stats of the `scaleWidened` ones (see
     *    [[commit]]): every segment is consulted, and one holding such
     *    metadata on a live entry folds with it stripped;
     *  - past [[MaxManifestSegments]] kept refs, every live entry folds
     *    into the fresh segment (the amortized segment-list
-    *    compaction).
+    *    compaction — a long append history would otherwise grow the
+    *    ref list and a cold read's parse count with COMMIT count).
     *
-    * Correctness leans on publishManifest's own invariant: within one
-    * published manifest every live file has exactly ONE live
-    * (segment, file) position (duplicate entries in later refs are
-    * tombstoned at write), so tombstoning a removed file in its one
-    * owning segment can never leave a shadow copy to resurrect.
+    * This publisher owns the one-live-ref invariant the KLL and
+    * null-count checkpoint folds rely on ([[mergedHistogramCheckpointed]]):
+    * within one published manifest every live file has exactly ONE
+    * un-tombstoned (segment, file) position. It holds by induction —
+    * removals tombstone (or fold away) the one owning position, fresh
+    * entries are new files or edits of entries removed in the same
+    * publish, a fold copies each survivor once, and a restore
+    * republishes a shell that already held it — so tombstoning a
+    * removed file in its owning segment can never leave a shadow copy
+    * to resurrect. Callers must keep to it: a fresh entry for a file
+    * that stays live elsewhere breaks it.
     *
     * `mThin` carries the version-level lines (schema, dvs, txns,
-    * checks, ledgers, specs, column mapping, features) — a thin parse
-    * suffices; its per-file maps are never read.
+    * checks, ledgers, specs, column mapping, features) — a manifest
+    * header suffices; its per-file maps are never read.
     */
   private def publishManifestDelta(
       f: FileSystem, tableDir: String, mThin: Manifest,
@@ -5717,13 +5477,13 @@ object Snapshots {
         val live = sd.entries.filterNot(e => dead(e.file))
         if (live.exists(stale)) Right(live.map(strip))
         else if (rm.isEmpty) Left((rel, cnt, dead))
-        // same at-most-half-alive fold rule as [[publishManifest]]
+        // at-most-half alive: fold, so tombstones cannot pile up
         else if (live.size * 2 > sd.entries.size)
           Left((rel, live.size, sd.entries.map(_.file).toSet -- live.map(_.file)))
         else Right(live)
       }
     }
-    // segment-list compaction, [[publishManifest]]'s cap rule
+    // segment-list compaction: past the cap every live entry folds
     val folded =
       if (perRef.count(_.isLeft) < MaxManifestSegments) perRef
       else perRef.map {
@@ -5743,17 +5503,6 @@ object Snapshots {
       newSeg)
   }
 
-  /** Register a named table-level CHECK constraint (the table formats'
-    * ALTER TABLE ADD CONSTRAINT): a metadata-only commit — no data
-    * written — after which EVERY commit kind (append, overwrite/MERGE,
-    * compaction, purge) validates its batch against the constraint and
-    * refuses on violation. Existing data is validated first (one scan
-    * of the current snapshot, DVs applied) unless `validateExisting`
-    * is false — the admin "trust me" escape hatch for constraints
-    * known to hold, which also makes the enforcement-on-rewrite path
-    * independently testable. `exprSql` must be a single-line Spark SQL
-    * boolean expression (no tab/newline — manifest line format).
-    */
   /** ANALYZE: backfill per-file NDV sketches for `columns` on every
     * live file MISSING one — the repair that restores table-level NDV
     * ([[mergedNdv]] refuses partial unions) after maintenance dropped
@@ -5761,16 +5510,17 @@ object Snapshots {
     * `ndvColumns`. Cost is O(files missing sketches) — an analyzed
     * table pays only for what changed, never a full rescan; files
     * already covered keep their sketches verbatim. One metadata
-    * commit; no-ops versionlessly when nothing is missing. The
-    * ANALYZE TABLE ... FOR COLUMNS role, incremental by construction.
+    * commit that tombstones only the entries it extends and writes
+    * their extended copies; no-ops versionlessly when nothing is
+    * missing. The ANALYZE TABLE ... FOR COLUMNS role, incremental by
+    * construction.
     */
   def analyzeNdv(spark: SparkSession, tableDir: String,
                  columns: Seq[String]): Long =
     analyzeSketches(spark, tableDir, columns, "analyzeNdv",
       validate = (_, _) => (),
       existing = _.ndvs, build = hllPerFile,
-      publishWith = (m, v, fresh) =>
-        m.copy(version = v, ndvs = m.ndvs ++ fresh, pendingMarker = None))
+      withFresh = (e, fresh) => e.copy(ndvs = e.ndvs ++ fresh))
 
   /** [[analyzeNdv]]'s histogram twin: backfill per-file KLL quantile
     * sketches for `columns` (numeric/date/timestamp) on every live
@@ -5784,8 +5534,7 @@ object Snapshots {
     analyzeSketches(spark, tableDir, columns, "analyzeHistograms",
       validate = requireKllSketchable,
       existing = _.klls, build = kllPerFile,
-      publishWith = (m, v, fresh) =>
-        m.copy(version = v, klls = m.klls ++ fresh, pendingMarker = None))
+      withFresh = (e, fresh) => e.copy(klls = e.klls ++ fresh))
 
   /** [[analyzeStats]]' inverse, for stats that can no longer be
     * trusted: DROP every live file's recorded min/max stat (and null
@@ -5793,24 +5542,25 @@ object Snapshots {
     * for decimal columns that scale-widened under code predating the
     * stale-scale drop rules (see [[statMayContain]]'s caveat):
     * invalidated columns stop pruning (conservative — every file
-    * scans) until a rewrite re-records at the current scale. O(1)
-    * data work; the changed entries re-shard at publish.
+    * scans) until a rewrite re-records at the current scale. No data
+    * is read; the commit tombstones the entries that carried such a
+    * stat and writes their stripped copies, every other entry rides
+    * its segment verbatim.
     */
   def invalidateStats(spark: SparkSession, tableDir: String,
                       columns: Seq[String]): Long = {
     require(columns.nonEmpty, "invalidateStats needs at least one column")
-    val f = fs(spark, tableDir)
-    val (version, m) = resolveForWrite(spark, tableDir)
-    val drop = columns.toSet
-    val stats2 = m.stats.filter { case ((_, c), _) => !drop.contains(c) }
-    val nulls2 = m.nullCounts.filter { case ((_, c), _) => !drop.contains(c) }
-    if (stats2.size == m.stats.size && nulls2.size == m.nullCounts.size)
-      return m.version // nothing recorded: versionless no-op
-    if (!publishManifest(f, tableDir, m.copy(version = version,
-        stats = stats2, nullCounts = nulls2, pendingMarker = None)))
-      throw new java.util.ConcurrentModificationException(
-        s"version $version of $tableDir was committed concurrently")
-    version
+    val (version, base) = deltaBase(spark, tableDir, "invalidateStats")
+    val m = base.header
+    val drop = columns.map(m.physOf).toSet -- m.retiredCols
+    val edits = liveSegEntries(spark, tableDir, base).collect {
+      case (rel, e) if e.stats.exists(st => drop(st._1)) ||
+          e.nulls.exists(n => drop(n._1)) =>
+        rel -> e.copy(stats = e.stats.filterNot(st => drop(st._1)),
+          nulls = e.nulls.filterNot(n => drop(n._1)))
+    }
+    if (edits.isEmpty) return m.version // nothing recorded: versionless no-op
+    publishMetadata(spark, tableDir, m.copy(version = version), base, edits)
   }
 
   /** The third ANALYZE sibling: backfill per-file FOOTER min/max
@@ -5828,16 +5578,16 @@ object Snapshots {
     * unscaled at ITS write scale, which a post-hoc repair cannot
     * verify against the table's (the write paths record decimal
     * stats only where the batch scale is known to match — see
-    * [[statMayContain]]). No-ops versionlessly when nothing is
-    * missing or the footers yielded nothing fresh.
+    * [[statMayContain]]). The commit tombstones only the entries it
+    * extends and writes their extended copies. No-ops versionlessly
+    * when nothing is missing or the footers yielded nothing fresh.
     */
   def analyzeStats(spark: SparkSession, tableDir: String,
                    columns: Seq[String]): Long = {
     require(columns.nonEmpty, "analyzeStats needs at least one column")
-    val f = fs(spark, tableDir)
-    val (version, m) = resolveForWrite(spark, tableDir)
-    val schema = m.schema.getOrElse(throw new IllegalArgumentException(
-      s"$tableDir has no recorded schema to analyze"))
+    val (version, base) = deltaBase(spark, tableDir, "analyzeStats")
+    val m = base.header
+    val schema = m.schema.get // a schema-less base was refused
     columns.foreach { c =>
       require(schema.fieldNames.contains(c),
         s"analyze column '$c' is not a table column")
@@ -5846,41 +5596,28 @@ object Snapshots {
         s"analyzeStats cannot backfill decimal column '$c' (footer " +
           "stats are unscaled at each file's own write scale)")
     }
+    val phys = columns.map(m.physOf)
     // gate on stats OR null counts: a pre-null-count-era file with
     // min/max but no counts still needs its footer visited (and an
     // all-null column's file has a count but no min/max — both gaps
     // are this repair's job). Re-visiting a file whose footer yields
     // nothing fresh is a wasted footer read, never a burned version
-    // (the fresh-empty no-op below).
-    val missing = m.files.filter(rel =>
-      columns.exists(c => !m.stats.contains((rel, c)) ||
-        !m.nullCounts.contains((rel, c))))
-    if (missing.isEmpty) return m.version
-    val physRev = m.colMap.map(_.swap)
-    val freshStats = scala.collection.mutable.Map
-      .empty[(String, String), FileStat]
-    val freshNulls = scala.collection.mutable.Map
-      .empty[(String, String), Long]
-    missing.foreach { rel =>
-      val p = if (isBorrowed(rel)) new Path(rel) else new Path(tableDir, rel)
-      val (st, nn) = footerColumnMeta(spark, p, columns.map(m.physOf))
-      st.foreach { case (c, x) =>
-        val key = (rel, physRev.getOrElse(c, c))
-        if (!m.stats.contains(key)) freshStats(key) = x
-      }
-      nn.foreach { case (c, n) =>
-        val key = (rel, physRev.getOrElse(c, c))
-        if (!m.nullCounts.contains(key)) freshNulls(key) = n
+    // (the no-edit no-op below).
+    val edits = liveSegEntries(spark, tableDir, base).flatMap { case (rel, e) =>
+      val haveStat = e.stats.iterator.map(_._1).toSet
+      val haveNull = e.nulls.iterator.map(_._1).toSet
+      if (phys.forall(c => haveStat(c) && haveNull(c))) None
+      else {
+        val (st, nn) = footerColumnMeta(spark, dataPath(tableDir, e.file), phys)
+        val freshStats = st.filter { case (c, _) => !haveStat(c) }
+        val freshNulls = nn.filter { case (c, _) => !haveNull(c) }
+        if (freshStats.isEmpty && freshNulls.isEmpty) None
+        else Some(rel -> e.copy(stats = e.stats ++ freshStats,
+          nulls = e.nulls ++ freshNulls))
       }
     }
-    if (freshStats.isEmpty && freshNulls.isEmpty) return m.version
-    if (!publishManifest(f, tableDir, m.copy(version = version,
-        stats = m.stats ++ freshStats,
-        nullCounts = m.nullCounts ++ freshNulls,
-        pendingMarker = None)))
-      throw new java.util.ConcurrentModificationException(
-        s"version $version of $tableDir was committed concurrently")
-    version
+    if (edits.isEmpty) return m.version
+    publishMetadata(spark, tableDir, m.copy(version = version), base, edits)
   }
 
   /** The ONE eligibility rule for KLL (histogram) columns, shared by
@@ -5897,12 +5634,12 @@ object Snapshots {
         s"sketches values as doubles), not $t")
 
   /** Shared scaffolding of the two ANALYZE repairs: resolve, validate,
-    * find live files missing any requested sketch, re-sketch ONLY the
+    * find live entries missing any requested sketch, re-sketch ONLY the
     * (file, column) pairs actually missing (a covered column's sketch
     * survives BY IDENTITY, not by recompute determinism — KLL
-    * compaction is randomized, and a rebuilt sketch's differing bytes
-    * would churn the file out of its segment at publish), and publish
-    * one metadata commit. No-ops VERSIONLESSLY both when nothing is
+    * compaction is randomized), and publish one metadata commit that
+    * tombstones exactly the entries it extends and writes their
+    * extended copies. No-ops VERSIONLESSLY both when nothing is
     * missing and when the rebuild produced nothing fresh — publishing
     * an identical manifest would burn a version per call and never
     * converge. The builders differ on all-null (file, column) pairs:
@@ -5915,47 +5652,94 @@ object Snapshots {
   private def analyzeSketches(spark: SparkSession, tableDir: String,
       columns: Seq[String], what: String,
       validate: (String, org.apache.spark.sql.types.DataType) => Unit,
-      existing: Manifest => Map[(String, String), Array[Byte]],
+      existing: SegEntry => Seq[(String, Array[Byte])],
       build: (SparkSession, Seq[(String, Path)], Seq[String],
               Option[org.apache.spark.sql.types.StructType])
         => Map[(String, String), Array[Byte]],
-      publishWith: (Manifest, Long, Map[(String, String), Array[Byte]])
-        => Manifest): Long = {
+      withFresh: (SegEntry, Seq[(String, Array[Byte])]) => SegEntry): Long = {
     require(columns.nonEmpty, s"$what needs at least one column")
-    val f = fs(spark, tableDir)
-    val (version, m) = resolveForWrite(spark, tableDir)
-    val schema = m.schema.getOrElse(throw new IllegalArgumentException(
-      s"$tableDir has no recorded schema to analyze"))
+    val (version, base) = deltaBase(spark, tableDir, what)
+    val m = base.header
+    val schema = m.schema.get // a schema-less base was refused
     columns.foreach { c =>
       require(schema.fieldNames.contains(c),
         s"analyze column '$c' is not a table column")
       validate(c, schema(c).dataType)
     }
-    val have = existing(m)
-    val missing = m.files.filter(rel =>
-      columns.exists(c => !have.contains((rel, c))))
+    val phys = columns.map(m.physOf)
+    def missingOf(e: SegEntry): Seq[String] = {
+      val have = existing(e).iterator.map(_._1).toSet
+      phys.filterNot(have)
+    }
+    val missing = liveSegEntries(spark, tableDir, base)
+      .filter { case (_, e) => missingOf(e).nonEmpty }
     if (missing.isEmpty) return m.version
     val physSchema =
       if (m.colMap.isEmpty) schema
       else org.apache.spark.sql.types.StructType(
         schema.fields.map(fd => fd.copy(name = m.physOf(fd.name))))
-    // borrowed (clone) refs read by absolute path like everywhere else
-    val relToPath = missing.map { rel =>
-      rel -> (if (isBorrowed(rel)) new Path(rel)
-              else new Path(tableDir, rel))
+    val fresh = build(spark,
+      missing.map { case (_, e) => e.file -> dataPath(tableDir, e.file) },
+      phys, Some(physSchema))
+    val edits = missing.flatMap { case (rel, e) =>
+      val add = missingOf(e).flatMap(c => fresh.get((e.file, c)).map(c -> _))
+      if (add.isEmpty) None else Some(rel -> withFresh(e, add))
     }
-    val physRev = m.colMap.map(_.swap)
-    val fresh = build(spark, relToPath,
-      columns.map(c => m.physOf(c)), Some(physSchema))
-      .map { case ((rel, c), sk) => (rel, physRev.getOrElse(c, c)) -> sk }
-      .filter { case (k, _) => !have.contains(k) }
-    if (fresh.isEmpty) return m.version
-    if (!publishManifest(f, tableDir, publishWith(m, version, fresh)))
-      throw new java.util.ConcurrentModificationException(
-        s"version $version of $tableDir was committed concurrently")
-    version
+    if (edits.isEmpty) return m.version
+    publishMetadata(spark, tableDir, m.copy(version = version), base, edits)
   }
 
+  /** Every live segment entry of `base` with its owning segment — the
+    * driver walk the metadata repairs edit (every segment consulted).
+    */
+  private def liveSegEntries(spark: SparkSession, tableDir: String,
+                             base: ManifestShell): Seq[(String, SegEntry)] = {
+    val f = fs(spark, tableDir)
+    base.segRefs.flatMap { case (rel, _) =>
+      cachedSegment(f, tableDir, rel).entries
+        .filterNot(e => base.tombs.contains((rel, e.file))).map(rel -> _)
+    }
+  }
+
+  /** A data file's path: borrowed (clone) refs are absolute. */
+  private def dataPath(tableDir: String, rel: String): Path =
+    if (isBorrowed(rel)) new Path(rel) else new Path(tableDir, rel)
+
+  /** The publish of every metadata-only commit: `next` (the new
+    * version's header) as a delta on `base` ([[publishManifestDelta]]).
+    * `edits` are (segment, edited entry) pairs: each original entry is
+    * tombstoned in its segment and its edited copy lands in the
+    * commit's fresh segment, with any `fresh` entries; every other
+    * ref rides verbatim. Returns `next.version`; a concurrent commit
+    * of that version throws (there is no data to clean up).
+    */
+  private def publishMetadata(spark: SparkSession, tableDir: String,
+                              next: Manifest, base: ManifestShell,
+                              edits: Seq[(String, SegEntry)] = Nil,
+                              fresh: Seq[SegEntry] = Nil,
+                              widened: Set[String] = Set.empty): Long = {
+    val removed = edits.groupBy(_._1).map { case (rel, es) =>
+      rel -> es.iterator.map(_._2.file).toSet }
+    if (!publishManifestDelta(fs(spark, tableDir), tableDir,
+        next.copy(pendingMarker = None), base, removed,
+        edits.map(_._2) ++ fresh, widened))
+      throw new java.util.ConcurrentModificationException(
+        s"version ${next.version} of $tableDir was committed concurrently")
+    next.version
+  }
+
+  /** Register a named table-level CHECK constraint (the table formats'
+    * ALTER TABLE ADD CONSTRAINT): a header-only commit — no data
+    * written, no segment read or written — after which EVERY commit
+    * kind (append, overwrite/MERGE, compaction, purge) validates its
+    * batch against the constraint and refuses on violation. Existing
+    * data is validated first (one scan of the current snapshot, DVs
+    * applied) unless `validateExisting` is false — the admin "trust
+    * me" escape hatch for constraints known to hold, which also makes
+    * the enforcement-on-rewrite path independently testable. `exprSql`
+    * must be a single-line Spark SQL boolean expression (no
+    * tab/newline — manifest line format).
+    */
   def addCheckConstraint(spark: SparkSession, tableDir: String,
                          name: String, exprSql: String,
                          validateExisting: Boolean = true): Long = {
@@ -5964,11 +5748,12 @@ object Snapshots {
       s"constraint name must be non-empty with no tab/newline: '$name'")
     require(!exprSql.exists(c => c == '\t' || c == '\n' || c == '\r'),
       s"constraint expression must be a single line: '$exprSql'")
-    val f = fs(spark, tableDir)
-    val (nextV, m) = resolveForWrite(spark, tableDir)
+    val (nextV, base) = deltaBase(spark, tableDir, "addCheckConstraint")
+    val m = base.header
     require(!m.checks.contains(name), s"constraint '$name' already exists")
-    if (validateExisting && m.files.nonEmpty) {
-      val bad = readVersion(spark, tableDir, Some(m.version))
+    if (validateExisting && m.dataRows > 0) {
+      val full = assemble(spark, tableDir, base)
+      val bad = readFiles(spark, tableDir, full, full.files)
         .filter(not(coalesce(expr(exprSql), lit(false))))
         .agg(count(lit(1))).head().getLong(0)
       if (bad > 0)
@@ -5976,26 +5761,18 @@ object Snapshots {
           s"existing data violates CHECK '$name' in $bad row(s); " +
             s"constraint not added to $tableDir")
     }
-    val next = m.copy(version = nextV, checks = m.checks + (name -> exprSql),
-      pendingMarker = None)
-    if (!publishManifest(f, tableDir, next))
-      throw new java.util.ConcurrentModificationException(
-        s"version $nextV of $tableDir was committed concurrently")
-    nextV
+    publishMetadata(spark, tableDir,
+      m.copy(version = nextV, checks = m.checks + (name -> exprSql)), base)
   }
 
-  /** Remove a table-level CHECK constraint (metadata-only commit). */
+  /** Remove a table-level CHECK constraint (a header-only commit). */
   def dropCheckConstraint(spark: SparkSession, tableDir: String,
                           name: String): Long = {
-    val f = fs(spark, tableDir)
-    val (nextV, m) = resolveForWrite(spark, tableDir)
+    val (nextV, base) = deltaBase(spark, tableDir, "dropCheckConstraint")
+    val m = base.header
     require(m.checks.contains(name), s"no constraint '$name' at $tableDir")
-    val next = m.copy(version = nextV, checks = m.checks - name,
-      pendingMarker = None)
-    if (!publishManifest(f, tableDir, next))
-      throw new java.util.ConcurrentModificationException(
-        s"version $nextV of $tableDir was committed concurrently")
-    nextV
+    publishMetadata(spark, tableDir,
+      m.copy(version = nextV, checks = m.checks - name), base)
   }
 
   /** Commit with a CHECK constraint (the table formats' CHECK /
@@ -6115,20 +5892,18 @@ object Snapshots {
     * pending manifests. O(1) for tables that never used transactions
     * (the first manifest checked has no pending line), and the vacuum
     * floor is never consulted — a vacuumed version's manifest simply
-    * does not exist, which ends the walk.
+    * does not exist, which ends the walk. Liveness reads only the
+    * pending marker, so each manifest is parsed once and no segment
+    * is assembled.
     */
   private def lastLive(spark: SparkSession, tableDir: String, from: Long,
-                       forWrite: Boolean,
-                       thin: Boolean = false): Option[(Long, Manifest)] = {
+                       forWrite: Boolean): Option[ManifestShell] = {
     val f = fs(spark, tableDir)
     var v = from
     while (v >= 0) {
       if (!f.exists(manifestPath(tableDir, v))) return None // vacuumed
-      // liveness reads only the pending marker — a thin parse decides
-      // it without assembling the sharded per-file metadata
-      val m = if (thin) readManifestThin(spark, tableDir, v)
-              else readManifest(spark, tableDir, v)
-      if (manifestLive(spark, m, forWrite)) return Some((v, m))
+      val base = parseManifest(spark, tableDir, v)
+      if (manifestLive(spark, base.header, forWrite)) return Some(base)
       v -= 1
     }
     None
@@ -6136,17 +5911,23 @@ object Snapshots {
 
   /** The read-side twin of [[resolveForWrite]], shared by every
     * default-or-explicit-version read path: an explicit version must
-    * be LIVE history ([[readLiveManifest]]); no version means the last
-    * live one (uncommitted/aborted txn heads are invisible).
+    * be LIVE history; no version means the last live one
+    * (uncommitted/aborted txn heads are invisible). Returns the parsed
+    * manifest file; callers that read per-file maps [[assemble]] it.
     */
   private def resolveForRead(spark: SparkSession, tableDir: String,
-                             version: Option[Long]): Manifest =
+                             version: Option[Long]): ManifestShell =
     version match {
-      case Some(v) => readLiveManifest(spark, tableDir, v)
+      case Some(v) =>
+        val base = parseManifest(spark, tableDir, v)
+        require(manifestLive(spark, base.header, forWrite = false),
+          s"version $v of $tableDir belongs to an uncommitted or aborted " +
+            "transaction")
+        base
       case None =>
         val raw = latestVersion(spark, tableDir).getOrElse(
           throw new IllegalArgumentException(s"no committed version at $tableDir"))
-        lastLive(spark, tableDir, raw, forWrite = false).map(_._2).getOrElse(
+        lastLive(spark, tableDir, raw, forWrite = false).getOrElse(
           throw new IllegalArgumentException(s"no live version at $tableDir"))
     }
 
@@ -6159,7 +5940,7 @@ object Snapshots {
   private[sources] def latestLiveVersion(spark: SparkSession,
                                          tableDir: String): Option[Long] =
     latestVersion(spark, tableDir).flatMap(v =>
-      lastLive(spark, tableDir, v, forWrite = false).map(_._1))
+      lastLive(spark, tableDir, v, forWrite = false).map(_.header.version))
 
   /** [[readLiveManifest]] for same-package callers (the data source's
     * schema/ledger path): explicit versions must be live history.
@@ -6168,47 +5949,27 @@ object Snapshots {
                                     version: Long): Manifest =
     readLiveManifest(spark, tableDir, version)
 
-  /** `readManifest` + the liveness gate for EXPLICIT-version reads:
-    * an aborted or in-flight version is not part of table history and
-    * must not serve rows.
+  /** The assembled manifest of an EXPLICIT live version: an aborted
+    * or in-flight version is not part of table history and must not
+    * serve rows.
     */
   private def readLiveManifest(spark: SparkSession, tableDir: String,
-                               version: Long): Manifest = {
-    val m = readManifest(spark, tableDir, version)
-    require(manifestLive(spark, m, forWrite = false),
-      s"version $version of $tableDir belongs to an uncommitted or aborted " +
-        "transaction")
-    m
-  }
+                               version: Long): Manifest =
+    assemble(spark, tableDir, resolveForRead(spark, tableDir, Some(version)))
 
   /** The write-side base resolution every single-table mutation uses:
     * the NEXT version number (raw latest + 1 — version numbers burn,
-    * aborted or not) and the last LIVE manifest to build on. Forces a
-    * decision on any in-flight txn at the head (see [[manifestLive]]).
+    * aborted or not) and the last LIVE manifest file to build on,
+    * parsed once. Forces a decision on any in-flight txn at the head
+    * (see [[manifestLive]]).
     */
   private def resolveForWrite(spark: SparkSession,
-                              tableDir: String): (Long, Manifest) = {
+                              tableDir: String): (Long, ManifestShell) = {
     val raw = latestVersion(spark, tableDir).getOrElse(
       throw new IllegalArgumentException(s"no committed version at $tableDir"))
-    val (_, m) = lastLive(spark, tableDir, raw, forWrite = true).getOrElse(
+    val base = lastLive(spark, tableDir, raw, forWrite = true).getOrElse(
       throw new IllegalArgumentException(s"no live version at $tableDir"))
-    (raw + 1, m)
-  }
-
-  /** [[resolveForWrite]]'s THIN twin (the delta publishes, see
-    * [[deltaBase]]): identical version arithmetic and liveness/txn
-    * forcing, but the base manifest comes back WITHOUT its sharded
-    * per-file metadata — O(manifest file) driver work at any file
-    * count.
-    */
-  private def resolveForWriteThin(spark: SparkSession,
-                                  tableDir: String): (Long, Manifest) = {
-    val raw = latestVersion(spark, tableDir).getOrElse(
-      throw new IllegalArgumentException(s"no committed version at $tableDir"))
-    val (_, m) = lastLive(spark, tableDir, raw, forWrite = true, thin = true)
-      .getOrElse(
-        throw new IllegalArgumentException(s"no live version at $tableDir"))
-    (raw + 1, m)
+    (raw + 1, base)
   }
 
   /** Cross-table ATOMIC commit (the multi-statement transaction a
@@ -6364,33 +6125,31 @@ object Snapshots {
     } finally reader.close()
   }
 
-  /** Parse one manifest: the manifest file itself is small
-    * (table-level state + segment refs + tombstones); referenced
-    * segments resolve through the process-wide immutable-segment
-    * cache, so repeat reads of an evolving table parse only NEW
-    * segments. Legacy flat manifests (inline per-file lines) parse
-    * unchanged for reads; DML, maintenance and appends refuse them
+  /** The whole-table view of one version: [[parseManifest]] then
+    * [[assemble]]. The manifest file itself is small (table-level
+    * state + segment refs + tombstones); referenced segments resolve
+    * through the process-wide immutable-segment cache, so repeat reads
+    * of an evolving table parse only NEW segments. Legacy flat
+    * manifests (inline per-file lines) parse unchanged for reads; DML,
+    * maintenance, metadata-only commits and appends refuse them
     * ([[deltaBase]]) until [[compact]] rewrites the table into the
     * current format.
     */
   def readManifest(spark: SparkSession, tableDir: String, version: Long): Manifest =
-    parseManifest(spark, tableDir, version, assembleSegments = true)
+    assemble(spark, tableDir, parseManifest(spark, tableDir, version))
 
-  /** Small-manifest-only parse: schema, column mapping, DV refs, txn
-    * watermarks, pending marker, ledger counts — everything EXCEPT the
-    * sharded per-file metadata (`files`/`stats`/`blooms` hold only
-    * legacy inline lines; on a sharded table `files` is EMPTY). Driver
-    * cost is O(segments + tombstones) however many files the table
-    * holds — the per-file half is the checkpoint job's business
-    * ([[pruneFilesCheckpointed]]). Never hand a thin manifest to a
-    * path that enumerates `m.files`.
+  /** THE manifest-file parse — every reader of a manifest goes through
+    * it, once per use: the version-level header (schema, column
+    * mapping, DV refs, txn watermarks, pending marker, ledger counts,
+    * specs, features; its per-file maps hold only legacy inline lines)
+    * together with the segment refs and their live counts, the
+    * tombstones and the legacy inline entries ([[ManifestShell]]).
+    * Driver cost is O(segments + tombstones) however many files the
+    * table holds — no segment is parsed; [[assemble]] does that for
+    * the callers that read per-file maps.
     */
-  private def readManifestThin(spark: SparkSession, tableDir: String,
-                               version: Long): Manifest =
-    parseManifest(spark, tableDir, version, assembleSegments = false)
-
-  private def parseManifest(spark: SparkSession, tableDir: String,
-                            version: Long, assembleSegments: Boolean): Manifest = {
+  private[sources] def parseManifest(spark: SparkSession, tableDir: String,
+                                     version: Long): ManifestShell = {
     val f = fs(spark, tableDir)
     val p = manifestPath(tableDir, version)
     require(f.exists(p), s"no version $version at $tableDir")
@@ -6398,7 +6157,7 @@ object Snapshots {
       new InputStreamReader(f.open(p), StandardCharsets.UTF_8))
     try {
       require(r.readLine() == Header, s"unrecognized manifest format in $p")
-      val segRefs = ArrayBuffer.empty[String]
+      val segRefs = ArrayBuffer.empty[(String, Int)]
       val tombs = scala.collection.mutable.HashSet.empty[(String, String)]
       val colMap = scala.collection.mutable.Map.empty[String, String]
       val retiredCols = ArrayBuffer.empty[String]
@@ -6418,18 +6177,19 @@ object Snapshots {
       val fileRows = scala.collection.mutable.Map.empty[String, Long]
       val fileBytes = scala.collection.mutable.Map.empty[String, Long]
       val nullCounts = scala.collection.mutable.Map.empty[(String, String), Long]
-      val ndvSketches =
-        scala.collection.mutable.Map.empty[(String, String), Array[Byte]]
-      val kllSketches =
-        scala.collection.mutable.Map.empty[(String, String), Array[Byte]]
       val features = scala.collection.mutable.HashSet.empty[String]
-      val sortedFiles = scala.collection.mutable.Map.empty[String, String]
       var line = r.readLine()
       while (line != null) {
         if (line.startsWith("file=")) files += line.stripPrefix("file=")
         else if (line.startsWith("segment=")) {
-          // "rel" or "rel\t<count>" (count is informational)
-          segRefs += line.stripPrefix("segment=").split('\t').head
+          line.stripPrefix("segment=").split('\t') match {
+            case Array(rel, n) => segRefs += ((rel, n.toInt))
+            // count-less refs predate the live-count line — the delta
+            // publish needs the count to carry it verbatim, so a -1
+            // here makes [[deltaBase]] refuse the legacy base
+            case Array(rel) => segRefs += ((rel, -1))
+            case _ => // ignore malformed (forward compat)
+          }
         } else if (line.startsWith("removed=")) {
           line.stripPrefix("removed=").split('\t') match {
             case Array(rel, file) => tombs += ((rel, file))
@@ -6495,6 +6255,12 @@ object Snapshots {
             case _ => // ignore malformed (forward compat)
           }
         }
+        else if (line.startsWith("nulls=")) {
+          line.stripPrefix("nulls=").split('\t') match {
+            case Array(rel, c, n) => nullCounts((rel, c)) = n.toLong
+            case _ => // ignore malformed (forward compat)
+          }
+        }
         else if (line.startsWith("bloom=")) {
           line.stripPrefix("bloom=").split('\t') match {
             case Array(file, c, mBits, k, b64) =>
@@ -6507,69 +6273,107 @@ object Snapshots {
         }
         line = r.readLine()
       }
-      // assemble the per-file view from the referenced segments (in
-      // ref order, tombstoned and duplicate entries skipped), ahead of
-      // any legacy inline file lines. Segment stat/bloom keys are
-      // PHYSICAL column names: translate to logical through the
-      // column mapping, and drop entries of retired (dropped) columns
-      // — their stats describe a dead column's values and must never
-      // prune a later column that reuses the name.
-      val rev = colMap.map(_.swap)
-      val retired = retiredCols.toSet
-      // cold reads parse uncached segments CONCURRENTLY (immutable
-      // files, thread-safe cache) — a many-segment table's first read
-      // is bounded by the largest segment, not the sum; assembly below
-      // stays in ref order for deterministic file ordering
-      val segDatas: Map[String, SegmentData] =
-        if (!assembleSegments) Map.empty
-        else if (segRefs.length <= 2)
-          segRefs.iterator.map(rel => rel -> cachedSegment(f, tableDir, rel)).toMap
-        else {
-          import scala.concurrent.{Await, ExecutionContext, Future}
-          import scala.concurrent.duration._
-          implicit val ec: ExecutionContext = ExecutionContext.global
-          Await.result(Future.sequence(segRefs.toVector.map(rel =>
-            Future(rel -> cachedSegment(f, tableDir, rel)))),
-            10.minutes).toMap
-        }
-      val segFiles = ArrayBuffer.empty[String]
-      val seen = scala.collection.mutable.HashSet.empty[String]
-      if (assembleSegments) segRefs.foreach { rel =>
-        segDatas(rel).entries.foreach { e =>
-          if (!tombs.contains((rel, e.file)) && seen.add(e.file)) {
-            segFiles += e.file
-            e.stats.foreach { case (c, st) =>
-              if (!retired.contains(c))
-                stats((e.file, rev.getOrElse(c, c))) = st }
-            e.bucket.foreach(b => buckets(e.file) = b)
-            e.rows.foreach(n => fileRows(e.file) = n)
-            e.bytes.foreach(b => fileBytes(e.file) = b)
-            e.blooms.foreach { case (c, b) =>
-              if (!retired.contains(c))
-                blooms((e.file, rev.getOrElse(c, c))) = b }
-            e.nulls.foreach { case (c, n) =>
-              if (!retired.contains(c))
-                nullCounts((e.file, rev.getOrElse(c, c))) = n }
-            e.ndvs.foreach { case (c, sk) =>
-              if (!retired.contains(c))
-                ndvSketches((e.file, rev.getOrElse(c, c))) = sk }
-            e.klls.foreach { case (c, sk) =>
-              if (!retired.contains(c))
-                kllSketches((e.file, rev.getOrElse(c, c))) = sk }
-            e.sortedBy.foreach { v =>
-              truncateSortMarker(v, retired.contains,
-                c => rev.getOrElse(c, c))
-                .foreach(sortedFiles(e.file) = _) }
-          }
-        }
-      }
-      Manifest(version, segFiles.toSeq ++ files.toSeq, stats.toMap, schema,
+      val header = Manifest(version, files.toSeq, stats.toMap, schema,
         txns.toMap, dvs.toSeq, checks.toMap, dataRows, dvRows, bucketSpec,
         buckets.toMap, pending, blooms.toMap, partitionCols, fileRows.toMap,
-        fileBytes.toMap, segRefs.toSeq, colMap.toMap, retiredCols.toSeq,
-        nullCounts.toMap, ndvSketches.toMap, kllSketches.toMap,
-        features.toSet, sortedFiles.toMap)
+        fileBytes.toMap, segRefs.map(_._1).toSeq, colMap.toMap,
+        retiredCols.toSeq, nullCounts.toMap, features = features.toSet)
+      // legacy inline lines speak LOGICAL names already. Group the
+      // stat/null maps by file ONCE — a per-file scan of the whole map
+      // would be O(files × stats), quadratic on a large legacy flat
+      // manifest (paid at checkpoint build AND every checkpointed read)
+      val statsByFile = header.stats.groupBy(_._1._1)
+      val nullsByFile = header.nullCounts.groupBy(_._1._1)
+      val inline = header.files.map { rel =>
+        CkptFile(rel, header.buckets.get(rel), header.fileRows.get(rel),
+          header.fileBytes.get(rel),
+          statsByFile.getOrElse(rel, Map.empty).map { case ((_, c), st) =>
+            c -> CkptStat(st.kind, st.min, st.max) },
+          nullsByFile.getOrElse(rel, Map.empty).map { case ((_, c), n) => c -> n })
+      }
+      ManifestShell(header, segRefs.toSeq, tombs.toSet, inline)
     } finally r.close()
+  }
+
+  /** Segment assembly: the whole-table view of a parsed manifest. The
+    * referenced segments' entries join the header's per-file maps in
+    * ref order, tombstoned and duplicate entries skipped, ahead of any
+    * legacy inline file lines. Segment stat/bloom keys are PHYSICAL
+    * column names: they translate to logical through the column
+    * mapping, and entries of retired (dropped) columns drop — their
+    * stats describe a dead column's values and must never prune a
+    * later column that reuses the name.
+    */
+  private def assemble(spark: SparkSession, tableDir: String,
+                       base: ManifestShell): Manifest = {
+    val m = base.header
+    if (base.segRefs.isEmpty) return m
+    val f = fs(spark, tableDir)
+    val segRefs = base.segRefs.map(_._1)
+    val rev = m.logicalOf
+    val retired = m.retiredCols.toSet
+    // cold reads parse uncached segments CONCURRENTLY (immutable
+    // files, thread-safe cache) — a many-segment table's first read
+    // is bounded by the largest segment, not the sum; assembly below
+    // stays in ref order for deterministic file ordering
+    val segDatas: Map[String, SegmentData] =
+      if (segRefs.length <= 2)
+        segRefs.iterator.map(rel => rel -> cachedSegment(f, tableDir, rel)).toMap
+      else {
+        import scala.concurrent.{Await, ExecutionContext, Future}
+        import scala.concurrent.duration._
+        implicit val ec: ExecutionContext = ExecutionContext.global
+        Await.result(Future.sequence(segRefs.toVector.map(rel =>
+          Future(rel -> cachedSegment(f, tableDir, rel)))),
+          10.minutes).toMap
+      }
+    val segFiles = ArrayBuffer.empty[String]
+    val seen = scala.collection.mutable.HashSet.empty[String]
+    val stats = scala.collection.mutable.Map.empty[(String, String), FileStat]
+    val buckets = scala.collection.mutable.Map.empty[String, Int]
+    val fileRows = scala.collection.mutable.Map.empty[String, Long]
+    val fileBytes = scala.collection.mutable.Map.empty[String, Long]
+    val blooms = scala.collection.mutable.Map.empty[(String, String), Bloom]
+    val nullCounts = scala.collection.mutable.Map.empty[(String, String), Long]
+    val ndvSketches =
+      scala.collection.mutable.Map.empty[(String, String), Array[Byte]]
+    val kllSketches =
+      scala.collection.mutable.Map.empty[(String, String), Array[Byte]]
+    val sortedFiles = scala.collection.mutable.Map.empty[String, String]
+    segRefs.foreach { rel =>
+      segDatas(rel).entries.foreach { e =>
+        if (!base.tombs.contains((rel, e.file)) && seen.add(e.file)) {
+          segFiles += e.file
+          e.stats.foreach { case (c, st) =>
+            if (!retired.contains(c))
+              stats((e.file, rev.getOrElse(c, c))) = st }
+          e.bucket.foreach(b => buckets(e.file) = b)
+          e.rows.foreach(n => fileRows(e.file) = n)
+          e.bytes.foreach(b => fileBytes(e.file) = b)
+          e.blooms.foreach { case (c, b) =>
+            if (!retired.contains(c))
+              blooms((e.file, rev.getOrElse(c, c))) = b }
+          e.nulls.foreach { case (c, n) =>
+            if (!retired.contains(c))
+              nullCounts((e.file, rev.getOrElse(c, c))) = n }
+          e.ndvs.foreach { case (c, sk) =>
+            if (!retired.contains(c))
+              ndvSketches((e.file, rev.getOrElse(c, c))) = sk }
+          e.klls.foreach { case (c, sk) =>
+            if (!retired.contains(c))
+              kllSketches((e.file, rev.getOrElse(c, c))) = sk }
+          e.sortedBy.foreach { v =>
+            truncateSortMarker(v, retired.contains,
+              c => rev.getOrElse(c, c))
+              .foreach(sortedFiles(e.file) = _) }
+        }
+      }
+    }
+    m.copy(files = segFiles.toSeq ++ m.files, stats = m.stats ++ stats,
+      buckets = m.buckets ++ buckets, blooms = m.blooms ++ blooms,
+      fileRows = m.fileRows ++ fileRows, fileBytes = m.fileBytes ++ fileBytes,
+      nullCounts = m.nullCounts ++ nullCounts, ndvs = ndvSketches.toMap,
+      klls = kllSketches.toMap, sortedFiles = sortedFiles.toMap)
   }
 
   /** Time travel: the table exactly as of `version` (default latest).
@@ -6579,7 +6383,7 @@ object Snapshots {
     */
   def readVersion(spark: SparkSession, tableDir: String,
                   version: Option[Long] = None): DataFrame = {
-    val m = resolveForRead(spark, tableDir, version)
+    val m = assemble(spark, tableDir, resolveForRead(spark, tableDir, version))
     readFiles(spark, tableDir, m, m.files)
   }
 
@@ -6749,11 +6553,12 @@ object Snapshots {
                   predicate: org.apache.spark.sql.Column): Long = {
     import org.apache.spark.sql.functions.col
     val f = fs(spark, tableDir)
-    val (version, m, base) = deltaBase(spark, tableDir, "deleteWhere")
+    val (version, base) = deltaBase(spark, tableDir, "deleteWhere")
+    val m = base.header
     // pin the mask once (the count and the write must see the same
     // rows), then size the write to the mask ([[dvSizedForWrite]])
     val mask = readFilesMeta(spark, tableDir, m,
-        dmlCandidates(spark, tableDir, m, predicate, "deleteWhere"))
+        dmlCandidates(spark, tableDir, base, predicate, "deleteWhere"))
       .filter(predicate)
       .select(col(FpCol).as("file_path"), col(RiCol).as("row_index"))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
@@ -6790,11 +6595,11 @@ object Snapshots {
     * serves the schema'd empty frame).
     */
   private[sources] def dmlCandidates(spark: SparkSession, tableDir: String,
-                                     m: Manifest,
+                                     base: ManifestShell,
                                      predicate: org.apache.spark.sql.Column,
                                      op: String): Seq[String] =
-    liveCandidates(spark, tableDir, m, op,
-      ckptPredicateVerdict(spark, m, m.schema.get, predicate)).map(_.file)
+    liveCandidates(spark, tableDir, base, op, ckptPredicateVerdict(spark,
+      base.header, base.header.schema.get, predicate)).map(_.file)
 
   /** Size a dv mask for writing: 1 output file while it fits the
     * broadcast-friendly shape, sharded at `graft.dv.maxRowsPerFile`
@@ -6852,7 +6657,8 @@ object Snapshots {
     import org.apache.spark.sql.functions.{col, lit, max, min, pmod, xxhash64}
     require(changes.columns.contains("op"), "changes needs an op column (I/U/D)")
     val f = fs(spark, tableDir)
-    val (version, m, base) = deltaBase(spark, tableDir, "mergeOnRead")
+    val (version, base) = deltaBase(spark, tableDir, "mergeOnRead")
+    val m = base.header
     val old = m.schema.get
     txn.foreach { case (app, _) =>
       require(app.nonEmpty && !app.exists(c => c == '\t' || c == '\n' || c == '\r'),
@@ -6918,7 +6724,7 @@ object Snapshots {
       val (loV, hiV) = range
       val wantedSet = wanted.orNull
       val pk = m.physOf(key)
-      liveCandidates(spark, tableDir, m, "mergeOnRead", { r: CkptFile =>
+      liveCandidates(spark, tableDir, base, "mergeOnRead", { r: CkptFile =>
         (loV == null || r.stats.get(pk).forall(s =>
           FileStat(s.kind, s.min, s.max).overlaps(loV, hiV))) &&
           (wantedSet == null || r.bucket.forall(wantedSet.contains))
@@ -7074,7 +6880,7 @@ object Snapshots {
   private[graft] def readLatestForKeys(spark: SparkSession, tableDir: String,
                                        key: String, keys: DataFrame)
       : (DataFrame, Int, Int) = {
-    val m = resolveForRead(spark, tableDir, None)
+    val m = assemble(spark, tableDir, resolveForRead(spark, tableDir, None))
     val pruned = prunedFilesForKeys(spark, m, key, keys)
     (readFiles(spark, tableDir, m, pruned), pruned.size, m.files.size)
   }
@@ -7168,14 +6974,15 @@ object Snapshots {
     import org.apache.spark.sql.functions.col
     require(sets.nonEmpty, "updateWhere needs at least one SET column")
     val f = fs(spark, tableDir)
-    val (version, m, base) = deltaBase(spark, tableDir, "updateWhere")
+    val (version, base) = deltaBase(spark, tableDir, "updateWhere")
+    val m = base.header
     val old = m.schema.get
     sets.keys.foreach { c =>
       require(old.fieldNames.contains(c),
         s"SET column '$c' is not in the table schema")
     }
     val matched = readFilesMeta(spark, tableDir, m,
-        dmlCandidates(spark, tableDir, m, predicate, "updateWhere"))
+        dmlCandidates(spark, tableDir, base, predicate, "updateWhere"))
       .filter(predicate)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     try {
@@ -7251,7 +7058,7 @@ object Snapshots {
       .toSeq
     require(vs.nonEmpty, s"no version of $tableDir existed at $tsMillis")
     // a dead/in-flight txn manifest is not table history at any instant
-    lastLive(spark, tableDir, vs.max, forWrite = false).map(_._1).getOrElse(
+    lastLive(spark, tableDir, vs.max, forWrite = false).map(_.header.version).getOrElse(
       throw new IllegalArgumentException(
         s"no live version of $tableDir existed at $tsMillis"))
   }
@@ -7288,7 +7095,8 @@ object Snapshots {
                    statsColumns: Seq[String] = Nil): Long = {
     import org.apache.spark.sql.functions.{col, regexp_extract}
     val f = fs(spark, tableDir)
-    val (version, m, base) = deltaBase(spark, tableDir, "purgeDeletes")
+    val (version, base) = deltaBase(spark, tableDir, "purgeDeletes")
+    val m = base.header
     def publishOr(cleanup: => Unit)(
         mNext: Manifest, removed: Map[String, Set[String]],
         fresh: Seq[SegEntry]): Long = {
@@ -7324,7 +7132,7 @@ object Snapshots {
     // the masked files' segment positions and row ledgers come from
     // the planning walk; the driver holds O(masked files + touched
     // segments) metadata
-    val entries = liveCandidates(spark, tableDir, m, "purgeDeletes",
+    val entries = liveCandidates(spark, tableDir, base, "purgeDeletes",
       (r: CkptFile) => maskedTails.contains(dataTail(r.file)),
       withStats = true)
     if (entries.isEmpty) // mask rows reference no live file: drop them
@@ -7481,7 +7289,7 @@ object Snapshots {
     require(keys.forall(_ != null),
       "readVersionKeys keys must be non-null (SQL NULL never equals NULL " +
         "— an isin probe cannot match it, and the index probes cannot hash it)")
-    val m = resolveForRead(spark, tableDir, version)
+    val m = assemble(spark, tableDir, resolveForRead(spark, tableDir, version))
     val keep = pruneForKeys(spark, m, m.files, key, keys)
     // every file pruned ⇒ the keys cannot exist; one file is kept for
     // the schema and the row filter (exact either way) returns empty
@@ -7693,7 +7501,8 @@ object Snapshots {
                           filters: Seq[org.apache.spark.sql.sources.Filter])
       : DataFrame =
     readVersionFiltered(spark, tableDir,
-      resolveForRead(spark, tableDir, version), filters)
+      assemble(spark, tableDir, resolveForRead(spark, tableDir, version)),
+      filters)
 
   /** Core of the above against an already-resolved manifest — the
     * [[GraftRelation]] passes its cached one, so a scan does not
@@ -7759,7 +7568,8 @@ object Snapshots {
                       statsColumns: Seq[String] = Nil,
                       sort: Boolean = false,
                       sortAlso: Seq[String] = Nil): Long = {
-    val (next, m) = resolveForWrite(spark, tableDir)
+    val (next, base) = resolveForWrite(spark, tableDir)
+    val m = base.header
     // layout-preserving on the OTHER axis: a partitioned table
     // re-clustered on a key keeps its `k=v/` dirs (the composed
     // date-dirs × key-buckets shape), it does not silently flatten.
@@ -7884,7 +7694,8 @@ object Snapshots {
                   sortAlso: Seq[String] = Nil): Long = {
     import org.apache.spark.sql.functions.{col, lit, pmod, xxhash64}
     val f = fs(spark, tableDir)
-    val (version, m, base) = deltaBase(spark, tableDir, "clusterTail")
+    val (version, base) = deltaBase(spark, tableDir, "clusterTail")
+    val m = base.header
     val (key, n) = m.bucketSpec.getOrElse(throw new IllegalArgumentException(
       s"$tableDir is not bucket-clustered; clusterTail repairs a bucket " +
         "layout (bucketBy at commit, or CLUSTERED BY in DDL)"))
@@ -7911,7 +7722,7 @@ object Snapshots {
       s"$tableDir is partitioned: the tail rewrite does not reproduce the " +
         "partition dirs — re-cluster via compactBucketed")
     // the unbucketed tail: planning rows without a bucket id
-    val entries = liveCandidates(spark, tableDir, m, "clusterTail",
+    val entries = liveCandidates(spark, tableDir, base, "clusterTail",
       (r: CkptFile) => r.bucket.isEmpty)
     if (entries.isEmpty) return m.version
     val tail = entries.map(_.file)
@@ -8250,7 +8061,7 @@ object Snapshots {
     // exceeds the grace still lose to the feed — size the grace (or
     // pause consumers) around long transactions.
     val grace = graft.GraftConf.long(spark, "graft.txn.feedGraceMs", 1000L)
-    readManifest(spark, tableDir, versions.last).pendingMarker.foreach { mk =>
+    parseManifest(spark, tableDir, versions.last).header.pendingMarker.foreach { mk =>
       val deadline = System.currentTimeMillis() + grace
       while (markerDecision(spark, mk).isEmpty &&
           System.currentTimeMillis() < deadline)
@@ -8258,12 +8069,13 @@ object Snapshots {
     }
     val toLive = lastLive(spark, tableDir, versions.last, forWrite = true)
     if (toLive.isEmpty) return // nothing live yet
-    val (to, toM) = toLive.get
+    val to = toLive.get.header.version
+    val toM = assemble(spark, tableDir, toLive.get)
     val fromRaw = versions.head - 1
     val (from, fromM) =
       if (fromRaw < 0) (-1L, Manifest(-1L, Seq.empty))
       else lastLive(spark, tableDir, fromRaw, forWrite = true) match {
-        case Some(x) => x
+        case Some(x) => (x.header.version, assemble(spark, tableDir, x))
         case None =>
           // distinguish "everything at or below the checkpoint was an
           // aborted txn" (restarting from the true beginning is exact)
@@ -8360,7 +8172,7 @@ object Snapshots {
       // from the raw head — burned numbers are never reused.
       val watermark = latest
         .flatMap(v => lastLive(spark, tableDir, v, forWrite = false))
-        .map(_._2.txns.getOrElse(appId, Long.MinValue))
+        .map(_.header.txns.getOrElse(appId, Long.MinValue))
         .getOrElse(Long.MinValue)
       if (batchId <= watermark) return // replay (or lost race): durable already
       val expected = latest.map(_ + 1).getOrElse(0L)
@@ -8413,7 +8225,7 @@ object Snapshots {
       // from the raw head — burned numbers are never reused.
       val watermark = latest
         .flatMap(v => lastLive(spark, tableDir, v, forWrite = false))
-        .map(_._2.txns.getOrElse(appId, Long.MinValue))
+        .map(_.header.txns.getOrElse(appId, Long.MinValue))
         .getOrElse(Long.MinValue)
       if (batchId <= watermark) return // replay (or lost race): durable already
       try {
@@ -8434,8 +8246,11 @@ object Snapshots {
 
   /** RESTORE TABLE TO VERSION — roll the table back to `toVersion` by
     * publishing its file/dv/stat/schema state as a NEW version: an
-    * O(manifest) metadata-only commit, zero data copied or rewritten
-    * (the old files are referenced, not duplicated), and the botched
+    * O(manifest) metadata-only commit that republishes the target's
+    * segment refs and tombstones verbatim (no segment read or written;
+    * a legacy target is refused, [[compact]] upgrades the table), zero
+    * data copied or rewritten (the old files are referenced, not
+    * duplicated), and the botched
     * intermediate versions stay readable for forensics until
     * [[vacuum]]. Producer txn watermarks and CHECK constraints carry
     * from the LATEST version, not the restore point — replay
@@ -8453,25 +8268,25 @@ object Snapshots {
     */
   def restore(spark: SparkSession, tableDir: String, toVersion: Long,
               validateChecks: Boolean = true): Long = {
-    val f = fs(spark, tableDir)
     val (nextV, latest) = resolveForWrite(spark, tableDir)
     require(toVersion < nextV, s"cannot restore to future version $toVersion")
-    // throws if vacuumed; a dead txn version is not restorable history
-    val target = readLiveManifest(spark, tableDir, toVersion)
-    if (validateChecks && latest.checks.nonEmpty && target.files.nonEmpty) {
+    // throws if vacuumed; a dead txn version is not restorable history.
+    // The restored version republishes the target's refs and
+    // tombstones, so a legacy target is refused like any legacy base
+    val target = resolveForRead(spark, tableDir, Some(toVersion))
+    refuseLegacy(tableDir, "restore", legacyField(target))
+    val checks = latest.header.checks
+    if (validateChecks && checks.nonEmpty && target.header.dataRows > 0) {
+      val full = assemble(spark, tableDir, target)
       val violated = checkViolations(
-        readFiles(spark, tableDir, target, target.files), latest.checks)
+        readFiles(spark, tableDir, full, full.files), checks)
       if (violated.nonEmpty)
         throw new IllegalArgumentException(
           s"CHECK constraint(s) violated by version $toVersion: " +
             s"${violated.mkString(", ")}; restore of $tableDir refused")
     }
-    val next = target.copy(version = nextV,
-      txns = latest.txns, checks = latest.checks, pendingMarker = None)
-    if (!publishManifest(f, tableDir, next))
-      throw new java.util.ConcurrentModificationException(
-        s"version $nextV of $tableDir was committed concurrently")
-    nextV
+    publishMetadata(spark, tableDir, target.header.copy(version = nextV,
+      txns = latest.header.txns, checks = checks), target)
   }
 
   /** RESTORE demo — rollback-under-fire end-to-end: orders as v0, the
@@ -9019,7 +8834,8 @@ object Snapshots {
     // landing in between turns this into a CAS failure (retry the
     // compaction from the new latest) instead of silently erasing the
     // appended rows from the new snapshot
-    val (next, m) = resolveForWrite(spark, tableDir)
+    val (next, base) = resolveForWrite(spark, tableDir)
+    val m = base.header
     commit(readVersion(spark, tableDir, Some(m.version)).coalesce(numFiles),
       tableDir, "overwrite", expectedVersion = Some(next),
       statsColumns = statsColumns)
@@ -9039,7 +8855,8 @@ object Snapshots {
                     statsColumns: Seq[String] = Nil): Long = {
     import org.apache.spark.sql.functions.col
     val cols = if (statsColumns.isEmpty) Seq(sortCol) else statsColumns
-    val (next, m) = resolveForWrite(spark, tableDir)
+    val (next, base) = resolveForWrite(spark, tableDir)
+    val m = base.header
     commit(
       readVersion(spark, tableDir, Some(m.version))
         .repartitionByRange(numFiles, col(sortCol))
@@ -9072,7 +8889,8 @@ object Snapshots {
     require(bits >= 1 && zCols.size * bits <= 63,
       s"${zCols.size} columns × $bits bits must be in [1, 63]")
     val cols = if (statsColumns.isEmpty) zCols else statsColumns
-    val (next, m) = resolveForWrite(spark, tableDir)
+    val (next, base) = resolveForWrite(spark, tableDir)
+    val m = base.header
     val fold = lit(1L << bits)
     val z = graft.operators.Layout.zValueN(
       zCols.map(c => pmod(col(c).cast("long"), fold)), bits)
@@ -9237,12 +9055,12 @@ object Snapshots {
     * half of the catalog surface ([[GraftCatalog]]). Reads serve an
     * empty frame with the schema; the ledger knows 0 rows; the first
     * append evolves/validates against the declaration like any other.
+    * Published as a delta on an empty base: no segment.
     */
   def createEmpty(spark: SparkSession, tableDir: String,
                   schema: org.apache.spark.sql.types.StructType,
                   partitionCols: Seq[String] = Nil,
                   bucketSpec: Option[(String, Int)] = None): Long = {
-    val f = fs(spark, tableDir)
     require(latestVersion(spark, tableDir).isEmpty,
       s"$tableDir already has versions")
     partitionCols.map(PartitionTransforms.parse).foreach { sp =>
@@ -9255,27 +9073,24 @@ object Snapshots {
         s"bucket key '$k' is not in the schema")
       require(n >= 1 && n <= 65536, s"numBuckets must be in [1, 65536]: $n")
     }
-    if (!publishManifest(f, tableDir, Manifest(0L, Seq.empty,
-        schema = Some(schema), dataRows = 0L, dvRows = 0L,
-        bucketSpec = bucketSpec, partitionCols = partitionCols)))
-      throw new java.util.ConcurrentModificationException(
-        s"version 0 of $tableDir was committed concurrently")
-    0L
+    publishMetadata(spark, tableDir, Manifest(0L, Nil,
+      schema = Some(schema), dataRows = 0L, dvRows = 0L,
+      bucketSpec = bucketSpec, partitionCols = partitionCols), EmptyBase)
   }
 
   /** Metadata-only ADDITIVE schema evolution (the formats' ALTER
     * TABLE ADD COLUMNS): publish a new version whose manifest schema
     * carries the added nullable fields — zero data written, existing
     * files read NULL for them (the same additive machinery appends
-    * use). Duplicate names are refused.
+    * use). A header-only commit: every segment ref rides verbatim, no
+    * segment is read or written. Duplicate names are refused.
     */
   def addColumns(spark: SparkSession, tableDir: String,
                  added: Seq[org.apache.spark.sql.types.StructField]): Long = {
     require(added.nonEmpty, "addColumns needs at least one field")
-    val f = fs(spark, tableDir)
-    val (nextV, m) = resolveForWrite(spark, tableDir)
-    val old = m.schema.getOrElse(throw new IllegalArgumentException(
-      s"$tableDir has no recorded schema to evolve"))
+    val (nextV, base) = deltaBase(spark, tableDir, "addColumns")
+    val m = base.header
+    val old = m.schema.get // a schema-less base was refused
     added.foreach(fd => require(!old.fieldNames.contains(fd.name),
       s"column '${fd.name}' already exists at $tableDir"))
     val derivedNames = m.partitionCols.map(PartitionTransforms.parse)
@@ -9288,30 +9103,27 @@ object Snapshots {
       // a re-added dropped (or mapped-over) name gets a fresh physical
       // slot so old files read NULL, never the ghost's bytes
       colMap = extendColMap(m.colMap, m.retiredCols, old.fieldNames.toSet,
-        added.map(_.name), nextV),
-      pendingMarker = None)
-    if (!publishManifest(f, tableDir, next))
-      throw new java.util.ConcurrentModificationException(
-        s"version $nextV of $tableDir was committed concurrently")
-    nextV
+        added.map(_.name), nextV))
+    publishMetadata(spark, tableDir, next, base)
   }
 
   /** Metadata-only TYPE WIDENING (`ALTER TABLE t ALTER COLUMN c TYPE
     * wider`): record the wider type in a new manifest — zero data
     * rewritten; every existing file reads through the widened schema
     * in place ([[widens]] — the same lattice the append path
-    * accepts). The column's bloom entries drop with the old type
-    * (stale hashes would mis-prune files and lose rows); widening the
-    * bucket key is refused (re-cluster with [[compactBucketed]]).
+    * accepts). The column's bloom entries and NDV sketches drop with
+    * the old type (stale hashes would mis-prune files and lose rows):
+    * the delta publish folds the segments holding them into one fresh
+    * segment, stripped; every other segment rides verbatim. Widening
+    * the bucket key is refused (re-cluster with [[compactBucketed]]).
     * Returns the committed version (unchanged for a same-type no-op).
     */
   def widenColumn(spark: SparkSession, tableDir: String,
                   name: String,
                   to: org.apache.spark.sql.types.DataType): Long = {
-    val f = fs(spark, tableDir)
-    val (nextV, m) = resolveForWrite(spark, tableDir)
-    val old = m.schema.getOrElse(throw new IllegalArgumentException(
-      s"$tableDir has no recorded schema to evolve"))
+    val (nextV, base) = deltaBase(spark, tableDir, "widenColumn")
+    val m = base.header
+    val old = m.schema.get // a schema-less base was refused
     val idx = old.fieldNames.indexOf(name)
     require(idx >= 0, s"no column '$name' at $tableDir")
     val from = old.fields(idx).dataType
@@ -9319,17 +9131,12 @@ object Snapshots {
     require(widens(from, to),
       s"ALTER COLUMN '$name': $from -> $to is not a lossless widening")
     refuseBucketKeyWiden(m.bucketSpec, Set(name), tableDir)
-    val next = m.copy(version = nextV,
-      schema = Some(org.apache.spark.sql.types.StructType(
-        old.fields.updated(idx, old.fields(idx).copy(dataType = to)))),
-      blooms = m.blooms.filter { case ((_, c), _) => c != name },
-      ndvs = m.ndvs.filter { case ((_, c), _) => c != name },
-      // klls sketch values (doubles) — widening preserves them
-      pendingMarker = None)
-    if (!publishManifest(f, tableDir, next))
-      throw new java.util.ConcurrentModificationException(
-        s"version $nextV of $tableDir was committed concurrently")
-    nextV
+    // the delta publish drops the column's blooms and NDV sketches;
+    // klls sketch values (doubles) — widening preserves them
+    publishMetadata(spark, tableDir, m.copy(version = nextV,
+        schema = Some(org.apache.spark.sql.types.StructType(
+          old.fields.updated(idx, old.fields(idx).copy(dataType = to))))),
+      base, widened = Set(name))
   }
 
   /** CHECK constraints whose stored SQL expression references `name`
@@ -9354,19 +9161,20 @@ object Snapshots {
   /** ALTER TABLE RENAME COLUMN — an O(1) metadata-only commit via
     * column mapping: the logical schema renames while the mapping pins
     * the column's PHYSICAL (on-file) name, so no file is rewritten and
-    * later commits keep writing the physical name. Stats, blooms,
-    * partition spec and bucket spec re-key to the new logical name in
-    * the assembled view (the stored segments speak physical names and
-    * do not move), so pruning on the renamed column keeps working —
-    * including on files written before the rename. Refused when a
-    * CHECK constraint references the column.
+    * later commits keep writing the physical name. A header-only
+    * commit: the stored segments speak physical names, so every ref
+    * rides verbatim and no per-file map is re-keyed — stats, blooms,
+    * sketches and sort markers take the new logical name when
+    * [[assemble]] translates through the mapping, and the partition
+    * and bucket specs re-key in the header. Pruning on the renamed
+    * column keeps working — including on files written before the
+    * rename. Refused when a CHECK constraint references the column.
     */
   def renameColumn(spark: SparkSession, tableDir: String,
                    from: String, to: String): Long = {
-    val f = fs(spark, tableDir)
-    val (nextV, m) = resolveForWrite(spark, tableDir)
-    val old = m.schema.getOrElse(throw new IllegalArgumentException(
-      s"$tableDir has no recorded schema to evolve"))
+    val (nextV, base) = deltaBase(spark, tableDir, "renameColumn")
+    val m = base.header
+    val old = m.schema.get // a schema-less base was refused
     require(old.fieldNames.contains(from), s"no column '$from' at $tableDir")
     require(!old.fieldNames.contains(to),
       s"column '$to' already exists at $tableDir")
@@ -9387,43 +9195,29 @@ object Snapshots {
         old.fields.updated(idx, old.fields(idx).copy(name = to)))),
       colMap =
         if (phys == to) m.colMap - from else (m.colMap - from) + (to -> phys),
-      stats = m.stats.map { case ((fl, c), st) =>
-        (fl, if (c == from) to else c) -> st },
-      blooms = m.blooms.map { case ((fl, c), b) =>
-        (fl, if (c == from) to else c) -> b },
-      nullCounts = m.nullCounts.map { case ((fl, c), n) =>
-        (fl, if (c == from) to else c) -> n },
-      ndvs = m.ndvs.map { case ((fl, c), sk) =>
-        (fl, if (c == from) to else c) -> sk },
-      klls = m.klls.map { case ((fl, c), sk) =>
-        (fl, if (c == from) to else c) -> sk },
-      sortedFiles = m.sortedFiles.view
-        .mapValues(mapSortMarker(_)(c => if (c == from) to else c)).toMap,
       partitionCols = m.partitionCols.map(
         PartitionTransforms.renameSource(_, from, to)),
       bucketSpec = m.bucketSpec.map { case (k, n) =>
-        (if (k == from) to else k, n) },
-      pendingMarker = None)
-    if (!publishManifest(f, tableDir, next))
-      throw new java.util.ConcurrentModificationException(
-        s"version $nextV of $tableDir was committed concurrently")
-    nextV
+        (if (k == from) to else k, n) })
+    publishMetadata(spark, tableDir, next, base)
   }
 
   /** ALTER TABLE DROP COLUMN — an O(1) metadata-only commit: the
     * logical schema loses the column and its physical name joins the
     * RETIRED list, so the bytes still sitting in old files can never
     * serve a later column that reuses the name (a re-added column gets
-    * a fresh physical slot and reads NULL from old files). Refused for
-    * a partition column, the bucket key, a CHECK-referenced column,
-    * and the last column.
+    * a fresh physical slot and reads NULL from old files). A
+    * header-only commit: the dropped column's stats, blooms, sketches
+    * and sort-marker components stay in their segments, masked by the
+    * retired list when [[assemble]] reads them. Refused for a
+    * partition column, the bucket key, a CHECK-referenced column, and
+    * the last column.
     */
   def dropColumn(spark: SparkSession, tableDir: String,
                  name: String): Long = {
-    val f = fs(spark, tableDir)
-    val (nextV, m) = resolveForWrite(spark, tableDir)
-    val old = m.schema.getOrElse(throw new IllegalArgumentException(
-      s"$tableDir has no recorded schema to evolve"))
+    val (nextV, base) = deltaBase(spark, tableDir, "dropColumn")
+    val m = base.header
+    val old = m.schema.get // a schema-less base was refused
     require(old.fieldNames.contains(name), s"no column '$name' at $tableDir")
     require(old.fields.length > 1, s"cannot drop the last column of $tableDir")
     require(!m.partitionCols.exists(pc =>
@@ -9440,20 +9234,8 @@ object Snapshots {
       schema = Some(org.apache.spark.sql.types.StructType(
         old.fields.filterNot(_.name == name))),
       colMap = m.colMap - name,
-      retiredCols = (m.retiredCols :+ phys).distinct,
-      stats = m.stats.filterNot(_._1._2 == name),
-      blooms = m.blooms.filterNot(_._1._2 == name),
-      nullCounts = m.nullCounts.filterNot(_._1._2 == name),
-      ndvs = m.ndvs.filterNot(_._1._2 == name),
-      klls = m.klls.filterNot(_._1._2 == name),
-      sortedFiles = m.sortedFiles.iterator.flatMap { case (fl, v) =>
-        truncateSortMarker(v, _ == name, identity).map(fl -> _)
-      }.toMap,
-      pendingMarker = None)
-    if (!publishManifest(f, tableDir, next))
-      throw new java.util.ConcurrentModificationException(
-        s"version $nextV of $tableDir was committed concurrently")
-    nextV
+      retiredCols = (m.retiredCols :+ phys).distinct)
+    publishMetadata(spark, tableDir, next, base)
   }
 
   /** Shallow clone (the table formats' CLONE): create `targetDir` as
@@ -9462,7 +9244,8 @@ object Snapshots {
     * copied or rewritten, the standard cheap branch for
     * experimentation over a production table. The clone is fully
     * functional from v0: reads (including stat-pruned reads — the
-    * carried stats are re-keyed to the absolute refs), appends,
+    * source's live segment entries are copied, refs made absolute,
+    * into the clone's one segment), appends,
     * incremental reads, and [[compact]] — which MATERIALIZES it (the
     * rewrite produces local files, cutting the source dependency).
     * Writes to either table never disturb the other; txn watermarks
@@ -9474,50 +9257,37 @@ object Snapshots {
     * delete side here: the borrowing table's [[vacuum]] never deletes
     * borrowed refs, but the SOURCE's vacuum cannot see clone refs —
     * coordinate source vacuums with live clones externally, or
-    * compact the clone first.
+    * compact the clone first. A legacy source is refused ([[compact]]
+    * upgrades it).
     */
   def cloneShallow(spark: SparkSession, sourceDir: String, targetDir: String,
                    version: Option[Long] = None): Long = {
-    val f = fs(spark, targetDir)
     require(latestVersion(spark, targetDir).isEmpty,
       s"clone target $targetDir already has commits")
-    val m = resolveForRead(spark, sourceDir, version)
+    val src = resolveForRead(spark, sourceDir, version)
+    refuseLegacy(sourceDir, "cloneShallow", legacyField(src))
+    val m = src.header
     val srcRoot = fs(spark, sourceDir).makeQualified(new Path(sourceDir))
     def absolutize(p: String): String =
       if (isBorrowed(p)) p else new Path(srcRoot, p).toString
-    val files = m.files.map(absolutize)
-    val stats = m.stats.map { case ((file, c), st) => (absolutize(file), c) -> st }
-    // deletion vectors MUST ride the clone (absolutized like file refs
-    // — relative dv paths point into the source table): a clone of a
-    // masked version that dropped them would silently resurrect the
-    // deleted rows. The dv keys stay valid because `file_path` in a dv
-    // is the fully-qualified URI _metadata reports, which is the same
-    // however the file is referenced. CHECK constraints carry too — a
-    // fork of a constrained table stays constrained.
-    val dvs = m.dvs.map(absolutize)
-    if (!publishManifest(f, targetDir,
-        Manifest(0L, files, stats, m.schema, Map.empty, dvs, m.checks,
-          m.dataRows, m.dvRows, m.bucketSpec,
-          m.buckets.map { case (p, b) => absolutize(p) -> b },
-          None,
-          m.blooms.map { case ((p, c), b) => (absolutize(p), c) -> b },
-          m.partitionCols,
-          m.fileRows.map { case (p, n) => absolutize(p) -> n },
-          m.fileBytes.map { case (p, n) => absolutize(p) -> n },
-          // borrowed files carry the SOURCE's physical column names:
-          // the mapping and retired ghosts must ride the clone
-          colMap = m.colMap, retiredCols = m.retiredCols,
-          nullCounts = m.nullCounts.map { case ((p, c), n) =>
-            (absolutize(p), c) -> n },
-          ndvs = m.ndvs.map { case ((p, c), sk) =>
-            (absolutize(p), c) -> sk },
-          klls = m.klls.map { case ((p, c), sk) =>
-            (absolutize(p), c) -> sk },
-          sortedFiles = m.sortedFiles.map { case (p, c) =>
-            absolutize(p) -> c })))
-      throw new java.util.ConcurrentModificationException(
-        s"version 0 of $targetDir was committed concurrently")
-    0L
+    // the source's live entries, verbatim but for the absolute refs,
+    // form the clone's one segment. Deletion vectors MUST ride the
+    // clone (absolutized like file refs — relative dv paths point into
+    // the source table): a clone of a masked version that dropped them
+    // would silently resurrect the deleted rows. The dv keys stay valid
+    // because `file_path` in a dv is the fully-qualified URI _metadata
+    // reports, which is the same however the file is referenced. CHECK
+    // constraints carry too — a fork of a constrained table stays
+    // constrained. Borrowed files carry the SOURCE's physical column
+    // names: the mapping and retired ghosts ride the clone.
+    val entries = liveSegEntries(spark, sourceDir, src).map { case (_, e) =>
+      e.copy(file = absolutize(e.file)) }
+    publishMetadata(spark, targetDir,
+      Manifest(0L, Nil, schema = m.schema, dvs = m.dvs.map(absolutize),
+        checks = m.checks, dataRows = m.dataRows, dvRows = m.dvRows,
+        bucketSpec = m.bucketSpec, partitionCols = m.partitionCols,
+        colMap = m.colMap, retiredCols = m.retiredCols),
+      EmptyBase, fresh = entries)
   }
 
   /** DESCRIBE HISTORY: one row per LIVE version (vacuumed versions are
@@ -9634,9 +9404,13 @@ object Snapshots {
     */
   def fastCount(spark: SparkSession, tableDir: String,
                 version: Option[Long] = None): Long = {
-    val m = resolveForRead(spark, tableDir, version)
+    val base = resolveForRead(spark, tableDir, version)
+    val m = base.header
     if (m.dataRows >= 0 && m.dvRows >= 0) m.dataRows - m.dvRows
-    else readFiles(spark, tableDir, m, m.files).count()
+    else {
+      val full = assemble(spark, tableDir, base)
+      readFiles(spark, tableDir, full, full.files).count()
+    }
   }
 
   /** Append with a UNIQUE-KEY guarantee — the primary-key constraint
@@ -9711,8 +9485,8 @@ object Snapshots {
     * planning walk ([[liveEntriesCheckpointed]] — a Spark job over a
     * covering checkpoint, so O(candidates) reaches the driver), never
     * by a per-file `getFileStatus` loop (O(table) sequential HEAD
-    * requests on an object store); the base resolves thin and the
-    * publish is a segment DELTA ([[publishManifestDelta]] — untouched
+    * requests on an object store); the base manifest is parsed once,
+    * never assembled, and the publish is a segment DELTA ([[publishManifestDelta]] — untouched
     * segments carried verbatim, never parsed). End to end the driver
     * holds O(candidates + touched segments + fresh files) metadata.
     */
@@ -9721,10 +9495,11 @@ object Snapshots {
                    targetBytes: Long = 128L * 1024 * 1024,
                    statsColumns: Seq[String] = Nil): Long = {
     val f = fs(spark, tableDir)
-    val (version, m, base) = deltaBase(spark, tableDir, "compactSmall")
+    val (version, base) = deltaBase(spark, tableDir, "compactSmall")
+    val m = base.header
     val min = minBytes
     // bytes-less rows stay candidates here so the ledger refusal sees them
-    val entries = liveCandidates(spark, tableDir, m, "compactSmall",
+    val entries = liveCandidates(spark, tableDir, base, "compactSmall",
       (r: CkptFile) => r.bytes.forall(_ < min))
     if (entries.size < 2) return m.version
     val small = entries.map(_.file)
@@ -9773,8 +9548,7 @@ object Snapshots {
 
   /** Fresh-segment entries for a partial rewrite's own files —
     * logical stat/null keys translated to the segments' PHYSICAL
-    * vocabulary (the same translation [[publishManifest]]'s entryOf
-    * applies), markers mapped likewise.
+    * vocabulary, markers mapped likewise.
     */
   private def freshSegEntries(m: Manifest, written: Seq[String],
                               stats: Map[(String, String), FileStat],

@@ -34,6 +34,29 @@ class FlowSpec extends AnyFunSuite {
     assert(flow.report.head.status === "failed")
   }
 
+  test("a deterministic failure fails on its first attempt") {
+    val userRaised = new RuntimeException("status out of range")
+      with org.apache.spark.SparkThrowable {
+      override def getCondition: String = "USER_RAISED_EXCEPTION"
+    }
+    Seq[Throwable](
+      new IllegalArgumentException("requirement failed: no rows"),
+      new RuntimeException("job aborted", new IllegalStateException("task",
+        new IllegalArgumentException("requirement failed"))),
+      new RuntimeException("write failed", userRaised)).foreach { failure =>
+      val flow = new Flow("t3", maxRetries = 2, backoffMs = 1L)
+      var calls = 0
+      val e = intercept[Throwable](flow.task("contract") { calls += 1; throw failure })
+      assert((e eq failure) && calls === 1, s"retried $failure")
+      assert(flow.report.head.status === "failed" && flow.report.head.attempts === 1)
+    }
+    // any other Spark error condition stays transient
+    val other = new RuntimeException("lost executor") with org.apache.spark.SparkThrowable {
+      override def getCondition: String = "INTERNAL_ERROR"
+    }
+    assert(!Flow.deterministic(other) && !Flow.deterministic(new RuntimeException("x")))
+  }
+
   test("checkpointed resume: completed tasks skip, the failed one re-runs") {
     val dir = tmpDir()
     var aRuns, bRuns = 0

@@ -7,8 +7,9 @@ import org.apache.spark.sql.functions._
   * `getFileStatus` path — the call-counting shim that proves a
   * maintenance operator's candidate sizing came from the manifest's
   * byte ledger and not from per-file FS stats (each of which is a
-  * sequential HEAD request on an object store). Registered per test
-  * via `fs.graftcount.impl`; the standard custom-scheme-over-local
+  * sequential HEAD request on an object store) — and counts every
+  * `open` per path (each a GET on an object store). Registered per
+  * test via `fs.graftcount.impl`; the standard custom-scheme-over-local
   * test pattern.
   */
 class CountingLocalFs extends org.apache.hadoop.fs.RawLocalFileSystem {
@@ -19,10 +20,18 @@ class CountingLocalFs extends org.apache.hadoop.fs.RawLocalFileSystem {
     CountingLocalFs.statted.add(p.toUri.getPath)
     super.getFileStatus(p)
   }
+  override def open(p: org.apache.hadoop.fs.Path, bufferSize: Int)
+      : org.apache.hadoop.fs.FSDataInputStream = {
+    CountingLocalFs.opened.computeIfAbsent(p.toUri.getPath,
+      _ => new java.util.concurrent.atomic.AtomicInteger()).incrementAndGet()
+    super.open(p, bufferSize)
+  }
 }
 object CountingLocalFs {
   val statted: java.util.Set[String] =
     java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
+  val opened = new java.util.concurrent.ConcurrentHashMap[
+    String, java.util.concurrent.atomic.AtomicInteger]()
 }
 
 /** Partial compaction ([[Snapshots.compactSmall]]) and unique-key
@@ -302,6 +311,30 @@ class MaintenanceSpec extends SparkSpec {
     assert(m2.files.size < m.files.size, "smalls folded")
     assert(m2.dataRows === before)
     assert(Snapshots.readVersion(spark, dir).count() === before)
+  }
+
+  test("a DML and an append open their base manifest once") {
+    val conf = spark.sparkContext.hadoopConfiguration
+    conf.set("fs.graftcount.impl", classOf[CountingLocalFs].getName)
+    val dir = "graftcount:" + graft.TempDirs.create("graft-maint-open")
+    (0 until 3).foreach { i =>
+      Snapshots.commit(frame(i * 100 until i * 100 + 100, s"f$i").coalesce(1),
+        dir, if (i == 0) "overwrite" else "append", statsColumns = Seq("id"))
+    }
+    def opensOf(v: Long): Int = Option(CountingLocalFs.opened.get(
+      new org.apache.hadoop.fs.Path(dir, f"_manifests/v$v%06d.manifest")
+        .toUri.getPath)).fold(0)(_.get)
+    // DELETE on v2: the resolve, the legacy refusal and the candidate
+    // walk all read the one parse of the head manifest
+    CountingLocalFs.opened.clear()
+    assert(Snapshots.deleteWhere(spark, dir, col("id") === 150L) === 3L)
+    assert(opensOf(2L) === 1, "deleteWhere must open its base manifest once")
+    // append on v3: the predecessor's header and shell come from one parse
+    CountingLocalFs.opened.clear()
+    assert(Snapshots.commit(frame(300 until 310, "t").coalesce(1), dir,
+      "append", statsColumns = Seq("id")) === 4L)
+    assert(opensOf(3L) === 1, "an append must open its base manifest once")
+    assert(Snapshots.readVersion(spark, dir).count() === 309L)
   }
 
   test("commitUnique: fresh keys land; dups and replays are refused versionlessly") {

@@ -702,7 +702,8 @@ class ManifestShardingSpec extends SparkSpec {
       "the fixture needs both small and large files")
     // compactSmall's candidate verdict over the planning walk, which
     // plans through the covering checkpoint here
-    val got = Snapshots.liveEntriesCheckpointed(spark, dir, v,
+    val got = Snapshots.liveEntriesCheckpointed(spark, dir,
+        Snapshots.parseManifest(spark, dir, v),
         (r: Snapshots.CkptFile) => r.bytes.forall(_ < minBytes))
       .getOrElse(fail("a sharded manifest must plan"))
       .map(e => e.file -> e.bytes.get).toMap

@@ -189,7 +189,8 @@ class PartitionedTableSpec extends SparkSpec {
     // frame); a range on the stats column narrows; an unprunable
     // shape keeps everything — with or without a covering checkpoint
     def pruned(p: org.apache.spark.sql.Column) =
-      Snapshots.dmlCandidates(spark, dir, m, p, "test")
+      Snapshots.dmlCandidates(spark, dir, Snapshots.parseManifest(spark, dir, 0L),
+        p, "test")
     def checkPlanner(): Seq[String] = {
       val onlyF = pruned(col("o_orderstatus") === "F")
       assert(onlyF.nonEmpty && onlyF.size < total)

@@ -44,7 +44,8 @@ class ThinMaintenanceSpec extends SparkSpec {
     */
   private def owningSegs(dir: String, version: Long,
                          rels: Set[String]): Set[String] = {
-    val all = Snapshots.liveEntriesCheckpointed(spark, dir, version,
+    val all = Snapshots.liveEntriesCheckpointed(spark, dir,
+      Snapshots.parseManifest(spark, dir, version),
       (_: Snapshots.CkptFile) => true)
       .getOrElse(fail("fixture must not be a legacy inline manifest"))
     all.filter(e => rels.contains(e.file)).map(_.seg).toSet
@@ -485,6 +486,55 @@ class ThinMaintenanceSpec extends SparkSpec {
     assert(Snapshots.readVersion(spark, up).filter(col("id") < 5L).count() === 5L)
   }
 
+  test("metadata-only commits consult no segment and write none; reads " +
+    "still prune on a renamed column and mask a dropped one") {
+    import org.apache.spark.sql.types._
+    val dir = freshDir()
+    seedSlices(dir) // three segments, stats on id
+    def segFiles(): Set[String] = {
+      val p = java.nio.file.Paths.get(dir, "_manifests", "segments")
+      val ls = java.nio.file.Files.list(p)
+      try scala.jdk.CollectionConverters.IteratorHasAsScala(ls.iterator())
+        .asScala.map(_.getFileName.toString).toSet
+      finally ls.close()
+    }
+    val segsBefore = segFiles()
+    assert(segsBefore.size === 3)
+    // the CHECK is added without validating the existing rows: that
+    // validation is a scan of the data, not part of the commit
+    val (vs, touched) = recordTouches {
+      Seq(
+        Snapshots.addColumns(spark, dir, Seq(StructField("extra", StringType))),
+        Snapshots.renameColumn(spark, dir, "id", "key"),
+        Snapshots.dropColumn(spark, dir, "tag"),
+        Snapshots.addCheckConstraint(spark, dir, "pos", "key >= 0",
+          validateExisting = false),
+        Snapshots.dropCheckConstraint(spark, dir, "pos"),
+        Snapshots.restore(spark, dir, 5L))
+    }
+    assert(vs === (3L to 8L))
+    assert(touched.isEmpty,
+      s"metadata-only commits must consult no segment, got $touched")
+    assert(segFiles() === segsBefore, "metadata-only commits write no segment")
+    val m = Snapshots.readManifest(spark, dir, 8L)
+    assert(m.schema.get.fieldNames.toSeq === Seq("key", "extra"))
+    assert(m.files.size === 3 && m.files.forall(r => m.stats.contains((r, "key"))),
+      "the renamed column keeps every file's stats")
+    assert(!m.stats.keys.exists(_._2 == "tag") && !m.stats.keys.exists(_._2 == "id"))
+    // pruning on the renamed column: one slice holds 1005..1010
+    val kept = Snapshots.pruneFiles(m, "key", 1005L, 1010L)
+    assert(kept.size === 1)
+    val rows = Snapshots.readVersionPruned(spark, dir, 8L, "key", 1005L, 1010L)
+      .filter(col("key").between(1005L, 1010L))
+    assert(rows.columns.toSeq === Seq("key", "extra"))
+    assert(rows.count() === 6L)
+    assert(Snapshots.readVersion(spark, dir).count() === 3000L)
+    // the dropped column's bytes stay masked when its name comes back
+    Snapshots.addColumns(spark, dir, Seq(StructField("tag", StringType)))
+    assert(Snapshots.readVersion(spark, dir).filter(col("tag").isNotNull)
+      .count() === 0L, "a re-added name must not read the dropped column")
+  }
+
   test("legacy bases are refused naming the missing field, and accepted " +
     "after compact rewrites them") {
     import java.nio.charset.StandardCharsets.UTF_8
@@ -538,21 +588,50 @@ class ThinMaintenanceSpec extends SparkSpec {
           if (l.startsWith("frow=")) l.split('\t').head else l))
         write(manifestFile(d), lines(manifestFile(d)).map(_.replace(rel, legacyRel)))
       })
+    // the operations that build on the base manifest, in an order that
+    // also runs clean on the compacted table; the metadata-only ones
+    // publish header deltas on it, so they refuse a legacy base too
+    def ops(d: String): Seq[(String, () => Any)] = {
+      import org.apache.spark.sql.types._
+      Seq(
+        "deleteWhere" -> (() => Snapshots.deleteWhere(spark, d, col("id") === 1L)),
+        "addColumns" -> (() =>
+          Snapshots.addColumns(spark, d, Seq(StructField("x", IntegerType)))),
+        "widenColumn" -> (() => Snapshots.widenColumn(spark, d, "x", LongType)),
+        "renameColumn" -> (() => Snapshots.renameColumn(spark, d, "x", "y")),
+        "dropColumn" -> (() => Snapshots.dropColumn(spark, d, "y")),
+        "addCheckConstraint" -> (() =>
+          Snapshots.addCheckConstraint(spark, d, "pos", "id >= 0")),
+        "dropCheckConstraint" -> (() => Snapshots.dropCheckConstraint(spark, d, "pos")),
+        "invalidateStats" -> (() => Snapshots.invalidateStats(spark, d, Seq("id"))),
+        "analyzeStats" -> (() => Snapshots.analyzeStats(spark, d, Seq("id"))),
+        "analyzeNdv" -> (() => Snapshots.analyzeNdv(spark, d, Seq("id"))),
+        "analyzeHistograms" -> (() =>
+          Snapshots.analyzeHistograms(spark, d, Seq("id"))),
+        "restore" -> (() =>
+          Snapshots.restore(spark, d, Snapshots.latestVersion(spark, d).get)),
+        "cloneShallow" -> (() => Snapshots.cloneShallow(spark, d, freshDir())))
+    }
+    val want = (0 until 20).filterNot(_ == 1).map(i => (i.toLong, "x")).toSet
     shapes.foreach { case (field, mutate) =>
       val d = seeded()
       mutate(d)
-      val e = intercept[IllegalArgumentException] {
-        Snapshots.deleteWhere(spark, d, col("id") === 1L)
+      // a per-entry ledger gap is a candidate fact: only the DML sees it
+      val refusing =
+        if (field == "row/byte ledger") ops(d).take(1) else ops(d)
+      refusing.foreach { case (op, run) =>
+        val e = intercept[IllegalArgumentException](run())
+        assert(e.getMessage.contains(field) && e.getMessage.contains(d) &&
+          e.getMessage.contains("Snapshots.compact") &&
+          e.getMessage.startsWith(op),
+          s"$op refusal must name the table, '$field' and the upgrade: " +
+            e.getMessage)
+        assert(Snapshots.latestVersion(spark, d) === Some(0L),
+          s"a refused $op must leave the table untouched ($field)")
       }
-      assert(e.getMessage.contains(field) && e.getMessage.contains(d) &&
-        e.getMessage.contains("Snapshots.compact"),
-        s"refusal must name the table, '$field' and the upgrade: ${e.getMessage}")
-      assert(Snapshots.latestVersion(spark, d) === Some(0L),
-        s"a refused operation must leave the table untouched ($field)")
       Snapshots.compact(spark, d, 1)
-      Snapshots.deleteWhere(spark, d, col("id") === 1L)
-      assert(content(d) === (0 until 20).filterNot(_ == 1)
-        .map(i => (i.toLong, "x")).toSet, s"after compact ($field)")
+      ops(d).foreach { case (_, run) => run() }
+      assert(content(d) === want, s"after compact ($field)")
     }
   }
 
