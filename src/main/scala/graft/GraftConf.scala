@@ -2,11 +2,11 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 
-/** Typed reads of the engine's numeric `graft.*` session settings and
-  * of the mains' numeric environment variables. An unset key yields the
-  * default; a value that does not parse fails with an
+/** Typed reads of the engine's numeric and boolean `graft.*` session
+  * settings and of the mains' numeric environment variables. An unset
+  * key yields the default; a value that does not parse fails with an
   * IllegalArgumentException naming the key and the value — never a
-  * bare NumberFormatException, never a silent fallback.
+  * bare parse error, never a silent fallback.
   */
 object GraftConf {
 
@@ -18,6 +18,15 @@ object GraftConf {
 
   def double(spark: SparkSession, key: String, default: Double): Double =
     parse(key, spark.conf.getOption(key), default, "a number")(_.toDouble)
+
+  /** `true` or `false` (any case); any other value fails naming the key. */
+  def bool(spark: SparkSession, key: String, default: Boolean): Boolean =
+    parse(key, spark.conf.getOption(key), default, "true or false")(
+      _.toLowerCase match {
+        case "true" => true
+        case "false" => false
+        case _ => throw new IllegalArgumentException
+      })
 
   /** An integer environment variable of a main (for example
     * `SPARK_GRAFT_CPUS`): unset yields the default, a malformed value
@@ -33,7 +42,7 @@ object GraftConf {
       case Some(raw) =>
         try read(raw.trim)
         catch {
-          case e: NumberFormatException => throw new IllegalArgumentException(
+          case e: IllegalArgumentException => throw new IllegalArgumentException(
             s"malformed $key = '$raw' (expected $expected)", e)
         }
     }

@@ -65,8 +65,7 @@ import graft.sources.{GraftRelation, Snapshots}
 case class AlignedAggregate(spark: SparkSession) extends Rule[LogicalPlan] {
 
   private def enabled: Boolean =
-    spark.conf.getOption("graft.sql.alignedAgg.enabled")
-      .forall(_.trim.equalsIgnoreCase("true"))
+    graft.GraftConf.bool(spark, "graft.sql.alignedAgg.enabled", true)
 
   /** The servable child: a bare graft relation, or one under pure
     * attribute-projections and/or deterministic subquery-free Filters
@@ -99,12 +98,11 @@ case class AlignedAggregate(spark: SparkSession) extends Rule[LogicalPlan] {
       try {
         import org.apache.spark.sql.types.{DoubleType, FloatType}
         val m = Snapshots.readManifest(spark, g.tableDir, g.version)
+        val kt = m.schema(key).dataType
         m.bucketSpec.collect {
-          case (bk, n) if bk == key &&
-              m.files.forall(m.buckets.contains) => n
-        }.flatMap(n => m.schema.map(_(key).dataType)
-          .filter(kt => kt != DoubleType && kt != FloatType)
-          .map(kt => (n, kt)))
+          case (bk, n) if bk == key && m.files.forall(m.buckets.contains) &&
+              kt != DoubleType && kt != FloatType => (n, kt)
+        }
       } catch { case scala.util.control.NonFatal(_) => None }).isDefined
 
   override def apply(plan: LogicalPlan): LogicalPlan = {

@@ -70,8 +70,7 @@ case class AlignedJoin(spark: SparkSession) extends Rule[LogicalPlan]
     with PredicateHelper {
 
   private def enabled: Boolean =
-    spark.conf.getOption("graft.sql.alignedJoin.enabled")
-      .forall(_.trim.equalsIgnoreCase("true"))
+    graft.GraftConf.bool(spark, "graft.sql.alignedJoin.enabled", true)
 
   private def typeName(jt: JoinType): String = jt match {
     case Inner => "inner"

@@ -51,8 +51,7 @@ case class AlignedJoinAggregate(spark: SparkSession)
     extends Rule[LogicalPlan] {
 
   private def enabled: Boolean =
-    spark.conf.getOption("graft.sql.alignedJoinAgg.enabled")
-      .forall(_.trim.equalsIgnoreCase("true"))
+    graft.GraftConf.bool(spark, "graft.sql.alignedJoinAgg.enabled", true)
 
   /** The Join under the Aggregate, through the pure attribute
     * projections the USING-join resolution and ColumnPruning insert.

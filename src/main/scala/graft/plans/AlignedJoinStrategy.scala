@@ -42,8 +42,7 @@ import graft.sources.Snapshots
 case class AlignedJoinStrategy(spark: SparkSession) extends SparkStrategy {
 
   private def enabled: Boolean =
-    spark.conf.getOption("graft.sql.alignedJoin.enabled")
-      .forall(_.trim.equalsIgnoreCase("true"))
+    graft.GraftConf.bool(spark, "graft.sql.alignedJoin.enabled", true)
 
   private def typeName(jt: JoinType): String = jt match {
     case LeftSemi => "left_semi"

@@ -42,8 +42,7 @@ import graft.sources.Snapshots
 case class AlignedRunning(spark: SparkSession) extends Rule[LogicalPlan] {
 
   private def enabled: Boolean =
-    spark.conf.getOption("graft.sql.alignedRunning.enabled")
-      .forall(_.trim.equalsIgnoreCase("true"))
+    graft.GraftConf.bool(spark, "graft.sql.alignedRunning.enabled", true)
 
   /** The window expression's (alias, aggregate call) when it is a
     * default-frame running aggregate over exactly (part, ord) and the

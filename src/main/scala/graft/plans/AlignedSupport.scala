@@ -144,12 +144,11 @@ private[plans] object AlignedSides {
       try {
         import org.apache.spark.sql.types.{DoubleType, FloatType}
         val m = Snapshots.readManifest(spark, g.tableDir, g.version)
+        val kt = m.schema(key).dataType
         m.bucketSpec.collect {
-          case (bk, n) if bk == key &&
-              m.files.forall(m.buckets.contains) => n
-        }.flatMap(n => m.schema.map(_(key).dataType)
-          .filter(kt => kt != DoubleType && kt != FloatType)
-          .map(kt => (n, kt)))
+          case (bk, n) if bk == key && m.files.forall(m.buckets.contains) &&
+              kt != DoubleType && kt != FloatType => (n, kt)
+        }
       } catch { case scala.util.control.NonFatal(_) => None })
 
   /** Both sides clustered on their join keys with one modulus and one

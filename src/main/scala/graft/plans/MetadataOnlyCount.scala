@@ -177,7 +177,7 @@ case class MetadataOnlyCount(spark: SparkSession) extends Rule[LogicalPlan] {
         if agg.groupingExpressions.isEmpty &&
           agg.aggregateExpressions.nonEmpty &&
           agg.aggregateExpressions.forall(isBareCountStar) =>
-      underlying(agg.child).flatMap(_.ledgerCount) match {
+      underlying(agg.child).map(_.ledgerCount) match {
         case Some(n) =>
           LocalRelation(agg.output,
             Seq(InternalRow.fromSeq(agg.output.map(_ => n))))

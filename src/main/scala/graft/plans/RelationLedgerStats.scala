@@ -21,15 +21,12 @@ import graft.sources.GraftRelation
   *
   * Runs in the operator-optimization batch (before Join Reorder,
   * which is what consumes the row counts); idempotent — only
-  * relations without a catalogTable are touched, and only when the
-  * ledger actually knows the count (manifests predating row
-  * accounting are left alone).
+  * relations without a catalogTable are touched.
   */
 case class RelationLedgerStats(spark: SparkSession) extends Rule[LogicalPlan] {
   override def apply(plan: LogicalPlan): LogicalPlan =
     plan.transform {
-      case lr @ LogicalRelation(g: GraftRelation, _, None, _, _)
-          if g.ledgerCount.isDefined =>
+      case lr @ LogicalRelation(g: GraftRelation, _, None, _, _) =>
         // per-column stats from the manifest's mergeable sketches,
         // exactly what ANALYZE TABLE ... FOR COLUMNS (with
         // spark.sql.statistics.histogram.enabled) would have computed,
@@ -44,8 +41,8 @@ case class RelationLedgerStats(spark: SparkSession) extends Rule[LogicalPlan] {
         //    the estimators consult next to a histogram)
         // `graft.stats.histograms=false` drops the histogram+range
         // feed (the A/B toggle the u48 witness pins).
-        val serveHist = spark.conf
-          .get("graft.stats.histograms", "true").toBoolean
+        val serveHist =
+          graft.GraftConf.bool(spark, "graft.stats.histograms", true)
         val hists = if (serveHist) g.columnHistograms
           else Map.empty[String,
             org.apache.spark.sql.catalyst.plans.logical.Histogram]
@@ -70,7 +67,7 @@ case class RelationLedgerStats(spark: SparkSession) extends Rule[LogicalPlan] {
           provider = Some("graft"),
           stats = Some(CatalogStatistics(
             sizeInBytes = BigInt(g.sizeInBytes),
-            rowCount = g.ledgerCount.map(BigInt(_)),
+            rowCount = Some(BigInt(g.ledgerCount)),
             colStats = colStats)))))
     }
 }

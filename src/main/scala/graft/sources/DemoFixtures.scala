@@ -542,8 +542,8 @@ object DemoFixtures {
       if (altersMovedNoData &&
         mF.colMap == Map("price" -> "o_totalprice") &&
         mF.retiredCols == Seq("o_orderpriority") &&
-        mF.schema.exists(_.fieldNames.toSeq == Seq("o_orderkey", "o_custkey",
-          "o_orderstatus", "price", "o_orderdate")) &&
+        mF.schema.fieldNames.toSeq == Seq("o_orderkey", "o_custkey",
+          "o_orderstatus", "price", "o_orderdate") &&
         filesBefore.subsetOf(mF.files.toSet)) 1 else 0
     s.sql(
       """SELECT o_orderstatus, COUNT(*) AS n_orders,

@@ -238,9 +238,7 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces
       Snapshots.latestLiveVersion(spark, dir.toString)).getOrElse(
       throw new NoSuchTableException((ident.namespace() :+ ident.name()).toSeq))
     val m = Snapshots.readManifest(spark, dir.toString, v)
-    val schema = m.schema.getOrElse(
-      Snapshots.readVersion(spark, dir.toString, Some(v)).schema)
-    GraftCatalogTable(ident, dir.toString, schema, m.partitionCols, version,
+    GraftCatalogTable(ident, dir.toString, m.schema, m.partitionCols, version,
       m.bucketSpec)
   }
 

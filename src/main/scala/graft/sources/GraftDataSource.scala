@@ -1,6 +1,5 @@
 package graft.sources
 
-import org.apache.hadoop.fs.Path
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{Column, Row, SQLContext}
 import org.apache.spark.sql.functions.{col, lit}
@@ -387,36 +386,26 @@ final case class GraftRelation(ctx: SQLContext, tableDir: String,
     * default (effectively infinite) and NO graft-graft join could
     * ever plan a broadcast. Mirrors parquet file relations:
     * compressed on-disk bytes × `spark.sql.sources.fileCompressionFactor`,
-    * so the same `autoBroadcastJoinThreshold` calculus applies. Falls
-    * back to the default when any live file predates byte accounting
-    * — overestimating only costs a broadcast, underestimating OOMs.
+    * so the same `autoBroadcastJoinThreshold` calculus applies.
     */
   override def sizeInBytes: Long = {
     val m = manifest
-    if (m.files.forall(m.fileBytes.contains)) {
-      val factor = spark.conf
-        .get("spark.sql.sources.fileCompressionFactor", "1.0").toDouble
-      math.max((m.files.iterator.map(m.fileBytes).sum * factor).toLong, 1L)
-    } else super.sizeInBytes
+    val factor = spark.conf
+      .get("spark.sql.sources.fileCompressionFactor", "1.0").toDouble
+    math.max((m.files.iterator.map(m.fileBytes).sum * factor).toLong, 1L)
   }
 
-  /** The snapshot's visible row count from the manifest ledger
-    * (dataRows − dvRows), when the accounting is known — what the
-    * [[graft.plans.MetadataOnlyCount]] optimizer rule serves
-    * `SELECT COUNT(*)` from with zero file reads. None for manifests
-    * predating row accounting (the rule then leaves the plan alone).
-    */
   /** The pinned manifest, for metadata-only planning rules
     * ([[graft.plans.MetadataOnlyCount]]'s grouped/filtered rewrites
     * read per-file rows and partition stats from it).
     */
   private[graft] def manifestSnapshot: Snapshots.Manifest = manifest
 
-  private[graft] def ledgerCount: Option[Long] = {
-    val m = manifest
-    if (m.dataRows >= 0 && m.dvRows >= 0) Some(m.dataRows - m.dvRows)
-    else None
-  }
+  /** The snapshot's visible row count from the manifest ledger
+    * (dataRows − dvRows) — what the [[graft.plans.MetadataOnlyCount]]
+    * optimizer rule serves `SELECT COUNT(*)` from with zero file reads.
+    */
+  private[graft] def ledgerCount: Long = manifest.dataRows - manifest.dvRows
 
   /** Table-level NDV per column from the manifest's per-file HLL
     * sketches — only columns EVERY live file carries a sketch for (a
@@ -484,12 +473,8 @@ final case class GraftRelation(ctx: SQLContext, tableDir: String,
     Snapshots.mergedRangesCheckpointed(spark, tableDir, version)
       .getOrElse(Snapshots.mergedRanges(manifest, schema))
 
-  override lazy val schema: StructType = manifest.schema.getOrElse {
-    require(manifest.files.nonEmpty,
-      s"$tableDir v$version has no schema and no files to infer one from")
-    spark.read.parquet(
-      new Path(tableDir, manifest.files.head).toString).schema
-  }
+  /** The manifest's recorded schema: planning never reads a footer. */
+  override lazy val schema: StructType = manifest.schema
 
   /** Everything is unhandled: pruning only skips files, Spark keeps
     * the exact row-level semantics (and the same filters also reach

@@ -87,9 +87,8 @@ private[sources] object GraftProcedures {
     */
   private def localResult(df: org.apache.spark.sql.DataFrame)
       : java.util.Iterator[Scan] = {
-    val budget = scala.util.Try(df.sparkSession.conf
-      .getOption("graft.procedure.maxRows").map(_.toLong))
-      .toOption.flatten.getOrElse(100000L)
+    val budget =
+      graft.GraftConf.long(df.sparkSession, "graft.procedure.maxRows", 100000L)
     require(budget > 0, s"graft.procedure.maxRows must be positive: $budget")
     // saturating +1: a user who "disables" the budget with
     // Long.MaxValue must not wrap the limit negative

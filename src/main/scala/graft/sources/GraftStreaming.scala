@@ -185,9 +185,7 @@ private[sources] object GraftStreamSource {
     val v = Snapshots.latestLiveVersion(spark, path).getOrElse(
       throw new IllegalArgumentException(
         s"$path has no committed version to stream from"))
-    val m = Snapshots.readManifest(spark, path, v)
-    val base = m.schema.getOrElse(throw new IllegalArgumentException(
-      s"$path v$v has no recorded schema"))
+    val base = Snapshots.readManifest(spark, path, v).schema
     if (cdc) StructType(base.fields :+ StructField("_change_type", StringType))
     else base
   }

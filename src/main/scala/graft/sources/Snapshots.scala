@@ -40,7 +40,10 @@ import scala.collection.mutable.ArrayBuffer
   */
 object Snapshots {
 
-  private val Header = "graft-manifest-v1"
+  /** The one table format version this engine reads and writes; a
+    * manifest with any other header is refused ([[parseManifest]]).
+    */
+  private val Header = "graft-manifest-v2"
 
   /** Per-file column statistics (merged over the file's row groups),
     * read from the parquet FOOTER at commit time — no data scan. The
@@ -120,9 +123,7 @@ object Snapshots {
   /** `dataRows`/`dvRows` are the version's row accounting, recorded at
     * commit time from parquet FOOTERS (no data scan): total rows in the
     * version's data files (pre-mask) and total masked keys in its
-    * deletion vectors. -1 = unknown (manifests from before the fields;
-    * unknown propagates through appends rather than guessing). They
-    * exist so `history()` can surface `mask_ratio` and the read path
+    * deletion vectors; every manifest records both. They exist so `history()` can surface `mask_ratio` and the read path
     * can raise the purge signal ACTIVELY — without them the only
     * operational signal that a mask outgrew merge-on-read was a
     * shuffle quietly appearing in read plans.
@@ -212,13 +213,13 @@ object Snapshots {
     * with O(1) memory instead of buffering a key group.
     */
   final case class Manifest(version: Long, files: Seq[String],
+                            schema: org.apache.spark.sql.types.StructType,
                             stats: Map[(String, String), FileStat] = Map.empty,
-                            schema: Option[org.apache.spark.sql.types.StructType] = None,
                             txns: Map[String, Long] = Map.empty,
                             dvs: Seq[String] = Seq.empty,
                             checks: Map[String, String] = Map.empty,
-                            dataRows: Long = -1L,
-                            dvRows: Long = -1L,
+                            dataRows: Long = 0L,
+                            dvRows: Long = 0L,
                             bucketSpec: Option[(String, Int)] = None,
                             buckets: Map[String, Int] = Map.empty,
                             pendingMarker: Option[String] = None,
@@ -232,35 +233,12 @@ object Snapshots {
                             nullCounts: Map[(String, String), Long] = Map.empty,
                             ndvs: Map[(String, String), Array[Byte]] = Map.empty,
                             klls: Map[(String, String), Array[Byte]] = Map.empty,
-                            features: Set[String] = Set.empty,
                             sortedFiles: Map[String, String] = Map.empty) {
     /** logical → physical (identity when unmapped). */
     def physOf(c: String): String = colMap.getOrElse(c, c)
     /** physical → logical (identity when unmapped). */
     lazy val logicalOf: Map[String, String] = colMap.map(_.swap)
-    /** Decimal footer stats decodable as unscaled-at-current-scale?
-      * True iff this table's WHOLE surviving stat set was recorded
-      * under the scale-drop rules (see [[Snapshots.statMayContain]]).
-      */
-    def decimalStatsTrusted: Boolean =
-      features.contains(Snapshots.DecimalScaleStatsFeature)
   }
-
-  /** Manifest feature marker (ADVICE r14): present iff every decimal
-    * footer stat the manifest carries was recorded under the
-    * scale-drop rules (a scale-growing widening DROPS carried stats;
-    * a scale-mismatched batch records none), making
-    * [[statMayContain]]'s unscaled-long decode sound. Set on fresh
-    * tables and full rewrites (overwrite / [[compact]] — all files'
-    * stats re-recorded), CARRIED by appends/metadata commits, and
-    * never retrofitted onto a manifest chain that lacks it: a table
-    * that scale-widened a decimal column under code predating the
-    * rules keeps serving decimal probes with conservative keeps (no
-    * row loss, only lost pruning) until a full rewrite upgrades it —
-    * automatic, where the old remedy (manual [[invalidateStats]]) had
-    * to be KNOWN to be needed.
-    */
-  val DecimalScaleStatsFeature = "decimal-scale-stats"
 
   private def fs(spark: SparkSession, dir: String): FileSystem =
     new Path(dir).getFileSystem(spark.sparkContext.hadoopConfiguration)
@@ -1077,10 +1055,8 @@ object Snapshots {
       else None
     val prevAny = prevBase.map(_.header)
     // an append builds on its predecessor's segment refs (the delta
-    // publish at the commit point); a legacy predecessor is refused
-    // here, before any data is written
+    // publish at the commit point)
     val base = prevBase.filter(_ => mode == "append")
-    base.foreach(b => refuseLegacy(tableDir, "append", legacyField(b)))
     val prev = base.map(_.header)
     // table-level CHECK constraints are enforced on EVERY data commit
     // — append (the new batch), overwrite (the full new snapshot),
@@ -1103,9 +1079,9 @@ object Snapshots {
     // explicit read schema fills both with NULL), WIDEN a column
     // losslessly, or send a narrower type into a widened column; any
     // other type change is refused — that is a rewrite, not an append.
-    val (schema, widenedCols) = prev.flatMap(_.schema) match {
+    val (schema, widenedCols) = prev match {
       case None => (df.schema, Set.empty[String])
-      case Some(old) => evolveSchema(old, df.schema, "append")
+      case Some(p) => evolveSchema(p.schema, df.schema, "append")
     }
     // an appended data column must not collide with the CARRIED
     // spec's derived partition names either — old files' derived
@@ -1122,7 +1098,7 @@ object Snapshots {
     val colMap = extendColMap(
       prev.map(_.colMap).getOrElse(Map.empty),
       prev.map(_.retiredCols).getOrElse(Nil),
-      prev.flatMap(_.schema).map(_.fieldNames.toSet).getOrElse(Set.empty),
+      prev.map(_.schema.fieldNames.toSet).getOrElse(Set.empty),
       schema.fieldNames.toIndexedSeq, version)
     val carriedRetired = prev.map(_.retiredCols).getOrElse(Nil)
     val physRev = colMap.map(_.swap)
@@ -1190,8 +1166,8 @@ object Snapshots {
     // bloom/NDV drop-on-widening rule, applied to the one stat kind
     // whose representation is scale-relative. The delta publish
     // applies both drops to the carried segments.
-    val scaleWidened = scaleWidenedCols(
-      prev.flatMap(_.schema), Some(schema), widenedCols)
+    val scaleWidened = prev.fold(Set.empty[String])(p =>
+      scaleWidenedCols(p.schema, schema, widenedCols))
     val carriedTxns = prevAny.map(_.txns).getOrElse(Map.empty)
     val txns = txn.fold(carriedTxns) { case (app, b) =>
       carriedTxns + (app -> math.max(b, carriedTxns.getOrElse(app, Long.MinValue)))
@@ -1264,16 +1240,13 @@ object Snapshots {
         .map { case ((fl, c), sk) => (fl, physRev.getOrElse(c, c)) -> sk }
     }
     // row + byte accounting (footer metadata, no scan): appends extend
-    // the predecessor's totals (unknown propagates), overwrites restart;
+    // the predecessor's totals, overwrites restart;
     // per-file counts feed the grouped/filtered metadata-count rewrites,
     // per-file bytes feed exact plan-time relation stats
     val newFileMeta = footerFileMeta(spark, f, dataDir, dataRel)
     val newFileRows = newFileMeta.view.mapValues(_._1).toMap
     val writtenRows = newFileRows.values.sum
-    val dataRows = prev match {
-      case Some(p) => if (p.dataRows < 0) -1L else p.dataRows + writtenRows
-      case None => writtenRows
-    }
+    val dataRows = prev.map(_.dataRows).getOrElse(0L) + writtenRows
     val dvRows = prev match {
       case Some(p) => if (p.dvs.isEmpty) 0L else p.dvRows
       case None => 0L
@@ -1298,15 +1271,6 @@ object Snapshots {
         val marker = (bucketBy.get._1 +: sortAlso).mkString(",")
         written.iterator.map(_ -> marker).toMap
       } else Map.empty[String, String]
-    // the decimal-stats feature marker: an overwrite re-records every
-    // surviving stat under the scale-drop rules (fresh files only), so
-    // it SETS the marker; an append only CARRIES it — a pre-rules
-    // table's stale-scale stats ride appends, so the append must not
-    // launder them into trusted ones (see [[DecimalScaleStatsFeature]])
-    val features =
-      if (mode == "append")
-        prev.map(_.features).getOrElse(Set(DecimalScaleStatsFeature))
-      else prev.map(_.features).getOrElse(Set.empty) + DecimalScaleStatsFeature
     // THE commit point: atomic publish-if-absent. A concurrent winner
     // already holds v<N>.manifest and the publish returns false.
     //
@@ -1320,11 +1284,11 @@ object Snapshots {
     // metadata. A widening append drops the widened columns' carried
     // blooms/NDVs (and scale-widened stats) in the same publish; an
     // overwrite carries no predecessor refs at all.
-    val mPub = Manifest(version, Nil, schema = Some(schema), txns = txns,
+    val mPub = Manifest(version, Nil, schema, txns = txns,
       dvs = carriedDvs, checks = checks, dataRows = dataRows,
       dvRows = dvRows, bucketSpec = bucketSpec, pendingMarker = pending,
       partitionCols = partitionCols, colMap = colMap,
-      retiredCols = carriedRetired, features = features)
+      retiredCols = carriedRetired)
     val published = publishManifestDelta(f, tableDir, mPub,
       base.getOrElse(EmptyBase), Map.empty,
       freshSegEntries(mPub, written, newStats, newNulls, newFileMeta,
@@ -1592,8 +1556,8 @@ object Snapshots {
   private final case class SegEntry(file: String,
                                     stats: Seq[(String, FileStat)],
                                     bucket: Option[Int],
-                                    rows: Option[Long],
-                                    bytes: Option[Long],
+                                    rows: Long,
+                                    bytes: Long,
                                     blooms: Seq[(String, Bloom)],
                                     nulls: Seq[(String, Long)] = Nil,
                                     ndvs: Seq[(String, Array[Byte])] = Nil,
@@ -1636,80 +1600,27 @@ object Snapshots {
 
   /** One parsed manifest file ([[parseManifest]]): the version-level
     * `header` (schema, txns, checks, dvs, ledgers, specs, column
-    * mapping, features, pending marker; its per-file maps hold only
-    * legacy inline lines) plus what the segments' contents are NOT
-    * needed to know — the segment refs WITH their recorded live counts
-    * (-1 for a count-less legacy ref), the tombstone set, and any
-    * legacy INLINE per-file entries (logical names). [[assemble]]
-    * turns it into the whole-table view; the delta publish carries its
-    * refs and tombstones verbatim; the planning walk
-    * ([[liveEntriesCheckpointed]]) filters by them. O(manifest file)
-    * driver work — no segment is parsed.
+    * mapping, pending marker; its per-file maps are empty) plus what
+    * the segments' contents are NOT needed to know — the segment refs
+    * WITH their recorded live counts and the tombstone set.
+    * [[assemble]] turns it into the whole-table view; the delta
+    * publish carries its refs and tombstones verbatim; the planning
+    * walk ([[liveEntriesCheckpointed]]) filters by them. O(manifest
+    * file) driver work — no segment is parsed.
     */
   private[sources] final case class ManifestShell(header: Manifest,
-      segRefs: Seq[(String, Int)], tombs: Set[(String, String)],
-      inline: Seq[CkptFile] = Nil) {
-    def hasInline: Boolean = inline.nonEmpty
-  }
+      segRefs: Seq[(String, Int)], tombs: Set[(String, String)])
+
+  /** The state before a table's first version (the change feed's
+    * pre-history endpoint): no file and an empty schema.
+    */
+  private val PreHistory =
+    Manifest(-1L, Nil, org.apache.spark.sql.types.StructType(Nil))
 
   /** The base of a table's first commit (or of an overwrite, which
     * carries no predecessor ref): no segment, no tombstone.
     */
-  private val EmptyBase = ManifestShell(Manifest(-1L, Nil), Nil, Set.empty)
-
-  /** The one refusal of a LEGACY base: a table written before the
-    * current format lacks a fact the delta publish or its ledger
-    * arithmetic needs (`missing` names it). Every DML, maintenance and
-    * metadata-only operation refuses such a table loudly rather than
-    * keeping a second code path for it; [[compact]] rewrites it into
-    * the current format.
-    */
-  private def refuseLegacy(tableDir: String, op: String,
-                           missing: Option[String]): Unit =
-    missing.foreach { field =>
-      throw new IllegalArgumentException(
-        s"$op refused: $tableDir is in a legacy table format (no $field); " +
-          "Snapshots.compact rewrites it into the current format")
-    }
-
-  /** The legacy fact a base manifest lacks, if any: inline `file=`
-    * lines, count-less `segment=` refs, no `schema=` or no row ledger.
-    */
-  private def legacyField(base: ManifestShell): Option[String] =
-    if (base.hasInline) Some("segment refs: inline file= lines")
-    else if (base.segRefs.exists(_._2 < 0)) Some("segment live counts")
-    else if (base.header.schema.isEmpty) Some("schema")
-    else if (base.header.dataRows < 0) Some("row ledger")
-    else None
-
-  /** The base every table DML, maintenance and metadata-only
-    * operation builds on: the next version and the last live manifest
-    * file, parsed once ([[resolveForWrite]]). A legacy base is refused
-    * here.
-    */
-  private def deltaBase(spark: SparkSession, tableDir: String,
-                        op: String): (Long, ManifestShell) = {
-    val (version, base) = resolveForWrite(spark, tableDir)
-    refuseLegacy(tableDir, op, legacyField(base))
-    (version, base)
-  }
-
-  /** The live entries of `base` matching `pred` ([[liveEntriesCheckpointed]]),
-    * refused when a candidate lacks its per-file row or byte ledger
-    * (an entry written before per-file accounting).
-    */
-  private def liveCandidates(spark: SparkSession, tableDir: String,
-                             base: ManifestShell, op: String,
-                             pred: CkptFile => Boolean,
-                             withStats: Boolean = false): Seq[LiveEntry] = {
-    // inline lines were refused with the base, so the walk always runs
-    val entries = liveEntriesCheckpointed(spark, tableDir, base,
-      pred, withStats).getOrElse(Nil)
-    refuseLegacy(tableDir, op,
-      entries.find(e => e.rows.isEmpty || e.bytes.isEmpty)
-        .map(e => s"row/byte ledger for ${e.file}"))
-    entries
-  }
+  private val EmptyBase = ManifestShell(PreHistory, Nil, Set.empty)
 
   /** One live file's THIN planning row for the delta publishes:
     * identity, owning segment (the position its tombstone goes to if
@@ -1721,8 +1632,8 @@ object Snapshots {
     */
   private[sources] final case class LiveEntry(file: String, seg: String,
                                               bucket: Option[Int],
-                                              rows: Option[Long],
-                                              bytes: Option[Long],
+                                              rows: Long,
+                                              bytes: Long,
                                               sortedBy: Option[String],
                                               statCols: Seq[String])
 
@@ -1735,15 +1646,12 @@ object Snapshots {
     * [[readManifest]] runs. `pred` must be a serializable pure
     * function of the row (capture plain values, not enclosing state).
     * The caller's parse of the manifest (`base`) supplies the refs and
-    * tombstones — the manifest file is not read again. Returns None
-    * only when the manifest still carries legacy inline lines (no
-    * segment positions to report).
+    * tombstones — the manifest file is not read again.
     */
   private[sources] def liveEntriesCheckpointed(
       spark: SparkSession, tableDir: String, base: ManifestShell,
       pred: CkptFile => Boolean, withStats: Boolean = false)
-      : Option[Seq[LiveEntry]] = {
-    if (base.hasInline) return None // legacy inline: no segments
+      : Seq[LiveEntry] = {
     val f = fs(spark, tableDir)
     val segV = base.segRefs.map(_._1)
     val tombsV = base.tombs
@@ -1752,15 +1660,13 @@ object Snapshots {
     val covered = ck.map(checkpointCoveredSegs(f, _)).getOrElse(Set.empty)
     val segSet = segV.toSet
     val ws = withStats
-    def liveOf(r: CkptFile): LiveEntry = LiveEntry(r.file, r.seg.get,
+    def liveOf(r: CkptFile): LiveEntry = LiveEntry(r.file, r.seg,
       r.bucket, r.rows, r.bytes, r.sortedBy,
       if (ws) r.stats.keys.toSeq.sorted else Nil)
-    def keep(r: CkptFile): Boolean = r.seg.exists(rel =>
-      segSet.contains(rel) && !tombsV.contains((rel, r.file))) && pred(r)
+    def keep(r: CkptFile): Boolean = segSet.contains(r.seg) &&
+      !tombsV.contains((r.seg, r.file)) && pred(r)
     // sortedBy rides verbatim (PHYSICAL vocabulary, like the tail's
-    // segment entries — consumers translate at their read version);
-    // pre-r16 checkpoints surface it as None, costing only the
-    // skip-sort shortcut, never correctness
+    // segment entries — consumers translate at their read version)
     val fromCkpt = ck.fold(Seq.empty[LiveEntry]) { ck =>
       cachedCkptRows(spark, ck) match {
         case Some(rows) =>
@@ -1771,10 +1677,9 @@ object Snapshots {
           val segSetB = spark.sparkContext.broadcast(segSet)
           val tombsB = spark.sparkContext.broadcast(tombsV)
           ckptDataset(spark, ck, withBlooms = false)
-            .filter { r: CkptFile => r.seg.exists(rel =>
-                segSetB.value.contains(rel) &&
-                  !tombsB.value.contains((rel, r.file))) && pred(r) }
-            .map { r: CkptFile => LiveEntry(r.file, r.seg.get, r.bucket,
+            .filter { r: CkptFile => segSetB.value.contains(r.seg) &&
+                !tombsB.value.contains((r.seg, r.file)) && pred(r) }
+            .map { r: CkptFile => LiveEntry(r.file, r.seg, r.bucket,
               r.rows, r.bytes, r.sortedBy,
               if (ws) r.stats.keys.toSeq.sorted else Nil) }(
               org.apache.spark.sql.Encoders.product[LiveEntry])
@@ -1787,7 +1692,7 @@ object Snapshots {
         .map(e => e -> CkptFile(e.file, e.bucket, e.rows, e.bytes,
           e.stats.map { case (c, st) =>
             c -> CkptStat(st.kind, st.min, st.max) }.toMap,
-          e.nulls.toMap, Some(rel)))
+          e.nulls.toMap, rel))
         .filter { case (_, cf) => pred(cf) }
         .map { case (e, cf) => LiveEntry(cf.file, rel, cf.bucket,
           cf.rows, cf.bytes, e.sortedBy,
@@ -1796,87 +1701,112 @@ object Snapshots {
     // no dedup needed: a live file has exactly ONE live (segment,
     // file) position ([[publishManifestDelta]]'s invariant), and ckpt
     // rows and tail rows draw from disjoint segment sets
-    Some(fromCkpt ++ fromTail)
+    fromCkpt ++ fromTail
   }
 
-  /** Segment line format mirrors the manifest's per-file lines minus
-    * the repeated file path: `file=` opens an entry, subsequent
-    * `stat=`/`bucket=`/`frow=`/`bloom=` lines attach to it.
+  /** Strict line reader shared by [[parseManifest]] and
+    * [[parseSegment]]: the first line must be `header`, and every other
+    * line is `kind=value`, handed to `onLine`. Anything else — another
+    * format version, a line without `=`, a kind `onLine` does not know
+    * or a field it cannot parse — is refused with an
+    * IllegalArgumentException naming the file and the field, never
+    * skipped: a skipped `removed=` line would bring a deleted file back.
     */
-  private def parseSegment(f: FileSystem, p: Path): SegmentData = {
-    require(f.exists(p), s"missing metadata segment $p")
+  private def parseLines(f: FileSystem, p: Path, header: String)
+                        (onLine: (String, String) => Unit): Unit = {
     val r = new BufferedReader(
       new InputStreamReader(f.open(p), StandardCharsets.UTF_8))
     try {
-      require(r.readLine() == SegHeader, s"unrecognized segment format in $p")
-      val entries = ArrayBuffer.empty[SegEntry]
-      var file: String = null
-      val stats = ArrayBuffer.empty[(String, FileStat)]
-      val blooms = ArrayBuffer.empty[(String, Bloom)]
-      val nulls = ArrayBuffer.empty[(String, Long)]
-      val ndvs = ArrayBuffer.empty[(String, Array[Byte])]
-      val klls = ArrayBuffer.empty[(String, Array[Byte])]
-      var bucket: Option[Int] = None
-      var rows: Option[Long] = None
-      var bytes: Option[Long] = None
-      var sortedBy: Option[String] = None
-      def flush(): Unit = if (file != null) {
-        entries += SegEntry(file, stats.toSeq, bucket, rows, bytes,
-          blooms.toSeq, nulls.toSeq, ndvs.toSeq, klls.toSeq, sortedBy)
-        stats.clear(); blooms.clear(); nulls.clear(); ndvs.clear()
-        klls.clear()
-        bucket = None; rows = None; bytes = None; sortedBy = None
-      }
+      val h = r.readLine()
+      require(h == header, s"$p: unsupported format version '$h' " +
+        s"(this engine reads only '$header')")
       var line = r.readLine()
       while (line != null) {
-        if (line.startsWith("file=")) { flush(); file = line.stripPrefix("file=") }
-        else if (line.startsWith("stat=")) {
-          line.stripPrefix("stat=").split('\t') match {
-            case Array(c, kind, min, max) => stats += (c -> FileStat(kind, min, max))
-            case _ => // ignore malformed (forward compat)
-          }
-        } else if (line.startsWith("bucket=")) {
-          bucket = Some(line.stripPrefix("bucket=").toInt)
-        } else if (line.startsWith("sorted=")) {
-          sortedBy = Some(line.stripPrefix("sorted="))
-        } else if (line.startsWith("frow=")) {
-          line.stripPrefix("frow=").split('\t') match {
-            case Array(n, b) => rows = Some(n.toLong); bytes = Some(b.toLong)
-            case Array(n) => rows = Some(n.toLong)
-            case _ => // ignore malformed (forward compat)
-          }
-        } else if (line.startsWith("nulls=")) {
-          line.stripPrefix("nulls=").split('\t') match {
-            case Array(c, n) => nulls += (c -> n.toLong)
-            case _ => // ignore malformed (forward compat)
-          }
-        } else if (line.startsWith("ndv=")) {
-          line.stripPrefix("ndv=").split('\t') match {
-            case Array(c, b64) =>
-              ndvs += (c -> java.util.Base64.getDecoder.decode(b64))
-            case _ => ()
-          }
-        } else if (line.startsWith("kll=")) {
-          line.stripPrefix("kll=").split('\t') match {
-            case Array(c, b64) =>
-              klls += (c -> java.util.Base64.getDecoder.decode(b64))
-            case _ => // ignore malformed (forward compat)
-          }
-        } else if (line.startsWith("bloom=")) {
-          line.stripPrefix("bloom=").split('\t') match {
-            case Array(c, mBits, k, b64) =>
-              val bs = java.util.Base64.getDecoder.decode(b64)
-              val bb = java.nio.ByteBuffer.wrap(bs)
-              blooms += (c -> Bloom(mBits.toInt, k.toInt,
-                Array.fill(bs.length / 8)(bb.getLong)))
-            case _ => // ignore malformed (forward compat)
-          }
+        val eq = line.indexOf('=')
+        val kind = if (eq > 0) line.substring(0, eq) else line
+        try {
+          require(eq > 0, "no '='")
+          onLine(kind, line.substring(eq + 1))
+        } catch { case scala.util.control.NonFatal(e) =>
+          throw new IllegalArgumentException(
+            s"$p: malformed field '$kind' (${e.getMessage}) in line " +
+              s"'${line.take(200)}'", e)
         }
         line = r.readLine()
       }
-      flush()
-      SegmentData(entries.toIndexedSeq)
     } finally r.close()
+  }
+
+  /** The `n` tab-separated fields of a metadata line's value. */
+  private def fields(value: String, n: Int): Array[String] = {
+    val a = value.split("\t", -1)
+    require(a.length == n, s"expected $n tab-separated fields, found ${a.length}")
+    a
+  }
+
+  private def unknownField(kind: String): Nothing =
+    throw new IllegalArgumentException(s"unknown line kind '$kind'")
+
+  /** Segment line format mirrors the manifest's per-file lines minus
+    * the repeated file path: `file=` opens an entry, subsequent
+    * `stat=`/`bucket=`/`sorted=`/`frow=`/`nulls=`/`ndv=`/`kll=`/`bloom=`
+    * lines attach to it; every entry carries `frow=<rows>\t<bytes>`.
+    */
+  private def parseSegment(f: FileSystem, p: Path): SegmentData = {
+    require(f.exists(p), s"missing metadata segment $p")
+    val entries = ArrayBuffer.empty[SegEntry]
+    var file: String = null
+    val stats = ArrayBuffer.empty[(String, FileStat)]
+    val blooms = ArrayBuffer.empty[(String, Bloom)]
+    val nulls = ArrayBuffer.empty[(String, Long)]
+    val ndvs = ArrayBuffer.empty[(String, Array[Byte])]
+    val klls = ArrayBuffer.empty[(String, Array[Byte])]
+    var bucket: Option[Int] = None
+    var frow: Option[(Long, Long)] = None
+    var sortedBy: Option[String] = None
+    def flush(): Unit = if (file != null) {
+      val (rows, bytes) = frow.getOrElse(throw new IllegalArgumentException(
+        s"$p: entry '$file' has no field 'frow' (row and byte counts)"))
+      entries += SegEntry(file, stats.toSeq, bucket, rows, bytes,
+        blooms.toSeq, nulls.toSeq, ndvs.toSeq, klls.toSeq, sortedBy)
+      stats.clear(); blooms.clear(); nulls.clear(); ndvs.clear()
+      klls.clear()
+      bucket = None; frow = None; sortedBy = None
+    }
+    parseLines(f, p, SegHeader) { (kind, v) =>
+      if (kind == "file") { flush(); file = v }
+      else {
+        require(file != null, "no 'file' line opens the entry")
+        kind match {
+          case "stat" =>
+            val Array(c, k, min, max) = fields(v, 4)
+            stats += (c -> FileStat(k, min, max))
+          case "bucket" => bucket = Some(v.toInt)
+          case "sorted" => sortedBy = Some(v)
+          case "frow" =>
+            val Array(n, b) = fields(v, 2)
+            frow = Some((n.toLong, b.toLong))
+          case "nulls" =>
+            val Array(c, n) = fields(v, 2)
+            nulls += (c -> n.toLong)
+          case "ndv" =>
+            val Array(c, b64) = fields(v, 2)
+            ndvs += (c -> java.util.Base64.getDecoder.decode(b64))
+          case "kll" =>
+            val Array(c, b64) = fields(v, 2)
+            klls += (c -> java.util.Base64.getDecoder.decode(b64))
+          case "bloom" =>
+            val Array(c, mBits, k, b64) = fields(v, 4)
+            val bs = java.util.Base64.getDecoder.decode(b64)
+            val bb = java.nio.ByteBuffer.wrap(bs)
+            blooms += (c -> Bloom(mBits.toInt, k.toInt,
+              Array.fill(bs.length / 8)(bb.getLong)))
+          case other => unknownField(other)
+        }
+      }
+    }
+    flush()
+    SegmentData(entries.toIndexedSeq)
   }
 
   private def writeSegment(f: FileSystem, tableDir: String, version: Long,
@@ -1893,12 +1823,7 @@ object Snapshots {
           w.write(s"stat=$c\t${st.kind}\t${st.min}\t${st.max}\n") }
         e.bucket.foreach(b => w.write(s"bucket=$b\n"))
         e.sortedBy.foreach(c => w.write(s"sorted=$c\n"))
-        e.rows.foreach { n =>
-          e.bytes match {
-            case Some(b) => w.write(s"frow=$n\t$b\n")
-            case None => w.write(s"frow=$n\n")
-          }
-        }
+        w.write(s"frow=${e.rows}\t${e.bytes}\n")
         e.nulls.sortBy(_._1).foreach { case (c, n) =>
           w.write(s"nulls=$c\t$n\n") }
         e.ndvs.sortBy(_._1).foreach { case (c, sk) =>
@@ -1955,15 +1880,13 @@ object Snapshots {
     * PHYSICAL column names (a segment's vocabulary — readers translate
     * through the column mapping current at THEIR version, so one
     * checkpoint keeps serving across later renames/drops); `seg` is the
-    * segment the entry came from (None only for legacy inline manifest
-    * lines, which speak logical names, carry no transcribed blooms,
-    * and are never served across versions).
+    * segment the entry came from.
     */
   final case class CkptFile(file: String, bucket: Option[Int],
-                            rows: Option[Long], bytes: Option[Long],
+                            rows: Long, bytes: Long,
                             stats: Map[String, CkptStat],
                             nulls: Map[String, Long],
-                            seg: Option[String] = None,
+                            seg: String,
                             blooms: Map[String, CkptBloom] = Map.empty,
                             sortedBy: Option[String] = None)
 
@@ -1996,9 +1919,7 @@ object Snapshots {
     val stale = f.exists(out)
     if (stale && f.exists(new Path(out, CoveredSegsFile)))
       return out.toString
-    val base = parseManifest(spark, tableDir, v)
-    val segRefs = base.segRefs.map(_._1)
-    val inline = base.inline
+    val segRefs = parseManifest(spark, tableDir, v).segRefs.map(_._1)
     // hadoop conf rides to executors as plain pairs (Configuration is
     // Writable, not Java-serializable)
     val confPairs: Seq[(String, String)] = {
@@ -2030,7 +1951,7 @@ object Snapshots {
             c -> CkptBloom(b.mBits, b.k, b.words.toIndexedSeq) }
           .toMap
         CkptFile(e.file, e.bucket, e.rows, e.bytes, st,
-          e.nulls.toMap, Some(rel), bl, e.sortedBy)
+          e.nulls.toMap, rel, bl, e.sortedBy)
       }
     // Driver-side build for small segment counts (r18): dispatching a
     // distributed job to parse a handful of segment files costs more
@@ -2047,7 +1968,7 @@ object Snapshots {
         Some(segRefs.map(rel =>
           rel -> cachedSegment(f, tableDir, rel).entries))
       else None
-    val fromSegs = localSegs match {
+    val ds = localSegs match {
       case Some(segs) =>
         spark.createDataset(segs.flatMap {
           case (rel, es) => ckptRowsOf(rel, es) })
@@ -2061,9 +1982,6 @@ object Snapshots {
             ckptRowsOf(rel, parseSegment(fsE, new Path(tdir, rel)).entries)
           }.toDS()
     }
-    val ds =
-      if (inline.isEmpty) fromSegs
-      else fromSegs.unionByName(spark.createDataset(inline))
     val tmp = new Path(tableDir,
       s"_manifests/checkpoints/.tmp-${UUID.randomUUID().toString.take(8)}")
     ds.write.parquet(tmp.toString)
@@ -2231,8 +2149,7 @@ object Snapshots {
         // for the checkpoint-planned walks; keyed on the installed
         // dir's mtime so a later rebuild at the same path re-reads
         ckptRowsCache.put((out.toString, f.getFileStatus(out).getModificationTime),
-          (segs.flatMap { case (rel, es) =>
-            ckptRowsOf(rel, es) } ++ inline).toIndexedSeq)
+          segs.flatMap { case (rel, es) => ckptRowsOf(rel, es) }.toIndexedSeq)
       }
     }
     aside.foreach(a => f.delete(a, true))
@@ -2246,8 +2163,7 @@ object Snapshots {
   }
 
   /** Driver-side cache of a SMALL checkpoint's decoded rows, keyed by
-    * (checkpoint dir, dir mtime) — the same key discipline as
-    * [[ckptSchemaCache]] (ADVICE r18): a sidecar-bearing dir is
+    * (checkpoint dir, dir mtime) (ADVICE r18): a sidecar-bearing dir is
     * immutable, but a vacuum-and-rebuild at the SAME path (by another
     * process or a newer writer) is an anticipated scenario and gets a
     * new mtime, so this cache can never serve the pre-rebuild rows.
@@ -2327,8 +2243,8 @@ object Snapshots {
       new InputStreamReader(f.open(p), StandardCharsets.UTF_8))
     // collect (not a refutable match): a malformed or future-extended
     // line is SKIPPED — its (seg, col) then reads as "no line", which
-    // poisons that column conservatively, the same graceful-degradation
-    // stance as the manifest/segment parsers
+    // poisons that column conservatively: the sidecar is a derived
+    // summary, so a bad line costs only that column's served statistics
     try Some(Iterator.continually(r.readLine()).takeWhile(_ != null)
       .filter(_.nonEmpty).flatMap { line =>
         line.split('\t') match {
@@ -2357,8 +2273,8 @@ object Snapshots {
     * column's line while any other segment carries it, or a live
     * parsed entry whose `entryValue` is None — any live file not
     * covered drops the column. Retired columns drop. Returns None
-    * when no such sidecar serves this version or the manifest carries
-    * legacy inline files — callers fall back to the per-file fold.
+    * when no such sidecar serves this version — callers fall back to
+    * the per-file fold.
     */
   private def checkpointColumnFold[P](spark: SparkSession, tableDir: String,
       version: Long, sidecar: String)
@@ -2373,7 +2289,6 @@ object Snapshots {
     val segs = checkpointSketchSegs(f, ck, sidecar).getOrElse(return None)
     val covered = checkpointCoveredSegs(f, ck)
     val base = parseManifest(spark, tableDir, version)
-    if (base.hasInline) return None // legacy inline: no segments
     val segV = base.segRefs.map(_._1)
     val tombsV = base.tombs
     val retiredV = base.header.retiredCols.toSet
@@ -2438,8 +2353,8 @@ object Snapshots {
     * owns the split and the poisoning rule). HLL unions are
     * associative/idempotent so the regrouped union's registers — and
     * estimate — are [[mergedNdv]]'s bit-for-bit. None when no
-    * NDV-sidecar checkpoint serves this version or the manifest
-    * carries legacy inline files — callers fall back to [[mergedNdv]].
+    * NDV-sidecar checkpoint serves this version — callers fall back to
+    * [[mergedNdv]].
     */
   private[graft] def mergedNdvCheckpointed(spark: SparkSession,
                                            tableDir: String,
@@ -2493,9 +2408,8 @@ object Snapshots {
     * bounds can differ from [[mergedHistogram]]'s only within KLL's
     * rank-error guarantee (merge regrouping randomness) — and are
     * bit-identical while the sketches are in exact mode. None when no
-    * KLL-sidecar checkpoint serves this version, or the manifest
-    * carries legacy inline files (no segment to pre-reduce) — callers
-    * fall back to [[mergedHistogram]].
+    * KLL-sidecar checkpoint serves this version — callers fall back to
+    * [[mergedHistogram]].
     */
   private[graft] def mergedHistogramCheckpointed(spark: SparkSession,
                                                  tableDir: String,
@@ -2550,17 +2464,15 @@ object Snapshots {
     * drops the column; a non-long/double kind anywhere drops it; the
     * nullCount gates independently (any file without a null count ⇒
     * nulls = None, range still serves). None when no range-sidecar
-    * checkpoint serves this version, the manifest carries legacy
-    * inline files, or it records no schema (eligibility needs the
-    * column types) — callers fall back to the per-file fold.
+    * checkpoint serves this version — callers fall back to the
+    * per-file fold.
     */
   private[graft] def mergedRangesCheckpointed(spark: SparkSession,
                                               tableDir: String,
                                               version: Long)
       : Option[Map[String, (String, String, Option[Long])]] = {
-    val schema = parseManifest(spark, tableDir, version).header.schema
-      .getOrElse(return None) // eligibility needs the column types
-    val eligible = rangeEligible(schema)
+    val eligible = rangeEligible(
+      parseManifest(spark, tableDir, version).header.schema)
     // per-physical-column accumulator of the partial folds
     final class Acc {
       var other = false
@@ -2723,13 +2635,11 @@ object Snapshots {
     val retiredV = base.header.retiredCols.toSet
     val revV = base.header.logicalOf
     val segSet = segV.toSet
-    // decimal-typed (or unknown-typed with decimal bounds) columns
-    // never range-stat-prune ([[rangeStatsComparable]]): their
-    // predicate keeps every file, identically to [[pruneFiles]]
-    val schemaV = base.header.schema
-    val ps = preds.filter { case (c, lo, hi) =>
-      rangeStatsComparable(
-        schemaV.flatMap(_.fields.find(_.name == c)).map(_.dataType), lo, hi)
+    // decimal-typed columns never range-stat-prune
+    // ([[rangeStatsComparable]]): their predicate keeps every file,
+    // identically to [[pruneFiles]]
+    val ps = preds.filter { case (c, _, _) =>
+      rangeStatsComparable(base.header.schema, c)
     } // serializable captures (literals/timestamps + maps)
     // checkpoint rows speak PHYSICAL names — translate through the
     // mapping current at v; retired-at-v columns drop (their stats
@@ -2748,8 +2658,7 @@ object Snapshots {
       case Some(rows) =>
         // small checkpoint, rows driver-resident — same verdicts, no job
         rows.iterator
-          .filter(r => r.seg.exists(rel =>
-            segSet.contains(rel) && !tombsV.contains((rel, r.file))))
+          .filter(r => segSet.contains(r.seg) && !tombsV.contains((r.seg, r.file)))
           .map(toLogical).filter(surviving).map(_.file).toSeq
       case None =>
         // withBlooms = false: a range prune never consults blooms — the
@@ -2761,8 +2670,8 @@ object Snapshots {
         // task closure
         val segSetB = spark.sparkContext.broadcast(segSet)
         val tombsB = spark.sparkContext.broadcast(tombsV)
-        ds.filter { r: CkptFile => r.seg.exists(rel =>
-            segSetB.value.contains(rel) && !tombsB.value.contains((rel, r.file))) }
+        ds.filter { r: CkptFile => segSetB.value.contains(r.seg) &&
+            !tombsB.value.contains((r.seg, r.file)) }
           .map(toLogical _).filter(surviving _).map(_.file).collect().toSeq
     }
     // the tail: segments committed (or folded in) after the checkpoint,
@@ -2774,63 +2683,34 @@ object Snapshots {
           e.stats.iterator
             .map { case (c, s0) => c -> CkptStat(s0.kind, s0.min, s0.max) }
             .toMap,
-          e.nulls.toMap, Some(rel)))
+          e.nulls.toMap, rel))
         .map(toLogical).filter(surviving).map(_.file)
     }.toSeq
-    // legacy inline manifest lines speak logical names at v already
-    val fromInline = base.inline.filter(surviving).map(_.file)
-    (fromCkpt ++ fromTail ++ fromInline).distinct.sorted
+    (fromCkpt ++ fromTail).distinct.sorted
   }
 
-  /** The checkpoint parquet as a typed Dataset, tolerating checkpoints
-    * written before bloom transcription (no `blooms` column): missing
-    * blooms decode as the empty map — unknown is never pruned, so a
-    * pre-bloom checkpoint keeps serving (point lookups through it just
-    * prune on bucket ∧ stats only until it is rebuilt).
+  /** The checkpoint parquet as a typed Dataset, read with
+    * [[CkptFile]]'s own encoder schema — every checkpoint is a
+    * `Dataset[CkptFile]` write, so no footer inference runs.
     *
     * `withBlooms = false` REPLACES the blooms column with an empty-map
-    * literal even when present, so the typed decode never touches the
-    * stored bloom bytes — bloom payloads dominate checkpoint bytes,
-    * and the RANGE planner must not deserialize per-file KBs it never
-    * consults (the column-pruning promise in the section comment; only
-    * the keys planner opts in).
+    * literal, so the typed decode never touches the stored bloom bytes
+    * — bloom payloads dominate checkpoint bytes, and the RANGE planner
+    * must not deserialize per-file KBs it never consults (the
+    * column-pruning promise in the section comment; only the keys
+    * planner opts in).
     */
-  /** Checkpoint parquet schema cache: a promoted checkpoint dir is
-    * immutable (written to a `.tmp-` dir, atomically renamed in), so
-    * its inferred schema can be reused across the many reads a
-    * protocol performs against one checkpoint — each inference is a
-    * ~50 ms driver footer pass (r18 MicroBench). Keyed by
-    * (path, dir mtime): a vacuumed-and-rebuilt checkpoint gets a new
-    * mtime and re-infers, so a rebuild with a different column set
-    * (e.g. blooms added) can never serve a stale schema. Bounded:
-    * cleared wholesale past 4096 entries (long-lived sessions over
-    * many tables).
-    */
-  private val ckptSchemaCache = scala.collection.concurrent.TrieMap
-    .empty[(String, Long), org.apache.spark.sql.types.StructType]
-
   private def ckptDataset(spark: SparkSession, ck: Path,
                           withBlooms: Boolean = true)
       : org.apache.spark.sql.Dataset[CkptFile] = {
     import spark.implicits._
-    import org.apache.spark.sql.functions.typedlit
-    val ckFs = ck.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val key = (ck.toString, ckFs.getFileStatus(ck).getModificationTime)
-    if (ckptSchemaCache.size > 4096) ckptSchemaCache.clear()
-    val sch = ckptSchemaCache.getOrElseUpdate(key,
-      spark.read.parquet(ck.toString).schema)
-    val raw = spark.read.schema(sch).parquet(ck.toString)
-    val framed0 =
-      if (withBlooms && raw.columns.contains("blooms")) raw
-      else raw.withColumn("blooms", typedlit(Map.empty[String, CkptBloom]))
-    // checkpoints written before sort-marker transcription (r16) lack
-    // the column — their files read as unsorted, which only costs the
-    // skip-sort shortcut, never correctness
-    val framed =
-      if (framed0.columns.contains("sortedBy")) framed0
-      else framed0.withColumn("sortedBy",
-        org.apache.spark.sql.functions.lit(null).cast("string"))
-    framed.as[CkptFile]
+    val raw = spark.read
+      .schema(org.apache.spark.sql.Encoders.product[CkptFile].schema)
+      .parquet(ck.toString)
+    (if (withBlooms) raw
+     else raw.withColumn("blooms",
+       org.apache.spark.sql.functions.typedlit(Map.empty[String, CkptBloom])))
+      .as[CkptFile]
   }
 
   /** [[pruneForKeys]]' checkpoint-planned twin — KEY-EQUALITY (point
@@ -2851,11 +2731,6 @@ object Snapshots {
     * driver parse for the tail), and only surviving file names reach
     * the driver: a point lookup over a 10^7-file table collects the
     * probed keys' files, never the table's.
-    *
-    * Known conservative divergence: legacy INLINE manifest lines carry
-    * no transcribed blooms, so their files bloom-prune only on the
-    * manifest path (kept here — unknown is never pruned, same rows
-    * either way).
     */
   def pruneFilesCheckpointedKeys(spark: SparkSession, tableDir: String,
                                  version: Option[Long], key: String,
@@ -2928,27 +2803,21 @@ object Snapshots {
     val tailEntries = segV.filterNot(covered).map(rel =>
       rel -> cachedSegment(f, tableDir, rel).entries)
     // per-probe precomputation (driver-side, all metadata-sized):
-    // logical + physical names (segments and checkpoint rows speak
-    // PHYSICAL; legacy inline lines speak logical), the column's type,
-    // its bucket-id set when it IS the bucket key, and the bloom probe
+    // the physical name (segments and checkpoint rows speak PHYSICAL),
+    // the column's type, its bucket-id set when it IS the bucket key, and the bloom probe
     // bits per geometry — geometry discovery scans the (dominant)
     // bloom column, but a checkpoint dir is IMMUTABLE once its sidecar
     // exists, so the result is cached per (checkpoint, column): a
     // serving loop's Nth point lookup pays one metadata-row job, not
     // a bloom-column scan
-    final case class ProbePlan(logical: String, phys: String,
+    final case class ProbePlan(phys: String,
         keys: Seq[Any], keyType: org.apache.spark.sql.types.DataType,
-        statType: Option[org.apache.spark.sql.types.DataType],
         bucketWanted: Option[Set[Int]],
         probeBits: Map[(Int, Int), Map[String, Seq[Long]]],
         degraded: Boolean)
     val budget = probeKeyBudget(spark)
     val plans: Seq[ProbePlan] = probes.map { case (key, keys) =>
-      // statType keeps the None (type unknown) signal statMayContain
-      // needs; keyType concretizes for the hash probes only
-      val statType = head.schema.map(_(key).dataType)
-      val keyType = statType.getOrElse(
-        org.apache.spark.sql.types.StringType)
+      val keyType = head.schema(key).dataType
       val bucketWanted: Option[Set[Int]] = head.bucketSpec match {
         case Some((bk, n)) if bk == key =>
           Some(bucketIdsOf(spark, keys, keyType, n))
@@ -2981,21 +2850,16 @@ object Snapshots {
           (ckptGeos ++ tailGeos).iterator.map(g =>
             g -> bloomProbeBits(spark, keys, keyType, g._1, g._2)).toMap
         }
-      ProbePlan(key, keyPhys, keys, keyType, statType, bucketWanted,
-        probeBits, degraded)
+      ProbePlan(keyPhys, keys, keyType, bucketWanted, probeBits, degraded)
     }
     val segSet = segV.toSet
-    // range conjuncts, in both vocabularies (checkpoint rows/tail
-    // speak physical, inline speaks logical); decimal-typed (or
-    // unknown-typed with decimal bounds) columns never stat-prune —
+    // range conjuncts in the physical vocabulary of checkpoint rows
+    // and tail segments; decimal-typed columns never stat-prune —
     // [[rangeStatsComparable]] — their conjunct keeps every file and
     // the serving read's row filter owns it
-    val statRanges = ranges.filter { case (c, lo, hi) =>
-      rangeStatsComparable(
-        head.schema.flatMap(_.fields.find(_.name == c)).map(_.dataType),
-        lo, hi) }
-    val rangesPhys = statRanges.map { case (c, lo, hi) =>
-      (colMapV.getOrElse(c, c), lo, hi) }
+    val rangesPhys = ranges.collect {
+      case (c, lo, hi) if rangeStatsComparable(head.schema, c) =>
+        (colMapV.getOrElse(c, c), lo, hi) }
     def rangeSurvives(rs: Seq[(String, Any, Any)])(r: CkptFile): Boolean =
       rs.forall { case (c, lo, hi) =>
         r.stats.get(c).forall(st =>
@@ -3007,14 +2871,13 @@ object Snapshots {
     // shared [[statMayContain]], so decimal probes prune identically
     // on both paths); the conjunction folds across columns and the
     // range conjuncts AND in exactly as pruneFilesCheckpointed's
-    val decTrusted = head.decimalStatsTrusted
-    def survivesPlan(p: ProbePlan, probeCol: String)(r: CkptFile): Boolean = {
+    def survivesPlan(p: ProbePlan)(r: CkptFile): Boolean = {
       p.bucketWanted.forall(w => r.bucket.forall(w.contains)) &&
       (p.degraded || (
-        r.stats.get(probeCol).forall(st =>
+        r.stats.get(p.phys).forall(st =>
           p.keys.exists(x => statMayContain(
-            FileStat(st.kind, st.min, st.max), p.statType, x, decTrusted))) &&
-        r.blooms.get(probeCol).forall { b =>
+            FileStat(st.kind, st.min, st.max), p.keyType, x))) &&
+        r.blooms.get(p.phys).forall { b =>
           p.probeBits.get((b.mBits, b.k)).forall { bits =>
             val bl = Bloom(b.mBits, b.k, b.words.toArray)
             p.keys.exists(x => bloomMightContain(bl, bits(x.toString)))
@@ -3025,9 +2888,9 @@ object Snapshots {
       case Some(rows) =>
         // small checkpoint, rows driver-resident — same verdicts, no job
         rows.iterator
-          .filter(r => r.seg.exists(rel =>
-            segSet.contains(rel) && !tombsV.contains((rel, r.file))) &&
-            plans.forall(p => survivesPlan(p, p.phys)(r)) &&
+          .filter(r => segSet.contains(r.seg) &&
+            !tombsV.contains((r.seg, r.file)) &&
+            plans.forall(p => survivesPlan(p)(r)) &&
             rangeSurvives(rangesPhys)(r))
           .map(_.file).toSeq
       case None =>
@@ -3035,10 +2898,9 @@ object Snapshots {
         val segSetB = spark.sparkContext.broadcast(segSet)
         val tombsB = spark.sparkContext.broadcast(tombsV)
         val rangesB = spark.sparkContext.broadcast(rangesPhys)
-        ds.filter { r: CkptFile => r.seg.exists(rel =>
-            segSetB.value.contains(rel) &&
-              !tombsB.value.contains((rel, r.file))) &&
-            plansB.value.forall(p => survivesPlan(p, p.phys)(r)) &&
+        ds.filter { r: CkptFile => segSetB.value.contains(r.seg) &&
+            !tombsB.value.contains((r.seg, r.file)) &&
+            plansB.value.forall(p => survivesPlan(p)(r)) &&
             rangeSurvives(rangesB.value)(r) }
           .map(_.file).collect().toSeq
     }
@@ -3049,18 +2911,14 @@ object Snapshots {
           e.stats.iterator
             .map { case (c, s0) => c -> CkptStat(s0.kind, s0.min, s0.max) }
             .toMap,
-          e.nulls.toMap, Some(rel),
+          e.nulls.toMap, rel,
           e.blooms.iterator.map { case (c, b) =>
             c -> CkptBloom(b.mBits, b.k, b.words.toIndexedSeq) }.toMap))
-        .filter(r => plans.forall(p => survivesPlan(p, p.phys)(r)) &&
+        .filter(r => plans.forall(p => survivesPlan(p)(r)) &&
           rangeSurvives(rangesPhys)(r))
         .map(_.file)
     }.toSeq
-    val fromInline = base.inline
-      .filter(r => plans.forall(p => survivesPlan(p, p.logical)(r)) &&
-        rangeSurvives(statRanges)(r))
-      .map(_.file)
-    (fromCkpt ++ fromTail ++ fromInline).distinct.sorted
+    (fromCkpt ++ fromTail).distinct.sorted
   }
 
   /** [[readVersionKeys]]' checkpoint-planned twin — the 100 TB serving
@@ -3173,8 +3031,7 @@ object Snapshots {
     * key). The default `strategy = "auto"` picks per join from the
     * manifest BYTE LEDGER (`fileBytes` — no file is touched): merge
     * when the largest right bucket exceeds `graft.spj.buildBytesMax`
-    * (default 256 MiB), hash otherwise; a ledger-less legacy right
-    * side stays hash (status quo). Skew is bounded by the bucket
+    * (default 256 MiB), hash otherwise. Skew is bounded by the bucket
     * layout itself — numBuckets is the table-design-time knob; AQE
     * cannot split a storage-aligned task, which is the documented
     * trade-off of every SPJ. Each side still serves snapshot
@@ -3703,8 +3560,7 @@ object Snapshots {
     * files are collected REGARDLESS of the window (the operators'
     * refusal must see them exactly as the eager path does). Falls
     * back to the eager [[assemble]] of the same parse when no
-    * checkpoint covers the version or the manifest carries legacy
-    * inline lines.
+    * checkpoint covers the version.
     */
   private def resolveAlignedRead(spark: SparkSession, tableDir: String,
                                  version: Option[Long],
@@ -3713,17 +3569,14 @@ object Snapshots {
     val f = fs(spark, tableDir)
     val base = resolveForRead(spark, tableDir, version)
     val head = base.header
-    if (base.hasInline ||
-        newestCheckpointAtOrBefore(f, tableDir, head.version).isEmpty)
+    if (newestCheckpointAtOrBefore(f, tableDir, head.version).isEmpty)
       return assemble(spark, tableDir, base)
     // only well-formed comparable ranges prune here; a malformed range
     // (unknown column, missing bound) is [[alignedWindow]]'s loud
     // refusal, which still runs on the planning manifest
-    val schema = head.schema.getOrElse(return assemble(spark, tableDir, base))
     val physRanges = ranges.collect {
-      case (c, lo, hi) if schema.fieldNames.contains(c) &&
-          lo != null && hi != null &&
-          rangeStatsComparable(Some(schema(c).dataType), lo, hi) =>
+      case (c, lo, hi) if head.schema.fieldNames.contains(c) &&
+          lo != null && hi != null && rangeStatsComparable(head.schema, c) =>
         (head.physOf(c), lo, hi)
     }
     val pred: CkptFile => Boolean = { r =>
@@ -3731,18 +3584,15 @@ object Snapshots {
         r.stats.get(c).forall(s =>
           FileStat(s.kind, s.min, s.max).overlaps(lo, hi)) }
     }
-    // inline manifests returned above, so the walk always plans
-    val entries = liveEntriesCheckpointed(spark, tableDir, base, pred).get
+    val entries = liveEntriesCheckpointed(spark, tableDir, base, pred)
     val retired = head.retiredCols.toSet
     val rev = head.logicalOf
     head.copy(
       files = entries.map(_.file),
       buckets = entries.iterator
         .flatMap(e => e.bucket.map(e.file -> _)).toMap,
-      fileRows = entries.iterator
-        .flatMap(e => e.rows.map(e.file -> _)).toMap,
-      fileBytes = entries.iterator
-        .flatMap(e => e.bytes.map(e.file -> _)).toMap,
+      fileRows = entries.iterator.map(e => e.file -> e.rows).toMap,
+      fileBytes = entries.iterator.map(e => e.file -> e.bytes).toMap,
       // markers translate through the read version's mapping and
       // retired set — the exact translation [[assemble]] applies
       sortedFiles = entries.iterator.flatMap(e =>
@@ -3794,10 +3644,8 @@ object Snapshots {
     require(ln == rn,
       s"bucket counts differ ($leftDir=$ln, $rightDir=$rn): re-cluster one " +
         "side — zip alignment needs identical modulus")
-    val lSchema = lm.schema.getOrElse(throw new IllegalArgumentException(
-      s"$leftDir has no recorded schema"))
-    val rSchema = rm.schema.getOrElse(throw new IllegalArgumentException(
-      s"$rightDir has no recorded schema"))
+    val lSchema = lm.schema
+    val rSchema = rm.schema
     val keyType = lSchema(leftKey).dataType
     require(keyType == rSchema(rightKey).dataType,
       s"join key types differ (${lSchema(leftKey).dataType} vs " +
@@ -4156,24 +4004,16 @@ object Snapshots {
     * right bucket's bytes (summed from the `fileBytes` ledger — no
     * file is touched) exceed `graft.spj.buildBytesMax` (default
     * 256 MiB, the hash build the task would otherwise hold), "hash"
-    * otherwise. A right side with ANY ledger-less file stays "hash" —
-    * unknown sizes must not silently change the execution strategy of
-    * a legacy table (merge is equally correct, but the conservative
-    * answer is the status quo).
+    * otherwise.
     */
   private[sources] def spjStrategy(spark: SparkSession, rm: Manifest)
       : String = {
-    val budget = scala.util.Try(spark.conf
-      .getOption("graft.spj.buildBytesMax").map(_.toLong))
-      .toOption.flatten.getOrElse(256L << 20)
-    if (!rm.files.forall(rm.fileBytes.contains)) "hash"
-    else {
-      val maxBucket = rm.files.groupBy(f => rm.buckets.getOrElse(f, -1))
-        .valuesIterator
-        .map(_.iterator.map(rm.fileBytes).sum)
-        .maxOption.getOrElse(0L)
-      if (maxBucket > budget) "merge" else "hash"
-    }
+    val budget = graft.GraftConf.long(spark, "graft.spj.buildBytesMax", 256L << 20)
+    val maxBucket = rm.files.groupBy(f => rm.buckets.getOrElse(f, -1))
+      .valuesIterator
+      .map(_.iterator.map(rm.fileBytes).sum)
+      .maxOption.getOrElse(0L)
+    if (maxBucket > budget) "merge" else "hash"
   }
 
   /** DYNAMIC (join-driven) FILE PRUNING — the Delta/Photon
@@ -4598,8 +4438,7 @@ object Snapshots {
     require(m.files.forall(m.buckets.contains),
       s"$tableDir has unclustered files (appends since the last " +
         "re-cluster); run compactBucketed first")
-    val schema = m.schema.getOrElse(throw new IllegalArgumentException(
-      s"$tableDir has no recorded schema"))
+    val schema = m.schema
     val keyType = schema(key).dataType
     require(keyType != DoubleType && keyType != FloatType,
       "float/double group keys are not supported (±0.0/NaN equality)")
@@ -4752,8 +4591,7 @@ object Snapshots {
     require(m.files.forall(m.buckets.contains),
       s"$tableDir has unclustered files (appends since the last " +
         "re-cluster); run compactBucketed first")
-    val schema = m.schema.getOrElse(throw new IllegalArgumentException(
-      s"$tableDir has no recorded schema"))
+    val schema = m.schema
     val keyType = schema(key).dataType
     require(keyType != DoubleType && keyType != FloatType,
       "float/double keys are not supported (±0.0/NaN equality)")
@@ -4929,10 +4767,8 @@ object Snapshots {
     require(ln == rn,
       s"bucket counts differ ($leftDir=$ln, $rightDir=$rn): re-cluster one " +
         "side — zip alignment needs identical modulus")
-    val lSchema = lm.schema.getOrElse(throw new IllegalArgumentException(
-      s"$leftDir has no recorded schema"))
-    val rSchema = rm.schema.getOrElse(throw new IllegalArgumentException(
-      s"$rightDir has no recorded schema"))
+    val lSchema = lm.schema
+    val rSchema = rm.schema
     val kt = lSchema(leftKey).dataType
     require(kt == rSchema(rightKey).dataType,
       s"join key types differ (${lSchema(leftKey).dataType} vs " +
@@ -5153,8 +4989,7 @@ object Snapshots {
     require(m.files.forall(m.buckets.contains),
       s"$tableDir has unclustered files (appends since the last " +
         "re-cluster); run compactBucketed first")
-    val schema = m.schema.getOrElse(throw new IllegalArgumentException(
-      s"$tableDir has no recorded schema"))
+    val schema = m.schema
     val kt = schema(key).dataType
     require(kt != DoubleType && kt != FloatType,
       "float/double keys are not supported (±0.0/NaN equality)")
@@ -5331,14 +5166,14 @@ object Snapshots {
     try {
       w.write(s"$Header\n")
       w.write(s"version=${m.version}\n")
-      m.schema.foreach(sc => w.write(s"schema=${sc.json}\n")) // one line
+      w.write(s"schema=${m.schema.json}\n") // one line
       segRefs.foreach { case (rel, n) => w.write(s"segment=$rel\t$n\n") }
       tombstones.foreach { case (rel, file) => w.write(s"removed=$rel\t$file\n") }
       m.dvs.foreach(p => w.write(s"dv=$p\n"))
       m.txns.toSeq.sorted.foreach { case (app, b) => w.write(s"txn=$app\t$b\n") }
       m.checks.toSeq.sorted.foreach { case (n, e) => w.write(s"check=$n\t$e\n") }
-      if (m.dataRows >= 0) w.write(s"rows=${m.dataRows}\n")
-      if (m.dvRows >= 0) w.write(s"dvrows=${m.dvRows}\n")
+      w.write(s"rows=${m.dataRows}\n")
+      w.write(s"dvrows=${m.dvRows}\n")
       m.bucketSpec.foreach { case (k, n) => w.write(s"bucketspec=$k\t$n\n") }
       m.pendingMarker.foreach(p => w.write(s"pending=$p\n"))
       if (m.partitionCols.nonEmpty)
@@ -5346,7 +5181,6 @@ object Snapshots {
       m.colMap.toSeq.sorted.foreach { case (l, ph) =>
         w.write(s"colmap=$l\t$ph\n") }
       m.retiredCols.foreach(c => w.write(s"retired=$c\n"))
-      m.features.toSeq.sorted.foreach(x => w.write(s"feature=$x\n"))
     } finally w.close()
     val ok = atomicPublish(f, tmp, manifestPath(tableDir, m.version))
     if (!ok) {
@@ -5434,7 +5268,7 @@ object Snapshots {
     * that stays live elsewhere breaks it.
     *
     * `mThin` carries the version-level lines (schema, dvs, txns,
-    * checks, ledgers, specs, column mapping, features) — a manifest
+    * checks, ledgers, specs, column mapping) — a manifest
     * header suffices; its per-file maps are never read.
     */
   private def publishManifestDelta(
@@ -5538,11 +5372,9 @@ object Snapshots {
 
   /** [[analyzeStats]]' inverse, for stats that can no longer be
     * trusted: DROP every live file's recorded min/max stat (and null
-    * count) for `columns` in one metadata commit. The upgrade remedy
-    * for decimal columns that scale-widened under code predating the
-    * stale-scale drop rules (see [[statMayContain]]'s caveat):
-    * invalidated columns stop pruning (conservative — every file
-    * scans) until a rewrite re-records at the current scale. No data
+    * count) for `columns` in one metadata commit: invalidated columns
+    * stop pruning (conservative — every file scans) until a rewrite
+    * re-records them. No data
     * is read; the commit tombstones the entries that carried such a
     * stat and writes their stripped copies, every other entry rides
     * its segment verbatim.
@@ -5550,7 +5382,7 @@ object Snapshots {
   def invalidateStats(spark: SparkSession, tableDir: String,
                       columns: Seq[String]): Long = {
     require(columns.nonEmpty, "invalidateStats needs at least one column")
-    val (version, base) = deltaBase(spark, tableDir, "invalidateStats")
+    val (version, base) = resolveForWrite(spark, tableDir)
     val m = base.header
     val drop = columns.map(m.physOf).toSet -- m.retiredCols
     val edits = liveSegEntries(spark, tableDir, base).collect {
@@ -5585,9 +5417,9 @@ object Snapshots {
   def analyzeStats(spark: SparkSession, tableDir: String,
                    columns: Seq[String]): Long = {
     require(columns.nonEmpty, "analyzeStats needs at least one column")
-    val (version, base) = deltaBase(spark, tableDir, "analyzeStats")
+    val (version, base) = resolveForWrite(spark, tableDir)
     val m = base.header
-    val schema = m.schema.get // a schema-less base was refused
+    val schema = m.schema
     columns.foreach { c =>
       require(schema.fieldNames.contains(c),
         s"analyze column '$c' is not a table column")
@@ -5658,9 +5490,9 @@ object Snapshots {
         => Map[(String, String), Array[Byte]],
       withFresh: (SegEntry, Seq[(String, Array[Byte])]) => SegEntry): Long = {
     require(columns.nonEmpty, s"$what needs at least one column")
-    val (version, base) = deltaBase(spark, tableDir, what)
+    val (version, base) = resolveForWrite(spark, tableDir)
     val m = base.header
-    val schema = m.schema.get // a schema-less base was refused
+    val schema = m.schema
     columns.foreach { c =>
       require(schema.fieldNames.contains(c),
         s"analyze column '$c' is not a table column")
@@ -5748,7 +5580,7 @@ object Snapshots {
       s"constraint name must be non-empty with no tab/newline: '$name'")
     require(!exprSql.exists(c => c == '\t' || c == '\n' || c == '\r'),
       s"constraint expression must be a single line: '$exprSql'")
-    val (nextV, base) = deltaBase(spark, tableDir, "addCheckConstraint")
+    val (nextV, base) = resolveForWrite(spark, tableDir)
     val m = base.header
     require(!m.checks.contains(name), s"constraint '$name' already exists")
     if (validateExisting && m.dataRows > 0) {
@@ -5768,7 +5600,7 @@ object Snapshots {
   /** Remove a table-level CHECK constraint (a header-only commit). */
   def dropCheckConstraint(spark: SparkSession, tableDir: String,
                           name: String): Long = {
-    val (nextV, base) = deltaBase(spark, tableDir, "dropCheckConstraint")
+    val (nextV, base) = resolveForWrite(spark, tableDir)
     val m = base.header
     require(m.checks.contains(name), s"no constraint '$name' at $tableDir")
     publishMetadata(spark, tableDir,
@@ -6129,11 +5961,7 @@ object Snapshots {
     * [[assemble]]. The manifest file itself is small (table-level
     * state + segment refs + tombstones); referenced segments resolve
     * through the process-wide immutable-segment cache, so repeat reads
-    * of an evolving table parse only NEW segments. Legacy flat
-    * manifests (inline per-file lines) parse unchanged for reads; DML,
-    * maintenance, metadata-only commits and appends refuse them
-    * ([[deltaBase]]) until [[compact]] rewrites the table into the
-    * current format.
+    * of an evolving table parse only NEW segments.
     */
   def readManifest(spark: SparkSession, tableDir: String, version: Long): Manifest =
     assemble(spark, tableDir, parseManifest(spark, tableDir, version))
@@ -6141,166 +5969,88 @@ object Snapshots {
   /** THE manifest-file parse — every reader of a manifest goes through
     * it, once per use: the version-level header (schema, column
     * mapping, DV refs, txn watermarks, pending marker, ledger counts,
-    * specs, features; its per-file maps hold only legacy inline lines)
-    * together with the segment refs and their live counts, the
-    * tombstones and the legacy inline entries ([[ManifestShell]]).
-    * Driver cost is O(segments + tombstones) however many files the
-    * table holds — no segment is parsed; [[assemble]] does that for
-    * the callers that read per-file maps.
+    * specs) together with the segment refs and their live counts and
+    * the tombstones ([[ManifestShell]]). Driver cost is
+    * O(segments + tombstones) however many files the table holds — no
+    * segment is parsed; [[assemble]] does that for the callers that
+    * read per-file maps.
+    *
+    * The parse accepts exactly the `graft-manifest-v2` grammar
+    * [[publishManifestFile]] writes: `schema=`, `rows=` and `dvrows=`
+    * are required, every `segment=` ref carries its live count, and a
+    * line of any other kind, or one whose fields do not parse, is
+    * refused naming the file and the field ([[parseLines]]).
     */
   private[sources] def parseManifest(spark: SparkSession, tableDir: String,
                                      version: Long): ManifestShell = {
     val f = fs(spark, tableDir)
     val p = manifestPath(tableDir, version)
     require(f.exists(p), s"no version $version at $tableDir")
-    val r = new BufferedReader(
-      new InputStreamReader(f.open(p), StandardCharsets.UTF_8))
-    try {
-      require(r.readLine() == Header, s"unrecognized manifest format in $p")
-      val segRefs = ArrayBuffer.empty[(String, Int)]
-      val tombs = scala.collection.mutable.HashSet.empty[(String, String)]
-      val colMap = scala.collection.mutable.Map.empty[String, String]
-      val retiredCols = ArrayBuffer.empty[String]
-      val files = ArrayBuffer.empty[String]
-      val dvs = ArrayBuffer.empty[String]
-      val stats = scala.collection.mutable.Map.empty[(String, String), FileStat]
-      val txns = scala.collection.mutable.Map.empty[String, Long]
-      val checks = scala.collection.mutable.Map.empty[String, String]
-      var schema: Option[org.apache.spark.sql.types.StructType] = None
-      var dataRows = -1L
-      var dvRows = -1L
-      var bucketSpec: Option[(String, Int)] = None
-      val buckets = scala.collection.mutable.Map.empty[String, Int]
-      var pending: Option[String] = None
-      val blooms = scala.collection.mutable.Map.empty[(String, String), Bloom]
-      var partitionCols: Seq[String] = Nil
-      val fileRows = scala.collection.mutable.Map.empty[String, Long]
-      val fileBytes = scala.collection.mutable.Map.empty[String, Long]
-      val nullCounts = scala.collection.mutable.Map.empty[(String, String), Long]
-      val features = scala.collection.mutable.HashSet.empty[String]
-      var line = r.readLine()
-      while (line != null) {
-        if (line.startsWith("file=")) files += line.stripPrefix("file=")
-        else if (line.startsWith("segment=")) {
-          line.stripPrefix("segment=").split('\t') match {
-            case Array(rel, n) => segRefs += ((rel, n.toInt))
-            // count-less refs predate the live-count line — the delta
-            // publish needs the count to carry it verbatim, so a -1
-            // here makes [[deltaBase]] refuse the legacy base
-            case Array(rel) => segRefs += ((rel, -1))
-            case _ => // ignore malformed (forward compat)
-          }
-        } else if (line.startsWith("removed=")) {
-          line.stripPrefix("removed=").split('\t') match {
-            case Array(rel, file) => tombs += ((rel, file))
-            case _ => // ignore malformed (forward compat)
-          }
-        }
-        else if (line.startsWith("schema="))
-          schema = Some(org.apache.spark.sql.types.DataType
-            .fromJson(line.stripPrefix("schema="))
+    val segRefs = ArrayBuffer.empty[(String, Int)]
+    val tombs = scala.collection.mutable.HashSet.empty[(String, String)]
+    val colMap = scala.collection.mutable.Map.empty[String, String]
+    val retiredCols = ArrayBuffer.empty[String]
+    val dvs = ArrayBuffer.empty[String]
+    val txns = scala.collection.mutable.Map.empty[String, Long]
+    val checks = scala.collection.mutable.Map.empty[String, String]
+    var schema: Option[org.apache.spark.sql.types.StructType] = None
+    var dataRows: Option[Long] = None
+    var dvRows: Option[Long] = None
+    var bucketSpec: Option[(String, Int)] = None
+    var pending: Option[String] = None
+    var partitionCols: Seq[String] = Nil
+    parseLines(f, p, Header) { (kind, v) =>
+      kind match {
+        case "version" => require(v.toLong == version, s"not version $version")
+        case "schema" =>
+          schema = Some(org.apache.spark.sql.types.DataType.fromJson(v)
             .asInstanceOf[org.apache.spark.sql.types.StructType])
-        else if (line.startsWith("stat=")) {
-          line.stripPrefix("stat=").split('\t') match {
-            case Array(file, c, kind, min, max) =>
-              stats((file, c)) = FileStat(kind, min, max)
-            case _ => // ignore malformed stat lines (forward compat)
-          }
-        } else if (line.startsWith("txn=")) {
-          line.stripPrefix("txn=").split('\t') match {
-            case Array(app, b) => txns(app) = b.toLong
-            case _ => // ignore malformed txn lines (forward compat)
-          }
-        } else if (line.startsWith("dv=")) dvs += line.stripPrefix("dv=")
-        else if (line.startsWith("check=")) {
-          line.stripPrefix("check=").split('\t') match {
-            case Array(n, e) => checks(n) = e
-            case _ => // ignore malformed check lines (forward compat)
-          }
-        }
-        else if (line.startsWith("rows=")) dataRows = line.stripPrefix("rows=").toLong
-        else if (line.startsWith("dvrows=")) dvRows = line.stripPrefix("dvrows=").toLong
-        else if (line.startsWith("bucketspec=")) {
-          line.stripPrefix("bucketspec=").split('\t') match {
-            case Array(k, n) => bucketSpec = Some((k, n.toInt))
-            case _ => // ignore malformed (forward compat)
-          }
-        } else if (line.startsWith("bucket=")) {
-          line.stripPrefix("bucket=").split('\t') match {
-            case Array(rel, b) => buckets(rel) = b.toInt
-            case _ => // ignore malformed (forward compat)
-          }
-        }
-        else if (line.startsWith("pending=")) pending = Some(line.stripPrefix("pending="))
-        else if (line.startsWith("partcols="))
-          // paren-aware split: transform specs like `truncate(4, c)`
-          // legally carry a comma inside the parens
-          partitionCols = splitSpecList(line.stripPrefix("partcols="))
-            .map(_.trim).filter(_.nonEmpty)
-        else if (line.startsWith("colmap=")) {
-          line.stripPrefix("colmap=").split('\t') match {
-            case Array(l, ph) => colMap(l) = ph
-            case _ => // ignore malformed (forward compat)
-          }
-        }
-        else if (line.startsWith("retired="))
-          retiredCols += line.stripPrefix("retired=")
-        else if (line.startsWith("feature="))
-          features += line.stripPrefix("feature=")
-        else if (line.startsWith("frow=")) {
-          line.stripPrefix("frow=").split('\t') match {
-            case Array(rel, n, b) =>
-              fileRows(rel) = n.toLong; fileBytes(rel) = b.toLong
-            case Array(rel, n) => fileRows(rel) = n.toLong
-            case _ => // ignore malformed (forward compat)
-          }
-        }
-        else if (line.startsWith("nulls=")) {
-          line.stripPrefix("nulls=").split('\t') match {
-            case Array(rel, c, n) => nullCounts((rel, c)) = n.toLong
-            case _ => // ignore malformed (forward compat)
-          }
-        }
-        else if (line.startsWith("bloom=")) {
-          line.stripPrefix("bloom=").split('\t') match {
-            case Array(file, c, mBits, k, b64) =>
-              val bytes = java.util.Base64.getDecoder.decode(b64)
-              val bb = java.nio.ByteBuffer.wrap(bytes)
-              val words = Array.fill(bytes.length / 8)(bb.getLong)
-              blooms((file, c)) = Bloom(mBits.toInt, k.toInt, words)
-            case _ => // ignore malformed (forward compat)
-          }
-        }
-        line = r.readLine()
+        case "segment" =>
+          val Array(rel, n) = fields(v, 2)
+          segRefs += ((rel, n.toInt))
+        case "removed" =>
+          val Array(rel, file) = fields(v, 2)
+          tombs += ((rel, file))
+        case "dv" => dvs += v
+        case "txn" =>
+          val Array(app, b) = fields(v, 2)
+          txns(app) = b.toLong
+        case "check" =>
+          val Array(n, e) = fields(v, 2)
+          checks(n) = e
+        case "rows" => dataRows = Some(v.toLong)
+        case "dvrows" => dvRows = Some(v.toLong)
+        case "bucketspec" =>
+          val Array(k, n) = fields(v, 2)
+          bucketSpec = Some((k, n.toInt))
+        case "pending" => pending = Some(v)
+        // paren-aware split: transform specs like `truncate(4, c)`
+        // legally carry a comma inside the parens
+        case "partcols" =>
+          partitionCols = splitSpecList(v).map(_.trim).filter(_.nonEmpty)
+        case "colmap" =>
+          val Array(l, ph) = fields(v, 2)
+          colMap(l) = ph
+        case "retired" => retiredCols += v
+        case other => unknownField(other)
       }
-      val header = Manifest(version, files.toSeq, stats.toMap, schema,
-        txns.toMap, dvs.toSeq, checks.toMap, dataRows, dvRows, bucketSpec,
-        buckets.toMap, pending, blooms.toMap, partitionCols, fileRows.toMap,
-        fileBytes.toMap, segRefs.map(_._1).toSeq, colMap.toMap,
-        retiredCols.toSeq, nullCounts.toMap, features = features.toSet)
-      // legacy inline lines speak LOGICAL names already. Group the
-      // stat/null maps by file ONCE — a per-file scan of the whole map
-      // would be O(files × stats), quadratic on a large legacy flat
-      // manifest (paid at checkpoint build AND every checkpointed read)
-      val statsByFile = header.stats.groupBy(_._1._1)
-      val nullsByFile = header.nullCounts.groupBy(_._1._1)
-      val inline = header.files.map { rel =>
-        CkptFile(rel, header.buckets.get(rel), header.fileRows.get(rel),
-          header.fileBytes.get(rel),
-          statsByFile.getOrElse(rel, Map.empty).map { case ((_, c), st) =>
-            c -> CkptStat(st.kind, st.min, st.max) },
-          nullsByFile.getOrElse(rel, Map.empty).map { case ((_, c), n) => c -> n })
-      }
-      ManifestShell(header, segRefs.toSeq, tombs.toSet, inline)
-    } finally r.close()
+    }
+    def required[T](field: String, x: Option[T]): T = x.getOrElse(
+      throw new IllegalArgumentException(s"$p: missing field '$field'"))
+    val header = Manifest(version, Nil, required("schema", schema),
+      txns = txns.toMap, dvs = dvs.toSeq, checks = checks.toMap,
+      dataRows = required("rows", dataRows), dvRows = required("dvrows", dvRows),
+      bucketSpec = bucketSpec, pendingMarker = pending,
+      partitionCols = partitionCols, segments = segRefs.map(_._1).toSeq,
+      colMap = colMap.toMap, retiredCols = retiredCols.toSeq)
+    ManifestShell(header, segRefs.toSeq, tombs.toSet)
   }
 
   /** Segment assembly: the whole-table view of a parsed manifest. The
-    * referenced segments' entries join the header's per-file maps in
-    * ref order, tombstoned and duplicate entries skipped, ahead of any
-    * legacy inline file lines. Segment stat/bloom keys are PHYSICAL
-    * column names: they translate to logical through the column
-    * mapping, and entries of retired (dropped) columns drop — their
+    * referenced segments' entries fill the per-file maps in ref order,
+    * tombstoned and duplicate entries skipped. Segment stat/bloom keys
+    * are PHYSICAL column names: they translate to logical through the
+    * column mapping, and entries of retired (dropped) columns drop — their
     * stats describe a dead column's values and must never prune a
     * later column that reuses the name.
     */
@@ -6348,8 +6098,8 @@ object Snapshots {
             if (!retired.contains(c))
               stats((e.file, rev.getOrElse(c, c))) = st }
           e.bucket.foreach(b => buckets(e.file) = b)
-          e.rows.foreach(n => fileRows(e.file) = n)
-          e.bytes.foreach(b => fileBytes(e.file) = b)
+          fileRows(e.file) = e.rows
+          fileBytes(e.file) = e.bytes
           e.blooms.foreach { case (c, b) =>
             if (!retired.contains(c))
               blooms((e.file, rev.getOrElse(c, c))) = b }
@@ -6369,10 +6119,10 @@ object Snapshots {
         }
       }
     }
-    m.copy(files = segFiles.toSeq ++ m.files, stats = m.stats ++ stats,
-      buckets = m.buckets ++ buckets, blooms = m.blooms ++ blooms,
-      fileRows = m.fileRows ++ fileRows, fileBytes = m.fileBytes ++ fileBytes,
-      nullCounts = m.nullCounts ++ nullCounts, ndvs = ndvSketches.toMap,
+    m.copy(files = segFiles.toSeq, stats = stats.toMap,
+      buckets = buckets.toMap, blooms = blooms.toMap,
+      fileRows = fileRows.toMap, fileBytes = fileBytes.toMap,
+      nullCounts = nullCounts.toMap, ndvs = ndvSketches.toMap,
       klls = kllSketches.toMap, sortedFiles = sortedFiles.toMap)
   }
 
@@ -6387,11 +6137,10 @@ object Snapshots {
     readFiles(spark, tableDir, m, m.files)
   }
 
-  /** Read `rels` with the manifest's recorded schema when present —
-    * files predating an additive schema change read NULL for columns
-    * they lack (and vice versa for omitted ones), with O(1) planning
-    * (no footer merge). Manifests from before the schema line fall
-    * back to footer inference.
+  /** Read `rels` with the manifest's recorded schema — files
+    * predating an additive schema change read NULL for columns they
+    * lack (and vice versa for omitted ones), with O(1) planning (no
+    * footer merge).
     */
   private def readFiles(spark: SparkSession, tableDir: String,
                         m: Manifest, rels: Seq[String]): DataFrame =
@@ -6430,8 +6179,7 @@ object Snapshots {
     * the broadcast threshold (the anti-join silently degrades to a
     * shuffle on EVERY read from here on) or `graft.dv.purgeWarnRatio`
     * (default 0.1) of the table's rows, warn toward [[purgeDeletes]].
-    * Metadata-only — reads proceed unchanged; tables whose manifests
-    * predate row accounting (dvRows = -1) stay silent.
+    * Metadata-only — reads proceed unchanged.
     */
   private def warnIfPurgeOverdue(spark: SparkSession, tableDir: String,
                                  m: Manifest): Unit = {
@@ -6485,9 +6233,7 @@ object Snapshots {
     // everything-deleted overwrite) serves an empty frame with the
     // declared schema — the parquet reader cannot be given zero paths
     if (rels.isEmpty) {
-      val schema = m.schema.getOrElse(throw new IllegalArgumentException(
-        s"$tableDir v${m.version} has no files and no recorded schema"))
-      val withMeta = org.apache.spark.sql.types.StructType(schema.fields ++ Seq(
+      val withMeta = org.apache.spark.sql.types.StructType(m.schema.fields ++ Seq(
         org.apache.spark.sql.types.StructField(FpCol,
           org.apache.spark.sql.types.StringType),
         org.apache.spark.sql.types.StructField(RiCol,
@@ -6500,16 +6246,16 @@ object Snapshots {
     // physical projection of the recorded schema, then rename to the
     // logical view (an alias-only Project: pushed filters rewrite
     // through it into the parquet scan). Identity when unmapped.
-    val physSchema = m.schema.map(s =>
-      if (m.colMap.isEmpty) s
+    val physSchema =
+      if (m.colMap.isEmpty) m.schema
       else org.apache.spark.sql.types.StructType(
-        s.fields.map(fd => fd.copy(name = m.physOf(fd.name)))))
-    val raw = physSchema.fold(spark.read)(s => spark.read.schema(s)).parquet(abs: _*)
+        m.schema.fields.map(fd => fd.copy(name = m.physOf(fd.name))))
+    val raw = spark.read.schema(physSchema).parquet(abs: _*)
       .select(col("*"), col("_metadata.file_path").as(FpCol),
         col("_metadata.row_index").as(RiCol))
     val base =
       if (m.colMap.isEmpty) raw
-      else raw.select(m.schema.get.fields.map(fd =>
+      else raw.select(m.schema.fields.map(fd =>
         col(s"`${m.physOf(fd.name)}`").as(fd.name)).toIndexedSeq ++
         Seq(col(FpCol), col(RiCol)): _*)
     if (m.dvs.isEmpty) base
@@ -6553,7 +6299,7 @@ object Snapshots {
                   predicate: org.apache.spark.sql.Column): Long = {
     import org.apache.spark.sql.functions.col
     val f = fs(spark, tableDir)
-    val (version, base) = deltaBase(spark, tableDir, "deleteWhere")
+    val (version, base) = resolveForWrite(spark, tableDir)
     val m = base.header
     // pin the mask once (the count and the write must see the same
     // rows), then size the write to the mask ([[dvSizedForWrite]])
@@ -6598,8 +6344,8 @@ object Snapshots {
                                      base: ManifestShell,
                                      predicate: org.apache.spark.sql.Column,
                                      op: String): Seq[String] =
-    liveCandidates(spark, tableDir, base, op, ckptPredicateVerdict(spark,
-      base.header, base.header.schema.get, predicate)).map(_.file)
+    liveEntriesCheckpointed(spark, tableDir, base, ckptPredicateVerdict(spark,
+      base.header, base.header.schema, predicate)).map(_.file)
 
   /** Size a dv mask for writing: 1 output file while it fits the
     * broadcast-friendly shape, sharded at `graft.dv.maxRowsPerFile`
@@ -6657,9 +6403,9 @@ object Snapshots {
     import org.apache.spark.sql.functions.{col, lit, max, min, pmod, xxhash64}
     require(changes.columns.contains("op"), "changes needs an op column (I/U/D)")
     val f = fs(spark, tableDir)
-    val (version, base) = deltaBase(spark, tableDir, "mergeOnRead")
+    val (version, base) = resolveForWrite(spark, tableDir)
     val m = base.header
-    val old = m.schema.get
+    val old = m.schema
     txn.foreach { case (app, _) =>
       require(app.nonEmpty && !app.exists(c => c == '\t' || c == '\n' || c == '\r'),
         s"txn appId must be non-empty with no tab/newline: '$app'")
@@ -6716,7 +6462,7 @@ object Snapshots {
       val b = keys.agg(min(col(key)), max(col(key))).head()
       if (b.isNullAt(0)) None
       else Some(
-        if (rangeStatsComparable(Some(keyType), b.get(0), b.get(1)))
+        if (rangeStatsComparable(old, key))
           (b.get(0), b.get(1))
         else (null, null))
     }
@@ -6724,7 +6470,7 @@ object Snapshots {
       val (loV, hiV) = range
       val wantedSet = wanted.orNull
       val pk = m.physOf(key)
-      liveCandidates(spark, tableDir, base, "mergeOnRead", { r: CkptFile =>
+      liveEntriesCheckpointed(spark, tableDir, base, { r: CkptFile =>
         (loV == null || r.stats.get(pk).forall(s =>
           FileStat(s.kind, s.min, s.max).overlaps(loV, hiV))) &&
           (wantedSet == null || r.bucket.forall(wantedSet.contains))
@@ -6811,7 +6557,7 @@ object Snapshots {
     // batch's entries written; a widening batch drops the widened
     // columns' carried blooms/NDVs (klls survive: they sketch VALUES,
     // which a lossless widening preserves)
-    val mPub = m.copy(version = version, schema = Some(schema),
+    val mPub = m.copy(version = version, schema = schema,
       txns = txns, dvs = m.dvs ++ dvs,
       dataRows = addRowCounts(m.dataRows, nAppended),
       dvRows = addRowCounts(if (m.dvs.isEmpty) 0L else m.dvRows, nMasked),
@@ -6819,7 +6565,7 @@ object Snapshots {
     if (!publishManifestDelta(f, tableDir, mPub, base, Map.empty,
         freshSegEntries(mPub, written, newStats, newNulls, newFileMeta,
           Map.empty, Map.empty),
-        widenedCols, scaleWidenedCols(Some(old), Some(schema), widenedCols))) {
+        widenedCols, scaleWidenedCols(old, schema, widenedCols))) {
       if (dvs.nonEmpty) f.delete(dvDir, true)
       if (written.nonEmpty) f.delete(dataDir, true)
       throw new java.util.ConcurrentModificationException(
@@ -6851,8 +6597,7 @@ object Snapshots {
     import org.apache.spark.sql.functions.{col, lit, max, min, pmod, xxhash64}
     // probe at the table's recorded type (type-sensitive hash; a
     // narrower batch key must hash like the stored mapping does)
-    val typedKey = m.schema.map(s => col(key).cast(s(key).dataType))
-      .getOrElse(col(key))
+    val typedKey = col(key).cast(m.schema(key).dataType)
     val hasKeyStats = m.stats.keys.exists(_._2 == key)
     val statsPruned =
       if (!hasKeyStats) m.files
@@ -6915,21 +6660,10 @@ object Snapshots {
     }
     val hints = conjuncts
       .flatMap {
-        case ("=", c, Seq(v))
-            if rangeStatsComparable(
-              old.fields.find(_.name == c).map(_.dataType), v, v) =>
-          Seq(("=", m.physOf(c), Seq(v)))
-        case (">=", c, Seq(v))
-            if rangeStatsComparable(
-              old.fields.find(_.name == c).map(_.dataType), v, v) =>
-          Seq((">=", m.physOf(c), Seq(v)))
-        case ("<=", c, Seq(v))
-            if rangeStatsComparable(
-              old.fields.find(_.name == c).map(_.dataType), v, v) =>
-          Seq(("<=", m.physOf(c), Seq(v)))
-        case ("in", c, vs)
-            if vs.nonEmpty && vs.forall(v => rangeStatsComparable(
-              old.fields.find(_.name == c).map(_.dataType), v, v)) =>
+        case (op @ ("=" | ">=" | "<="), c, vs @ Seq(_))
+            if rangeStatsComparable(old, c) =>
+          Seq((op, m.physOf(c), vs))
+        case ("in", c, vs) if vs.nonEmpty && rangeStatsComparable(old, c) =>
           Seq(("in", m.physOf(c), vs))
         case _ => Nil
       }
@@ -6974,9 +6708,9 @@ object Snapshots {
     import org.apache.spark.sql.functions.col
     require(sets.nonEmpty, "updateWhere needs at least one SET column")
     val f = fs(spark, tableDir)
-    val (version, base) = deltaBase(spark, tableDir, "updateWhere")
+    val (version, base) = resolveForWrite(spark, tableDir)
     val m = base.header
-    val old = m.schema.get
+    val old = m.schema
     sets.keys.foreach { c =>
       require(old.fieldNames.contains(c),
         s"SET column '$c' is not in the table schema")
@@ -7019,7 +6753,7 @@ object Snapshots {
         None, m.colMap)
       val newFileMeta = footerFileMeta(spark, f, dataDir, dataRel)
       val written = newFileMeta.keys.toSeq.sorted
-      val mPub = m.copy(version = version, schema = Some(schema),
+      val mPub = m.copy(version = version, schema = schema,
         dvs = m.dvs ++ dvs,
         dataRows = addRowCounts(m.dataRows, n),
         dvRows = addRowCounts(if (m.dvs.isEmpty) 0L else m.dvRows, n),
@@ -7028,7 +6762,7 @@ object Snapshots {
           freshSegEntries(mPub, written,
             partitionStatsOf(written, paySpecs, schema), Map.empty,
             newFileMeta, Map.empty, Map.empty),
-          widenedCols, scaleWidenedCols(Some(old), Some(schema), widenedCols))) {
+          widenedCols, scaleWidenedCols(old, schema, widenedCols))) {
         f.delete(dvDir, true)
         f.delete(dataDir, true)
         throw new java.util.ConcurrentModificationException(
@@ -7095,7 +6829,7 @@ object Snapshots {
                    statsColumns: Seq[String] = Nil): Long = {
     import org.apache.spark.sql.functions.{col, regexp_extract}
     val f = fs(spark, tableDir)
-    val (version, base) = deltaBase(spark, tableDir, "purgeDeletes")
+    val (version, base) = resolveForWrite(spark, tableDir)
     val m = base.header
     def publishOr(cleanup: => Unit)(
         mNext: Manifest, removed: Map[String, Set[String]],
@@ -7132,7 +6866,7 @@ object Snapshots {
     // the masked files' segment positions and row ledgers come from
     // the planning walk; the driver holds O(masked files + touched
     // segments) metadata
-    val entries = liveCandidates(spark, tableDir, base, "purgeDeletes",
+    val entries = liveEntriesCheckpointed(spark, tableDir, base,
       (r: CkptFile) => maskedTails.contains(dataTail(r.file)),
       withStats = true)
     if (entries.isEmpty) // mask rows reference no live file: drop them
@@ -7144,7 +6878,7 @@ object Snapshots {
     val masked = entries.map(_.file)
     val visible = readFiles(spark, tableDir, m, masked)
     val partSpecs = m.partitionCols.map(PartitionTransforms.parse)
-    val schema = m.schema.get
+    val schema = m.schema
     val tag = UUID.randomUUID().toString.take(8)
     val dataRel = f"data/v$version%06d-$tag"
     val dataDir = new Path(tableDir, dataRel)
@@ -7168,7 +6902,7 @@ object Snapshots {
     val newFileMeta = footerFileMeta(spark, f, dataDir, dataRel)
     // exact ledger arithmetic: remove the rewritten files' physical
     // rows, add the fresh footers' — never an O(table) sum
-    val dataRows = m.dataRows - entries.iterator.map(_.rows.get).sum +
+    val dataRows = m.dataRows - entries.iterator.map(_.rows).sum +
       newFileMeta.valuesIterator.map(_._1).sum
     val fresh = freshSegEntries(m, written, newStats, newNulls,
       newFileMeta, newBuckets, Map.empty)
@@ -7195,10 +6929,7 @@ object Snapshots {
   def pruneFiles(m: Manifest, column: String, lo: Any, hi: Any): Seq[String] = {
     // decimal columns never range-stat-prune (unscaled footer ints vs
     // value bounds — see [[rangeStatsComparable]]): keep everything
-    if (!rangeStatsComparable(
-        m.schema.flatMap(_.fields.find(_.name == column)).map(_.dataType),
-        lo, hi))
-      return m.files
+    if (!rangeStatsComparable(m.schema, column)) return m.files
     m.files.filter(f => m.stats.get((f, column)).forall(_.overlaps(lo, hi)))
   }
 
@@ -7209,10 +6940,7 @@ object Snapshots {
     * box predicate multiplies the two single-column skip rates.
     */
   def pruneFiles(m: Manifest, preds: Seq[(String, Any, Any)]): Seq[String] = {
-    val ps = preds.filter { case (c, lo, hi) =>
-      rangeStatsComparable(
-        m.schema.flatMap(_.fields.find(_.name == c)).map(_.dataType), lo, hi)
-    }
+    val ps = preds.filter { case (c, _, _) => rangeStatsComparable(m.schema, c) }
     m.files.filter(f => ps.forall { case (c, lo, hi) =>
       m.stats.get((f, c)).forall(_.overlaps(lo, hi)) })
   }
@@ -7328,9 +7056,7 @@ object Snapshots {
                                     keys: Seq[Any]): Seq[String] = {
     val bucketPruned = m.bucketSpec match {
       case Some((bk, n)) if bk == key =>
-        val keyType = m.schema.map(_(key).dataType).getOrElse(
-          org.apache.spark.sql.types.StringType)
-        val wanted = bucketIdsOf(spark, keys, keyType, n)
+        val wanted = bucketIdsOf(spark, keys, m.schema(key).dataType, n)
         candidates.filter(rel => m.buckets.get(rel).forall(wanted.contains))
       case _ => candidates
     }
@@ -7341,23 +7067,20 @@ object Snapshots {
     // integers at the column's scale (see [[statMayContain]]) — so
     // decimal point lookups prune on stats too, with conservative
     // keeps for any stat not decodable that way.
-    val statKeyType = m.schema.map(_(key).dataType)
+    val keyType = m.schema(key).dataType
     val statKeep = bucketPruned.filter(rel =>
       m.stats.get((rel, key)).forall(st =>
-        keys.exists(k =>
-          statMayContain(st, statKeyType, k, m.decimalStatsTrusted))))
+        keys.exists(k => statMayContain(st, keyType, k))))
     // bloom pruning composes last: a file indexed on `key` survives
     // only if SOME wanted key might be in its bloom — the primitive
     // that prunes point lookups on columns the table is NOT clustered
     // by (stats span, buckets absent). Bit positions evaluated through
     // Spark's own hash, per bloom geometry present in the manifest.
-    val keyType0 = m.schema.map(_(key).dataType).getOrElse(
-      org.apache.spark.sql.types.StringType)
     val geometries = m.blooms.collect {
       case ((_, c), b) if c == key => (b.mBits, b.k) }.toSet
     val probeBits: Map[(Int, Int), Map[String, Seq[Long]]] =
       geometries.map(g =>
-        g -> bloomProbeBits(spark, keys, keyType0, g._1, g._2)).toMap
+        g -> bloomProbeBits(spark, keys, keyType, g._1, g._2)).toMap
     statKeep.filter(rel => m.blooms.get((rel, key)).forall { b =>
       val bits = probeBits((b.mBits, b.k))
       keys.exists(k => bloomMightContain(b, bits(k.toString)))
@@ -7374,51 +7097,27 @@ object Snapshots {
     * rescaled EXACTLY to the column's scale and compared as its
     * unscaled long — exact pruning, never a lossy double detour.
     * Conservative keeps everywhere the decoding is not airtight: a
-    * non-"long" stat kind (binary-backed >18-digit decimals, legacy
-    * formats), a literal that does not rescale exactly (cannot equal
-    * any stored value, but the row filter owns that verdict), or a
-    * non-numeric literal. Scale-drift is impossible by construction
-    * FOR MANIFESTS THIS CODE WRITES: a scale-growing decimal widening
-    * DROPS carried stats at the widening commit (like blooms/NDVs)
-    * and a batch written at a mismatched scale records none
-    * ([[batchScaleMismatchCols]]), so every surviving "long" stat is
-    * unscaled at the column's CURRENT scale. UPGRADE CAVEAT: a table
-    * that scale-widened a decimal column under code PREDATING these
-    * rules may still carry stale-scale stats this decode would trust
-    * — run [[invalidateStats]] on the column (one metadata commit) or
-    * rewrite (compact) before relying on decimal pruning there.
+    * non-"long" stat kind (binary-backed >18-digit decimals), a
+    * literal that does not rescale exactly (cannot equal any stored
+    * value, but the row filter owns that verdict), or a non-numeric
+    * literal. Scale-drift is impossible by construction: a
+    * scale-growing decimal widening DROPS carried stats at the
+    * widening commit (like blooms/NDVs) and a batch written at a
+    * mismatched scale records none ([[batchScaleMismatchCols]]), so
+    * every surviving "long" stat of a `graft-manifest-v2` table is
+    * unscaled at the column's CURRENT scale.
     */
   private def statMayContain(st: FileStat,
-      keyType: Option[org.apache.spark.sql.types.DataType], k: Any,
-      decimalTrusted: Boolean): Boolean =
+      keyType: org.apache.spark.sql.types.DataType, k: Any): Boolean =
     keyType match {
-      case Some(dt: org.apache.spark.sql.types.DecimalType) =>
-        // the unscaled decode only runs for manifests whose feature
-        // marker certifies every surviving stat was recorded under the
-        // scale-drop rules ([[DecimalScaleStatsFeature]], ADVICE r14);
-        // an unmarked (pre-rules) table may carry stale-scale stats —
-        // conservative keep, never a silent wrong prune
-        if (st.kind != "long" || !decimalTrusted) true
-        else decimalUnscaledLong(k, dt.scale)
-          .forall(u => st.overlaps(u, u))
-      case None if isDecimalLit(k) =>
-        // a decimal literal against a column of UNKNOWN type (a legacy
-        // schema-less manifest): the footer stats may be unscaled
-        // decimal ints — keep, never guess (the pre-decimal-pruning
-        // bypass's behavior, preserved exactly where the type that
-        // makes the decode sound is missing)
-        true
+      case dt: org.apache.spark.sql.types.DecimalType =>
+        st.kind != "long" ||
+          decimalUnscaledLong(k, dt.scale).forall(u => st.overlaps(u, u))
       case _ => st.overlaps(k, k)
     }
 
-  private def isDecimalLit(k: Any): Boolean = k match {
-    case _: java.math.BigDecimal | _: scala.math.BigDecimal => true
-    case _ => false
-  }
-
   /** Range-vs-footer-stat verdict shared by every range pruning path:
-    * DECIMAL columns — and decimal bounds against a column of UNKNOWN
-    * type — never stat-prune. Int-backed decimal footer stats are
+    * DECIMAL columns of `schema` never stat-prune. Int-backed decimal footer stats are
     * UNSCALED integers while a range bound compares by VALUE, so the
     * comparison is meaningless; such predicates keep the file and the
     * row filter owns them ([[readVersionFiltered]]'s documented rule
@@ -7430,10 +7129,9 @@ object Snapshots {
     * scale).
     */
   private def rangeStatsComparable(
-      dt: Option[org.apache.spark.sql.types.DataType],
-      lo: Any, hi: Any): Boolean =
-    !(dt.exists(_.isInstanceOf[org.apache.spark.sql.types.DecimalType]) ||
-      (dt.isEmpty && (isDecimalLit(lo) || isDecimalLit(hi))))
+      schema: org.apache.spark.sql.types.StructType, column: String): Boolean =
+    !schema.fields.exists(fd => fd.name == column &&
+      fd.dataType.isInstanceOf[org.apache.spark.sql.types.DecimalType])
 
   /** Columns a batch WRITES at a different decimal scale than the
     * table's — such files' footer stats must never be recorded (the
@@ -7460,13 +7158,13 @@ object Snapshots {
     * stat carries so no path can leak a stale-scale stat).
     */
   private def scaleWidenedCols(
-      oldSchema: Option[org.apache.spark.sql.types.StructType],
-      newSchema: Option[org.apache.spark.sql.types.StructType],
+      oldSchema: org.apache.spark.sql.types.StructType,
+      newSchema: org.apache.spark.sql.types.StructType,
       widenedCols: Set[String]): Set[String] =
     widenedCols.filter { c =>
-      (oldSchema.map(_(c).dataType), newSchema.map(_(c).dataType)) match {
-        case (Some(o: org.apache.spark.sql.types.DecimalType),
-              Some(n: org.apache.spark.sql.types.DecimalType)) =>
+      (oldSchema(c).dataType, newSchema(c).dataType) match {
+        case (o: org.apache.spark.sql.types.DecimalType,
+              n: org.apache.spark.sql.types.DecimalType) =>
           o.scale != n.scale
         case _ => false
       }
@@ -7615,7 +7313,7 @@ object Snapshots {
                              removed: Seq[LiveEntry], version: Long,
                              tag: String): (Seq[String], Long) = {
     import org.apache.spark.sql.functions.{col, regexp_extract}
-    if (m.dvs.isEmpty || removed.iterator.map(_.rows.get).sum == m.dataRows)
+    if (m.dvs.isEmpty || removed.iterator.map(_.rows).sum == m.dataRows)
       return (Seq.empty, 0L)
     val removedTails = removed.iterator.map(e => dataTail(e.file)).toSet
     val dvAbs = m.dvs.map(rel =>
@@ -7694,7 +7392,7 @@ object Snapshots {
                   sortAlso: Seq[String] = Nil): Long = {
     import org.apache.spark.sql.functions.{col, lit, pmod, xxhash64}
     val f = fs(spark, tableDir)
-    val (version, base) = deltaBase(spark, tableDir, "clusterTail")
+    val (version, base) = resolveForWrite(spark, tableDir)
     val m = base.header
     val (key, n) = m.bucketSpec.getOrElse(throw new IllegalArgumentException(
       s"$tableDir is not bucket-clustered; clusterTail repairs a bucket " +
@@ -7707,7 +7405,7 @@ object Snapshots {
       require(sortCols.distinct.size == sortCols.size,
         s"duplicate sort columns: $sortCols")
     }
-    val schema = m.schema.get
+    val schema = m.schema
     sortAlso.foreach { c =>
       require(!c.contains(","),
         s"sort column '$c' contains ',' (the marker separator)")
@@ -7722,7 +7420,7 @@ object Snapshots {
       s"$tableDir is partitioned: the tail rewrite does not reproduce the " +
         "partition dirs — re-cluster via compactBucketed")
     // the unbucketed tail: planning rows without a bucket id
-    val entries = liveCandidates(spark, tableDir, base, "clusterTail",
+    val entries = liveEntriesCheckpointed(spark, tableDir, base,
       (r: CkptFile) => r.bucket.isEmpty)
     if (entries.isEmpty) return m.version
     val tail = entries.map(_.file)
@@ -7757,7 +7455,7 @@ object Snapshots {
     val (newStats, newNulls) =
       rewriteFooterStats(spark, tableDir, m, written, statsColumns)
     val newFileMeta = footerFileMeta(spark, f, dataDir, dataRel)
-    val dataRows = m.dataRows - entries.iterator.map(_.rows.get).sum +
+    val dataRows = m.dataRows - entries.iterator.map(_.rows).sum +
       newFileMeta.valuesIterator.map(_._1).sum
     val sortedMarkers: Map[String, String] =
       if (sort) {
@@ -7825,7 +7523,7 @@ object Snapshots {
       : Option[DataFrame] = {
     val to = readLiveManifest(spark, tableDir, toVersion)
     val from =
-      if (fromVersion < 0) Manifest(-1L, Seq.empty)
+      if (fromVersion < 0) PreHistory
       else readLiveManifest(spark, tableDir, fromVersion)
     if (to.files.toSet == from.files.toSet && to.dvs.toSet == from.dvs.toSet) {
       // identical endpoints mean EITHER a genuinely metadata-only
@@ -7905,7 +7603,7 @@ object Snapshots {
     // ([[changeFeedBatches]] resolves its endpoints before calling)
     val to = readLiveManifest(spark, tableDir, toVersion)
     val from =
-      if (fromVersion < 0) Manifest(-1L, Seq.empty)
+      if (fromVersion < 0) PreHistory
       else readLiveManifest(spark, tableDir, fromVersion)
     readChangeFeedManifests(spark, tableDir, from, to, fromVersion, toVersion)
   }
@@ -8073,7 +7771,7 @@ object Snapshots {
     val toM = assemble(spark, tableDir, toLive.get)
     val fromRaw = versions.head - 1
     val (from, fromM) =
-      if (fromRaw < 0) (-1L, Manifest(-1L, Seq.empty))
+      if (fromRaw < 0) (-1L, PreHistory)
       else lastLive(spark, tableDir, fromRaw, forWrite = true) match {
         case Some(x) => (x.header.version, assemble(spark, tableDir, x))
         case None =>
@@ -8087,7 +7785,7 @@ object Snapshots {
             s"change-feed checkpoint at v$fromRaw of $tableDir predates the " +
               "vacuum floor: the slice cannot be reconstructed — restart the " +
               "consumer from a fresh checkpoint (same contract as rewrites)")
-          (-1L, Manifest(-1L, Seq.empty))
+          (-1L, PreHistory)
       }
     if (to <= from) return // every arrived manifest was dead
     if (toM.files.toSet == fromM.files.toSet &&
@@ -8247,8 +7945,7 @@ object Snapshots {
   /** RESTORE TABLE TO VERSION — roll the table back to `toVersion` by
     * publishing its file/dv/stat/schema state as a NEW version: an
     * O(manifest) metadata-only commit that republishes the target's
-    * segment refs and tombstones verbatim (no segment read or written;
-    * a legacy target is refused, [[compact]] upgrades the table), zero
+    * segment refs and tombstones verbatim (no segment read or written), zero
     * data copied or rewritten (the old files are referenced, not
     * duplicated), and the botched
     * intermediate versions stay readable for forensics until
@@ -8271,10 +7968,8 @@ object Snapshots {
     val (nextV, latest) = resolveForWrite(spark, tableDir)
     require(toVersion < nextV, s"cannot restore to future version $toVersion")
     // throws if vacuumed; a dead txn version is not restorable history.
-    // The restored version republishes the target's refs and
-    // tombstones, so a legacy target is refused like any legacy base
+    // The restored version republishes the target's refs and tombstones
     val target = resolveForRead(spark, tableDir, Some(toVersion))
-    refuseLegacy(tableDir, "restore", legacyField(target))
     val checks = latest.header.checks
     if (validateChecks && checks.nonEmpty && target.header.dataRows > 0) {
       val full = assemble(spark, tableDir, target)
@@ -9073,8 +8768,7 @@ object Snapshots {
         s"bucket key '$k' is not in the schema")
       require(n >= 1 && n <= 65536, s"numBuckets must be in [1, 65536]: $n")
     }
-    publishMetadata(spark, tableDir, Manifest(0L, Nil,
-      schema = Some(schema), dataRows = 0L, dvRows = 0L,
+    publishMetadata(spark, tableDir, Manifest(0L, Nil, schema,
       bucketSpec = bucketSpec, partitionCols = partitionCols), EmptyBase)
   }
 
@@ -9088,9 +8782,9 @@ object Snapshots {
   def addColumns(spark: SparkSession, tableDir: String,
                  added: Seq[org.apache.spark.sql.types.StructField]): Long = {
     require(added.nonEmpty, "addColumns needs at least one field")
-    val (nextV, base) = deltaBase(spark, tableDir, "addColumns")
+    val (nextV, base) = resolveForWrite(spark, tableDir)
     val m = base.header
-    val old = m.schema.get // a schema-less base was refused
+    val old = m.schema
     added.foreach(fd => require(!old.fieldNames.contains(fd.name),
       s"column '${fd.name}' already exists at $tableDir"))
     val derivedNames = m.partitionCols.map(PartitionTransforms.parse)
@@ -9098,8 +8792,8 @@ object Snapshots {
     added.foreach(fd => require(!derivedNames.contains(fd.name),
       s"column '${fd.name}' collides with a derived partition name at $tableDir"))
     val next = m.copy(version = nextV,
-      schema = Some(org.apache.spark.sql.types.StructType(
-        old.fields ++ added.map(_.copy(nullable = true)))),
+      schema = org.apache.spark.sql.types.StructType(
+        old.fields ++ added.map(_.copy(nullable = true))),
       // a re-added dropped (or mapped-over) name gets a fresh physical
       // slot so old files read NULL, never the ghost's bytes
       colMap = extendColMap(m.colMap, m.retiredCols, old.fieldNames.toSet,
@@ -9121,9 +8815,9 @@ object Snapshots {
   def widenColumn(spark: SparkSession, tableDir: String,
                   name: String,
                   to: org.apache.spark.sql.types.DataType): Long = {
-    val (nextV, base) = deltaBase(spark, tableDir, "widenColumn")
+    val (nextV, base) = resolveForWrite(spark, tableDir)
     val m = base.header
-    val old = m.schema.get // a schema-less base was refused
+    val old = m.schema
     val idx = old.fieldNames.indexOf(name)
     require(idx >= 0, s"no column '$name' at $tableDir")
     val from = old.fields(idx).dataType
@@ -9134,8 +8828,8 @@ object Snapshots {
     // the delta publish drops the column's blooms and NDV sketches;
     // klls sketch values (doubles) — widening preserves them
     publishMetadata(spark, tableDir, m.copy(version = nextV,
-        schema = Some(org.apache.spark.sql.types.StructType(
-          old.fields.updated(idx, old.fields(idx).copy(dataType = to))))),
+        schema = org.apache.spark.sql.types.StructType(
+          old.fields.updated(idx, old.fields(idx).copy(dataType = to)))),
       base, widened = Set(name))
   }
 
@@ -9172,9 +8866,9 @@ object Snapshots {
     */
   def renameColumn(spark: SparkSession, tableDir: String,
                    from: String, to: String): Long = {
-    val (nextV, base) = deltaBase(spark, tableDir, "renameColumn")
+    val (nextV, base) = resolveForWrite(spark, tableDir)
     val m = base.header
-    val old = m.schema.get // a schema-less base was refused
+    val old = m.schema
     require(old.fieldNames.contains(from), s"no column '$from' at $tableDir")
     require(!old.fieldNames.contains(to),
       s"column '$to' already exists at $tableDir")
@@ -9191,8 +8885,8 @@ object Snapshots {
     val phys = m.physOf(from)
     val idx = old.fieldNames.indexOf(from)
     val next = m.copy(version = nextV,
-      schema = Some(org.apache.spark.sql.types.StructType(
-        old.fields.updated(idx, old.fields(idx).copy(name = to)))),
+      schema = org.apache.spark.sql.types.StructType(
+        old.fields.updated(idx, old.fields(idx).copy(name = to))),
       colMap =
         if (phys == to) m.colMap - from else (m.colMap - from) + (to -> phys),
       partitionCols = m.partitionCols.map(
@@ -9215,9 +8909,9 @@ object Snapshots {
     */
   def dropColumn(spark: SparkSession, tableDir: String,
                  name: String): Long = {
-    val (nextV, base) = deltaBase(spark, tableDir, "dropColumn")
+    val (nextV, base) = resolveForWrite(spark, tableDir)
     val m = base.header
-    val old = m.schema.get // a schema-less base was refused
+    val old = m.schema
     require(old.fieldNames.contains(name), s"no column '$name' at $tableDir")
     require(old.fields.length > 1, s"cannot drop the last column of $tableDir")
     require(!m.partitionCols.exists(pc =>
@@ -9231,8 +8925,8 @@ object Snapshots {
         "reference it — drop the constraint(s) first")
     val phys = m.physOf(name)
     val next = m.copy(version = nextV,
-      schema = Some(org.apache.spark.sql.types.StructType(
-        old.fields.filterNot(_.name == name))),
+      schema = org.apache.spark.sql.types.StructType(
+        old.fields.filterNot(_.name == name)),
       colMap = m.colMap - name,
       retiredCols = (m.retiredCols :+ phys).distinct)
     publishMetadata(spark, tableDir, next, base)
@@ -9257,15 +8951,13 @@ object Snapshots {
     * delete side here: the borrowing table's [[vacuum]] never deletes
     * borrowed refs, but the SOURCE's vacuum cannot see clone refs —
     * coordinate source vacuums with live clones externally, or
-    * compact the clone first. A legacy source is refused ([[compact]]
-    * upgrades it).
+    * compact the clone first.
     */
   def cloneShallow(spark: SparkSession, sourceDir: String, targetDir: String,
                    version: Option[Long] = None): Long = {
     require(latestVersion(spark, targetDir).isEmpty,
       s"clone target $targetDir already has commits")
     val src = resolveForRead(spark, sourceDir, version)
-    refuseLegacy(sourceDir, "cloneShallow", legacyField(src))
     val m = src.header
     val srcRoot = fs(spark, sourceDir).makeQualified(new Path(sourceDir))
     def absolutize(p: String): String =
@@ -9283,7 +8975,7 @@ object Snapshots {
     val entries = liveSegEntries(spark, sourceDir, src).map { case (_, e) =>
       e.copy(file = absolutize(e.file)) }
     publishMetadata(spark, targetDir,
-      Manifest(0L, Nil, schema = m.schema, dvs = m.dvs.map(absolutize),
+      Manifest(0L, Nil, m.schema, dvs = m.dvs.map(absolutize),
         checks = m.checks, dataRows = m.dataRows, dvRows = m.dvRows,
         bucketSpec = m.bucketSpec, partitionCols = m.partitionCols,
         colMap = m.colMap, retiredCols = m.retiredCols),
@@ -9296,8 +8988,8 @@ object Snapshots {
     * accounting: `n_data_rows` (pre-mask), `n_dv_rows` (masked keys),
     * and `mask_ratio` = dv/data — the operational purge signal (see
     * [[deleteWhere]]; reads also warn past
-    * `graft.dv.purgeWarnRatio`). -1 rows / NULL ratio = recorded by a
-    * version predating row accounting. O(live versions) driver work
+    * `graft.dv.purgeWarnRatio`; NULL for a version with no data rows).
+    * O(live versions) driver work
     * over already-small manifests; no data access. Versions belonging
     * to aborted or in-flight transactions are RECORDED history (their
     * numbers are burned) and appear here like any manifest; every read
@@ -9314,14 +9006,8 @@ object Snapshots {
       .map { v =>
         val m = readManifest(spark, tableDir, v)
         val ratio: Option[Double] =
-          if (m.dataRows > 0 && m.dvRows >= 0) Some(m.dvRows.toDouble / m.dataRows)
-          else None
-        // NULL when any file predates byte accounting — a partial sum
-        // would read as a (wrong) table size
-        val bytes: Option[Long] =
-          if (m.files.forall(m.fileBytes.contains))
-            Some(m.files.iterator.map(m.fileBytes).sum)
-          else None
+          if (m.dataRows > 0) Some(m.dvRows.toDouble / m.dataRows) else None
+        val bytes = m.files.iterator.map(m.fileBytes).sum
         (v, m.files.size.toLong, m.files.count(isBorrowed).toLong,
           m.stats.size.toLong, m.txns.size.toLong, m.dvs.size.toLong,
           m.checks.size.toLong, m.dataRows, m.dvRows, ratio, bytes)
@@ -9399,18 +9085,12 @@ object Snapshots {
     * protocol spec pins this as EXACT on every commit interleaving),
     * no Spark job, no file I/O beyond the manifest read. The fast path
     * every format exposes for `SELECT COUNT(*)`; at 100 TB this is a
-    * millisecond driver read instead of a table scan. Falls back to a
-    * real count for manifests predating row accounting (-1).
+    * millisecond driver read instead of a table scan.
     */
   def fastCount(spark: SparkSession, tableDir: String,
                 version: Option[Long] = None): Long = {
-    val base = resolveForRead(spark, tableDir, version)
-    val m = base.header
-    if (m.dataRows >= 0 && m.dvRows >= 0) m.dataRows - m.dvRows
-    else {
-      val full = assemble(spark, tableDir, base)
-      readFiles(spark, tableDir, full, full.files).count()
-    }
+    val m = resolveForRead(spark, tableDir, version).header
+    m.dataRows - m.dvRows
   }
 
   /** Append with a UNIQUE-KEY guarantee — the primary-key constraint
@@ -9495,15 +9175,14 @@ object Snapshots {
                    targetBytes: Long = 128L * 1024 * 1024,
                    statsColumns: Seq[String] = Nil): Long = {
     val f = fs(spark, tableDir)
-    val (version, base) = deltaBase(spark, tableDir, "compactSmall")
+    val (version, base) = resolveForWrite(spark, tableDir)
     val m = base.header
     val min = minBytes
-    // bytes-less rows stay candidates here so the ledger refusal sees them
-    val entries = liveCandidates(spark, tableDir, base, "compactSmall",
-      (r: CkptFile) => r.bytes.forall(_ < min))
+    val entries = liveEntriesCheckpointed(spark, tableDir, base,
+      (r: CkptFile) => r.bytes < min)
     if (entries.size < 2) return m.version
     val small = entries.map(_.file)
-    val smallBytes = entries.iterator.map(_.bytes.get).sum
+    val smallBytes = entries.iterator.map(_.bytes).sum
     val nOut = math.max(1L, (smallBytes + targetBytes - 1) / targetBytes).toInt
     val tag = UUID.randomUUID().toString.take(8)
     val dataRel = f"data/v$version%06d-$tag"
@@ -9529,7 +9208,7 @@ object Snapshots {
     val newFileMeta = footerFileMeta(spark, f, dataDir, dataRel)
     // exact ledger arithmetic: remove the rewritten files' physical
     // rows, add the fresh footers' — never an O(table) sum
-    val dataRows = m.dataRows - entries.iterator.map(_.rows.get).sum +
+    val dataRows = m.dataRows - entries.iterator.map(_.rows).sum +
       newFileMeta.valuesIterator.map(_._1).sum
     val fresh = freshSegEntries(m, written, newStats, newNulls,
       newFileMeta, Map.empty, Map.empty)
@@ -9571,7 +9250,7 @@ object Snapshots {
       SegEntry(rel,
         statsByFile.getOrElse(rel, Map.empty).iterator
           .map { case ((_, c), st) => m.physOf(c) -> st }.toSeq,
-        buckets.get(rel), meta.get(rel).map(_._1), meta.get(rel).map(_._2),
+        buckets.get(rel), meta(rel)._1, meta(rel)._2,
         bloomsByFile.getOrElse(rel, Map.empty).iterator
           .map { case ((_, c), b) => m.physOf(c) -> b }.toSeq,
         nullsByFile.getOrElse(rel, Map.empty).iterator

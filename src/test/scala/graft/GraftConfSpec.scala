@@ -3,9 +3,9 @@ package graft
 import graft.sources.Snapshots
 import org.apache.spark.sql.functions.col
 
-/** A malformed numeric `graft.*` setting fails on the path that reads
-  * it with an error naming the key — never a bare
-  * NumberFormatException, never a silent fallback to the default.
+/** A malformed numeric or boolean `graft.*` setting fails on the path
+  * that reads it with an error naming the key — never a bare parse
+  * error, never a silent fallback to the default.
   */
 class GraftConfSpec extends SparkSpec {
 
@@ -67,6 +67,38 @@ class GraftConfSpec extends SparkSpec {
         frame(3).withColumnRenamed("id", "doc_id")
           .withColumnRenamed("tag", "text"))
     }
+    refusesNaming("graft.spj.buildBytesMax") {
+      Snapshots.bucketAlignedJoin(spark, bucketed, bucketed, "id", "id")
+    }
+    // the aligned rewrites and the ledger-stats rule read their switch
+    // while optimizing a query over a graft relation
+    Seq("graft.sql.alignedJoin.enabled", "graft.sql.alignedJoinAgg.enabled",
+        "graft.sql.alignedRunning.enabled", "graft.sql.alignedAgg.enabled",
+        "graft.stats.histograms").foreach { key =>
+      refusesNaming(key) {
+        spark.read.format("graft").load(bucketed)
+          .groupBy("id").count().collect()
+      }
+    }
+    spark.conf.set("spark.sql.catalog.confcat", "graft.sources.GraftCatalog")
+    spark.conf.set("spark.sql.catalog.confcat.warehouse",
+      TempDirs.create("graft-conf-wh"))
+    spark.sql("CREATE NAMESPACE IF NOT EXISTS confcat.db")
+    spark.sql("CREATE TABLE confcat.db.t (id BIGINT) USING graft")
+    refusesNaming("graft.procedure.maxRows") {
+      spark.sql("CALL confcat.system.history('db.t')").collect()
+    }
+  }
+
+  test("a boolean graft.* key reads true or false in any case") {
+    val key = "graft.stats.histograms"
+    try {
+      assert(GraftConf.bool(spark, key, default = true))
+      spark.conf.set(key, " FALSE ")
+      assert(!GraftConf.bool(spark, key, default = true))
+      spark.conf.set(key, "True")
+      assert(GraftConf.bool(spark, key, default = false))
+    } finally spark.conf.unset(key)
   }
 
   test("a malformed SPARK_GRAFT_CPUS fails naming the variable and the value") {

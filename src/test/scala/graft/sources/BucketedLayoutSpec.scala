@@ -416,16 +416,13 @@ class BucketedLayoutSpec extends SparkSpec {
         expect.exceptAll(merge).isEmpty, s"$jt merge vs Spark")
     }
     // auto decision is a pure function of the build side's ledger:
-    // tiny buckets stay hash at the default budget, flip to merge
-    // when the budget shrinks below a bucket, and a ledger-less
-    // legacy manifest conservatively stays hash
+    // tiny buckets stay hash at the default budget and flip to merge
+    // when the budget shrinks below a bucket
     val rm = Snapshots.readManifest(spark, rhs, 0L)
     assert(Snapshots.spjStrategy(spark, rm) === "hash")
     spark.conf.set("graft.spj.buildBytesMax", "1")
     try {
       assert(Snapshots.spjStrategy(spark, rm) === "merge")
-      assert(Snapshots.spjStrategy(spark, rm.copy(fileBytes = Map.empty))
-        === "hash", "ledger-less build side must keep the status quo")
       // end-to-end: the default auto strategy now runs merge
       val auto = Snapshots.bucketAlignedJoin(
         spark, lhs, rhs, "lk", "rk", joinType = "left_outer")
@@ -1855,11 +1852,11 @@ class BucketedLayoutSpec extends SparkSpec {
     // the surviving files (decisions-identical, not just row-identical)
     val planned = Snapshots.liveEntriesCheckpointed(spark, dir,
       Snapshots.parseManifest(spark, dir, v),
-      (_: Snapshots.CkptFile) => true).get
+      (_: Snapshots.CkptFile) => true)
     assert(planned.map(_.file).toSet === eager.files.toSet)
     assert(planned.flatMap(e => e.bucket.map(e.file -> _)).toMap ===
       eager.buckets)
-    assert(planned.flatMap(e => e.bytes.map(e.file -> _)).toMap ===
+    assert(planned.map(e => e.file -> e.bytes).toMap ===
       eager.fileBytes)
     assert(planned.flatMap(e => e.sortedBy.map(e.file -> _)).toMap ===
       eager.sortedFiles,

@@ -35,7 +35,7 @@ class ColumnMappingSpec extends SparkSpec {
     // O(1): no new segment was written, no data moved
     assert(segCount(dir) === segsBefore)
     val m = Snapshots.readManifest(spark, dir, v)
-    assert(m.schema.get.fieldNames.toSeq === Seq("id", "price", "tag"))
+    assert(m.schema.fieldNames.toSeq === Seq("id", "price", "tag"))
     assert(m.colMap === Map("price" -> "amount"))
     // old files read through the new name with their values intact
     val got = Snapshots.readVersion(spark, dir)
@@ -83,7 +83,7 @@ class ColumnMappingSpec extends SparkSpec {
     Snapshots.dropColumn(spark, dir, "tag")
     val m1 = Snapshots.readManifest(spark, dir,
       Snapshots.latestVersion(spark, dir).get)
-    assert(m1.schema.get.fieldNames.toSeq === Seq("id", "amount"))
+    assert(m1.schema.fieldNames.toSeq === Seq("id", "amount"))
     assert(m1.retiredCols === Seq("tag"))
     assert(Snapshots.readVersion(spark, dir).columns.toSeq ===
       Seq("id", "amount"))

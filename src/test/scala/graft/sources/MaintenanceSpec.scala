@@ -324,8 +324,8 @@ class MaintenanceSpec extends SparkSpec {
     def opensOf(v: Long): Int = Option(CountingLocalFs.opened.get(
       new org.apache.hadoop.fs.Path(dir, f"_manifests/v$v%06d.manifest")
         .toUri.getPath)).fold(0)(_.get)
-    // DELETE on v2: the resolve, the legacy refusal and the candidate
-    // walk all read the one parse of the head manifest
+    // DELETE on v2: the resolve and the candidate walk both read the
+    // one parse of the head manifest
     CountingLocalFs.opened.clear()
     assert(Snapshots.deleteWhere(spark, dir, col("id") === 150L) === 3L)
     assert(opensOf(2L) === 1, "deleteWhere must open its base manifest once")

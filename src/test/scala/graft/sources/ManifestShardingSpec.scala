@@ -7,8 +7,9 @@ import org.apache.spark.sql.functions._
 /** Sharded per-file metadata: commits write O(batch) segments, the
   * manifest file itself stays small however many files the table
   * accumulates, metadata-changed files migrate to fresh segments,
-  * restores reuse segments verbatim, legacy flat manifests still
-  * parse, and vacuum sweeps unreferenced segments.
+  * restores reuse segments verbatim, the manifest and segment parses
+  * accept exactly the grammar the writers emit, and vacuum sweeps
+  * unreferenced segments.
   */
 class ManifestShardingSpec extends SparkSpec {
 
@@ -121,28 +122,124 @@ class ManifestShardingSpec extends SparkSpec {
       .blooms.keys.exists(_._2 == "n"))
   }
 
-  test("legacy flat manifests (inline per-file lines) still parse") {
-    val dir = freshDir()
+  /** The lines of a metadata file, and a rewrite of it in place (the
+    * checksum sidecar goes with it, so the local filesystem serves the
+    * edited bytes).
+    */
+  private def linesOf(p: Path): Seq[String] = {
+    val in = scala.io.Source.fromInputStream(fsOf(p.toString).open(p), "UTF-8")
+    try in.getLines().toList finally in.close()
+  }
+
+  private def rewrite(p: Path, lines: Seq[String]): Unit = {
+    val f = fsOf(p.toString)
+    f.delete(p, false)
+    f.delete(new Path(p.getParent, s".${p.getName}.crc"), false)
+    val out = f.create(p, false)
+    try out.write((lines.mkString("\n") + "\n").getBytes("UTF-8"))
+    finally out.close()
+  }
+
+  private def manifestOf(dir: String, v: Long) =
+    new Path(dir, f"_manifests/v$v%06d.manifest")
+
+  /** Every regular file under `dir` with its bytes. */
+  private def filesOf(dir: String): Map[String, Seq[Byte]] = {
     val f = fsOf(dir)
-    f.mkdirs(new Path(dir, "_manifests"))
-    val w = new java.io.OutputStreamWriter(
-      f.create(new Path(dir, "_manifests/v000000.manifest"), false), "UTF-8")
-    try w.write(
-      """graft-manifest-v1
-        |version=0
-        |file=data/v000000-x/part-0.parquet
-        |file=data/v000000-x/part-1.parquet
-        |stat=data/v000000-x/part-0.parquet	id	long	0	9
-        |stat=data/v000000-x/part-1.parquet	id	long	10	19
-        |frow=data/v000000-x/part-0.parquet	10	100
-        |rows=20
-        |""".stripMargin) finally w.close()
-    val m = Snapshots.readManifest(spark, dir, 0L)
-    assert(m.files.size === 2)
-    assert(m.segments.isEmpty)
-    assert(m.stats(("data/v000000-x/part-0.parquet", "id")).min === "0")
-    assert(m.fileRows("data/v000000-x/part-0.parquet") === 10L)
-    assert(m.dataRows === 20L)
+    val it = f.listFiles(new Path(dir), true)
+    val out = Map.newBuilder[String, Seq[Byte]]
+    while (it.hasNext) {
+      val p = it.next().getPath
+      val in = f.open(p)
+      try out += p.toString -> in.readAllBytes().toSeq finally in.close()
+    }
+    out.result()
+  }
+
+  test("a manifest with inline per-file lines is refused on read") {
+    val dir = freshDir()
+    Snapshots.commit(frame(0 until 20, "a").coalesce(1), dir, "overwrite",
+      statsColumns = Seq("id"))
+    val mp = manifestOf(dir, 0L)
+    rewrite(mp, linesOf(mp) ++ Seq(
+      "file=data/v000000-x/part-0.parquet",
+      "stat=data/v000000-x/part-0.parquet\tid\tlong\t0\t9"))
+    val before = filesOf(dir)
+    Seq[() => Any](
+      () => Snapshots.readManifest(spark, dir, 0L),
+      () => Snapshots.readVersion(spark, dir).count(),
+      () => spark.read.format("graft").load(dir).count()).foreach { read =>
+      val e = intercept[IllegalArgumentException](read())
+      assert(e.getMessage.contains(mp.toUri.getPath) &&
+        e.getMessage.contains("'file'"), e.getMessage)
+    }
+    assert(filesOf(dir) === before)
+  }
+
+  test("the manifest and segment grammars round-trip every line kind " +
+    "the writers emit") {
+    val s = spark
+    import s.implicits._
+    val dir = freshDir()
+    def batch(lo: Int) = (lo until lo + 40)
+      .map(i => (i.toLong, (i * 7 % 40).toLong, s"p${i % 2}", s"t$i"))
+      .toDF("k", "v", "p", "tag")
+    Snapshots.commit(batch(0), dir, "overwrite", statsColumns = Seq("k", "v"),
+      txn = Some(("app", 1L)), bucketBy = Some(("k", 2)),
+      bloomColumns = Seq("v"), partitionBy = Seq("p"), ndvColumns = Seq("v"),
+      histColumns = Seq("v"), sortBuckets = true)
+    Snapshots.commitTxn(Seq((batch(40), dir, "append")), freshDir())
+    Snapshots.addCheckConstraint(spark, dir, "pos", "k >= 0")
+    Snapshots.deleteWhere(spark, dir, col("k") === 3L)
+    Snapshots.purgeDeletes(spark, dir)
+    Snapshots.renameColumn(spark, dir, "v", "w")
+    Snapshots.dropColumn(spark, dir, "tag")
+    val latest = Snapshots.latestVersion(spark, dir).get
+    // every version parses strictly, and the head reads back its rows
+    (0L to latest).foreach(v => Snapshots.readManifest(spark, dir, v))
+    val want = (0 until 80).filterNot(_ == 3)
+      .map(i => (i.toLong, (i * 7 % 40).toLong, s"p${i % 2}")).toSet
+    assert(Snapshots.readVersion(spark, dir).select("k", "w", "p").collect()
+      .map(r => (r.getLong(0), r.getLong(1), r.getString(2))).toSet === want)
+    assert(spark.read.format("graft").load(dir).count() === 79L)
+    def kinds(ps: Seq[Path]): Set[String] =
+      ps.flatMap(p => linesOf(p).drop(1)).map(_.takeWhile(_ != '=')).toSet
+    val manifestKinds = kinds((0L to latest).map(manifestOf(dir, _)))
+    assert(Set("version", "schema", "segment", "removed", "dv", "txn", "check",
+      "rows", "dvrows", "bucketspec", "pending", "partcols", "colmap",
+      "retired").subsetOf(manifestKinds), manifestKinds)
+    val segKinds = kinds(segFiles(dir).map(n =>
+      new Path(dir, s"_manifests/segments/$n")))
+    assert(Set("file", "stat", "bucket", "sorted", "frow", "nulls", "ndv",
+      "kll", "bloom") === segKinds, segKinds)
+  }
+
+  test("a removed= line without its tab is refused, not skipped") {
+    val dir = freshDir()
+    Snapshots.commit(frame(0 until 40, "a").repartitionByRange(4, col("id")),
+      dir, "overwrite", statsColumns = Seq("id"))
+    Snapshots.deleteWhere(spark, dir, col("id") === 1L)
+    val v = Snapshots.purgeDeletes(spark, dir)
+    val mp = manifestOf(dir, v)
+    val lines = linesOf(mp)
+    assert(lines.exists(_.startsWith("removed=")),
+      "the purge must tombstone its rewritten file in a kept segment")
+    rewrite(mp, lines.map(l =>
+      if (l.startsWith("removed=")) l.replace("\t", "") else l))
+    val e = intercept[IllegalArgumentException](
+      Snapshots.readVersion(spark, dir).count())
+    assert(e.getMessage.contains(mp.toUri.getPath) &&
+      e.getMessage.contains("'removed'"), e.getMessage)
+  }
+
+  test("a graft-manifest-v1 header is refused, naming the version") {
+    val dir = freshDir()
+    Snapshots.commit(frame(0 until 10, "a"), dir, "overwrite")
+    val mp = manifestOf(dir, 0L)
+    rewrite(mp, "graft-manifest-v1" +: linesOf(mp).drop(1))
+    val e = intercept[IllegalArgumentException](Snapshots.readVersion(spark, dir))
+    assert(e.getMessage.contains(mp.toUri.getPath) &&
+      e.getMessage.contains("graft-manifest-v1"), e.getMessage)
   }
 
   test("null counts ride segments and prune IS NULL / IS NOT NULL") {
@@ -350,7 +447,7 @@ class ManifestShardingSpec extends SparkSpec {
   }
 
   test("checkpoint point lookups: bucket ∧ stats ∧ bloom decisions == " +
-    "manifest path, through tail replay and pre-bloom checkpoints") {
+    "manifest path, through tail replay") {
     val dir = freshDir()
     val s = spark
     import s.implicits._
@@ -368,7 +465,7 @@ class ManifestShardingSpec extends SparkSpec {
     }
     val v = Snapshots.latestVersion(spark, dir).get
     val m = Snapshots.readManifest(spark, dir, v)
-    val ckpt = Snapshots.writeMetadataCheckpoint(spark, dir, Some(v))
+    Snapshots.writeMetadataCheckpoint(spark, dir, Some(v))
     val probes: Seq[(String, Seq[Any])] = Seq(
       ("id", Seq(42L)),                      // bucket ∧ stats
       ("id", Seq(42L, 511L)),                // multi-key IN probe
@@ -422,30 +519,11 @@ class ManifestShardingSpec extends SparkSpec {
           === Snapshots.pruneForKeys(spark, m2, m2.files, key, keys).sorted,
           s"tail keys-prune divergence for $key=$keys")
       }
-    // pre-bloom checkpoint compat: strip the blooms column (the r12
-    // on-disk shape) — the keys planner keeps serving, decisions are a
-    // conservative SUPERSET (bucket ∧ stats only), rows identical
-    val stripped = spark.read.parquet(ckpt).drop("blooms")
-    val tmp = new java.io.File(dir, "_manifests/checkpoints/.strip")
-    stripped.coalesce(1).write.parquet(tmp.getPath)
-    val fsys = org.apache.hadoop.fs.FileSystem.getLocal(
-      spark.sparkContext.hadoopConfiguration)
-    fsys.rename(
-      new org.apache.hadoop.fs.Path(ckpt, "_covered_segs.txt"),
-      new org.apache.hadoop.fs.Path(tmp.getPath, "_covered_segs.txt"))
-    fsys.delete(new org.apache.hadoop.fs.Path(ckpt), true)
-    fsys.rename(new org.apache.hadoop.fs.Path(tmp.getPath),
-      new org.apache.hadoop.fs.Path(ckpt))
-    val viaOld = Snapshots.pruneFilesCheckpointedKeys(
-      spark, dir, Some(v2), "label", Seq("u7"))
-    val viaNew = Snapshots.pruneForKeys(spark, m2, m2.files, "label", Seq("u7"))
-    assert(viaNew.toSet.subsetOf(viaOld.toSet),
-      "pre-bloom checkpoint must keep at least the manifest decisions")
-    val servedOld = Snapshots.readVersionCheckpointedKeys(
+    val servedTail = Snapshots.readVersionCheckpointedKeys(
       spark, dir, "label", Seq("u7"), Some(v2))
     val fullNow = Snapshots.readVersion(spark, dir, Some(v2))
       .where(col("label") === "u7")
-    assert(servedOld.collect().toSet === fullNow.collect().toSet)
+    assert(servedTail.collect().toSet === fullNow.collect().toSet)
   }
 
   test("composite checkpoint probes: conjunctive bucket ∧ stats ∧ bloom " +
@@ -652,24 +730,6 @@ class ManifestShardingSpec extends SparkSpec {
       spark, dir, Nil, Some(v3), win)
     assert(winRows.count() === 101L, // 100.00 .. 200.00 inclusive
       "the decimal window must serve every in-range row")
-    // a LEGACY schema-less manifest cannot decode decimal stats — a
-    // decimal probe keeps every file (the pre-r14 bypass), never
-    // mis-prunes against unscaled ints it can't interpret
-    val dirL = freshDir()
-    Snapshots.commit(batch(0, "(9,2)").repartition(2), dirL, "overwrite",
-      statsColumns = Seq("amt"))
-    val mf = new java.io.File(dirL, "_manifests/v000000.manifest")
-    val noSchema = scala.io.Source.fromFile(mf).getLines()
-      .filterNot(_.startsWith("schema=")).mkString("\n") + "\n"
-    val w = new java.io.FileWriter(mf, false)
-    try w.write(noSchema) finally w.close()
-    new java.io.File(mf.getParentFile, s".${mf.getName}.crc").delete()
-    val mL = Snapshots.readManifest(spark, dirL, 0L)
-    assert(mL.schema.isEmpty, "the legacy fixture must be schema-less")
-    val probeL: Seq[Any] = Seq(BigDecimal("50.00"))
-    assert(Snapshots.pruneForKeys(spark, mL, mL.files, "amt", probeL)
-      === mL.files,
-      "unknown column type + decimal literal must keep every file")
   }
 
   test("checkpoint-planned compactSmall candidates == the driver " +
@@ -704,9 +764,8 @@ class ManifestShardingSpec extends SparkSpec {
     // plans through the covering checkpoint here
     val got = Snapshots.liveEntriesCheckpointed(spark, dir,
         Snapshots.parseManifest(spark, dir, v),
-        (r: Snapshots.CkptFile) => r.bytes.forall(_ < minBytes))
-      .getOrElse(fail("a sharded manifest must plan"))
-      .map(e => e.file -> e.bytes.get).toMap
+        (r: Snapshots.CkptFile) => r.bytes < minBytes)
+      .map(e => e.file -> e.bytes).toMap
     assert(got.keySet === expected,
       "checkpoint-planned candidates must equal the driver ledger walk")
     assert(got.forall { case (rel, sz) => m.fileBytes(rel) == sz },
@@ -783,76 +842,59 @@ class ManifestShardingSpec extends SparkSpec {
     } finally spark.conf.unset("graft.probe.maxKeys")
   }
 
-  test("the decimal unscaled decode is gated on the manifest feature " +
-    "marker: a pre-rules manifest keeps every file on both paths, an " +
-    "append cannot launder the marker in, a full rewrite restores it " +
-    "(ADVICE r14)") {
-    val dir = freshDir()
+  test("decimal point probes prune on a shallow clone and on a created " +
+    "table as on a directly committed one; rows stay exact") {
     val s = spark
     import s.implicits._
-    def batch(lo: Int) = (lo until lo + 100)
+    def batch(lo: Int, n: Int) = (lo until lo + n)
       .map(k => (k.toLong, BigDecimal(k).toString))
       .toDF("id", "amt0")
       .select(col("id"), col("amt0").cast("decimal(9,2)").as("amt"))
+    // the source: three commits, so each commit's files hold one
+    // hundred-wide amount range
+    val src = freshDir()
     (0 until 3).foreach { i =>
-      Snapshots.commit(batch(i * 100).repartition(2), dir,
+      Snapshots.commit(batch(i * 100, 100).repartition(2), src,
         if (i == 0) "overwrite" else "append", statsColumns = Seq("amt"))
     }
-    val v = Snapshots.latestVersion(spark, dir).get
-    Snapshots.writeMetadataCheckpoint(spark, dir, Some(v))
-    val m = Snapshots.readManifest(spark, dir, v)
-    // tables this code writes carry the marker and the decode runs
-    assert(m.features.contains(Snapshots.DecimalScaleStatsFeature) &&
-      m.decimalStatsTrusted)
+    val clone = freshDir()
+    Snapshots.cloneShallow(spark, src, clone)
+    // a created table after one append, and its directly committed twin
+    val slabs = batch(0, 300).repartitionByRange(3, col("id"))
+    val created = freshDir()
+    Snapshots.createEmpty(spark, created, slabs.schema)
+    Snapshots.commit(slabs, created, "append", statsColumns = Seq("amt"))
+    val direct = freshDir()
+    Snapshots.commit(slabs, direct, "overwrite", statsColumns = Seq("amt"))
     val probe: Seq[Any] = Seq(BigDecimal("150.00"))
-    assert(Snapshots.pruneForKeys(spark, m, m.files, "amt", probe).size
-      < m.files.size, "the marked table must really prune")
-    // simulate a table whose history predates the scale-drop rules:
-    // strip every feature= line (the manifests such code wrote carry
-    // none) — its stats could be stale-scale, so the decode must not
-    // trust them
-    (0L to v).foreach { vv =>
-      val mf = new java.io.File(dir, f"_manifests/v$vv%06d.manifest")
-      val stripped = scala.io.Source.fromFile(mf).getLines()
-        .filterNot(_.startsWith("feature=")).mkString("\n") + "\n"
-      val w = new java.io.FileWriter(mf, false)
-      try w.write(stripped) finally w.close()
-      new java.io.File(mf.getParentFile, s".${mf.getName}.crc").delete()
+    /** The files the manifest pruner keeps (by file name), the live
+      * file count, and the checkpoint-planned read's scanned files.
+      */
+    def pruned(dir: String): (Seq[String], Int) = {
+      val m = Snapshots.readManifest(spark, dir,
+        Snapshots.latestVersion(spark, dir).get)
+      val kept = Snapshots.pruneForKeys(spark, m, m.files, "amt", probe)
+      Snapshots.writeMetadataCheckpoint(spark, dir)
+      val served = Snapshots.readVersionCheckpointedKeys(spark, dir, "amt", probe)
+      assert(served.count() === 1L, s"$dir: the probed row must be served")
+      assert(served.inputFiles.length === kept.size,
+        s"$dir: the checkpoint-planned read must scan the manifest's kept files")
+      (kept.map(new Path(_).getName).sorted, m.files.size)
     }
-    val mU = Snapshots.readManifest(spark, dir, v)
-    assert(!mU.decimalStatsTrusted)
-    val keptManifest = Snapshots.pruneForKeys(spark, mU, mU.files, "amt", probe)
-    assert(keptManifest === mU.files,
-      "an unmarked manifest must keep every file (conservative, no row loss)")
-    // the checkpoint-planned path gates on the same manifest marker —
-    // decisions identical, rows exact
-    assert(Snapshots.pruneFilesCheckpointedKeys(spark, dir, Some(v),
-      "amt", probe) === keptManifest.sorted)
-    assert(Snapshots.readVersionCheckpointedKeys(
-      spark, dir, "amt", probe, Some(v)).count() === 1L)
-    // an APPEND to the unmarked table carries the distrust — its own
-    // fresh stats are sound, but the carried ones may not be, and the
-    // marker certifies the WHOLE surviving set
-    Snapshots.commit(batch(300).coalesce(1), dir, "append",
-      statsColumns = Seq("amt"))
-    val v2 = Snapshots.latestVersion(spark, dir).get
-    val m2 = Snapshots.readManifest(spark, dir, v2)
-    assert(!m2.decimalStatsTrusted,
-      "an append must not launder the marker onto a pre-rules history")
-    assert(Snapshots.pruneForKeys(spark, m2, m2.files, "amt", probe)
-      === m2.files)
-    // a FULL rewrite re-records every surviving stat under the rules:
-    // the marker returns and pruning resumes
-    Snapshots.compactSorted(spark, dir, 4, "amt")
-    val v3 = Snapshots.latestVersion(spark, dir).get
-    val m3 = Snapshots.readManifest(spark, dir, v3)
-    assert(m3.decimalStatsTrusted, "a full rewrite restores the marker")
-    val kept3 = Snapshots.pruneForKeys(spark, m3, m3.files, "amt", probe)
-    assert(kept3.nonEmpty && kept3.size < m3.files.size,
-      "the rewritten table must prune again")
-    assert(Snapshots.readVersion(spark, dir).where(
-      col("amt") === lit(BigDecimal("150.00")).cast("decimal(9,2)"))
-      .count() === 1L)
+    val (srcKept, srcFiles) = pruned(src)
+    assert(srcKept.nonEmpty && srcKept.size < srcFiles,
+      s"the source must really prune: kept ${srcKept.size} of $srcFiles")
+    assert(pruned(clone) === ((srcKept, srcFiles)),
+      "a shallow clone must prune to its source's files")
+    val (directKept, directFiles) = pruned(direct)
+    assert(directKept.size === 1 && directFiles === 3)
+    assert(pruned(created)._1.size === directKept.size,
+      "a created table must prune like a directly committed one")
+    Seq(src, clone, created, direct).foreach { d =>
+      assert(Snapshots.readVersion(spark, d).where(
+        col("amt") === lit(BigDecimal("150.00")).cast("decimal(9,2)"))
+        .count() === 1L)
+    }
   }
 
   test("randomized keys-prune parity: checkpoint decisions == manifest " +

@@ -95,14 +95,14 @@ class RelationStatsSpec extends SparkSpec {
     assert(plain.sizeInBytes < BigInt(Long.MaxValue) / 4)
   }
 
-  test("a pre-byte-accounting manifest parses and falls back to the default") {
+  test("a segment entry without a byte count is refused on read") {
     val s = spark
     import s.implicits._
     val dir = TempDirs.create("stats-legacy")
     Snapshots.commit((0L until 10L).map(k => (k, k)).toDF("k", "v"),
       dir, "overwrite")
     // strip the bytes field from the frow= lines, as metadata written
-    // before byte accounting would have recorded them. Per-file lines
+    // before byte accounting recorded them. Per-file lines
     // live in the manifest's SEGMENT; segments are immutable (the
     // process-wide cache keys on the path), so the munged copy gets a
     // NEW name and the manifest is re-pointed at it.
@@ -130,15 +130,14 @@ class RelationStatsSpec extends SparkSpec {
     spit(new org.apache.hadoop.fs.Path(dir, legacyRel), legacySeg)
     f.delete(mPath, false)
     spit(mPath, text.replace(segRel, legacyRel))
-
-    val m = Snapshots.readManifest(spark, dir, 0L)
-    assert(m.fileRows.nonEmpty && m.fileBytes.isEmpty)
-    // relation still serves, with the conservative session default
-    // (effectively infinite — never an accidental broadcast)
-    val df = table(dir)
-    assert(df.count() === 10L)
-    assert(df.queryExecution.optimizedPlan.stats.sizeInBytes >
-      BigInt(Long.MaxValue) / 4)
+    // no size guess: the read that parses the segment refuses it,
+    // naming the segment file and the field
+    Seq[() => Any](() => Snapshots.readManifest(spark, dir, 0L),
+      () => table(dir).count()).foreach { read =>
+      val e = intercept[IllegalArgumentException](read())
+      assert(e.getMessage.contains(s"$dir/$legacyRel") &&
+        e.getMessage.contains("'frow'"), e.getMessage)
+    }
   }
 
   test("per-file HLL NDV sketches merge to table NDV; appends extend without rescan") {
@@ -424,7 +423,7 @@ class RelationStatsSpec extends SparkSpec {
       Snapshots.mergedRangesCheckpointed(spark, dir, v).get
     def viaFiles(v: Long) = {
       val m = Snapshots.readManifest(spark, dir, v)
-      Snapshots.mergedRanges(m, m.schema.get)
+      Snapshots.mergedRanges(m, m.schema)
     }
     def assertSame(v: Long): Unit =
       assert(viaCkpt(v) === viaFiles(v), s"range divergence at v$v")
@@ -470,7 +469,7 @@ class RelationStatsSpec extends SparkSpec {
     Snapshots.writeMetadataCheckpoint(spark, dir2, Some(vm))
     val ckM = Snapshots.mergedRangesCheckpointed(spark, dir2, vm).get
     val m2 = Snapshots.readManifest(spark, dir2, vm)
-    assert(ckM === Snapshots.mergedRanges(m2, m2.schema.get))
+    assert(ckM === Snapshots.mergedRanges(m2, m2.schema))
     assert(ckM("x")._1.toDouble === 0.0 && ckM("x")._2.toDouble === 79.25)
     // no checkpoint at all → None; the relation falls back
     val dir3 = TempDirs.create("stats-rng-nockpt")
@@ -499,7 +498,7 @@ class RelationStatsSpec extends SparkSpec {
     val m0 = Snapshots.readManifest(spark, dir, 1L)
     assert(m0.stats.isEmpty)
     assert(Snapshots.pruneFiles(m0, Seq(("k", 0L, 10L))) === m0.files)
-    assert(Snapshots.mergedRanges(m0, m0.schema.get).isEmpty)
+    assert(Snapshots.mergedRanges(m0, m0.schema).isEmpty)
     // the repair: ONE metadata commit of footer-read stats
     val va = Snapshots.analyzeStats(spark, dir, Seq("k", "v", "w"))
     assert(va === 2L)
@@ -507,7 +506,7 @@ class RelationStatsSpec extends SparkSpec {
     assert(ma.files.forall(fl => ma.stats.contains((fl, "k"))))
     assert(Snapshots.pruneFiles(ma, Seq(("k", 0L, 10L))).size === 1,
       "file skipping must work after the repair")
-    val r = Snapshots.mergedRanges(ma, ma.schema.get)
+    val r = Snapshots.mergedRanges(ma, ma.schema)
     assert(r("k") === (("0", "199", Some(0L))))
     assert(r("w")._3 === Some(20L), "null counts backfill too")
     // convergence: the second call no-ops versionlessly
@@ -532,7 +531,7 @@ class RelationStatsSpec extends SparkSpec {
     val vNow = Snapshots.latestVersion(spark, dir).get
     val mNow = Snapshots.readManifest(spark, dir, vNow)
     assert(Snapshots.mergedRangesCheckpointed(spark, dir, vNow).get
-      === Snapshots.mergedRanges(mNow, mNow.schema.get))
+      === Snapshots.mergedRanges(mNow, mNow.schema))
     // decimal columns refuse: a footer's unscaled ints are at the
     // file's own write scale, unverifiable post-hoc
     val dirD = TempDirs.create("stats-analyze-dec")
@@ -579,12 +578,12 @@ class RelationStatsSpec extends SparkSpec {
       Snapshots.latestVersion(spark, dirN).get)
     assert(mN0.nullCounts.isEmpty && mN0.stats.nonEmpty,
       "the fixture must have stats but no null counts")
-    assert(Snapshots.mergedRanges(mN0, mN0.schema.get)("k")._3.isEmpty)
+    assert(Snapshots.mergedRanges(mN0, mN0.schema)("k")._3.isEmpty)
     val vN = Snapshots.analyzeStats(spark, dirN, Seq("k", "v", "w"))
     val mN = Snapshots.readManifest(spark, dirN, vN)
     assert(mN0.stats.forall { case (key, st) => mN.stats.get(key).contains(st) },
       "covered stats survive the null-count backfill verbatim")
-    assert(Snapshots.mergedRanges(mN, mN.schema.get)("w")._3 === Some(20L),
+    assert(Snapshots.mergedRanges(mN, mN.schema)("w")._3 === Some(20L),
       "null counts restored on stats-covered files")
   }
 
@@ -648,7 +647,7 @@ class RelationStatsSpec extends SparkSpec {
             s"trial=$trial $where hist bins of $c")
         }
         // ranges: map-equal (min/max/nullCount)
-        val rPf = Snapshots.mergedRanges(m, m.schema.get)
+        val rPf = Snapshots.mergedRanges(m, m.schema)
         assert(Snapshots.mergedRangesCheckpointed(spark, dir, v)
           .getOrElse(rPf) === rPf,
           s"trial=$trial $where ranges")

@@ -145,7 +145,7 @@ class SnapshotSpec extends SparkSpec {
   test("streamAppends: commits before and after query start all arrive exactly once") {
     val dir = freshDir()
     Snapshots.commit(frame(0 until 5, "pre"), dir)
-    val schema = Snapshots.readManifest(spark, dir, 0L).schema.get
+    val schema = Snapshots.readManifest(spark, dir, 0L).schema
     val q = Snapshots.streamAppends(spark, dir, schema)
       .writeStream.format("memory").queryName("lake_tail")
       .outputMode("append").start()
@@ -172,7 +172,7 @@ class SnapshotSpec extends SparkSpec {
     // composition (source commits drive sink versions end to end)
     val src = freshDir(); val dst = freshDir()
     Snapshots.commit(frame(0 until 10, "a"), src)
-    val schema = Snapshots.readManifest(spark, src, 0L).schema.get
+    val schema = Snapshots.readManifest(spark, src, 0L).schema
     val q = Snapshots.streamAppends(spark, src, schema)
       .filter(col("id") % 2 === 0)
       .withColumn("id2", col("id") * 2)

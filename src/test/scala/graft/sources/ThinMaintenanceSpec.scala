@@ -3,6 +3,8 @@ package graft.sources
 import graft.SparkSpec
 import org.apache.spark.sql.functions._
 
+import scala.jdk.CollectionConverters._
+
 /** One path per table DML and maintenance operation: the append
   * commit, [[Snapshots.deleteWhere]], [[Snapshots.updateWhere]],
   * [[Snapshots.mergeOnRead]], [[Snapshots.purgeDeletes]],
@@ -47,7 +49,6 @@ class ThinMaintenanceSpec extends SparkSpec {
     val all = Snapshots.liveEntriesCheckpointed(spark, dir,
       Snapshots.parseManifest(spark, dir, version),
       (_: Snapshots.CkptFile) => true)
-      .getOrElse(fail("fixture must not be a legacy inline manifest"))
     all.filter(e => rels.contains(e.file)).map(_.seg).toSet
   }
 
@@ -451,8 +452,8 @@ class ThinMaintenanceSpec extends SparkSpec {
       val m0 = Snapshots.readManifest(spark, d, 0L)
       val m = Snapshots.readManifest(spark, d,
         Snapshots.latestVersion(spark, d).get)
-      assert(m.schema.get("v").dataType === LongType)
-      assert(m.schema.get("amt").dataType === DecimalType(12, 4))
+      assert(m.schema("v").dataType === LongType)
+      assert(m.schema("amt").dataType === DecimalType(12, 4))
       val carried = m0.files.filter(m.files.contains)
       assert(carried.nonEmpty)
       assert(carried.forall(r => m0.stats.contains((r, "amt")) &&
@@ -517,7 +518,7 @@ class ThinMaintenanceSpec extends SparkSpec {
       s"metadata-only commits must consult no segment, got $touched")
     assert(segFiles() === segsBefore, "metadata-only commits write no segment")
     val m = Snapshots.readManifest(spark, dir, 8L)
-    assert(m.schema.get.fieldNames.toSeq === Seq("key", "extra"))
+    assert(m.schema.fieldNames.toSeq === Seq("key", "extra"))
     assert(m.files.size === 3 && m.files.forall(r => m.stats.contains((r, "key"))),
       "the renamed column keeps every file's stats")
     assert(!m.stats.keys.exists(_._2 == "tag") && !m.stats.keys.exists(_._2 == "id"))
@@ -535,8 +536,8 @@ class ThinMaintenanceSpec extends SparkSpec {
       .count() === 0L, "a re-added name must not read the dropped column")
   }
 
-  test("legacy bases are refused naming the missing field, and accepted " +
-    "after compact rewrites them") {
+  test("legacy and corrupt bases are refused on read and by every " +
+    "operation, naming the table and the field; the table is untouched") {
     import java.nio.charset.StandardCharsets.UTF_8
     import java.nio.file.{Files, Paths}
     def manifestFile(d: String) = Paths.get(d, "_manifests", "v000000.manifest")
@@ -550,56 +551,55 @@ class ThinMaintenanceSpec extends SparkSpec {
         statsColumns = Seq("id"))
       d
     }
+    def editManifest(d: String)(f: Seq[String] => Seq[String]): Unit =
+      write(manifestFile(d), f(lines(manifestFile(d))))
     // the per-file lines of the table's one segment, re-keyed by file
     def segmentLines(d: String): (String, Seq[String]) = {
       val rel = lines(manifestFile(d)).find(_.startsWith("segment="))
         .get.stripPrefix("segment=").split('\t').head
       (rel, lines(Paths.get(d, rel)).drop(1))
     }
-    val shapes: Seq[(String, String => Unit)] = Seq(
-      "inline file= lines" -> { d =>
+    // (the field the error must name, the manifest-level shape?, mutation)
+    val shapes: Seq[(String, Boolean, String => Unit)] = Seq(
+      ("graft-manifest-v1", true, d => editManifest(d)(ls =>
+        "graft-manifest-v1" +: ls.drop(1))),
+      ("'file'", true, { d =>
         val (rel, seg) = segmentLines(d)
         val file = seg.head.stripPrefix("file=")
         val inline = seg.map { l =>
           if (l.startsWith("file=")) l
           else { val Array(k, v) = l.split("=", 2); s"$k=$file\t$v" }
         }
-        write(manifestFile(d), lines(manifestFile(d))
-          .filterNot(_.startsWith(s"segment=$rel")) ++ inline)
-      },
-      "segment live counts" -> { d =>
-        write(manifestFile(d), lines(manifestFile(d)).map(l =>
-          if (l.startsWith("segment=")) l.split('\t').head else l))
-      },
-      "schema" -> { d =>
-        write(manifestFile(d), lines(manifestFile(d))
-          .filterNot(_.startsWith("schema=")))
-      },
-      "row ledger" -> { d =>
-        write(manifestFile(d), lines(manifestFile(d))
-          .filterNot(_.startsWith("rows=")))
-      },
-      "row/byte ledger" -> { d =>
+        editManifest(d)(_.filterNot(_.startsWith(s"segment=$rel")) ++ inline)
+      }),
+      ("'segment'", true, d => editManifest(d)(_.map(l =>
+        if (l.startsWith("segment=")) l.split('\t').head else l))),
+      ("'schema'", true, d => editManifest(d)(_.filterNot(_.startsWith("schema=")))),
+      ("'rows'", true, d => editManifest(d)(_.filterNot(_.startsWith("rows=")))),
+      ("'dvrows'", true, d => editManifest(d)(_.filterNot(_.startsWith("dvrows=")))),
+      ("'feature'", true, d => editManifest(d)(_ :+ "feature=decimal-scale-stats")),
+      ("'removed'", true, d => editManifest(d)(_ :+ "removed=no-tab")),
+      ("'frow'", false, { d =>
         // segments are immutable and cached by path: the bytes-less
         // copy gets a new name and the manifest is re-pointed at it
         val (rel, seg) = segmentLines(d)
         val legacyRel = rel + "-legacy"
         write(Paths.get(d, legacyRel), "graft-segment-v1" +: seg.map(l =>
           if (l.startsWith("frow=")) l.split('\t').head else l))
-        write(manifestFile(d), lines(manifestFile(d)).map(_.replace(rel, legacyRel)))
-      })
-    // the operations that build on the base manifest, in an order that
-    // also runs clean on the compacted table; the metadata-only ones
-    // publish header deltas on it, so they refuse a legacy base too
+        editManifest(d)(_.map(_.replace(rel, legacyRel)))
+      }))
+    // every read and every operation that builds on the base manifest
     def ops(d: String): Seq[(String, () => Any)] = {
       import org.apache.spark.sql.types._
       Seq(
+        "readVersion" -> (() => Snapshots.readVersion(spark, d).count()),
+        "load" -> (() => spark.read.format("graft").load(d).count()),
         "deleteWhere" -> (() => Snapshots.deleteWhere(spark, d, col("id") === 1L)),
         "addColumns" -> (() =>
           Snapshots.addColumns(spark, d, Seq(StructField("x", IntegerType)))),
-        "widenColumn" -> (() => Snapshots.widenColumn(spark, d, "x", LongType)),
-        "renameColumn" -> (() => Snapshots.renameColumn(spark, d, "x", "y")),
-        "dropColumn" -> (() => Snapshots.dropColumn(spark, d, "y")),
+        "widenColumn" -> (() => Snapshots.widenColumn(spark, d, "id", LongType)),
+        "renameColumn" -> (() => Snapshots.renameColumn(spark, d, "tag", "y")),
+        "dropColumn" -> (() => Snapshots.dropColumn(spark, d, "tag")),
         "addCheckConstraint" -> (() =>
           Snapshots.addCheckConstraint(spark, d, "pos", "id >= 0")),
         "dropCheckConstraint" -> (() => Snapshots.dropCheckConstraint(spark, d, "pos")),
@@ -608,30 +608,28 @@ class ThinMaintenanceSpec extends SparkSpec {
         "analyzeNdv" -> (() => Snapshots.analyzeNdv(spark, d, Seq("id"))),
         "analyzeHistograms" -> (() =>
           Snapshots.analyzeHistograms(spark, d, Seq("id"))),
-        "restore" -> (() =>
-          Snapshots.restore(spark, d, Snapshots.latestVersion(spark, d).get)),
+        "restore" -> (() => Snapshots.restore(spark, d, 0L)),
         "cloneShallow" -> (() => Snapshots.cloneShallow(spark, d, freshDir())))
     }
-    val want = (0 until 20).filterNot(_ == 1).map(i => (i.toLong, "x")).toSet
-    shapes.foreach { case (field, mutate) =>
+    def filesOf(d: String): Map[String, Seq[Byte]] = {
+      val stream = Files.walk(Paths.get(d))
+      try stream.iterator().asScala.filter(Files.isRegularFile(_))
+        .map(p => p.toString -> Files.readAllBytes(p).toSeq).toMap
+      finally stream.close()
+    }
+    shapes.foreach { case (field, manifestLevel, mutate) =>
       val d = seeded()
       mutate(d)
-      // a per-entry ledger gap is a candidate fact: only the DML sees it
-      val refusing =
-        if (field == "row/byte ledger") ops(d).take(1) else ops(d)
+      val before = filesOf(d)
+      // a per-entry ledger gap is a segment fact: only the reads and the
+      // DML parse the segment; header-only commits never open it
+      val refusing = if (manifestLevel) ops(d) else ops(d).take(3)
       refusing.foreach { case (op, run) =>
         val e = intercept[IllegalArgumentException](run())
-        assert(e.getMessage.contains(field) && e.getMessage.contains(d) &&
-          e.getMessage.contains("Snapshots.compact") &&
-          e.getMessage.startsWith(op),
-          s"$op refusal must name the table, '$field' and the upgrade: " +
-            e.getMessage)
-        assert(Snapshots.latestVersion(spark, d) === Some(0L),
-          s"a refused $op must leave the table untouched ($field)")
+        assert(e.getMessage.contains(d) && e.getMessage.contains(field),
+          s"$op refusal must name the table and $field: ${e.getMessage}")
+        assert(filesOf(d) === before, s"a refused $op must leave the table untouched ($field)")
       }
-      Snapshots.compact(spark, d, 1)
-      ops(d).foreach { case (_, run) => run() }
-      assert(content(d) === want, s"after compact ($field)")
     }
   }
 

@@ -38,7 +38,7 @@ class TypeWideningSpec extends SparkSpec {
     // value only the wide types can hold
     Snapshots.commit(longFrame(Seq(5000000000L)), dir, "append")
     val m = Snapshots.readManifest(spark, dir, 1L)
-    val types = m.schema.get.fields.map(f => f.name -> f.dataType).toMap
+    val types = m.schema.fields.map(f => f.name -> f.dataType).toMap
     assert(types("k") === LongType)
     assert(types("x") === DoubleType)
     assert(types("d") === DecimalType(16, 4))
@@ -62,7 +62,7 @@ class TypeWideningSpec extends SparkSpec {
     Snapshots.commit(longFrame(Seq(9000000000L)), dir, "append") // widen
     Snapshots.commit(intFrame(100 until 110), dir, "append") // narrow again
     val m = Snapshots.readManifest(spark, dir, 2L)
-    assert(m.schema.get("k").dataType === LongType)
+    assert(m.schema("k").dataType === LongType)
     val back = Snapshots.readVersion(spark, dir)
     assert(back.count() === 31L)
     assert(back.filter(col("k") >= 100L && col("k") < 110L).count() === 10L)
@@ -107,7 +107,7 @@ class TypeWideningSpec extends SparkSpec {
         col("d").cast("decimal(10,2)"))
     Snapshots.commit(wideX, dir, "append", bucketBy = Some(("k", 4)))
     assert(Snapshots.readManifest(spark, dir, 1L)
-      .schema.get("x").dataType === DoubleType)
+      .schema("x").dataType === DoubleType)
     val hit = Snapshots.readVersionKeys(spark, dir, "k", Seq(41))
     assert(hit.count() === 1L && hit.head().getDouble(1) === 99.5)
     val hit0 = Snapshots.readVersionKeys(spark, dir, "k", Seq(7))
@@ -142,7 +142,7 @@ class TypeWideningSpec extends SparkSpec {
     Snapshots.updateWhere(spark, dir, col("k") % 10 === 3,
       Map("x" -> (col("x").cast("double") + lit(0.25))))
     val m = Snapshots.readManifest(spark, dir, 1L)
-    assert(m.schema.get("x").dataType === DoubleType)
+    assert(m.schema("x").dataType === DoubleType)
     val want = intFrame(0 until 30)
       .withColumn("x", when(col("k") % 10 === 3,
         col("x").cast("double") + 0.25).otherwise(col("x").cast("double")))
