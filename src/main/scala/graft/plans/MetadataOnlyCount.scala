@@ -113,8 +113,8 @@ case class MetadataOnlyCount(spark: SparkSession) extends Rule[LogicalPlan] {
     * to every group is decidable from the manifest alone — per-file
     * row counts (`fileRows`) plus per-file CONSTANT values for each
     * referenced column (partition stats). Returns the output rows, or
-    * None when any file is undecidable (missing accounting, missing or
-    * non-constant stat, masked rows present, unevaluable predicate) —
+    * None when any file is undecidable (missing or non-constant stat,
+    * masked rows present, unevaluable predicate) —
     * the scan path then answers exactly.
     */
   private def metadataGroups(g: GraftRelation, relOut: Seq[Attribute],
@@ -123,7 +123,6 @@ case class MetadataOnlyCount(spark: SparkSession) extends Rule[LogicalPlan] {
     val m = g.manifestSnapshot
     // deletion vectors mask unknown per-file/per-group rows: bail
     if (m.dvs.nonEmpty) return None
-    if (m.files.exists(f => !m.fileRows.contains(f))) return None
     val byId = relOut.map(a => a.exprId -> a.name).toMap
     val condAttrs = cond.toSeq.flatMap(_.references.toSeq)
     if (cond.exists(c => !c.deterministic ||

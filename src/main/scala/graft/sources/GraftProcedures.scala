@@ -112,8 +112,7 @@ private[sources] object GraftProcedures {
 
   /** DESCRIBE DETAIL: one row describing the CURRENT version — the
     * layout (partition spec, bucket spec), the ledger's exact size
-    * accounting (NULL n_bytes when any live file predates byte
-    * accounting), and the constraint count. O(one manifest read).
+    * accounting, and the constraint count. O(one manifest read).
     */
   private def detail(s: SparkSession, dir: String)
       : org.apache.spark.sql.DataFrame = {
@@ -124,14 +123,8 @@ private[sources] object GraftProcedures {
     val v = Snapshots.latestLiveVersion(s, dir).getOrElse(
       throw new IllegalArgumentException(s"no committed version at $dir"))
     val m = Snapshots.liveManifest(s, dir, v)
-    val bytes: Option[Long] =
-      if (m.files.forall(m.fileBytes.contains))
-        Some(m.files.iterator.map(m.fileBytes).sum)
-      else None
-    // -1 is the pre-accounting sentinel: surface NULL, like n_bytes
-    def ledger(n: Long): Option[Long] = if (n < 0) None else Some(n)
     Seq((dir, m.version, m.files.size.toLong, m.dvs.size.toLong,
-        ledger(m.dataRows), ledger(m.dvRows), bytes,
+        m.dataRows, m.dvRows, m.files.iterator.map(m.fileBytes).sum,
         m.partitionCols.mkString(","),
         m.bucketSpec.map { case (k, n) => s"$k:$n" }.getOrElse(""),
         m.checks.size.toLong))

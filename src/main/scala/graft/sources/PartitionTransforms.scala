@@ -200,7 +200,7 @@ object PartitionTransforms {
       Some(("long", v.toLong.toString))
     case DateType =>
       Some(("long", java.time.LocalDate.parse(v).toEpochDay.toString))
-    case StringType if !v.exists(ch => ch == '\t' || ch == '\n') =>
+    case StringType if Snapshots.fitsMetadataLine(v) =>
       Some(("string", v))
     case _ => None
   }

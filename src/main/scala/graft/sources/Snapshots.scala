@@ -845,8 +845,8 @@ object Snapshots {
     * then prunes partition predicates with zero new code paths.
     * Values are unescaped from the dir names; stat kinds follow
     * [[footerStats]]'s (dates as epoch days). A string value the
-    * manifest line format cannot carry (tab/newline) just records no
-    * stat — the file stays unprunable, never wrong.
+    * manifest line format cannot carry ([[fitsMetadataLine]]) just
+    * records no stat — the file stays unprunable, never wrong.
     */
   private def partitionStatsOf(rels: Seq[String],
                                specs: Seq[PartitionTransforms.Spec],
@@ -1125,7 +1125,7 @@ object Snapshots {
     // that trusted probes would mis-prune), no partition-spec change
     // can lose rows — hence evolution here, refusal there.
     txn.foreach { case (app, _) =>
-      require(app.nonEmpty && !app.exists(c => c == '\t' || c == '\n' || c == '\r'),
+      require(app.nonEmpty && fitsMetadataLine(app),
         s"txn appId must be non-empty with no tab/newline: '$app'")
     }
     bloomColumns.foreach(c => require(df.columns.contains(c),
@@ -1736,6 +1736,15 @@ object Snapshots {
       }
     } finally r.close()
   }
+
+  /** Whether `s` can sit in one tab-separated metadata line: no tab and
+    * none of the characters `readLine` ends a line at (`\n`, `\r`).
+    * Writers record no stat for a value that fails this (the file just
+    * does not prune) and refuse a name that fails it, so the strict
+    * parse never meets a line a user value split.
+    */
+  private[sources] def fitsMetadataLine(s: String): Boolean =
+    !s.exists(c => c == '\t' || c == '\n' || c == '\r')
 
   /** The `n` tab-separated fields of a metadata line's value. */
   private def fields(value: String, n: Int): Array[String] = {
@@ -3170,7 +3179,7 @@ object Snapshots {
     val budget = graft.GraftConf.long(spark, "graft.aligned.splitBucketBytes", 0L)
     if (budget <= 0) 1
     else {
-      val bytes = files.iterator.map(f => m.fileBytes.getOrElse(f, 0L)).sum
+      val bytes = files.iterator.map(m.fileBytes).sum
       math.min(32L, math.max(1L, (bytes + budget - 1) / budget)).toInt
     }
   }
@@ -3280,8 +3289,8 @@ object Snapshots {
   /** Can `files` (one bucket's) serve ordered by `orderCols` without
     * an in-task sort? Yes iff every file carries a sorted marker
     * whose column list STARTS WITH `orderCols` (prefix order is
-    * order), its size is on the byte ledger and within ONE scan
-    * split (`spark.sql.files.maxPartitionBytes` — a multi-split
+    * order), its ledger size is within ONE scan split
+    * (`spark.sql.files.maxPartitionBytes` — a multi-split
     * read's partition packing is an implementation detail no order
     * guarantee should lean on), and the table has no live deletion
     * vectors (a dv mask past the broadcast threshold would join —
@@ -3296,7 +3305,7 @@ object Snapshots {
     m.dvs.isEmpty && files.forall(fl =>
       m.sortedFiles.get(fl).exists(v =>
         sortMarkerCols(v).startsWith(orderCols)) &&
-        m.fileBytes.get(fl).exists(_ <= maxSplit))
+        m.fileBytes(fl) <= maxSplit)
   }
 
   /** Lexicographic comparator over `ords` (ordinal, type) components,
@@ -5576,9 +5585,9 @@ object Snapshots {
                          name: String, exprSql: String,
                          validateExisting: Boolean = true): Long = {
     import org.apache.spark.sql.functions.{coalesce, count, expr, lit, not}
-    require(name.nonEmpty && !name.exists(c => c == '\t' || c == '\n' || c == '\r'),
+    require(name.nonEmpty && fitsMetadataLine(name),
       s"constraint name must be non-empty with no tab/newline: '$name'")
-    require(!exprSql.exists(c => c == '\t' || c == '\n' || c == '\r'),
+    require(fitsMetadataLine(exprSql),
       s"constraint expression must be a single line: '$exprSql'")
     val (nextV, base) = resolveForWrite(spark, tableDir)
     val m = base.header
@@ -5929,7 +5938,7 @@ object Snapshots {
                     .isInstanceOf[org.apache.parquet.schema
                       .LogicalTypeAnnotation.StringLogicalTypeAnnotation] =>
                 val (lo, hi) = (a.toStringUsingUTF8, b.toStringUsingUTF8)
-                if ((lo + hi).exists(c => c == '\t' || c == '\n')) None
+                if (!fitsMetadataLine(lo + hi)) None
                 else Some(FileStat("string", lo, hi))
               case _ => None
             }
@@ -6407,7 +6416,7 @@ object Snapshots {
     val m = base.header
     val old = m.schema
     txn.foreach { case (app, _) =>
-      require(app.nonEmpty && !app.exists(c => c == '\t' || c == '\n' || c == '\r'),
+      require(app.nonEmpty && fitsMetadataLine(app),
         s"txn appId must be non-empty with no tab/newline: '$app'")
     }
     val txns = txn.fold(m.txns) { case (app, b) =>
@@ -7244,8 +7253,8 @@ object Snapshots {
       case IsNull(c) =>
         keep = keep.filter(rel => m.nullCounts.get((rel, c)).forall(_ > 0L))
       case IsNotNull(c) =>
-        keep = keep.filter(rel => !m.nullCounts.get((rel, c)).exists(n =>
-          m.fileRows.get(rel).contains(n)))
+        keep = keep.filter(rel =>
+          !m.nullCounts.get((rel, c)).contains(m.fileRows(rel)))
       case _ => () // residual-only: the row filter handles it exactly
     }
     // all files pruned ⇒ no row can match; keep one file for the
@@ -8872,8 +8881,8 @@ object Snapshots {
     require(old.fieldNames.contains(from), s"no column '$from' at $tableDir")
     require(!old.fieldNames.contains(to),
       s"column '$to' already exists at $tableDir")
-    require(to.nonEmpty && !to.exists(c =>
-        c == '\t' || c == '\n' || c == '\r' || c == '=' || c == ','),
+    require(to.nonEmpty && fitsMetadataLine(to) &&
+        !to.exists(c => c == '=' || c == ','),
       s"bad column name '$to'")
     require(!m.partitionCols.map(PartitionTransforms.parse)
         .filterNot(_.isIdentity).exists(_.derivedName == to),

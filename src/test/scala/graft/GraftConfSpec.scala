@@ -80,14 +80,17 @@ class GraftConfSpec extends SparkSpec {
           .groupBy("id").count().collect()
       }
     }
-    spark.conf.set("spark.sql.catalog.confcat", "graft.sources.GraftCatalog")
-    spark.conf.set("spark.sql.catalog.confcat.warehouse",
-      TempDirs.create("graft-conf-wh"))
-    spark.sql("CREATE NAMESPACE IF NOT EXISTS confcat.db")
-    spark.sql("CREATE TABLE confcat.db.t (id BIGINT) USING graft")
-    refusesNaming("graft.procedure.maxRows") {
-      spark.sql("CALL confcat.system.history('db.t')").collect()
-    }
+    val catKeys = Seq("spark.sql.catalog.confcat",
+      "spark.sql.catalog.confcat.warehouse")
+    try {
+      spark.conf.set(catKeys(0), "graft.sources.GraftCatalog")
+      spark.conf.set(catKeys(1), TempDirs.create("graft-conf-wh"))
+      spark.sql("CREATE NAMESPACE IF NOT EXISTS confcat.db")
+      spark.sql("CREATE TABLE confcat.db.t (id BIGINT) USING graft")
+      refusesNaming("graft.procedure.maxRows") {
+        spark.sql("CALL confcat.system.history('db.t')").collect()
+      }
+    } finally catKeys.foreach(spark.conf.unset)
   }
 
   test("a boolean graft.* key reads true or false in any case") {
