@@ -19,9 +19,21 @@ import org.apache.spark.sql.SparkSession
   *     masquerade as a fast run.
   */
 object Bench {
+
+  /** The number of timed passes, `SPARK_GRAFT_PASSES` (default 2); a
+    * malformed or non-positive value fails naming the variable before
+    * the session starts, not at the per-query minimum after the suite.
+    */
+  private[graft] def timedPasses(env: Map[String, String] = sys.env): Int = {
+    val n = GraftConf.envInt("SPARK_GRAFT_PASSES", 2, env)
+    require(n >= 1, s"SPARK_GRAFT_PASSES = $n (expected at least 1)")
+    n
+  }
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = GraftConf.envInt("SPARK_GRAFT_CPUS", 4)
+    val passes = timedPasses()
     val spark = GraftSession.local(cpus).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
 
@@ -68,7 +80,6 @@ object Bench {
     // wander across the 57-query run (observed: the same query 4s or
     // 30s warm depending on the run, with per-query DuckDB work <1s).
     // Min-of-N is the standard warm-cache estimator for that noise.
-    val passes = sys.env.getOrElse("SPARK_GRAFT_PASSES", "2").toInt
     var failed = List.empty[String]
     val timings = (1 to passes).map { p =>
       if (p > 1) System.gc() // reclaim between passes, outside any timing

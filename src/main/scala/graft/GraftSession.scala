@@ -38,6 +38,14 @@ import org.apache.spark.sql.SparkSession
   * settings before `getOrCreate()`.
   */
 object GraftSession {
+
+  /** `spark.sql.codegen.cache.maxEntries`: 8000, or the integer
+    * `SPARK_GRAFT_CODEGEN_CACHE`; a malformed value fails naming the
+    * variable instead of reaching Spark unparsed.
+    */
+  private[graft] def codegenCacheEntries(env: Map[String, String] = sys.env): Int =
+    GraftConf.envInt("SPARK_GRAFT_CODEGEN_CACHE", 8000, env)
+
   def builder(cores: Int): SparkSession.Builder =
     SparkSession.builder()
       .config("spark.sql.shuffle.partitions", cores.toString)
@@ -56,7 +64,7 @@ object GraftSession {
       // compile count (printed every run) approaches it.
       // SPARK_GRAFT_CODEGEN_CACHE overrides for diagnostics.
       .config("spark.sql.codegen.cache.maxEntries",
-        sys.env.getOrElse("SPARK_GRAFT_CODEGEN_CACHE", "8000"))
+        codegenCacheEntries().toString)
       .config("spark.cleaner.periodicGC.interval", "1min")
       // `file:` scheme I/O matches production clients (r18): no .crc
       // sidecar per file, no chmod fork per create — see

@@ -1,14 +1,15 @@
 package graft.logs
 
-import org.apache.spark.sql.{SaveMode, SparkSession}
+import org.apache.spark.sql.SparkSession
 
 /** End-to-end pipeline main, mirroring the reference's orchestrated flow
   * (reference: orchestration/flow.py:29-35 — etl → dbt run → dbt test):
   *
-  *   raw log file → parse (drop malformed) → date-partitioned lake
-  *   (its write enforces the ingest asserts) → stg → dims + hourly
-  *   fact persisted as parquet tables (closes the S6 materialization
-  *   gap) → quality gate.
+  *   raw log file → parse (drop malformed) → date-partitioned lake, one
+  *   ts-sorted file per date (its write enforces the ingest asserts) →
+  *   stg → dims + hourly fact persisted as parquet tables (closes the S6
+  *   materialization gap) → quality gate. Every table is written by
+  *   LogLake's one writer (gzip, Parquet v2 pages).
   *
   * One command produces the queryable warehouse; serving queries
   * (LogQueries) then read the small persisted fact, not the raw lake —
@@ -41,12 +42,15 @@ object LogPipeline {
     }
 
     // 2. Model build from the lake (reference: dbt run) — read back so
-    // downstream models consume the persisted, partition-pruned lake
+    // downstream models consume the persisted, partition-pruned lake.
+    // dim_client is sorted by client_id within each file: sorted IPs
+    // share their prefixes, which the v2 string encoding stores once
     flow.task("models") {
       val lakeStg = LogLake.readLake(spark, s"$warehouseDir/lake")
       def persist(name: String, df: org.apache.spark.sql.DataFrame): Unit =
-        df.write.mode(SaveMode.Overwrite).parquet(s"$warehouseDir/$name")
-      persist("dim_client", LogModels.dimClient(lakeStg))
+        LogLake.writeTable(df, s"$warehouseDir/$name")
+      persist("dim_client",
+        LogModels.dimClient(lakeStg).sortWithinPartitions("client_id"))
       persist("dim_endpoint", LogModels.dimEndpoint(lakeStg))
       persist("fct_requests_hourly", LogModels.fctRequestsHourly(lakeStg))
     }

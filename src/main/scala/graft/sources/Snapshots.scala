@@ -2238,8 +2238,8 @@ object Snapshots {
   }
 
   /** A per-(segment, column) sketch sidecar of a checkpoint
-    * (`sidecar` ∈ [[NdvSegsFile]], [[KllSegsFile]] — same line
-    * format), if the checkpoint recorded one: (segRel, physCol) →
+    * (`sidecar` ∈ [[NdvSegsFile]], [[KllSegsFile]], [[RngSegsFile]] —
+    * same line format), if the checkpoint recorded one: (segRel, physCol) →
     * (allEntriesSketched, union sketch bytes). None for checkpoints
     * predating that sidecar — the caller falls back to the per-file
     * driver merge.
@@ -2250,17 +2250,18 @@ object Snapshots {
     if (!f.exists(p)) return None
     val r = new BufferedReader(
       new InputStreamReader(f.open(p), StandardCharsets.UTF_8))
-    // collect (not a refutable match): a malformed or future-extended
-    // line is SKIPPED — its (seg, col) then reads as "no line", which
-    // poisons that column conservatively: the sidecar is a derived
-    // summary, so a bad line costs only that column's served statistics
+    // strict, as the manifest and segment parses are: a line this engine
+    // did not write is refused naming the sidecar and the line — skipping
+    // it would silently drop that column's served statistics
     try Some(Iterator.continually(r.readLine()).takeWhile(_ != null)
-      .filter(_.nonEmpty).flatMap { line =>
-        line.split('\t') match {
-          case Array(rel, c, all, b64) =>
-            scala.util.Try((rel, c) ->
-              ((all == "1", java.util.Base64.getDecoder.decode(b64)))).toOption
-          case _ => None
+      .map { line =>
+        try {
+          val Array(rel, c, all, b64) = fields(line, 4)
+          require(all == "0" || all == "1", s"flag '$all' is not 0 or 1")
+          (rel, c) -> ((all == "1", java.util.Base64.getDecoder.decode(b64)))
+        } catch { case scala.util.control.NonFatal(e) =>
+          throw new IllegalArgumentException(
+            s"$p: malformed sketch line (${e.getMessage}) '${line.take(200)}'", e)
         }
       }.toMap)
     finally r.close()

@@ -113,6 +113,26 @@ class GraftConfSpec extends SparkSpec {
     assert(e.getMessage.contains(name) && e.getMessage.contains("'x'"), e.getMessage)
   }
 
+  test("a malformed or non-positive SPARK_GRAFT_PASSES fails naming the variable") {
+    val name = "SPARK_GRAFT_PASSES"
+    assert(Bench.timedPasses(Map.empty) === 2)
+    assert(Bench.timedPasses(Map(name -> "3")) === 3)
+    val e = intercept[IllegalArgumentException](
+      Bench.timedPasses(Map(name -> "two")))
+    assert(e.getMessage.contains(name) && e.getMessage.contains("'two'"), e.getMessage)
+    val zero = intercept[IllegalArgumentException](Bench.timedPasses(Map(name -> "0")))
+    assert(zero.getMessage.contains(name), zero.getMessage)
+  }
+
+  test("a malformed SPARK_GRAFT_CODEGEN_CACHE fails naming the variable") {
+    val name = "SPARK_GRAFT_CODEGEN_CACHE"
+    assert(GraftSession.codegenCacheEntries(Map.empty) === 8000)
+    assert(GraftSession.codegenCacheEntries(Map(name -> "12000")) === 12000)
+    val e = intercept[IllegalArgumentException](
+      GraftSession.codegenCacheEntries(Map(name -> "8k")))
+    assert(e.getMessage.contains(name) && e.getMessage.contains("'8k'"), e.getMessage)
+  }
+
   test("Tables.load serves the schema of a file rewritten at the same path") {
     val s = spark
     import s.implicits._

@@ -257,20 +257,31 @@ class RelationStatsSpec extends SparkSpec {
     // the relation's CBO feed rides the checkpoint path and agrees
     val rel = GraftRelation(spark.sqlContext, dir, v4)
     assert(rel.columnNdvs === ck4)
-    // sidecar forward-compat: an extended/garbage line is skipped
-    // (never a MatchError at plan time); existing lines keep serving
+    // a sidecar line this engine did not write is refused naming the
+    // sidecar and the line (skipping it would silently drop that
+    // column's statistics): an extended line, a tab-less line and a bad
+    // base64 payload; restoring the written bytes serves the same stats
     val sidecars = new java.io.File(dir, "_manifests/checkpoints")
       .listFiles().filter(_.getName.startsWith("ckpt-v"))
       .map(d => new java.io.File(d, "_ndv_segs.txt")).filter(_.exists())
     assert(sidecars.nonEmpty)
-    sidecars.foreach { sc =>
-      val w = new java.io.FileWriter(sc, true)
-      try w.write("future-seg\tfuture-col\t1\tAAAA\textra-field\n")
-      finally w.close()
-      // the raw append bypassed Hadoop's checksum sidecar — drop it
-      // (absent .crc = no verification), we're faking a future WRITER
+    val written = sidecars.map(sc => sc -> java.nio.file.Files.readAllBytes(sc.toPath))
+    def rewrite(sc: java.io.File, bytes: Array[Byte]): Unit = {
+      java.nio.file.Files.write(sc.toPath, bytes)
+      // no checksum sidecar may vouch for the old bytes
       new java.io.File(sc.getParentFile, s".${sc.getName}.crc").delete()
     }
+    Seq("future-seg\tfuture-col\t1\tAAAA\textra-field",
+        "seg-without-tabs",
+        "some-seg\tk\t1\tnot*base64!").foreach { bad =>
+      written.foreach { case (sc, bytes) =>
+        rewrite(sc, bytes ++ s"$bad\n".getBytes("UTF-8"))
+      }
+      val e = intercept[IllegalArgumentException](viaCkpt(v4))
+      assert(e.getMessage.contains("_ndv_segs.txt") && e.getMessage.contains(bad),
+        e.getMessage)
+    }
+    written.foreach { case (sc, bytes) => rewrite(sc, bytes) }
     assert(viaCkpt(v4) === ck4)
     // a WELL-FORMED line whose base64 is not a valid HLL image must
     // POISON its column (conservative absence), never crash planning
