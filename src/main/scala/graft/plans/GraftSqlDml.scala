@@ -356,6 +356,9 @@ object GraftSqlDml {
         case _ => ()
       }
 
+      // read before the persist below, so a malformed value pins nothing
+      val warnAt = graft.GraftConf.long(spark,
+        "spark.graft.merge.sourceWarnBytes", 8L << 30)
       // the source feeds the key-range/bucket pruning aggs AND the
       // join(s): pin it so all consumers see one evaluation
       val srcDf = Bridge.ofRows(spark, source)
@@ -366,8 +369,6 @@ object GraftSqlDml {
       // silent executor-wide spill. Plan-time estimate, warning only.
       locally {
         val est = srcDf.queryExecution.optimizedPlan.stats.sizeInBytes
-        val warnAt = BigInt(spark.conf.get(
-          "spark.graft.merge.sourceWarnBytes", (8L << 30).toString))
         if (est > warnAt && est < BigInt(Long.MaxValue) / 4)
           System.err.println(s"[graft] MERGE source estimated at $est " +
             s"bytes (> spark.graft.merge.sourceWarnBytes=$warnAt): the " +

@@ -779,9 +779,9 @@ object DemoFixtures {
     * metadata planning — the version's per-file metadata materialized
     * as parquet by a Spark job ([[Snapshots.writeMetadataCheckpoint]],
     * the Delta-checkpoint role) and a date-range scan PLANNED as a
-    * Spark filter over it ([[Snapshots.pruneFilesCheckpointed]],
-    * `FileStat.overlaps` verbatim), so only surviving file names
-    * reach the driver. Witnesses: `identical_decisions` pins the
+    * filter over it ([[Snapshots.pruneFilesCheckpointedProbes]] with
+    * one range conjunct and no key probe, `FileStat.overlaps`
+    * verbatim), so only surviving file names reach the driver. Witnesses: `identical_decisions` pins the
     * checkpointed file set equal to the manifest path's for the same
     * predicates, `pruned` pins that the range actually skipped files.
     * The grouped result serves THROUGH the checkpoint-planned read
@@ -801,11 +801,11 @@ object DemoFixtures {
     val preds: Seq[(String, Any, Any)] = Seq(("o_orderdate",
       java.sql.Timestamp.valueOf("1996-01-01 00:00:00"),
       java.sql.Timestamp.valueOf("1997-01-01 00:00:00")))
-    val viaCkpt = Snapshots.pruneFilesCheckpointed(s, dir, Some(v), preds)
+    val viaCkpt = Snapshots.pruneFilesCheckpointedProbes(s, dir, Some(v), Nil, preds)
     val viaManifest = Snapshots.pruneFiles(m, preds).sorted
     val identical = if (viaCkpt == viaManifest) 1 else 0
     val prunedW = if (viaCkpt.nonEmpty && viaCkpt.size < m.files.size) 1 else 0
-    Snapshots.readVersionCheckpointed(s, dir, Some(v), preds)
+    Snapshots.readVersionCheckpointedProbes(s, dir, Nil, Some(v), preds)
       .where(col("o_orderdate") >= "1996-01-01" &&
         col("o_orderdate") < "1997-01-01")
       .groupBy("o_orderstatus")
@@ -850,7 +850,8 @@ object DemoFixtures {
     * and a bloom-indexed secondary key (`o_orderkey` — stats span the
     * date slices, no bucket), each pinned `identical` to the
     * manifest-path [[Snapshots.pruneForKeys]] decision (bucket ∧ stats
-    * ∧ bloom composed in the checkpoint Spark job) and `pruned`
+    * ∧ bloom composed in the checkpoint planner,
+    * [[Snapshots.pruneFilesCheckpointedProbes]] with one probe) and `pruned`
     * (kept < table's files). Output replays the bucket probe
     * relationally; keys derive from the data so the demo is valid at
     * every SF.
@@ -868,16 +869,16 @@ object DemoFixtures {
     val orderKeys: Seq[Any] = base.select("o_orderkey")
       .orderBy("o_orderkey").limit(2).collect().map(_.get(0)).toSeq
     def leg(key: String, keys: Seq[Any]): (Int, Int) = {
-      val viaCkpt = Snapshots.pruneFilesCheckpointedKeys(
-        s, dir, Some(v), key, keys)
+      val viaCkpt = Snapshots.pruneFilesCheckpointedProbes(
+        s, dir, Some(v), Seq(key -> keys))
       val viaManifest = Snapshots.pruneForKeys(s, m, m.files, key, keys).sorted
       (if (viaCkpt == viaManifest) 1 else 0,
         if (viaCkpt.nonEmpty && viaCkpt.size < m.files.size) 1 else 0)
     }
     val (bId, bPr) = leg("o_custkey", custKeys)
     val (lId, lPr) = leg("o_orderkey", orderKeys)
-    Snapshots.readVersionCheckpointedKeys(s, dir, "o_custkey", custKeys,
-        Some(v))
+    Snapshots.readVersionCheckpointedProbes(s, dir,
+        Seq("o_custkey" -> custKeys), Some(v))
       .groupBy("o_custkey")
       .agg(count(lit(1)).as("n_orders"),
         sum(col("o_totalprice").cast("decimal(18,2)")).cast("double")
@@ -939,9 +940,9 @@ object DemoFixtures {
     * serving probe — `date BETWEEN ? AND ? AND custkey = ?`, the other
     * canonical serving conjunction (a time window over one entity) —
     * planned as ONE checkpoint Spark job: the range conjunct prunes by
-    * footer stats exactly as [[Snapshots.pruneFilesCheckpointed]]
-    * does, AND-composed with the key probe's bucket ∧ stats ∧ bloom
-    * verdict. Witnesses on real file lists: `mixed_identical` pins the
+    * footer stats exactly as [[Snapshots.pruneFiles]] does,
+    * AND-composed with the key probe's bucket ∧ stats ∧ bloom verdict,
+    * all in [[Snapshots.pruneFilesCheckpointedProbes]]. Witnesses on real file lists: `mixed_identical` pins the
     * decision == the manifest path (range pruning seeding the
     * per-column key fold), `mixed_pruned` that it kept < the table's
     * files, `mixed_tighter` that the conjunction kept STRICTLY fewer

@@ -1646,11 +1646,14 @@ object Snapshots {
     * [[readManifest]] runs. `pred` must be a serializable pure
     * function of the row (capture plain values, not enclosing state).
     * The caller's parse of the manifest (`base`) supplies the refs and
-    * tombstones — the manifest file is not read again.
+    * tombstones — the manifest file is not read again. `withBlooms`
+    * hands `pred` the rows' bloom bitsets (checkpoint and tail alike);
+    * without it the bloom column is never decoded.
     */
   private[sources] def liveEntriesCheckpointed(
       spark: SparkSession, tableDir: String, base: ManifestShell,
-      pred: CkptFile => Boolean, withStats: Boolean = false)
+      pred: CkptFile => Boolean, withStats: Boolean = false,
+      withBlooms: Boolean = false)
       : Seq[LiveEntry] = {
     val f = fs(spark, tableDir)
     val segV = base.segRefs.map(_._1)
@@ -1663,8 +1666,11 @@ object Snapshots {
     def liveOf(r: CkptFile): LiveEntry = LiveEntry(r.file, r.seg,
       r.bucket, r.rows, r.bytes, r.sortedBy,
       if (ws) r.stats.keys.toSeq.sorted else Nil)
-    def keep(r: CkptFile): Boolean = segSet.contains(r.seg) &&
-      !tombsV.contains((r.seg, r.file)) && pred(r)
+    // the serving version's rules over verbatim checkpoint rows: its
+    // segment refs and its tombstones, then the caller's verdict
+    def keep(segs: Set[String], tombs: Set[(String, String)])(r: CkptFile)
+        : Boolean =
+      segs.contains(r.seg) && !tombs.contains((r.seg, r.file)) && pred(r)
     // sortedBy rides verbatim (PHYSICAL vocabulary, like the tail's
     // segment entries — consumers translate at their read version)
     val fromCkpt = ck.fold(Seq.empty[LiveEntry]) { ck =>
@@ -1672,13 +1678,15 @@ object Snapshots {
         case Some(rows) =>
           // small checkpoint, rows already driver-resident — the SAME
           // verdict and projection, no Spark job
-          rows.iterator.filter(keep).map(liveOf).toSeq
+          rows.iterator.filter(keep(segSet, tombsV)).map(liveOf).toSeq
         case None =>
+          // broadcast the membership sets — after a big purge the
+          // tombstone set is O(removed files), too big to ship in every
+          // task closure
           val segSetB = spark.sparkContext.broadcast(segSet)
           val tombsB = spark.sparkContext.broadcast(tombsV)
-          ckptDataset(spark, ck, withBlooms = false)
-            .filter { r: CkptFile => segSetB.value.contains(r.seg) &&
-                !tombsB.value.contains((r.seg, r.file)) && pred(r) }
+          ckptDataset(spark, ck, withBlooms)
+            .filter { r: CkptFile => keep(segSetB.value, tombsB.value)(r) }
             .map { r: CkptFile => LiveEntry(r.file, r.seg, r.bucket,
               r.rows, r.bytes, r.sortedBy,
               if (ws) r.stats.keys.toSeq.sorted else Nil) }(
@@ -1686,13 +1694,18 @@ object Snapshots {
             .collect().toSeq
       }
     }
+    // the tail: segments committed (or folded in) after the checkpoint,
+    // parsed through the shared driver cache — the Delta json-tail role
     val fromTail = segV.filterNot(covered).iterator.flatMap { rel =>
       cachedSegment(f, tableDir, rel).entries.iterator
         .filter(e => !tombsV.contains((rel, e.file)))
         .map(e => e -> CkptFile(e.file, e.bucket, e.rows, e.bytes,
           e.stats.map { case (c, st) =>
             c -> CkptStat(st.kind, st.min, st.max) }.toMap,
-          e.nulls.toMap, rel))
+          e.nulls.toMap, rel,
+          if (!withBlooms) Map.empty
+          else e.blooms.iterator.map { case (c, b) =>
+            c -> CkptBloom(b.mBits, b.k, b.words.toIndexedSeq) }.toMap))
         .filter { case (_, cf) => pred(cf) }
         .map { case (e, cf) => LiveEntry(cf.file, rel, cf.bucket,
           cf.rows, cf.bytes, e.sortedBy,
@@ -1864,7 +1877,7 @@ object Snapshots {
   // memory. A checkpoint materializes one version's per-file metadata
   // (path, stats, bucket id, row/byte/null counts, AND bloom bitsets —
   // blooms are ~KB/file/column so they dominate checkpoint bytes, but
-  // parquet column pruning means only the KEY-equality planner ever
+  // parquet column pruning means only a walk with key probes ever
   // reads the bloom column; range scans never pay for it) as PARQUET
   // under `_manifests/checkpoints/`, built BY A SPARK JOB that parses
   // each segment in an executor — the driver never materializes the
@@ -1875,10 +1888,7 @@ object Snapshots {
   // O(table).
   // ------------------------------------------------------------------
 
-  /** One checkpointed file's metadata (stat/null keys are LOGICAL
-    * column names — the checkpoint is pinned to a version, and a
-    * rename creates a later version with its own checkpoint).
-    */
+  /** One checkpointed footer stat of a file and column. */
   final case class CkptStat(kind: String, min: String, max: String)
   /** A transcribed per-file bloom filter — same geometry + word layout
     * as [[Bloom]], `Seq` so the parquet encoder maps it to
@@ -1902,13 +1912,20 @@ object Snapshots {
   private def checkpointDir(tableDir: String, version: Long): Path =
     new Path(tableDir, f"_manifests/checkpoints/ckpt-v$version%06d")
 
+  /** Segment count up to which [[writeMetadataCheckpoint]] folds the
+    * segments on the driver instead of in a distributed job.
+    */
+  private val CkptDriverFoldMaxSegs = 16
+
   /** Materialize `version`'s (default: latest live) per-file metadata
-    * as a parquet checkpoint, built distributed — one Spark task per
-    * segment, tombstones and first-ref-wins dedup applied in the job,
-    * the union never assembled in the driver. Idempotent per version
-    * (an existing checkpoint is reused); concurrent builders race on
-    * an atomic rename and the loser adopts the winner's. Returns the
-    * checkpoint path.
+    * as a parquet checkpoint: a verbatim transcription of the version's
+    * segments, built distributed — one Spark task per segment, the
+    * union never assembled in the driver — or on the driver for at
+    * most [[CkptDriverFoldMaxSegs]] segments. Idempotent per version:
+    * an existing checkpoint is reused, and an existing dir without its
+    * `_covered_segs.txt` sidecar is refused, naming the dir. Concurrent
+    * builders race on an atomic rename and the loser adopts the
+    * winner's. Returns the checkpoint path.
     */
   def writeMetadataCheckpoint(spark: SparkSession, tableDir: String,
                               version: Option[Long] = None): String = {
@@ -1916,18 +1933,16 @@ object Snapshots {
     val v = version.orElse(latestLiveVersion(spark, tableDir)).getOrElse(
       throw new IllegalArgumentException(s"no committed version at $tableDir"))
     val out = checkpointDir(tableDir, v)
-    // the sidecar is the FORMAT MARKER: it appeared together with the
-    // verbatim-transcription semantics, so a sidecar-less checkpoint is
-    // from an older format (tombstone-filtered, deduped, or seg-less)
-    // that cannot serve tail replay safely — rebuild it. The rebuild
-    // lands in a tmp dir FIRST, and the stale dir is renamed ASIDE
-    // (dot-prefixed) rather than deleted in place — readers only ever
-    // select sidecar-bearing dirs ([[newestCheckpointAtOrBefore]]), so
-    // an old-format dir is invisible to them whole through the swap and
-    // there is never a served-then-missing window.
-    val stale = f.exists(out)
-    if (stale && f.exists(new Path(out, CoveredSegsFile)))
+    // every dir this writer installs holds its sidecar (written into the
+    // tmp dir before the one rename), so an existing dir without one is
+    // a torn install or a half-vacuumed dir — readers already skip it
+    // ([[newestCheckpointAtOrBefore]]); refuse it rather than guess
+    if (f.exists(out)) {
+      require(f.exists(new Path(out, CoveredSegsFile)),
+        s"checkpoint dir $out exists without its $CoveredSegsFile, so it " +
+          "is not a complete checkpoint — delete the dir to rebuild it")
       return out.toString
+    }
     val segRefs = parseManifest(spark, tableDir, v).segRefs.map(_._1)
     // hadoop conf rides to executors as plain pairs (Configuration is
     // Writable, not Java-serializable)
@@ -1969,11 +1984,8 @@ object Snapshots {
     // which the table's next read warms from anyway. Large tables keep
     // the distributed build: the cutover is segment COUNT, the unit
     // the distributed job parallelizes over.
-    val driverFoldMax = spark.conf
-      .getOption("graft.checkpoint.driverFoldMaxSegs").map(_.toInt)
-      .getOrElse(16)
     val localSegs: Option[Seq[(String, IndexedSeq[SegEntry])]] =
-      if (segRefs.size <= driverFoldMax)
+      if (segRefs.size <= CkptDriverFoldMaxSegs)
         Some(segRefs.map(rel =>
           rel -> cachedSegment(f, tableDir, rel).entries))
       else None
@@ -2103,53 +2115,13 @@ object Snapshots {
     writeSketchSidecar(KllSegsFile, "kll")
     writeSketchSidecar(RngSegsFile, "rng")
     f.mkdirs(out.getParent)
-    var aside: Option[Path] = None
-    if (stale) {
-      // move the old-format dir ASIDE (dot-prefixed: skipped by the
-      // checkpoint listing) instead of deleting in place — if this
-      // builder dies between the two renames, nothing served was
-      // removed, and the orphan aside is swept by vacuum's tmp cleanup
-      val a = new Path(out.getParent,
-        s".old-${out.getName}-${UUID.randomUUID().toString.take(8)}")
-      if (f.rename(out, a)) aside = Some(a)
-      else if (f.exists(new Path(out, CoveredSegsFile))) {
-        // a concurrent rebuilder completed the swap first — adopt
-        f.delete(tmp, true)
-        return out.toString
-      }
-      else if (f.exists(out)) {
-        // the aside-rename failed with A dir still in place. Recheck
-        // the FORMAT before clearing: a concurrent rebuilder may have
-        // completed its swap between our two checks — its fresh
-        // sidecar-bearing dir must be ADOPTED, never deleted (deleting
-        // it would serve readers a transient no-checkpoint window and
-        // violate the immutable-once-sidecar'd invariant the geometry
-        // cache relies on).
-        if (f.exists(new Path(out, CoveredSegsFile))) {
-          f.delete(tmp, true)
-          return out.toString
-        }
-        // genuinely the stale old-format dir (transient FS error, not
-        // a concurrent swap): falling through would NEST tmp inside
-        // it, the nested-dir cleanup below would delete the fresh
-        // build, and the method would return a still-old-format dir
-        // as if the rebuild happened (ADVICE r13). A sidecar-less dir
-        // is INVISIBLE to readers ([[newestCheckpointAtOrBefore]]
-        // selects only sidecar-bearing dirs), so clearing it in place
-        // serves nobody a missing checkpoint — and a failed delete
-        // must fail LOUDLY rather than install nothing and report
-        // success.
-        require(f.delete(out, true),
-          s"cannot clear stale old-format checkpoint at $out")
-      }
-    }
     if (!f.rename(tmp, out)) {
       f.delete(tmp, true) // lost the race: the winner's checkpoint serves
       require(f.exists(out), s"checkpoint rename to $out failed")
     } else {
       // HDFS rename(src, dst) with dst an existing dir NESTS src inside
       // it instead of failing — if a concurrent builder won the slot
-      // between our two renames, un-nest our tmp and adopt the winner
+      // after our existence check, un-nest our tmp and adopt the winner
       val nested = new Path(out, tmp.getName)
       if (f.exists(nested)) f.delete(nested, true)
       else localSegs.foreach { segs =>
@@ -2161,11 +2133,8 @@ object Snapshots {
           segs.flatMap { case (rel, es) => ckptRowsOf(rel, es) }.toIndexedSeq)
       }
     }
-    aside.foreach(a => f.delete(a, true))
-    // backstop (ADVICE r13): whichever path installed `out`, the dir
-    // returned as "the checkpoint" must actually be sidecar-bearing —
-    // a silent old-format survivor would keep refusing tail replay
-    // while this method reported a successful rebuild
+    // backstop (ADVICE r13): whichever builder installed `out`, the dir
+    // returned as "the checkpoint" must actually be sidecar-bearing
     require(f.exists(new Path(out, CoveredSegsFile)),
       s"checkpoint install at $out did not produce a sidecar-bearing dir")
     out.toString
@@ -2208,7 +2177,8 @@ object Snapshots {
 
   /** Distinct bloom geometries per (checkpoint dir, physical column) —
     * sound because a sidecar-bearing checkpoint dir is immutable
-    * (rebuilds only replace sidecar-LESS old-format dirs). BOUNDED
+    * ([[writeMetadataCheckpoint]] reuses an existing dir and never
+    * rewrites one). BOUNDED
     * (ADVICE r14): a long-lived serving process probes ever-newer
     * checkpoints as tables re-checkpoint, and multi-column probes add
     * one entry per (checkpoint, column) — an access-ordered LRU capped
@@ -2544,16 +2514,15 @@ object Snapshots {
       }
   }
 
-  /** The segment refs a checkpoint transcribed, from its sidecar. The
-    * sidecar doubles as the format marker — its absence means an
-    * old-format (filtered/deduped) checkpoint that must be rebuilt
-    * before it can serve.
+  /** The segment refs a checkpoint transcribed, from its sidecar.
+    * Callers reach only dirs [[newestCheckpointAtOrBefore]] selected for
+    * holding it, so a missing sidecar means the dir lost it since (a
+    * vacuum deleting it) and is refused, naming the dir.
     */
   private def checkpointCoveredSegs(f: FileSystem, ck: Path): Set[String] = {
     val sidecar = new Path(ck, CoveredSegsFile)
     require(f.exists(sidecar),
-      s"checkpoint $ck predates the verbatim-transcription format — " +
-        "rebuild it with writeMetadataCheckpoint")
+      s"checkpoint dir $ck lost its $CoveredSegsFile while being read")
     val r = new BufferedReader(
       new InputStreamReader(f.open(sidecar), StandardCharsets.UTF_8))
     try Iterator.continually(r.readLine()).takeWhile(_ != null)
@@ -2561,38 +2530,10 @@ object Snapshots {
     finally r.close()
   }
 
-  /** [[readVersionPruned]]'s checkpoint-planned twin, O(result) in the
-    * driver END TO END: version resolution and liveness read the
-    * manifest file's header only (schema, column mapping, DV refs,
-    * pending marker; the sharded per-file metadata is never
-    * assembled), pruning runs as a Spark job over the checkpoint
-    * ([[pruneFilesCheckpointed]]), and only the surviving file names
-    * reach the driver to build the scan. Schema, column mapping and
-    * DV masks all apply through the ordinary [[readFiles]] path. The
-    * caller still applies the row filter — pruning is a scan reducer,
-    * never a semantic change.
-    */
-  def readVersionCheckpointed(spark: SparkSession, tableDir: String,
-                              version: Option[Long],
-                              preds: Seq[(String, Any, Any)]): DataFrame = {
-    val head = resolveForRead(spark, tableDir, version).header
-    val keep = pruneFilesCheckpointed(spark, tableDir, Some(head.version), preds)
-    // an all-pruned read legitimately serves the schema'd EMPTY frame:
-    // the stats PROVED no file overlaps, and the caller re-applies the
-    // row filter anyway (readFiles needs the recorded schema for the
-    // zero-file case and refuses loudly without one). NOTE this
-    // deliberately diverges from [[readVersionPruned]], which refuses
-    // on all-pruned — see its scaladoc for the contract rationale.
-    readFiles(spark, tableDir, head, keep)
-  }
-
   /** Newest SERVABLE checkpointed version at or below `v`, from the
     * checkpoint dir listing — O(checkpoints), no manifest reads. Only
-    * sidecar-bearing dirs count: a sidecar-less dir is either an
-    * old-format checkpoint (cannot serve tail replay — invisible here,
-    * so a concurrent [[writeMetadataCheckpoint]] rebuild can swap it
-    * without readers ever selecting it mid-swap) or a crashed
-    * builder's torn rename.
+    * sidecar-bearing dirs count: a sidecar-less dir is a crashed
+    * builder's torn rename or a dir a crashed vacuum left half deleted.
     */
   private def newestCheckpointAtOrBefore(f: FileSystem, tableDir: String,
                                          v: Long): Option[Long] = {
@@ -2606,112 +2547,17 @@ object Snapshots {
       .filter(_ <= v).maxOption
   }
 
-  /** Manifest-stat file pruning AS A SPARK JOB over the NEWEST
-    * checkpoint at or below the read version, PLUS the metadata tail
-    * written since — the Delta checkpoint+json-tail model, so a
-    * checkpoint does not have to exist per version. The same
-    * conjunctive `(column, lo, hi)` contract as [[pruneFiles]],
-    * evaluating [[FileStat.overlaps]] ITSELF inside the filter — the
-    * checkpointed decision is the manifest path's by construction:
-    * checkpoint rows keep only entries whose segment the read version
-    * still references and that its tombstones have not removed, column
-    * names translate from the segments' physical vocabulary through
-    * the mapping current at the READ version (renames/drops after the
-    * checkpoint apply), and segments the checkpoint never saw parse
-    * through the shared driver cache — O(metadata since checkpoint).
-    * Only surviving file names reach the driver: planning a selective
-    * query over a 10^7-file table collects the day's files, never the
-    * table's. Missing-stat files are kept (unknown is never pruned).
-    * A file re-referenced by several segments carries its footer
-    * stats verbatim in each (files are immutable), so duplicate
-    * entries agree and first-ref order cannot change a decision.
-    */
-  def pruneFilesCheckpointed(spark: SparkSession, tableDir: String,
-                             version: Option[Long],
-                             preds: Seq[(String, Any, Any)]): Seq[String] = {
-    val f = fs(spark, tableDir)
-    val v = version.orElse(latestLiveVersion(spark, tableDir)).getOrElse(
-      throw new IllegalArgumentException(s"no committed version at $tableDir"))
-    val cv = newestCheckpointAtOrBefore(f, tableDir, v).getOrElse(
-      throw new IllegalArgumentException(s"no metadata checkpoint for " +
-        s"$tableDir at or below v$v — run writeMetadataCheckpoint"))
-    val ck = checkpointDir(tableDir, cv)
-    // also the format gate: a sidecar-less checkpoint predates the
-    // verbatim-transcription semantics and refuses loudly
-    val covered = checkpointCoveredSegs(f, ck)
-    val base = parseManifest(spark, tableDir, v)
-    val segV = base.segRefs.map(_._1)
-    val tombsV = base.tombs
-    val retiredV = base.header.retiredCols.toSet
-    val revV = base.header.logicalOf
-    val segSet = segV.toSet
-    // decimal-typed columns never range-stat-prune
-    // ([[rangeStatsComparable]]): their predicate keeps every file,
-    // identically to [[pruneFiles]]
-    val ps = preds.filter { case (c, _, _) =>
-      rangeStatsComparable(base.header.schema, c)
-    } // serializable captures (literals/timestamps + maps)
-    // checkpoint rows speak PHYSICAL names — translate through the
-    // mapping current at v; retired-at-v columns drop (their stats
-    // describe a dead column's values)
-    def toLogical(r: CkptFile): CkptFile = r.copy(
-      stats = r.stats.collect { case (c, st) if !retiredV.contains(c) =>
-        revV.getOrElse(c, c) -> st },
-      nulls = r.nulls.collect { case (c, n) if !retiredV.contains(c) =>
-        revV.getOrElse(c, c) -> n })
-    def surviving(r: CkptFile): Boolean = ps.forall { case (c, lo, hi) =>
-      r.stats.get(c).forall(st =>
-        FileStat(st.kind, st.min, st.max).overlaps(lo, hi))
-    }
-    import spark.implicits._
-    val fromCkpt = cachedCkptRows(spark, ck) match {
-      case Some(rows) =>
-        // small checkpoint, rows driver-resident — same verdicts, no job
-        rows.iterator
-          .filter(r => segSet.contains(r.seg) && !tombsV.contains((r.seg, r.file)))
-          .map(toLogical).filter(surviving).map(_.file).toSeq
-      case None =>
-        // withBlooms = false: a range prune never consults blooms — the
-        // scan must not read (or the decode materialize) the dominant
-        // bloom column
-        val ds = ckptDataset(spark, ck, withBlooms = false)
-        // broadcast the membership sets — after a big purge the
-        // tombstone set is O(removed files), too big to ship in every
-        // task closure
-        val segSetB = spark.sparkContext.broadcast(segSet)
-        val tombsB = spark.sparkContext.broadcast(tombsV)
-        ds.filter { r: CkptFile => segSetB.value.contains(r.seg) &&
-            !tombsB.value.contains((r.seg, r.file)) }
-          .map(toLogical _).filter(surviving _).map(_.file).collect().toSeq
-    }
-    // the tail: segments committed (or folded in) after the checkpoint,
-    // parsed through the shared driver cache — the Delta json-tail role
-    val fromTail = segV.filterNot(covered).iterator.flatMap { rel =>
-      cachedSegment(f, tableDir, rel).entries.iterator
-        .filter(e => !tombsV.contains((rel, e.file)))
-        .map(e => CkptFile(e.file, e.bucket, e.rows, e.bytes,
-          e.stats.iterator
-            .map { case (c, s0) => c -> CkptStat(s0.kind, s0.min, s0.max) }
-            .toMap,
-          e.nulls.toMap, rel))
-        .map(toLogical).filter(surviving).map(_.file)
-    }.toSeq
-    (fromCkpt ++ fromTail).distinct.sorted
-  }
-
   /** The checkpoint parquet as a typed Dataset, read with
     * [[CkptFile]]'s own encoder schema — every checkpoint is a
     * `Dataset[CkptFile]` write, so no footer inference runs.
     *
     * `withBlooms = false` REPLACES the blooms column with an empty-map
     * literal, so the typed decode never touches the stored bloom bytes
-    * — bloom payloads dominate checkpoint bytes, and the RANGE planner
-    * must not deserialize per-file KBs it never consults (the
-    * column-pruning promise in the section comment; only the keys
-    * planner opts in).
+    * — bloom payloads dominate checkpoint bytes, and a walk whose
+    * verdict never consults a bloom must not deserialize per-file KBs
+    * (only key probes opt in).
     */
-  private def ckptDataset(spark: SparkSession, ck: Path,
-                          withBlooms: Boolean = true)
+  private def ckptDataset(spark: SparkSession, ck: Path, withBlooms: Boolean)
       : org.apache.spark.sql.Dataset[CkptFile] = {
     import spark.implicits._
     val raw = spark.read
@@ -2723,68 +2569,41 @@ object Snapshots {
       .as[CkptFile]
   }
 
-  /** [[pruneForKeys]]' checkpoint-planned twin — KEY-EQUALITY (point
-    * lookup / IN-list) pruning as a Spark job over the newest
-    * checkpoint at or below `version` plus the metadata tail, composing
-    * ALL THREE pruning primitives exactly as the manifest path does:
-    * bucket ids (when `key` is the read version's bucket key; files
-    * without a bucket id — unclustered appends — are kept), footer
-    * min/max stats (decimal literals compare by their UNSCALED-long
-    * form at the column's scale, matching the footer's own
-    * representation — see [[statMayContain]]), and per-file bloom
-    * bitsets (transcribed into checkpoint rows; files without a bloom
-    * on `key` are kept).
-    * Bucket ids and bloom bit positions are evaluated through Spark's
-    * own hash — one tiny local job per distinct bloom geometry — so
-    * probe and build can never drift; the per-row verdicts then run
-    * WHERE THE METADATA IS (executors for checkpointed rows, the cached
-    * driver parse for the tail), and only surviving file names reach
-    * the driver: a point lookup over a 10^7-file table collects the
-    * probed keys' files, never the table's.
-    */
-  def pruneFilesCheckpointedKeys(spark: SparkSession, tableDir: String,
-                                 version: Option[Long], key: String,
-                                 keys: Seq[Any]): Seq[String] = {
-    require(keys.nonEmpty, "pruneFilesCheckpointedKeys needs at least one key")
-    pruneFilesCheckpointedProbes(spark, tableDir, version, Seq(key -> keys))
-  }
-
-  /** [[pruneFilesCheckpointedKeys]]' CONJUNCTIVE generalization — the
-    * canonical serving probe is multi-column (`date = ? AND
-    * custkey = ?`: the reference's own serving predicate plus the
-    * bucket key). A file survives iff it survives EVERY probed
-    * column's (bucket ∧ stats ∧ bloom) verdict for AT LEAST ONE of
-    * that column's candidate values — OR within a column, AND across
-    * columns, the exact superset semantics of `c1 IN (…) AND c2 IN
-    * (…)` (which also conservatively covers a tuple-IN probe through
-    * its per-column projections: pruning is a scan reducer, the row
-    * filter owns exactness). All columns' verdicts compose in ONE
-    * checkpoint Spark job — per-column bucket-id sets and bloom bit
-    * positions are evaluated up front through Spark's own hash (one
-    * tiny local job per distinct geometry, cached per immutable
-    * checkpoint), then every row is judged where its metadata lives
-    * (executors for checkpoint rows, the cached driver parse for the
-    * tail), and only file names surviving the FULL conjunction reach
-    * the driver — strictly fewer than any single column keeps alone.
-    * Per-column semantics are [[pruneForKeys]]' verbatim, so the
-    * composite decision equals folding the manifest-path pruner over
-    * the probes column by column.
+  /** The checkpoint planner: file pruning over the NEWEST checkpoint at
+    * or below the read version PLUS the metadata tail written since —
+    * the Delta checkpoint+json-tail model, so a checkpoint does not have
+    * to exist per version — through the one planning walk
+    * [[liveEntriesCheckpointed]] (a Spark job over the checkpoint rows,
+    * none when they are driver-cached, and the cached driver parse for
+    * the tail). Only surviving file names reach the driver: planning a
+    * selective query over a 10^7-file table collects the matching
+    * files, never the table's.
     *
-    * `ranges` adds RANGE conjuncts to the same one-job plan — the
-    * `date BETWEEN ? AND ? AND key = ?` serving shape: each
-    * `(column, lo, hi)` prunes by [[FileStat.overlaps]] exactly as
-    * [[pruneFilesCheckpointed]] does (inclusive bounds, unknown
-    * keeps), AND-composed with the key probes' verdicts. The
-    * manifest-path twin is [[pruneForProbes]] seeded with
-    * `pruneFiles(m, ranges)`.
+    * The verdict is a conjunction. Each KEY probe `(column, keys)`
+    * keeps a file iff it survives that column's (bucket ∧ stats ∧
+    * bloom) verdict for AT LEAST ONE of the keys — [[pruneForKeys]]'
+    * per-column semantics verbatim: bucket ids when the column is the
+    * read version's bucket key (files without one are kept), footer
+    * min/max stats through the shared [[statMayContain]] (decimal
+    * literals compare by their unscaled form), and per-file bloom
+    * bitsets (files without one are kept). OR within a column, AND
+    * across columns — the superset semantics of `c1 IN (…) AND c2 IN
+    * (…)`; the row filter owns exactness. Bucket ids and bloom bit
+    * positions are evaluated up front through Spark's own hash (one
+    * tiny local job per distinct geometry, the geometries cached per
+    * immutable checkpoint), so probe and build can never drift. Each
+    * RANGE conjunct `(column, lo, hi)` keeps a file by
+    * [[FileStat.overlaps]] (inclusive bounds, unknown keeps), as
+    * [[pruneFiles]] does. The empty conjunction keeps every live file.
+    * Column names translate to the segments' physical vocabulary
+    * through the mapping current at the READ version; the manifest-path
+    * twin is [[pruneForProbes]] seeded with `pruneFiles(m, ranges)`.
     */
   def pruneFilesCheckpointedProbes(spark: SparkSession, tableDir: String,
                                    version: Option[Long],
                                    probes: Seq[(String, Seq[Any])],
                                    ranges: Seq[(String, Any, Any)] = Nil)
       : Seq[String] = {
-    require(probes.nonEmpty || ranges.nonEmpty,
-      "pruneFilesCheckpointedProbes needs a probe or a range")
     probes.foreach { case (c, ks) =>
       require(ks.nonEmpty, s"probe on '$c' needs at least one key") }
     require(probes.map(_._1).distinct.size == probes.size,
@@ -2796,22 +2615,12 @@ object Snapshots {
       throw new IllegalArgumentException(s"no metadata checkpoint for " +
         s"$tableDir at or below v$v — run writeMetadataCheckpoint"))
     val ck = checkpointDir(tableDir, cv)
-    val covered = checkpointCoveredSegs(f, ck)
     // bucket spec + schema come from the manifest file's header;
     // per-file bucket ids ride the checkpoint rows
     val base = parseManifest(spark, tableDir, v)
-    val segV = base.segRefs.map(_._1)
-    val tombsV = base.tombs
     val colMapV = base.header.colMap
     val head = base.header
     import spark.implicits._
-    val cachedRows = cachedCkptRows(spark, ck)
-    // a pure-range call never consults a bloom — don't decode the
-    // dominant bloom column for it (pruneFilesCheckpointed's rule);
-    // lazy: the driver-cached-rows path never resolves the Dataset
-    lazy val ds = ckptDataset(spark, ck, withBlooms = probes.nonEmpty)
-    val tailEntries = segV.filterNot(covered).map(rel =>
-      rel -> cachedSegment(f, tableDir, rel).entries)
     // per-probe precomputation (driver-side, all metadata-sized):
     // the physical name (segments and checkpoint rows speak PHYSICAL),
     // the column's type, its bucket-id set when it IS the bucket key, and the bloom probe
@@ -2826,6 +2635,11 @@ object Snapshots {
         probeBits: Map[(Int, Int), Map[String, Seq[Long]]],
         degraded: Boolean)
     val budget = probeKeyBudget(spark)
+    lazy val tailSegs = {
+      val covered = checkpointCoveredSegs(f, ck)
+      base.segRefs.map(_._1).filterNot(covered)
+        .map(rel => cachedSegment(f, tableDir, rel).entries)
+    }
     val plans: Seq[ProbePlan] = probes.map { case (key, keys) =>
       val keyType = head.schema(key).dataType
       val bucketWanted: Option[Set[Int]] = head.bucketSpec match {
@@ -2843,44 +2657,38 @@ object Snapshots {
         if (degraded) Map.empty
         else {
           val ckptGeos = ckptGeosCached((ck.toString, keyPhys))(
-            cachedRows match {
+            cachedCkptRows(spark, ck) match {
               case Some(rows) => // driver rows: no discovery job
                 rows.iterator.flatMap(_.blooms.get(keyPhys))
                   .map(b => (b.mBits, b.k)).toSet
               case None =>
-                ds.select(org.apache.spark.sql.functions.element_at(
+                ckptDataset(spark, ck, withBlooms = true)
+                  .select(org.apache.spark.sql.functions.element_at(
                     org.apache.spark.sql.functions.col("blooms"),
                     keyPhys).as("b"))
                   .where(org.apache.spark.sql.functions.col("b").isNotNull)
                   .select($"b.mBits", $"b.k").distinct().collect()
                   .map(r => (r.getInt(0), r.getInt(1))).toSet
             })
-          val tailGeos = tailEntries.iterator.flatMap(_._2).flatMap(_.blooms)
+          val tailGeos = tailSegs.iterator.flatten.flatMap(_.blooms)
             .collect { case (c, b) if c == keyPhys => (b.mBits, b.k) }.toSet
           (ckptGeos ++ tailGeos).iterator.map(g =>
             g -> bloomProbeBits(spark, keys, keyType, g._1, g._2)).toMap
         }
       ProbePlan(keyPhys, keys, keyType, bucketWanted, probeBits, degraded)
     }
-    val segSet = segV.toSet
     // range conjuncts in the physical vocabulary of checkpoint rows
-    // and tail segments; decimal-typed columns never stat-prune —
-    // [[rangeStatsComparable]] — their conjunct keeps every file and
-    // the serving read's row filter owns it
+    // and tail segments (a retired physical name is never reused, so a
+    // live column's name never meets a dropped column's stats);
+    // decimal-typed columns never stat-prune — [[rangeStatsComparable]]
+    // — their conjunct keeps every file and the serving read's row
+    // filter owns it
     val rangesPhys = ranges.collect {
       case (c, lo, hi) if rangeStatsComparable(head.schema, c) =>
         (colMapV.getOrElse(c, c), lo, hi) }
-    def rangeSurvives(rs: Seq[(String, Any, Any)])(r: CkptFile): Boolean =
-      rs.forall { case (c, lo, hi) =>
-        r.stats.get(c).forall(st =>
-          FileStat(st.kind, st.min, st.max).overlaps(lo, hi))
-      }
-    // one verdict for executor-side checkpoint rows AND the driver-side
-    // tail — per column the composition (bucket ∧ stats ∧ bloom,
-    // unknown keeps) is pruneForKeys' verbatim (stats through the
-    // shared [[statMayContain]], so decimal probes prune identically
-    // on both paths); the conjunction folds across columns and the
-    // range conjuncts AND in exactly as pruneFilesCheckpointed's
+    // per column the composition (bucket ∧ stats ∧ bloom, unknown
+    // keeps) is pruneForKeys' verbatim; the conjunction folds across
+    // columns and the range conjuncts AND in
     def survivesPlan(p: ProbePlan)(r: CkptFile): Boolean = {
       p.bucketWanted.forall(w => r.bucket.forall(w.contains)) &&
       (p.degraded || (
@@ -2894,75 +2702,29 @@ object Snapshots {
           }
         }))
     }
-    val fromCkpt = cachedRows match {
-      case Some(rows) =>
-        // small checkpoint, rows driver-resident — same verdicts, no job
-        rows.iterator
-          .filter(r => segSet.contains(r.seg) &&
-            !tombsV.contains((r.seg, r.file)) &&
-            plans.forall(p => survivesPlan(p)(r)) &&
-            rangeSurvives(rangesPhys)(r))
-          .map(_.file).toSeq
-      case None =>
-        val plansB = spark.sparkContext.broadcast(plans)
-        val segSetB = spark.sparkContext.broadcast(segSet)
-        val tombsB = spark.sparkContext.broadcast(tombsV)
-        val rangesB = spark.sparkContext.broadcast(rangesPhys)
-        ds.filter { r: CkptFile => segSetB.value.contains(r.seg) &&
-            !tombsB.value.contains((r.seg, r.file)) &&
-            plansB.value.forall(p => survivesPlan(p)(r)) &&
-            rangeSurvives(rangesB.value)(r) }
-          .map(_.file).collect().toSeq
+    val pred: CkptFile => Boolean = { r =>
+      plans.forall(p => survivesPlan(p)(r)) &&
+        rangesPhys.forall { case (c, lo, hi) =>
+          r.stats.get(c).forall(st =>
+            FileStat(st.kind, st.min, st.max).overlaps(lo, hi))
+        }
     }
-    val fromTail = tailEntries.iterator.flatMap { case (rel, entries) =>
-      entries.iterator
-        .filter(e => !tombsV.contains((rel, e.file)))
-        .map(e => CkptFile(e.file, e.bucket, e.rows, e.bytes,
-          e.stats.iterator
-            .map { case (c, s0) => c -> CkptStat(s0.kind, s0.min, s0.max) }
-            .toMap,
-          e.nulls.toMap, rel,
-          e.blooms.iterator.map { case (c, b) =>
-            c -> CkptBloom(b.mBits, b.k, b.words.toIndexedSeq) }.toMap))
-        .filter(r => plans.forall(p => survivesPlan(p)(r)) &&
-          rangeSurvives(rangesPhys)(r))
-        .map(_.file)
-    }.toSeq
-    (fromCkpt ++ fromTail).distinct.sorted
+    // a pure-range call never consults a bloom — the walk does not
+    // decode the dominant bloom column for it
+    liveEntriesCheckpointed(spark, tableDir, base, pred,
+      withBlooms = probes.nonEmpty).map(_.file).distinct.sorted
   }
 
-  /** [[readVersionKeys]]' checkpoint-planned twin — the 100 TB serving
-    * read: point lookups plan through [[pruneFilesCheckpointedKeys]]
-    * (bucket ∧ stats ∧ bloom, evaluated where the metadata lives), so
-    * the driver never assembles the per-file metadata even once,
-    * O(result) end to end. Same row semantics as [[readVersionKeys]]:
-    * deletion vectors apply, the row-level `isin` filter still runs
-    * (pruning is a scan reducer), and an all-pruned probe serves the
-    * schema'd empty frame (the recorded schema types the zero-file
-    * case).
-    */
-  def readVersionCheckpointedKeys(spark: SparkSession, tableDir: String,
-                                  key: String, keys: Seq[Any],
-                                  version: Option[Long] = None): DataFrame = {
-    import org.apache.spark.sql.functions.col
-    require(keys.nonEmpty, "readVersionCheckpointedKeys needs at least one key")
-    require(keys.forall(_ != null),
-      "readVersionCheckpointedKeys keys must be non-null (SQL NULL never " +
-        "equals NULL — an isin probe cannot match it, and the index probes " +
-        "cannot hash it)")
-    val head = resolveForRead(spark, tableDir, version).header
-    val keep = pruneFilesCheckpointedKeys(
-      spark, tableDir, Some(head.version), key, keys)
-    readFiles(spark, tableDir, head, keep).filter(col(key).isin(keys: _*))
-  }
-
-  /** [[readVersionCheckpointedKeys]]' CONJUNCTIVE generalization — the
-    * multi-predicate serving read (`date = ? AND custkey = ?`):
-    * planning composes every probed column's bucket ∧ stats ∧ bloom
-    * verdict in one checkpoint job
-    * ([[pruneFilesCheckpointedProbes]]), the row filter re-applies the
-    * conjunction of `isin`s exactly, and an all-pruned probe serves
-    * the schema'd empty frame.
+  /** The checkpoint-planned serving read, O(result) in the driver end
+    * to end: version resolution and liveness read the manifest file's
+    * header only, planning runs [[pruneFilesCheckpointedProbes]] (key
+    * probes ∧ range conjuncts in one checkpoint job; no conjunct serves
+    * every live file), and schema, column mapping and deletion vectors
+    * apply through the ordinary [[readFiles]] path. The row filter
+    * re-applies the conjunction exactly — `isin` per probe, inclusive
+    * bounds per range; pruning is a scan reducer, never a semantic
+    * change — and an all-pruned probe serves the schema'd empty frame
+    * (the recorded schema types the zero-file case).
     */
   def readVersionCheckpointedProbes(spark: SparkSession, tableDir: String,
                                     probes: Seq[(String, Seq[Any])],
@@ -2970,8 +2732,6 @@ object Snapshots {
                                     ranges: Seq[(String, Any, Any)] = Nil)
       : DataFrame = {
     import org.apache.spark.sql.functions.{col, lit}
-    require(probes.nonEmpty || ranges.nonEmpty,
-      "readVersionCheckpointedProbes needs a probe or a range")
     probes.foreach { case (c, ks) =>
       require(ks.nonEmpty && ks.forall(_ != null),
         s"probe keys on '$c' must be non-empty and non-null (SQL NULL " +
@@ -4036,7 +3796,7 @@ object Snapshots {
     * [[probeKeyBudget]], plans the fact read from exactly those keys
     * — bucket ∧ stats ∧ bloom per-file verdicts, through the
     * metadata-checkpoint planning job when one covers the version
-    * ([[readVersionCheckpointedKeys]]: O(segments + tail) driver
+    * ([[readVersionCheckpointedProbes]]: O(segments + tail) driver
     * work) and the manifest pruner otherwise — then broadcast-joins
     * the pruned fact scan to the dim rows. At 100 TB this turns
     * "join the day's 10-key dim slice" from a full-table scan into a
@@ -5220,7 +4980,7 @@ object Snapshots {
       catch { case _: java.io.IOException => () }
       // auto-checkpoint: every Nth committed version materializes its
       // metadata checkpoint at commit time, Delta-style; tail replay
-      // ([[pruneFilesCheckpointed]]) covers the versions in between.
+      // ([[pruneFilesCheckpointedProbes]]) covers the versions in between.
       // Skips pending (txn) manifests — their liveness is undecided.
       // Best-effort: a checkpoint is an optimization and must never
       // fail the commit that produced the data.
@@ -6961,7 +6721,7 @@ object Snapshots {
     * reducer, never a semantic change (exactly parquet's own
     * footer-pruning contract).
     *
-    * All-pruned contract (DIVERGES from [[readVersionCheckpointed]],
+    * All-pruned contract (DIVERGES from [[readVersionCheckpointedProbes]],
     * deliberately): this path refuses loudly, because it predates
     * recorded schemas — a zero-file read had no schema to serve, and
     * callers of the eager-manifest path have treated all-pruned as a
@@ -9365,15 +9125,13 @@ object Snapshots {
         f.delete(checkpointDir(tableDir, v), true)
     }
     // crashed checkpoint builders leave `.tmp-*` dirs that no rename
-    // ever claimed, and old-format rebuilders that died between their
-    // two renames leave `.old-*` asides — reap both past the same
-    // orphan cutoff that protects in-flight builds (dot-prefixed dirs
-    // are invisible to [[newestCheckpointAtOrBefore]], so nothing
-    // served is ever swept here)
+    // ever claimed — reap them past the same orphan cutoff that
+    // protects in-flight builds (dot-prefixed dirs are invisible to
+    // [[newestCheckpointAtOrBefore]], so nothing served is ever swept
+    // here)
     val ckptRoot = new Path(tableDir, "_manifests/checkpoints")
     if (f.exists(ckptRoot)) f.listStatus(ckptRoot).foreach { st =>
-      if ((st.getPath.getName.startsWith(".tmp-") ||
-           st.getPath.getName.startsWith(".old-")) &&
+      if (st.getPath.getName.startsWith(".tmp-") &&
           st.getModificationTime < System.currentTimeMillis() - orphanRetainMs)
         f.delete(st.getPath, true)
     }

@@ -70,6 +70,15 @@ class GraftConfSpec extends SparkSpec {
     refusesNaming("graft.spj.buildBytesMax") {
       Snapshots.bucketAlignedJoin(spark, bucketed, bucketed, "id", "id")
     }
+    // the SQL MERGE command reads its source-size warning threshold
+    spark.sql("CREATE OR REPLACE TEMPORARY VIEW conf_merge " +
+      s"USING graft OPTIONS (path '$dir')")
+    frame(3).createOrReplaceTempView("conf_merge_src")
+    refusesNaming("spark.graft.merge.sourceWarnBytes") {
+      spark.sql("MERGE INTO conf_merge t USING conf_merge_src s " +
+        "ON t.id = s.id WHEN MATCHED THEN UPDATE SET tag = s.tag")
+    }
+    assert(Snapshots.latestVersion(spark, dir) === Some(1L))
     // the aligned rewrites and the ledger-stats rule read their switch
     // while optimizing a query over a graft relation
     Seq("graft.sql.alignedJoin.enabled", "graft.sql.alignedJoinAgg.enabled",

@@ -450,12 +450,12 @@ class GraftStreamSourceSpec extends SparkSpec {
     // and the checkpoint-planned read of the streamed table serves the
     // full-read rows exactly (the versions between checkpoints replay
     // through the tail path)
-    val planned = Snapshots.readVersionCheckpointed(spark, ckptd, None, Nil)
+    val planned = Snapshots.readVersionCheckpointedProbes(spark, ckptd, Nil, None, Nil)
     val full = Snapshots.readVersion(spark, ckptd)
     assert(planned.collect().toSet === full.collect().toSet)
     // point-lookup planning through the same checkpoints agrees too
-    val point = Snapshots.readVersionCheckpointedKeys(
-      spark, ckptd, "id", Seq(17L))
+    val point = Snapshots.readVersionCheckpointedProbes(
+      spark, ckptd, Seq("id" -> Seq(17L)))
     assert(point.collect().map(_.getLong(0)).toSeq === Seq(17L))
   }
 

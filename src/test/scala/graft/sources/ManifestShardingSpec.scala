@@ -362,8 +362,8 @@ class ManifestShardingSpec extends SparkSpec {
     // the live version's checkpoint still serves
     assert(!new java.io.File(ckptRoot, "ckpt-v000001").exists())
     assert(!orphanTmp.exists())
-    assert(Snapshots.pruneFilesCheckpointed(spark, dir, Some(2L),
-      Seq(("id", 0L, 100L))).nonEmpty)
+    assert(Snapshots.pruneFilesCheckpointedProbes(spark, dir, Some(2L),
+      Nil, Seq(("id", 0L, 100L))).nonEmpty)
   }
 
   test("metadata checkpoint: distributed prune decisions == manifest prune decisions") {
@@ -394,7 +394,7 @@ class ManifestShardingSpec extends SparkSpec {
     val ckptFiles = spark.read.parquet(ckpt)
       .select("file").as[String].collect().toSet
     assert(m.files.toSet.subsetOf(ckptFiles))
-    assert(Snapshots.pruneFilesCheckpointed(spark, dir, Some(v), Nil)
+    assert(Snapshots.pruneFilesCheckpointedProbes(spark, dir, Some(v), Nil, Nil)
       === m.files.sorted)
     // identical pruning decisions across kinds and shapes
     val predSets: Seq[Seq[(String, Any, Any)]] = Seq(
@@ -408,7 +408,8 @@ class ManifestShardingSpec extends SparkSpec {
           java.sql.Timestamp.valueOf("2024-01-05 00:00:00"))))
     predSets.foreach { preds =>
       val viaManifest = Snapshots.pruneFiles(m, preds).sorted
-      val viaCkpt = Snapshots.pruneFilesCheckpointed(spark, dir, Some(v), preds)
+      val viaCkpt =
+        Snapshots.pruneFilesCheckpointedProbes(spark, dir, Some(v), Nil, preds)
       assert(viaCkpt === viaManifest, s"prune divergence for $preds")
       assert(viaCkpt.size < m.files.size, s"nothing pruned for $preds")
     }
@@ -417,16 +418,17 @@ class ManifestShardingSpec extends SparkSpec {
     // the semantics), and its inputFiles really are the pruned set
     val servePreds: Seq[(String, Any, Any)] = Seq(("id", 150L, 250L))
     val served = Snapshots
-      .readVersionCheckpointed(spark, dir, Some(v), servePreds)
+      .readVersionCheckpointedProbes(spark, dir, Nil, Some(v), servePreds)
       .where(col("id").between(150L, 250L))
     val full = Snapshots.readVersion(spark, dir, Some(v))
       .where(col("id").between(150L, 250L))
     assert(served.collect().toSet === full.collect().toSet)
     assert(served.inputFiles.length ===
-      Snapshots.pruneFilesCheckpointed(spark, dir, Some(v), servePreds).size)
+      Snapshots.pruneFilesCheckpointedProbes(spark, dir, Some(v), Nil,
+        servePreds).size)
     // latest-version resolution (None) rides the thin parse too
     val servedLatest = Snapshots
-      .readVersionCheckpointed(spark, dir, None, servePreds)
+      .readVersionCheckpointedProbes(spark, dir, Nil, None, servePreds)
       .where(col("id").between(150L, 250L))
     assert(servedLatest.collect().toSet === full.collect().toSet)
     // a rename AFTER the checkpoint: the new version checkpoints under
@@ -436,11 +438,97 @@ class ManifestShardingSpec extends SparkSpec {
     val m2 = Snapshots.readManifest(spark, dir, v2)
     Snapshots.writeMetadataCheckpoint(spark, dir, Some(v2))
     val preds2: Seq[(String, Any, Any)] = Seq(("key", 150L, 250L))
-    assert(Snapshots.pruneFilesCheckpointed(spark, dir, Some(v2), preds2)
+    assert(Snapshots.pruneFilesCheckpointedProbes(spark, dir, Some(v2), Nil, preds2)
       === Snapshots.pruneFiles(m2, preds2).sorted)
     // no checkpoint for an uncheckpointed version: loud refusal
     intercept[IllegalArgumentException] {
-      Snapshots.pruneFilesCheckpointed(spark, dir, Some(0L), preds2)
+      Snapshots.pruneFilesCheckpointedProbes(spark, dir, Some(0L), Nil, preds2)
+    }
+  }
+
+  test("a checkpoint dir without its _covered_segs.txt is refused by the " +
+    "writer and left as it is; planning serves from the older checkpoint") {
+    val dir = freshDir()
+    Snapshots.commit(frame(0 until 10, "a").repartition(2), dir, "overwrite",
+      statsColumns = Seq("id"))
+    Snapshots.writeMetadataCheckpoint(spark, dir, Some(0L))
+    Snapshots.commit(frame(10 until 20, "b").repartition(2), dir, "append",
+      statsColumns = Seq("id"))
+    // a torn install at the live head: a data file, no sidecar
+    val torn = new java.io.File(dir, "_manifests/checkpoints/ckpt-v000001")
+    assert(torn.mkdirs())
+    java.nio.file.Files.write(new java.io.File(torn, "part-00000.parquet")
+      .toPath, "torn".getBytes(java.nio.charset.StandardCharsets.UTF_8))
+    def listing() = torn.listFiles().toSeq
+      .map(f => (f.getName, f.length, f.lastModified)).sortBy(_._1)
+    val before = listing()
+    val e = intercept[IllegalArgumentException] {
+      Snapshots.writeMetadataCheckpoint(spark, dir, Some(1L))
+    }
+    assert(e.getMessage.contains(torn.getName) &&
+      e.getMessage.contains("_covered_segs.txt"), e.getMessage)
+    assert(listing() === before, "the refused dir must stay untouched")
+    // the planner skips the sidecar-less dir: v0's checkpoint plus the
+    // tail gives the manifest path's file set
+    val m = Snapshots.readManifest(spark, dir, 1L)
+    assert(Snapshots.pruneFilesCheckpointedProbes(spark, dir, Some(1L), Nil, Nil)
+      === m.files.sorted)
+    val preds: Seq[(String, Any, Any)] = Seq(("id", 12L, 14L))
+    assert(Snapshots.pruneFilesCheckpointedProbes(spark, dir, Some(1L), Nil, preds)
+      === Snapshots.pruneFiles(m, preds).sorted)
+  }
+
+  test("checkpoint planning as a Spark job over rows the driver has not " +
+    "cached decides as the driver-cached walk and the manifest path") {
+    val dir = freshDir()
+    val s = spark
+    import s.implicits._
+    def batch(lo: Int) = (lo until lo + 200).map { k =>
+      (k.toLong, s"u${k % 50}", k * 10.0)
+    }.toDF("id", "tag", "v")
+    (0 until 3).foreach { i =>
+      Snapshots.commit(batch(i * 200), dir, if (i == 0) "overwrite" else "append",
+        statsColumns = Seq("id", "tag"), bucketBy = Some(("id", 8)),
+        bloomColumns = Seq("tag"))
+    }
+    val v = Snapshots.latestVersion(spark, dir).get
+    val m = Snapshots.readManifest(spark, dir, v)
+    val ck = new java.io.File(Snapshots.writeMetadataCheckpoint(spark, dir, Some(v)))
+    val shapes: Seq[(Seq[(String, Seq[Any])], Seq[(String, Any, Any)])] = Seq(
+      (Nil, Nil),
+      (Nil, Seq(("id", 150L, 250L))),
+      (Seq("id" -> Seq(42L, 511L)), Nil),
+      (Seq("tag" -> Seq("u7")), Nil),
+      (Seq("id" -> Seq(242L), "tag" -> Seq("u42")), Seq(("id", 200L, 399L))))
+    def plan() = shapes.map { case (ps, rs) =>
+      Snapshots.pruneFilesCheckpointedProbes(spark, dir, Some(v), ps, rs) }
+    /** `body`'s result and the Spark jobs it started. */
+    def withJobs[T](body: => T): (T, Int) = {
+      val jobs = new java.util.concurrent.atomic.AtomicInteger
+      val listener = new org.apache.spark.scheduler.SparkListener {
+        override def onJobStart(
+            j: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+          jobs.incrementAndGet()
+      }
+      spark.sparkContext.addSparkListener(listener)
+      try {
+        val r = body
+        Thread.sleep(500) // let the job-start events drain
+        (r, jobs.get)
+      } finally spark.sparkContext.removeSparkListener(listener)
+    }
+    plan() // warms the bloom-geometry cache
+    val (cached, cachedJobs) = withJobs(plan())
+    // a new dir mtime is a checkpoint this process did not install: the
+    // rows are read back with one Spark job per plan
+    assert(ck.setLastModified(ck.lastModified() + 60000L))
+    val (read, readJobs) = withJobs(plan())
+    assert(read === cached)
+    assert(readJobs === cachedJobs + shapes.size,
+      s"jobs: $readJobs read back, $cachedJobs driver-cached")
+    shapes.zip(cached).foreach { case ((ps, rs), got) =>
+      assert(got === Snapshots.pruneForProbes(spark, m,
+        Snapshots.pruneFiles(m, rs), ps).sorted, s"divergence for $ps $rs")
     }
   }
 
@@ -478,12 +566,12 @@ class ManifestShardingSpec extends SparkSpec {
       Seq(("ts", java.sql.Timestamp.valueOf("2024-02-03 00:00:00"),
         java.sql.Timestamp.valueOf("2024-02-04 23:59:59"))))
     predSets.foreach { preds =>
-      assert(Snapshots.pruneFilesCheckpointed(spark, dir, Some(v), preds)
+      assert(Snapshots.pruneFilesCheckpointedProbes(spark, dir, Some(v), Nil, preds)
         === Snapshots.pruneFiles(m, preds).sorted,
         s"replay divergence for $preds")
     }
     // and the replayed read serves the same rows as the full read
-    val served = Snapshots.readVersionCheckpointed(spark, dir, None,
+    val served = Snapshots.readVersionCheckpointedProbes(spark, dir, Nil, None,
       Seq(("key", 150L, 250L))).where(col("key").between(150L, 250L))
     val full = Snapshots.readVersion(spark, dir, Some(v))
       .where(col("key").between(150L, 250L))
@@ -519,32 +607,32 @@ class ManifestShardingSpec extends SparkSpec {
       ("tag", Seq("zz-missing")))            // bloom prunes everything
     probes.foreach { case (key, keys) =>
       val viaManifest = Snapshots.pruneForKeys(spark, m, m.files, key, keys).sorted
-      val viaCkpt = Snapshots.pruneFilesCheckpointedKeys(
-        spark, dir, Some(v), key, keys)
+      val viaCkpt = Snapshots.pruneFilesCheckpointedProbes(
+        spark, dir, Some(v), Seq(key -> keys))
       assert(viaCkpt === viaManifest, s"keys-prune divergence for $key=$keys")
     }
     // the primitives really prune: an id probe keeps < half the files
     // (bucket), a tag probe keeps < all files (bloom), a missing tag
     // keeps none
-    assert(Snapshots.pruneFilesCheckpointedKeys(spark, dir, Some(v), "id",
-      Seq(42L)).size < m.files.size / 2)
-    val tagKept = Snapshots.pruneFilesCheckpointedKeys(spark, dir, Some(v),
-      "tag", Seq("u7"))
+    assert(Snapshots.pruneFilesCheckpointedProbes(spark, dir, Some(v),
+      Seq("id" -> Seq(42L))).size < m.files.size / 2)
+    val tagKept = Snapshots.pruneFilesCheckpointedProbes(spark, dir, Some(v),
+      Seq("tag" -> Seq("u7")))
     assert(tagKept.nonEmpty && tagKept.size < m.files.size)
-    assert(Snapshots.pruneFilesCheckpointedKeys(spark, dir, Some(v), "tag",
-      Seq("zz-missing")).isEmpty)
+    assert(Snapshots.pruneFilesCheckpointedProbes(spark, dir, Some(v),
+      Seq("tag" -> Seq("zz-missing"))).isEmpty)
     // the checkpoint-planned point READ serves the same rows as the
     // full read, its scan really is the pruned set, and the all-pruned
     // probe serves the schema'd empty frame
-    val served = Snapshots.readVersionCheckpointedKeys(
-      spark, dir, "id", Seq(42L, 511L), Some(v))
+    val served = Snapshots.readVersionCheckpointedProbes(
+      spark, dir, Seq("id" -> Seq(42L, 511L)), Some(v))
     val full = Snapshots.readVersion(spark, dir, Some(v))
       .where(col("id").isin(42L, 511L))
     assert(served.collect().toSet === full.collect().toSet)
-    assert(served.inputFiles.length === Snapshots.pruneFilesCheckpointedKeys(
-      spark, dir, Some(v), "id", Seq(42L, 511L)).size)
-    val none = Snapshots.readVersionCheckpointedKeys(
-      spark, dir, "tag", Seq("zz-missing"), Some(v))
+    assert(served.inputFiles.length === Snapshots.pruneFilesCheckpointedProbes(
+      spark, dir, Some(v), Seq("id" -> Seq(42L, 511L))).size)
+    val none = Snapshots.readVersionCheckpointedProbes(
+      spark, dir, Seq("tag" -> Seq("zz-missing")), Some(v))
     assert(none.schema.fieldNames.toSeq === Seq("id", "tag", "v"))
     assert(none.count() === 0L)
     // tail replay: appends + delete/purge + rename AFTER the checkpoint
@@ -558,13 +646,13 @@ class ManifestShardingSpec extends SparkSpec {
     val m2 = Snapshots.readManifest(spark, dir, v2)
     Seq(("id", Seq[Any](642L)), ("label", Seq[Any]("u7", "u33")))
       .foreach { case (key, keys) =>
-        assert(Snapshots.pruneFilesCheckpointedKeys(
-          spark, dir, Some(v2), key, keys)
+        assert(Snapshots.pruneFilesCheckpointedProbes(
+          spark, dir, Some(v2), Seq(key -> keys))
           === Snapshots.pruneForKeys(spark, m2, m2.files, key, keys).sorted,
           s"tail keys-prune divergence for $key=$keys")
       }
-    val servedTail = Snapshots.readVersionCheckpointedKeys(
-      spark, dir, "label", Seq("u7"), Some(v2))
+    val servedTail = Snapshots.readVersionCheckpointedProbes(
+      spark, dir, Seq("label" -> Seq("u7")), Some(v2))
     val fullNow = Snapshots.readVersion(spark, dir, Some(v2))
       .where(col("label") === "u7")
     assert(servedTail.collect().toSet === fullNow.collect().toSet)
@@ -634,7 +722,7 @@ class ManifestShardingSpec extends SparkSpec {
         Seq(("id", Seq[Any](1L)), ("id", Seq[Any](2L))))
     }
     // RANGE ∧ KEY mixed conjunction: the range prunes by stats exactly
-    // as pruneFilesCheckpointed, AND-composed with the key verdicts —
+    // as pruneFiles, AND-composed with the key verdicts —
     // decisions == the manifest path seeded with pruneFiles(ranges),
     // and strictly tighter than either conjunct alone
     val mixedRanges: Seq[(String, Any, Any)] = Seq(
@@ -659,10 +747,10 @@ class ManifestShardingSpec extends SparkSpec {
       .where(col("id") === 242L &&
         col("d") === java.sql.Date.valueOf("2024-03-02"))
     assert(servedMixed.collect().toSet === fullMixed.collect().toSet)
-    // a probe-less pure-range call is legal; an empty call is not
-    intercept[IllegalArgumentException] {
-      Snapshots.pruneFilesCheckpointedProbes(spark, dir, Some(v), Nil, Nil)
-    }
+    // a probe-less pure-range call is legal, and the empty
+    // conjunction keeps every live file
+    assert(Snapshots.pruneFilesCheckpointedProbes(spark, dir, Some(v), Nil, Nil)
+      === m.files.sorted)
     // tail replay: append + rename after the checkpoint — the
     // composite decisions still match the manifest path
     Snapshots.commit(batch(600, 4), dir, "append",
@@ -699,21 +787,22 @@ class ManifestShardingSpec extends SparkSpec {
     // (the r13 anyDecimal bypass kept every file on the stats leg)
     val probe: Seq[Any] = Seq(BigDecimal("150.00"))
     val viaManifest = Snapshots.pruneForKeys(spark, m, m.files, "amt", probe)
-    val viaCkpt = Snapshots.pruneFilesCheckpointedKeys(
-      spark, dir, Some(v), "amt", probe)
+    val viaCkpt = Snapshots.pruneFilesCheckpointedProbes(
+      spark, dir, Some(v), Seq("amt" -> probe))
     assert(viaCkpt === viaManifest.sorted, "decimal decisions must match")
     assert(viaCkpt.nonEmpty && viaCkpt.size < m.files.size,
       s"decimal stats must prune: kept ${viaCkpt.size} of ${m.files.size}")
-    val served = Snapshots.readVersionCheckpointedKeys(
-      spark, dir, "amt", probe, Some(v))
+    val served = Snapshots.readVersionCheckpointedProbes(
+      spark, dir, Seq("amt" -> probe), Some(v))
     assert(served.count() === 1L)
     // a literal that cannot rescale exactly keeps files conservatively
     // (identical on both paths; the row filter owns the exact verdict)
     val odd: Seq[Any] = Seq(BigDecimal("150.005"))
-    assert(Snapshots.pruneFilesCheckpointedKeys(spark, dir, Some(v), "amt", odd)
+    assert(Snapshots.pruneFilesCheckpointedProbes(spark, dir, Some(v),
+        Seq("amt" -> odd))
       === Snapshots.pruneForKeys(spark, m, m.files, "amt", odd).sorted)
-    assert(Snapshots.readVersionCheckpointedKeys(
-      spark, dir, "amt", odd, Some(v)).count() === 0L)
+    assert(Snapshots.readVersionCheckpointedProbes(
+      spark, dir, Seq("amt" -> odd), Some(v)).count() === 0L)
     // SCALE-growing widening: old files' unscaled stats are re-based —
     // they must DROP (conservative keep), or this probe would wrongly
     // prune the old file holding 150.00 and lose its row
@@ -724,17 +813,17 @@ class ManifestShardingSpec extends SparkSpec {
     assert(m2.files.exists(fl => !m2.stats.contains((fl, "amt"))),
       "widened-away stats must actually be dropped")
     val probe2: Seq[Any] = Seq(BigDecimal("150.000"))
-    assert(Snapshots.pruneFilesCheckpointedKeys(
-        spark, dir, Some(v2), "amt", probe2)
+    assert(Snapshots.pruneFilesCheckpointedProbes(
+        spark, dir, Some(v2), Seq("amt" -> probe2))
       === Snapshots.pruneForKeys(spark, m2, m2.files, "amt", probe2).sorted)
-    val afterWiden = Snapshots.readVersionCheckpointedKeys(
-      spark, dir, "amt", probe2, Some(v2))
+    val afterWiden = Snapshots.readVersionCheckpointedProbes(
+      spark, dir, Seq("amt" -> probe2), Some(v2))
     assert(afterWiden.count() === 1L,
       "the pre-widening row must survive the probe (no stale-scale prune)")
     // and the NEW files' scale-3 stats still prune among themselves
     val tail: Seq[Any] = Seq(BigDecimal("350.000"))
-    val keptTail = Snapshots.pruneFilesCheckpointedKeys(
-      spark, dir, Some(v2), "amt", tail)
+    val keptTail = Snapshots.pruneFilesCheckpointedProbes(
+      spark, dir, Some(v2), Seq("amt" -> tail))
     assert(keptTail.size < m2.files.size,
       "post-widening files must still stats-prune at the new scale")
     // a NARROWER-scale batch into the widened table (the allowed
@@ -753,12 +842,12 @@ class ManifestShardingSpec extends SparkSpec {
     assert(narrowFiles.forall(fl => m3.stats.contains((fl, "id"))),
       "the batch's other stats columns still record")
     val narrowProbe: Seq[Any] = Seq(BigDecimal("450.000"))
-    assert(Snapshots.pruneFilesCheckpointedKeys(
-        spark, dir, Some(v3), "amt", narrowProbe)
+    assert(Snapshots.pruneFilesCheckpointedProbes(
+        spark, dir, Some(v3), Seq("amt" -> narrowProbe))
       === Snapshots.pruneForKeys(spark, m3, m3.files, "amt", narrowProbe)
         .sorted)
-    assert(Snapshots.readVersionCheckpointedKeys(
-      spark, dir, "amt", narrowProbe, Some(v3)).count() === 1L,
+    assert(Snapshots.readVersionCheckpointedProbes(
+      spark, dir, Seq("amt" -> narrowProbe), Some(v3)).count() === 1L,
       "the narrower batch's row must survive its own probe")
     // RANGE bounds on a decimal column never stat-prune (unscaled
     // footer ints vs value bounds): the conjunct keeps every file on
@@ -855,8 +944,8 @@ class ManifestShardingSpec extends SparkSpec {
     // under budget (default 1000): the v-stats really prune
     val under = Snapshots.pruneForKeys(spark, m, m.files, "v", probeV)
     assert(under.size < m.files.size, "stats must prune under budget")
-    assert(Snapshots.pruneFilesCheckpointedKeys(spark, dir, Some(v0),
-      "v", probeV) === under.sorted)
+    assert(Snapshots.pruneFilesCheckpointedProbes(spark, dir, Some(v0),
+      Seq("v" -> probeV)) === under.sorted)
     spark.conf.set("graft.probe.maxKeys", "4")
     try {
       // over budget: v is unbucketed, so its conjunct keeps EVERY file
@@ -864,25 +953,25 @@ class ManifestShardingSpec extends SparkSpec {
       val over = Snapshots.pruneForKeys(spark, m, m.files, "v", probeV)
       assert(over === m.files,
         "over-budget stats/bloom legs must keep every file")
-      assert(Snapshots.pruneFilesCheckpointedKeys(spark, dir, Some(v0),
-        "v", probeV) === over.toSeq.sorted)
+      assert(Snapshots.pruneFilesCheckpointedProbes(spark, dir, Some(v0),
+        Seq("v" -> probeV)) === over.toSeq.sorted)
       // the bucket leg survives the budget: an over-budget probe on
       // the bucket key prunes exactly what it prunes under budget
       // (k carries no stats/bloom here, so under-budget IS bucket-only)
       val probeK: Seq[Any] = Seq(0L, 25L, 150L, 275L, 399L)
       val kOver = Snapshots.pruneForKeys(spark, m, m.files, "k", probeK)
-      assert(Snapshots.pruneFilesCheckpointedKeys(spark, dir, Some(v0),
-        "k", probeK) === kOver.sorted)
+      assert(Snapshots.pruneFilesCheckpointedProbes(spark, dir, Some(v0),
+        Seq("k" -> probeK)) === kOver.sorted)
       spark.conf.unset("graft.probe.maxKeys")
       val kUnder = Snapshots.pruneForKeys(spark, m, m.files, "k", probeK)
       spark.conf.set("graft.probe.maxKeys", "4")
       assert(kOver === kUnder,
         "bucket pruning must be budget-invariant")
       // results stay exact either way (the row filter owns exactness)
-      assert(Snapshots.readVersionCheckpointedKeys(
-        spark, dir, "v", probeV, Some(v0)).count() === 5L)
-      assert(Snapshots.readVersionCheckpointedKeys(
-        spark, dir, "k", probeK, Some(v0)).count() === 5L)
+      assert(Snapshots.readVersionCheckpointedProbes(
+        spark, dir, Seq("v" -> probeV), Some(v0)).count() === 5L)
+      assert(Snapshots.readVersionCheckpointedProbes(
+        spark, dir, Seq("k" -> probeK), Some(v0)).count() === 5L)
     } finally spark.conf.unset("graft.probe.maxKeys")
   }
 
@@ -919,7 +1008,8 @@ class ManifestShardingSpec extends SparkSpec {
         Snapshots.latestVersion(spark, dir).get)
       val kept = Snapshots.pruneForKeys(spark, m, m.files, "amt", probe)
       Snapshots.writeMetadataCheckpoint(spark, dir)
-      val served = Snapshots.readVersionCheckpointedKeys(spark, dir, "amt", probe)
+      val served =
+        Snapshots.readVersionCheckpointedProbes(spark, dir, Seq("amt" -> probe))
       assert(served.count() === 1L, s"$dir: the probed row must be served")
       assert(served.inputFiles.length === kept.size,
         s"$dir: the checkpoint-planned read must scan the manifest's kept files")
@@ -984,8 +1074,8 @@ class ManifestShardingSpec extends SparkSpec {
               rnd.nextInt(1200).toLong: java.lang.Long))
           else
             ("tag", Seq.fill(1 + rnd.nextInt(3))(s"v${rnd.nextInt(60)}"))
-        val viaCkpt = Snapshots.pruneFilesCheckpointedKeys(
-          spark, dir, Some(v), key, keys)
+        val viaCkpt = Snapshots.pruneFilesCheckpointedProbes(
+          spark, dir, Some(v), Seq(key -> keys))
         val viaManifest =
           Snapshots.pruneForKeys(spark, m, m.files, key, keys).sorted
         assert(viaCkpt === viaManifest,
@@ -1029,10 +1119,10 @@ class ManifestShardingSpec extends SparkSpec {
       .exists(), "the newest at-or-below-floor checkpoint must survive")
     val v = Snapshots.latestVersion(spark, dir).get
     val m = Snapshots.readManifest(spark, dir, v)
-    assert(Snapshots.pruneFilesCheckpointed(spark, dir, Some(v), Nil)
+    assert(Snapshots.pruneFilesCheckpointedProbes(spark, dir, Some(v), Nil, Nil)
       === m.files.sorted)
     // an all-pruned range serves the schema'd EMPTY frame, not an error
-    val none = Snapshots.readVersionCheckpointed(spark, dir, Some(v),
+    val none = Snapshots.readVersionCheckpointedProbes(spark, dir, Nil, Some(v),
       Seq(("id", 100000L, 200000L)))
     assert(none.count() === 0L)
     assert(none.columns.contains("id"))
@@ -1056,9 +1146,9 @@ class ManifestShardingSpec extends SparkSpec {
     Snapshots.restore(spark, dir, 0L)
     val v = Snapshots.latestVersion(spark, dir).get
     val m = Snapshots.readManifest(spark, dir, v)
-    assert(Snapshots.pruneFilesCheckpointed(spark, dir, Some(v), Nil)
+    assert(Snapshots.pruneFilesCheckpointedProbes(spark, dir, Some(v), Nil, Nil)
       === m.files.sorted)
-    val served = Snapshots.readVersionCheckpointed(spark, dir, Some(v),
+    val served = Snapshots.readVersionCheckpointedProbes(spark, dir, Nil, Some(v),
       Seq(("id", 0L, 29L))).where(col("id") < 30L)
     assert(served.count() === 30L) // the restored rows are back
   }
@@ -1078,7 +1168,7 @@ class ManifestShardingSpec extends SparkSpec {
       // an in-between version plans from the newest checkpoint below it
       val m3 = Snapshots.readManifest(spark, dir, 3L)
       val preds: Seq[(String, Any, Any)] = Seq(("id", 15L, 25L))
-      assert(Snapshots.pruneFilesCheckpointed(spark, dir, Some(3L), preds)
+      assert(Snapshots.pruneFilesCheckpointedProbes(spark, dir, Some(3L), Nil, preds)
         === Snapshots.pruneFiles(m3, preds).sorted)
     } finally spark.conf.unset("graft.checkpoint.autoEvery")
   }
