@@ -13,8 +13,8 @@ import graft.sources.{GraftRelation, Snapshots}
   * a long-lived streaming driver probes every new version of every
   * table it plans against, so an unbounded map is a slow leak — an
   * access-ordered LRU capped at [[Max]] entries evicts superseded
-  * versions' facts instead (the `ckptGeoCache` treatment; an evicted
-  * entry only costs one thin manifest re-parse on re-probe).
+  * versions' facts instead (an evicted entry only costs one thin
+  * manifest re-parse on re-probe).
   */
 private[plans] object AlignedPlanCache {
   private val Max = 1024

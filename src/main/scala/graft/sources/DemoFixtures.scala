@@ -780,8 +780,9 @@ object DemoFixtures {
     * as parquet by a Spark job ([[Snapshots.writeMetadataCheckpoint]],
     * the Delta-checkpoint role) and a date-range scan PLANNED as a
     * filter over it ([[Snapshots.pruneFilesCheckpointedProbes]] with
-    * one range conjunct and no key probe, `FileStat.overlaps`
-    * verbatim), so only surviving file names reach the driver. Witnesses: `identical_decisions` pins the
+    * one range conjunct and no key probe, under the one pruning
+    * verdict), so only surviving file names reach the driver.
+    * Witnesses: `identical_decisions` pins the
     * checkpointed file set equal to the manifest path's for the same
     * predicates, `pruned` pins that the range actually skipped files.
     * The grouped result serves THROUGH the checkpoint-planned read
@@ -849,7 +850,7 @@ object DemoFixtures {
     * the bucket key (`o_custkey` — hash layout, min/max can't prune)
     * and a bloom-indexed secondary key (`o_orderkey` — stats span the
     * date slices, no bucket), each pinned `identical` to the
-    * manifest-path [[Snapshots.pruneForKeys]] decision (bucket ∧ stats
+    * manifest-path [[Snapshots.pruneForProbes]] decision (bucket ∧ stats
     * ∧ bloom composed in the checkpoint planner,
     * [[Snapshots.pruneFilesCheckpointedProbes]] with one probe) and `pruned`
     * (kept < table's files). Output replays the bucket probe
@@ -871,7 +872,7 @@ object DemoFixtures {
     def leg(key: String, keys: Seq[Any]): (Int, Int) = {
       val viaCkpt = Snapshots.pruneFilesCheckpointedProbes(
         s, dir, Some(v), Seq(key -> keys))
-      val viaManifest = Snapshots.pruneForKeys(s, m, m.files, key, keys).sorted
+      val viaManifest = Snapshots.pruneForProbes(s, m, m.files, Seq(key -> keys)).sorted
       (if (viaCkpt == viaManifest) 1 else 0,
         if (viaCkpt.nonEmpty && viaCkpt.size < m.files.size) 1 else 0)
     }
@@ -943,8 +944,8 @@ object DemoFixtures {
     * footer stats exactly as [[Snapshots.pruneFiles]] does,
     * AND-composed with the key probe's bucket ∧ stats ∧ bloom verdict,
     * all in [[Snapshots.pruneFilesCheckpointedProbes]]. Witnesses on real file lists: `mixed_identical` pins the
-    * decision == the manifest path (range pruning seeding the
-    * per-column key fold), `mixed_pruned` that it kept < the table's
+    * decision == the manifest path (the same verdict over the
+    * assembled manifest), `mixed_pruned` that it kept < the table's
     * files, `mixed_tighter` that the conjunction kept STRICTLY fewer
     * than either the range alone (a whole date slice) or the key alone
     * (one bucket per slice). The probe key derives from the data (the

@@ -72,9 +72,9 @@ object Snapshots {
         !FileStat.asciiOnly(min, max, lo.toString, hi.toString) ||
           (min <= hi.toString && max >= lo.toString)
     }
-    /** One-sided bounds for `col >= v` / `col <= v` pruning (used by
-      * the [[GraftRelation]] pushed-filter path). Conservative: a file
-      * whose max equals a strict bound is kept — pruning is a scan
+    /** One-sided bounds for `col >= v` / `col <= v` pruning (the one
+      * pruning verdict's one-sided `Range` conjuncts). Conservative: a
+      * file whose max equals a strict bound is kept — pruning is a scan
       * reducer, never a row filter.
       */
     def mayGe(v: Any): Boolean = kind match {
@@ -691,22 +691,27 @@ object Snapshots {
     }
   }
 
-  /** The k bit positions each literal probes, per (mBits, k) geometry
-    * — evaluated through Spark's own expressions (one tiny local job)
-    * so the probe can never disagree with the build. Returns
-    * literal.toString → bit positions.
+  /** Spark's own `pmod(xxhash64(salt, key), n)` — the hash every
+    * bucketed write (no salt) and bloom build (salt = hash index `j`)
+    * evaluates over the stored column — of each literal CAST to the
+    * column type, once per salt, so a probe can never disagree with
+    * the build. Literals go in typed (`lit`), never through their
+    * string form: a `java.sql.Timestamp` prints JVM-zone wall time
+    * that a cast would parse in the session zone, another instant. A
+    * projection over a one-row local relation, which the optimizer
+    * evaluates on the driver: no Spark job. Per literal, one hash per
+    * salt.
     */
-  private def bloomProbeBits(spark: SparkSession, literals: Seq[Any],
-                             keyType: org.apache.spark.sql.types.DataType,
-                             mBits: Int, k: Int): Map[String, Seq[Long]] = {
+  private def probeHashes(spark: SparkSession, literals: Seq[Any],
+                          keyType: org.apache.spark.sql.types.DataType,
+                          salts: Seq[Option[Int]], n: Long): Seq[Seq[Long]] = {
     import org.apache.spark.sql.functions._
     import spark.implicits._
-    literals.map(_.toString).distinct.toDF("key")
-      .select(col("key"), array((0 until k).map(j =>
-        pmod(xxhash64(lit(j), col("key").cast(keyType)),
-          lit(mBits.toLong))): _*).as("bits"))
-      .collect()
-      .map(r => r.getString(0) -> r.getSeq[Long](1).toSeq).toMap
+    val keys = array(literals.map(lit(_).cast(keyType)): _*)
+    val row = Seq(0).toDF("_").select(salts.map(s => transform(keys, key =>
+      pmod(xxhash64(s.map(lit(_)).toSeq :+ key: _*), lit(n)))): _*)
+      .collect().head
+    literals.indices.map(i => salts.indices.map(j => row.getSeq[Long](j)(i)))
   }
 
   private def bloomMightContain(b: Bloom, bits: Seq[Long]): Boolean =
@@ -1646,23 +1651,25 @@ object Snapshots {
     * [[readManifest]] runs. `pred` must be a serializable pure
     * function of the row (capture plain values, not enclosing state).
     * The caller's parse of the manifest (`base`) supplies the refs and
-    * tombstones — the manifest file is not read again. `withBlooms`
-    * hands `pred` the rows' bloom bitsets (checkpoint and tail alike);
-    * without it the bloom column is never decoded.
+    * tombstones — the manifest file is not read again, and `cover` is
+    * the checkpoint the caller resolved for it ([[coverOf]]).
+    * `bloomCols` (physical names) hands `pred` the rows' bloom bitsets
+    * of those columns, checkpoint and tail alike; with none the bloom
+    * column is never decoded.
     */
   private[sources] def liveEntriesCheckpointed(
       spark: SparkSession, tableDir: String, base: ManifestShell,
-      pred: CkptFile => Boolean, withStats: Boolean = false,
-      withBlooms: Boolean = false)
+      cover: CkptCover, pred: CkptFile => Boolean,
+      withStats: Boolean = false, bloomCols: Set[String] = Set.empty)
       : Seq[LiveEntry] = {
     val f = fs(spark, tableDir)
     val segV = base.segRefs.map(_._1)
     val tombsV = base.tombs
-    val ck = newestCheckpointAtOrBefore(f, tableDir, base.header.version)
-      .map(checkpointDir(tableDir, _))
-    val covered = ck.map(checkpointCoveredSegs(f, _)).getOrElse(Set.empty)
+    val CkptCover(ck, covered) = cover
     val segSet = segV.toSet
     val ws = withStats
+    // sortedBy rides verbatim (PHYSICAL vocabulary, like the tail's
+    // segment entries — consumers translate at their read version)
     def liveOf(r: CkptFile): LiveEntry = LiveEntry(r.file, r.seg,
       r.bucket, r.rows, r.bytes, r.sortedBy,
       if (ws) r.stats.keys.toSeq.sorted else Nil)
@@ -1671,8 +1678,6 @@ object Snapshots {
     def keep(segs: Set[String], tombs: Set[(String, String)])(r: CkptFile)
         : Boolean =
       segs.contains(r.seg) && !tombs.contains((r.seg, r.file)) && pred(r)
-    // sortedBy rides verbatim (PHYSICAL vocabulary, like the tail's
-    // segment entries — consumers translate at their read version)
     val fromCkpt = ck.fold(Seq.empty[LiveEntry]) { ck =>
       cachedCkptRows(spark, ck) match {
         case Some(rows) =>
@@ -1685,12 +1690,9 @@ object Snapshots {
           // task closure
           val segSetB = spark.sparkContext.broadcast(segSet)
           val tombsB = spark.sparkContext.broadcast(tombsV)
-          ckptDataset(spark, ck, withBlooms)
+          ckptDataset(spark, ck, bloomCols)
             .filter { r: CkptFile => keep(segSetB.value, tombsB.value)(r) }
-            .map { r: CkptFile => LiveEntry(r.file, r.seg, r.bucket,
-              r.rows, r.bytes, r.sortedBy,
-              if (ws) r.stats.keys.toSeq.sorted else Nil) }(
-              org.apache.spark.sql.Encoders.product[LiveEntry])
+            .map(liveOf)(org.apache.spark.sql.Encoders.product[LiveEntry])
             .collect().toSeq
       }
     }
@@ -1699,17 +1701,7 @@ object Snapshots {
     val fromTail = segV.filterNot(covered).iterator.flatMap { rel =>
       cachedSegment(f, tableDir, rel).entries.iterator
         .filter(e => !tombsV.contains((rel, e.file)))
-        .map(e => e -> CkptFile(e.file, e.bucket, e.rows, e.bytes,
-          e.stats.map { case (c, st) =>
-            c -> CkptStat(st.kind, st.min, st.max) }.toMap,
-          e.nulls.toMap, rel,
-          if (!withBlooms) Map.empty
-          else e.blooms.iterator.map { case (c, b) =>
-            c -> CkptBloom(b.mBits, b.k, b.words.toIndexedSeq) }.toMap))
-        .filter { case (_, cf) => pred(cf) }
-        .map { case (e, cf) => LiveEntry(cf.file, rel, cf.bucket,
-          cf.rows, cf.bytes, e.sortedBy,
-          if (ws) cf.stats.keys.toSeq.sorted else Nil) }
+        .map(ckptRowOf(rel, _, bloomCols.nonEmpty)).filter(pred).map(liveOf)
     }.toSeq
     // no dedup needed: a live file has exactly ONE live (segment,
     // file) position ([[publishManifestDelta]]'s invariant), and ckpt
@@ -1888,13 +1880,6 @@ object Snapshots {
   // O(table).
   // ------------------------------------------------------------------
 
-  /** One checkpointed footer stat of a file and column. */
-  final case class CkptStat(kind: String, min: String, max: String)
-  /** A transcribed per-file bloom filter — same geometry + word layout
-    * as [[Bloom]], `Seq` so the parquet encoder maps it to
-    * `array<bigint>`.
-    */
-  final case class CkptBloom(mBits: Int, k: Int, words: Seq[Long])
   /** One checkpointed file entry. `stats`/`nulls`/`blooms` keys are
     * PHYSICAL column names (a segment's vocabulary — readers translate
     * through the column mapping current at THEIR version, so one
@@ -1903,11 +1888,20 @@ object Snapshots {
     */
   final case class CkptFile(file: String, bucket: Option[Int],
                             rows: Long, bytes: Long,
-                            stats: Map[String, CkptStat],
+                            stats: Map[String, FileStat],
                             nulls: Map[String, Long],
                             seg: String,
-                            blooms: Map[String, CkptBloom] = Map.empty,
+                            blooms: Map[String, Bloom] = Map.empty,
                             sortedBy: Option[String] = None)
+
+  /** A segment entry as its checkpoint row — the one transcription the
+    * checkpoint build and the planning walk's tail share;
+    * `withBlooms = false` leaves the (dominant) bloom payloads out.
+    */
+  private def ckptRowOf(rel: String, e: SegEntry, withBlooms: Boolean)
+      : CkptFile =
+    CkptFile(e.file, e.bucket, e.rows, e.bytes, e.stats.toMap, e.nulls.toMap,
+      rel, if (withBlooms) e.blooms.toMap else Map.empty, e.sortedBy)
 
   private def checkpointDir(tableDir: String, version: Long): Path =
     new Path(tableDir, f"_manifests/checkpoints/ckpt-v$version%06d")
@@ -1961,22 +1955,12 @@ object Snapshots {
     // RESTORE re-covers through the same segment, and collapsing
     // duplicate refs would lose one that a later version serves
     // through its OTHER (un-tombstoned) reference.
-    // shared per-segment folds — one definition used by BOTH the
-    // distributed build and the small-table driver-side build below,
-    // so the two paths cannot drift
+    // one transcription ([[ckptRowOf]]) for BOTH the distributed build
+    // and the small-table driver-side build below, so the two paths
+    // cannot drift
     def ckptRowsOf(rel: String,
                    entries: IndexedSeq[SegEntry]): Iterator[CkptFile] =
-      entries.iterator.map { e =>
-        val st = e.stats.iterator
-          .map { case (c, s0) => c -> CkptStat(s0.kind, s0.min, s0.max) }
-          .toMap
-        val bl = e.blooms.iterator
-          .map { case (c, b) =>
-            c -> CkptBloom(b.mBits, b.k, b.words.toIndexedSeq) }
-          .toMap
-        CkptFile(e.file, e.bucket, e.rows, e.bytes, st,
-          e.nulls.toMap, rel, bl, e.sortedBy)
-      }
+      entries.iterator.map(ckptRowOf(rel, _, withBlooms = true))
     // Driver-side build for small segment counts (r18): dispatching a
     // distributed job to parse a handful of segment files costs more
     // (job scheduling + a full Hadoop-conf rebuild per task) than
@@ -2174,38 +2158,6 @@ object Snapshots {
   private val NdvSegsFile = "_ndv_segs.txt"
   private val KllSegsFile = "_kll_segs.txt"
   private val RngSegsFile = "_rng_segs.txt"
-
-  /** Distinct bloom geometries per (checkpoint dir, physical column) —
-    * sound because a sidecar-bearing checkpoint dir is immutable
-    * ([[writeMetadataCheckpoint]] reuses an existing dir and never
-    * rewrites one). BOUNDED
-    * (ADVICE r14): a long-lived serving process probes ever-newer
-    * checkpoints as tables re-checkpoint, and multi-column probes add
-    * one entry per (checkpoint, column) — an access-ordered LRU capped
-    * at [[CkptGeoCacheMax]] entries evicts superseded checkpoints'
-    * keys instead of leaking them for the process lifetime. An
-    * evicted entry only costs its one metadata-row rediscovery job.
-    */
-  private val CkptGeoCacheMax = 512
-  private val ckptGeoCache = java.util.Collections.synchronizedMap(
-    new java.util.LinkedHashMap[(String, String), Set[(Int, Int)]](
-        64, 0.75f, true) {
-      override def removeEldestEntry(
-          e: java.util.Map.Entry[(String, String), Set[(Int, Int)]]): Boolean =
-        size() > CkptGeoCacheMax
-    })
-
-  /** getOrElseUpdate over the bounded cache WITHOUT holding its lock
-    * during the compute (which runs a small Spark job): racing
-    * computes of the same key are idempotent — the checkpoint dir is
-    * immutable — so last-write-wins insertion is sound.
-    */
-  private def ckptGeosCached(key: (String, String))
-      (compute: => Set[(Int, Int)]): Set[(Int, Int)] = {
-    val hit = ckptGeoCache.get(key)
-    if (hit != null) hit
-    else { val v = compute; ckptGeoCache.put(key, v); v }
-  }
 
   /** A per-(segment, column) sketch sidecar of a checkpoint
     * (`sidecar` ∈ [[NdvSegsFile]], [[KllSegsFile]], [[RngSegsFile]] —
@@ -2547,25 +2499,70 @@ object Snapshots {
       .filter(_ <= v).maxOption
   }
 
+  /** The newest servable checkpoint at or below a version, resolved
+    * once per planning call: its dir and the segment refs it
+    * transcribed (no checkpoint: every segment is tail).
+    */
+  private[sources] final case class CkptCover(dir: Option[Path],
+                                              covered: Set[String])
+
+  private[sources] def coverOf(spark: SparkSession, tableDir: String, v: Long)
+      : CkptCover = {
+    val f = fs(spark, tableDir)
+    val ck = newestCheckpointAtOrBefore(f, tableDir, v)
+      .map(checkpointDir(tableDir, _))
+    CkptCover(ck, ck.fold(Set.empty[String])(checkpointCoveredSegs(f, _)))
+  }
+
+  /** The live entries `conjuncts` cannot rule out: the one pruning
+    * verdict compiled in physical column names (the segments'
+    * vocabulary) and evaluated inside the planning walk, which decodes
+    * the bloom bitsets of the key-checked columns only. Whether a
+    * column may hold blooms is read off the driver-cached checkpoint
+    * rows and the tail; checkpoint rows not on the driver may, so
+    * their walk job reads them — no discovery job runs first.
+    * `keepUnbucketed` keeps every file without a bucket id, whatever
+    * the verdict (the aligned family's refusal must see them).
+    */
+  private[sources] def liveEntriesUnder(spark: SparkSession,
+      tableDir: String, base: ManifestShell, cover: CkptCover,
+      conjuncts: Seq[Prune.Conjunct], withStats: Boolean = false,
+      keepUnbucketed: Boolean = false): Seq[LiveEntry] = {
+    val f = fs(spark, tableDir)
+    def hasBlooms(p: String): Boolean =
+      cover.dir.exists(cachedCkptRows(spark, _)
+        .forall(_.exists(_.blooms.contains(p)))) ||
+        base.segRefs.map(_._1).filterNot(cover.covered).exists(rel =>
+          cachedSegment(f, tableDir, rel).entries.exists(_.blooms.exists(_._1 == p)))
+    val v = compileVerdict(Some(spark), base.header, conjuncts, physical = true,
+      hasBlooms)
+    liveEntriesCheckpointed(spark, tableDir, base, cover,
+      r => (keepUnbucketed && r.bucket.isEmpty) || v.keeps(r), withStats,
+      v.bloomCols)
+  }
+
   /** The checkpoint parquet as a typed Dataset, read with
     * [[CkptFile]]'s own encoder schema — every checkpoint is a
     * `Dataset[CkptFile]` write, so no footer inference runs.
     *
-    * `withBlooms = false` REPLACES the blooms column with an empty-map
-    * literal, so the typed decode never touches the stored bloom bytes
-    * — bloom payloads dominate checkpoint bytes, and a walk whose
-    * verdict never consults a bloom must not deserialize per-file KBs
-    * (only key probes opt in).
+    * The blooms column keeps only the `bloomCols` entries, and with
+    * none it is REPLACED by an empty-map literal, so the scan never
+    * reads the stored bloom bytes — bloom payloads dominate checkpoint
+    * bytes, and a walk whose verdict never consults a bloom must not
+    * deserialize per-file KBs (only key probes opt in, for their own
+    * columns).
     */
-  private def ckptDataset(spark: SparkSession, ck: Path, withBlooms: Boolean)
+  private def ckptDataset(spark: SparkSession, ck: Path,
+                          bloomCols: Set[String])
       : org.apache.spark.sql.Dataset[CkptFile] = {
+    import org.apache.spark.sql.functions.{col, map_filter, typedlit}
     import spark.implicits._
-    val raw = spark.read
+    spark.read
       .schema(org.apache.spark.sql.Encoders.product[CkptFile].schema)
       .parquet(ck.toString)
-    (if (withBlooms) raw
-     else raw.withColumn("blooms",
-       org.apache.spark.sql.functions.typedlit(Map.empty[String, CkptBloom])))
+      .withColumn("blooms",
+        if (bloomCols.isEmpty) typedlit(Map.empty[String, Bloom])
+        else map_filter(col("blooms"), (c, _) => c.isin(bloomCols.toSeq: _*)))
       .as[CkptFile]
   }
 
@@ -2579,25 +2576,14 @@ object Snapshots {
     * selective query over a 10^7-file table collects the matching
     * files, never the table's.
     *
-    * The verdict is a conjunction. Each KEY probe `(column, keys)`
-    * keeps a file iff it survives that column's (bucket ∧ stats ∧
-    * bloom) verdict for AT LEAST ONE of the keys — [[pruneForKeys]]'
-    * per-column semantics verbatim: bucket ids when the column is the
-    * read version's bucket key (files without one are kept), footer
-    * min/max stats through the shared [[statMayContain]] (decimal
-    * literals compare by their unscaled form), and per-file bloom
-    * bitsets (files without one are kept). OR within a column, AND
-    * across columns — the superset semantics of `c1 IN (…) AND c2 IN
-    * (…)`; the row filter owns exactness. Bucket ids and bloom bit
-    * positions are evaluated up front through Spark's own hash (one
-    * tiny local job per distinct geometry, the geometries cached per
-    * immutable checkpoint), so probe and build can never drift. Each
-    * RANGE conjunct `(column, lo, hi)` keeps a file by
-    * [[FileStat.overlaps]] (inclusive bounds, unknown keeps), as
-    * [[pruneFiles]] does. The empty conjunction keeps every live file.
-    * Column names translate to the segments' physical vocabulary
-    * through the mapping current at the READ version; the manifest-path
-    * twin is [[pruneForProbes]] seeded with `pruneFiles(m, ranges)`.
+    * The verdict is the one pruning verdict ([[compileVerdict]]) over
+    * the conjunction of the key probes `(column, keys)` — OR within a
+    * column, AND across columns, the superset semantics of
+    * `c1 IN (…) AND c2 IN (…)` — and the inclusive RANGE conjuncts
+    * `(column, lo, hi)`; the row filter owns exactness. The empty
+    * conjunction keeps every live file. The covering checkpoint is
+    * resolved once per call; the manifest-path twin is
+    * [[pruneForProbes]] seeded with `pruneFiles(m, ranges)`.
     */
   def pruneFilesCheckpointedProbes(spark: SparkSession, tableDir: String,
                                    version: Option[Long],
@@ -2608,111 +2594,14 @@ object Snapshots {
       require(ks.nonEmpty, s"probe on '$c' needs at least one key") }
     require(probes.map(_._1).distinct.size == probes.size,
       s"duplicate probe columns: ${probes.map(_._1)}")
-    val f = fs(spark, tableDir)
     val v = version.orElse(latestLiveVersion(spark, tableDir)).getOrElse(
       throw new IllegalArgumentException(s"no committed version at $tableDir"))
-    val cv = newestCheckpointAtOrBefore(f, tableDir, v).getOrElse(
-      throw new IllegalArgumentException(s"no metadata checkpoint for " +
-        s"$tableDir at or below v$v — run writeMetadataCheckpoint"))
-    val ck = checkpointDir(tableDir, cv)
-    // bucket spec + schema come from the manifest file's header;
-    // per-file bucket ids ride the checkpoint rows
+    val cover = coverOf(spark, tableDir, v)
+    require(cover.dir.isDefined, s"no metadata checkpoint for " +
+      s"$tableDir at or below v$v — run writeMetadataCheckpoint")
     val base = parseManifest(spark, tableDir, v)
-    val colMapV = base.header.colMap
-    val head = base.header
-    import spark.implicits._
-    // per-probe precomputation (driver-side, all metadata-sized):
-    // the physical name (segments and checkpoint rows speak PHYSICAL),
-    // the column's type, its bucket-id set when it IS the bucket key, and the bloom probe
-    // bits per geometry — geometry discovery scans the (dominant)
-    // bloom column, but a checkpoint dir is IMMUTABLE once its sidecar
-    // exists, so the result is cached per (checkpoint, column): a
-    // serving loop's Nth point lookup pays one metadata-row job, not
-    // a bloom-column scan
-    final case class ProbePlan(phys: String,
-        keys: Seq[Any], keyType: org.apache.spark.sql.types.DataType,
-        bucketWanted: Option[Set[Int]],
-        probeBits: Map[(Int, Int), Map[String, Seq[Long]]],
-        degraded: Boolean)
-    val budget = probeKeyBudget(spark)
-    lazy val tailSegs = {
-      val covered = checkpointCoveredSegs(f, ck)
-      base.segRefs.map(_._1).filterNot(covered)
-        .map(rel => cachedSegment(f, tableDir, rel).entries)
-    }
-    val plans: Seq[ProbePlan] = probes.map { case (key, keys) =>
-      val keyType = head.schema(key).dataType
-      val bucketWanted: Option[Set[Int]] = head.bucketSpec match {
-        case Some((bk, n)) if bk == key =>
-          Some(bucketIdsOf(spark, keys, keyType, n))
-        case _ => None
-      }
-      val keyPhys = colMapV.getOrElse(key, key)
-      // over-budget IN-lists degrade to bucket-only pruning for this
-      // column ([[probeKeyBudget]]) — neither the per-geometry probe
-      // bits (O(keys) bit positions shipped in every task closure)
-      // nor the per-row O(keys) stat verdicts are built
-      val degraded = keys.size > budget
-      val probeBits: Map[(Int, Int), Map[String, Seq[Long]]] =
-        if (degraded) Map.empty
-        else {
-          val ckptGeos = ckptGeosCached((ck.toString, keyPhys))(
-            cachedCkptRows(spark, ck) match {
-              case Some(rows) => // driver rows: no discovery job
-                rows.iterator.flatMap(_.blooms.get(keyPhys))
-                  .map(b => (b.mBits, b.k)).toSet
-              case None =>
-                ckptDataset(spark, ck, withBlooms = true)
-                  .select(org.apache.spark.sql.functions.element_at(
-                    org.apache.spark.sql.functions.col("blooms"),
-                    keyPhys).as("b"))
-                  .where(org.apache.spark.sql.functions.col("b").isNotNull)
-                  .select($"b.mBits", $"b.k").distinct().collect()
-                  .map(r => (r.getInt(0), r.getInt(1))).toSet
-            })
-          val tailGeos = tailSegs.iterator.flatten.flatMap(_.blooms)
-            .collect { case (c, b) if c == keyPhys => (b.mBits, b.k) }.toSet
-          (ckptGeos ++ tailGeos).iterator.map(g =>
-            g -> bloomProbeBits(spark, keys, keyType, g._1, g._2)).toMap
-        }
-      ProbePlan(keyPhys, keys, keyType, bucketWanted, probeBits, degraded)
-    }
-    // range conjuncts in the physical vocabulary of checkpoint rows
-    // and tail segments (a retired physical name is never reused, so a
-    // live column's name never meets a dropped column's stats);
-    // decimal-typed columns never stat-prune — [[rangeStatsComparable]]
-    // — their conjunct keeps every file and the serving read's row
-    // filter owns it
-    val rangesPhys = ranges.collect {
-      case (c, lo, hi) if rangeStatsComparable(head.schema, c) =>
-        (colMapV.getOrElse(c, c), lo, hi) }
-    // per column the composition (bucket ∧ stats ∧ bloom, unknown
-    // keeps) is pruneForKeys' verbatim; the conjunction folds across
-    // columns and the range conjuncts AND in
-    def survivesPlan(p: ProbePlan)(r: CkptFile): Boolean = {
-      p.bucketWanted.forall(w => r.bucket.forall(w.contains)) &&
-      (p.degraded || (
-        r.stats.get(p.phys).forall(st =>
-          p.keys.exists(x => statMayContain(
-            FileStat(st.kind, st.min, st.max), p.keyType, x))) &&
-        r.blooms.get(p.phys).forall { b =>
-          p.probeBits.get((b.mBits, b.k)).forall { bits =>
-            val bl = Bloom(b.mBits, b.k, b.words.toArray)
-            p.keys.exists(x => bloomMightContain(bl, bits(x.toString)))
-          }
-        }))
-    }
-    val pred: CkptFile => Boolean = { r =>
-      plans.forall(p => survivesPlan(p)(r)) &&
-        rangesPhys.forall { case (c, lo, hi) =>
-          r.stats.get(c).forall(st =>
-            FileStat(st.kind, st.min, st.max).overlaps(lo, hi))
-        }
-    }
-    // a pure-range call never consults a bloom — the walk does not
-    // decode the dominant bloom column for it
-    liveEntriesCheckpointed(spark, tableDir, base, pred,
-      withBlooms = probes.nonEmpty).map(_.file).distinct.sorted
+    liveEntriesUnder(spark, tableDir, base, cover,
+      Prune.of(base.header.schema, probes, ranges)).map(_.file).distinct.sorted
   }
 
   /** The checkpoint-planned serving read, O(result) in the driver end
@@ -3319,8 +3208,8 @@ object Snapshots {
     * the segment assembly that materializes every file's
     * stat/bloom/sketch payloads (~KB/file; the planning row is ~100
     * bytes). The job also applies the range window's file pruning
-    * (the same [[FileStat.overlaps]] verdicts [[pruneFiles]] renders,
-    * against the segments' physical stat keys), so with a window only
+    * (the one pruning verdict, against the segments' physical stat
+    * keys), so with a window only
     * O(window) file names reach the driver. Returns a PLANNING
     * manifest: the version-level header plus per-file
     * bucket/rows/bytes/sorted-marker maps for exactly the surviving
@@ -3336,25 +3225,15 @@ object Snapshots {
                                  version: Option[Long],
                                  ranges: Seq[(String, Any, Any)])
       : Manifest = {
-    val f = fs(spark, tableDir)
     val base = resolveForRead(spark, tableDir, version)
     val head = base.header
-    if (newestCheckpointAtOrBefore(f, tableDir, head.version).isEmpty)
-      return assemble(spark, tableDir, base)
-    // only well-formed comparable ranges prune here; a malformed range
-    // (unknown column, missing bound) is [[alignedWindow]]'s loud
-    // refusal, which still runs on the planning manifest
-    val physRanges = ranges.collect {
-      case (c, lo, hi) if head.schema.fieldNames.contains(c) &&
-          lo != null && hi != null && rangeStatsComparable(head.schema, c) =>
-        (head.physOf(c), lo, hi)
-    }
-    val pred: CkptFile => Boolean = { r =>
-      r.bucket.isEmpty || physRanges.forall { case (c, lo, hi) =>
-        r.stats.get(c).forall(s =>
-          FileStat(s.kind, s.min, s.max).overlaps(lo, hi)) }
-    }
-    val entries = liveEntriesCheckpointed(spark, tableDir, base, pred)
+    val cover = coverOf(spark, tableDir, head.version)
+    if (cover.dir.isEmpty) return assemble(spark, tableDir, base)
+    // a malformed range (unknown column, missing bound) prunes only as
+    // far as it is well formed; [[alignedWindow]]'s loud refusal still
+    // runs on the planning manifest
+    val entries = liveEntriesUnder(spark, tableDir, base, cover,
+      Prune.of(head.schema, Nil, ranges), keepUnbucketed = true)
     val retired = head.retiredCols.toSet
     val rev = head.logicalOf
     head.copy(
@@ -3824,9 +3703,9 @@ object Snapshots {
     * `(column, lo, hi)`, inclusive — to the same plan: the canonical
     * "`date BETWEEN ? AND ?` window ⋈ today's dim slice" DFP shape.
     * They AND-compose with the dim keys' verdicts in the one
-    * planning pass (the u50 mixed-probe machinery on the checkpoint
-    * path, stats pruning seeding the key pruner on the manifest
-    * path), and the row filter re-applies them exactly on EVERY
+    * planning pass (the one pruning verdict, over the checkpoint on
+    * the checkpoint path and over the manifest otherwise), and the row
+    * filter re-applies them exactly on EVERY
     * path, including the over-budget full read — pruning is only
     * ever a scan reducer.
     */
@@ -3870,16 +3749,12 @@ object Snapshots {
           // both as row filters
           readVersionCheckpointedProbes(spark, factDir,
             Seq(factKey -> keys), Some(v), factRanges)
-        else if (factRanges.isEmpty)
-          readVersionKeys(spark, factDir, factKey, keys, Some(v))
         else {
-          // manifest path: range stats seed the key pruner — the
-          // same conjunction the checkpoint job evaluates
+          // manifest path: the same conjunction under the one verdict
           val m = readLiveManifest(spark, factDir, v)
-          val keep = pruneForProbes(spark, m,
-            pruneFiles(m, factRanges), Seq(factKey -> keys))
-          val keepNE = if (keep.nonEmpty) keep else m.files.take(1)
-          rangeFiltered(readFiles(spark, factDir, m, keepNE)
+          val keep = prunedFiles(Some(spark), m,
+            Prune.of(m.schema, Seq(factKey -> keys), factRanges), m.files)
+          rangeFiltered(readFiles(spark, factDir, m, keep)
             .filter(col(s"`$factKey`").isin(keys: _*)))
         }
       }
@@ -4895,19 +4770,16 @@ object Snapshots {
       spark, folded, outSchema)
   }
 
-  /** The manifest-path twin of [[pruneFilesCheckpointedProbes]] —
-    * [[pruneForKeys]] folded over the probes column by column (each
-    * column's survivors feed the next column's candidates; the
-    * conjunction is order-independent). The decisions-identical
-    * witness the checkpoint path is pinned against.
+  /** The manifest-path twin of [[pruneFilesCheckpointedProbes]]: of
+    * `candidates`, the files the probes' conjunction cannot rule out —
+    * the decisions-identical witness the checkpoint path is pinned
+    * against.
     */
   private[sources] def pruneForProbes(spark: SparkSession, m: Manifest,
                                       candidates: Seq[String],
                                       probes: Seq[(String, Seq[Any])])
       : Seq[String] =
-    probes.foldLeft(candidates) { case (keep, (key, keys)) =>
-      pruneForKeys(spark, m, keep, key, keys)
-    }
+    prunedFiles(Some(spark), m, Prune.of(m.schema, probes, Nil), candidates)
 
   /** The WRITE half of [[publishManifestDelta]]: serialize the
     * version-level lines of `m` plus the given segment refs and
@@ -5769,6 +5641,13 @@ object Snapshots {
     var bucketSpec: Option[(String, Int)] = None
     var pending: Option[String] = None
     var partitionCols: Seq[String] = Nil
+    // a row ledger is exact: a negative count is refused, never
+    // carried as "unknown"
+    def rowCount(v: String): Long = {
+      val n = v.toLong
+      require(n >= 0L, s"negative row count $n")
+      n
+    }
     parseLines(f, p, Header) { (kind, v) =>
       kind match {
         case "version" => require(v.toLong == version, s"not version $version")
@@ -5788,8 +5667,8 @@ object Snapshots {
         case "check" =>
           val Array(n, e) = fields(v, 2)
           checks(n) = e
-        case "rows" => dataRows = Some(v.toLong)
-        case "dvrows" => dvRows = Some(v.toLong)
+        case "rows" => dataRows = Some(rowCount(v))
+        case "dvrows" => dvRows = Some(rowCount(v))
         case "bucketspec" =>
           val Array(k, n) = fields(v, 2)
           bucketSpec = Some((k, n.toInt))
@@ -6074,7 +5953,7 @@ object Snapshots {
     // pin the mask once (the count and the write must see the same
     // rows), then size the write to the mask ([[dvSizedForWrite]])
     val mask = readFilesMeta(spark, tableDir, m,
-        dmlCandidates(spark, tableDir, base, predicate, "deleteWhere"))
+        dmlCandidates(spark, tableDir, base, predicate))
       .filter(predicate)
       .select(col(FpCol).as("file_path"), col(RiCol).as("row_index"))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
@@ -6088,7 +5967,7 @@ object Snapshots {
         .filter(_.endsWith(".parquet")).map(x => s"$dvRel/$x").toSeq.sorted
       val mPub = m.copy(version = version,
         dvs = m.dvs ++ dvs,
-        dvRows = addRowCounts(if (m.dvs.isEmpty) 0L else m.dvRows, matched),
+        dvRows = (if (m.dvs.isEmpty) 0L else m.dvRows) + matched,
         pendingMarker = None)
       if (!publishManifestDelta(f, tableDir, mPub, base, Map.empty, Nil)) {
         f.delete(dvDir, true)
@@ -6100,22 +5979,24 @@ object Snapshots {
   }
 
   /** The candidate files of a predicate DML ([[deleteWhere]],
-    * [[updateWhere]]): the live entries whose stats may hold a
-    * matching row ([[ckptPredicateVerdict]], evaluated inside the
-    * checkpoint job when one covers the version), so a
-    * `DELETE WHERE day = X` scans the files that can hold day X — on
-    * a partitioned/stat-covered table one partition's files, not the
-    * table. Conservative: the row filter on the candidate scan owns
-    * exactness, so a kept file is a scan cost, never a semantic
-    * change; an all-pruned predicate yields no candidate (the scan
-    * serves the schema'd empty frame).
+    * [[updateWhere]]): the live entries the predicate's prunable
+    * conjuncts ([[Prune.ofPredicate]]) cannot rule out under the one
+    * pruning verdict — buckets, stats (decimal equality included) and
+    * blooms, evaluated inside the checkpoint job when one covers the
+    * version — so a `DELETE WHERE day = X` scans the files that can
+    * hold day X — on a partitioned/stat-covered table one partition's
+    * files, not the table. Conservative: the row filter on the
+    * candidate scan owns exactness, so a kept file is a scan cost,
+    * never a semantic change; an all-pruned predicate yields no
+    * candidate (the scan serves the schema'd empty frame).
     */
   private[sources] def dmlCandidates(spark: SparkSession, tableDir: String,
                                      base: ManifestShell,
-                                     predicate: org.apache.spark.sql.Column,
-                                     op: String): Seq[String] =
-    liveEntriesCheckpointed(spark, tableDir, base, ckptPredicateVerdict(spark,
-      base.header, base.header.schema, predicate)).map(_.file)
+                                     predicate: org.apache.spark.sql.Column)
+      : Seq[String] =
+    liveEntriesUnder(spark, tableDir, base,
+      coverOf(spark, tableDir, base.header.version),
+      Prune.ofPredicate(predicate)).map(_.file)
 
   /** Size a dv mask for writing: 1 output file while it fits the
     * broadcast-friendly shape, sharded at `graft.dv.maxRowsPerFile`
@@ -6132,10 +6013,6 @@ object Snapshots {
     val shards = math.max(1L, (rows + maxPerFile - 1) / maxPerFile).toInt
     if (shards <= 1) mask.coalesce(1) else mask.repartition(shards)
   }
-
-  /** a + b where -1 (unknown) absorbs: unknown + anything = unknown. */
-  private def addRowCounts(a: Long, b: Long): Long =
-    if (a < 0 || b < 0) -1L else a + b
 
   /** MERGE on read (low-shuffle MERGE): apply a CDC batch to the
     * latest version by MASKING every matched target row with a
@@ -6170,7 +6047,7 @@ object Snapshots {
                   changes: DataFrame, key: String,
                   statsColumns: Seq[String] = Nil,
                   txn: Option[(String, Long)] = None): Long = {
-    import org.apache.spark.sql.functions.{col, lit, max, min, pmod, xxhash64}
+    import org.apache.spark.sql.functions.col
     require(changes.columns.contains("op"), "changes needs an op column (I/U/D)")
     val f = fs(spark, tableDir)
     val (version, base) = resolveForWrite(spark, tableDir)
@@ -6211,51 +6088,27 @@ object Snapshots {
     val tag = UUID.randomUUID().toString.take(8)
     // mask side: provenance keys of every target row the batch touches
     // (any op — U replaces, D drops, I with an existing key upserts).
-    // The mask candidates are planned with the same stats ∧ bucket
-    // composition [[prunedFilesForKeys]] applies, as serializable
-    // per-row verdicts: the batch's key range prunes by
-    // [[FileStat.overlaps]] (guarded by [[rangeStatsComparable]];
-    // unknown keeps), the batch's bucket ids prune hash-clustered
-    // tables. At 100 TB a CDC batch touching one day's keys masks
-    // against that day's files, not the decade.
+    // The mask candidates are planned under the one pruning verdict,
+    // with [[readLatestForKeys]]' conjuncts: the batch's key range
+    // prunes by footer stats, the batch's bucket ids prune
+    // hash-clustered tables. At 100 TB a CDC batch touching one day's
+    // keys masks against that day's files, not the decade.
     val keys = batch.select(col(key)).distinct()
-    val keyType = old(key).dataType
-    val wanted: Option[Set[Int]] = m.bucketSpec.collect {
-      case (bk, n) if bk == key =>
-        keys.select(pmod(xxhash64(col(key).cast(keyType)), lit(n.toLong))
-          .cast("int")).distinct().collect().map(_.getInt(0)).toSet
-    }
-    // the batch's key range (one job over the batch): None when every
-    // batch key is NULL — no row can match — and (null, null) when the
-    // stats cannot compare it
-    def keyRange(): Option[(Any, Any)] = {
-      val b = keys.agg(min(col(key)), max(col(key))).head()
-      if (b.isNullAt(0)) None
-      else Some(
-        if (rangeStatsComparable(old, key))
-          (b.get(0), b.get(1))
-        else (null, null))
-    }
-    def plan(range: (Any, Any)): Seq[LiveEntry] = {
-      val (loV, hiV) = range
-      val wantedSet = wanted.orNull
-      val pk = m.physOf(key)
-      liveEntriesCheckpointed(spark, tableDir, base, { r: CkptFile =>
-        (loV == null || r.stats.get(pk).forall(s =>
-          FileStat(s.kind, s.min, s.max).overlaps(loV, hiV))) &&
-          (wantedSet == null || r.bucket.forall(wantedSet.contains))
-      }, withStats = true)
-    }
+    val cover = coverOf(spark, tableDir, m.version)
+    val bucketed = batchBuckets(m, key, keys)
+    def plan(range: Prune.Conjunct*): Seq[LiveEntry] = liveEntriesUnder(
+      spark, tableDir, base, cover, bucketed ++ range, withStats = true)
     // the range prunes only files carrying a key stat: a checkpoint job
     // evaluates it inside the walk, while the checkpoint-free walk is
     // driver-side and looks for such a file before paying for the range
+    // (one job over the batch; no range when every batch key is NULL —
+    // no row can match)
+    def ranged = batchKeyRange(key, keys).fold(Seq.empty[LiveEntry])(plan(_))
     val entries: Seq[LiveEntry] =
-      if (newestCheckpointAtOrBefore(f, tableDir, m.version).isDefined)
-        keyRange().fold(Seq.empty[LiveEntry])(plan)
+      if (cover.dir.isDefined) ranged
       else {
-        val all = plan((null, null))
-        if (!all.exists(_.statCols.contains(m.physOf(key)))) all
-        else keyRange().fold(Seq.empty[LiveEntry])(plan)
+        val all = plan()
+        if (all.exists(_.statCols.contains(m.physOf(key)))) ranged else all
       }
     val maskFiles = entries.map(_.file)
     val dvRel = f"dv/v$version%06d-$tag"
@@ -6329,8 +6182,8 @@ object Snapshots {
     // which a lossless widening preserves)
     val mPub = m.copy(version = version, schema = schema,
       txns = txns, dvs = m.dvs ++ dvs,
-      dataRows = addRowCounts(m.dataRows, nAppended),
-      dvRows = addRowCounts(if (m.dvs.isEmpty) 0L else m.dvRows, nMasked),
+      dataRows = m.dataRows + nAppended,
+      dvRows = (if (m.dvs.isEmpty) 0L else m.dvRows) + nMasked,
       colMap = colMap, pendingMarker = None)
     if (!publishManifestDelta(f, tableDir, mPub, base, Map.empty,
         freshSegEntries(mPub, written, newStats, newNulls, newFileMeta,
@@ -6345,111 +6198,56 @@ object Snapshots {
     } finally batch.unpersist(false)
   }
 
-  /** The files of `m` that can hold ANY key of `keys` — the stats ∧
-    * bucket composition of the SQL MERGE payload join (the verdicts
-    * [[mergeOnRead]]'s mask planning renders per planning row): when
-    * the manifest carries footer stats on the key, files outside the
-    * batch's [min, max] key range drop (one tiny agg on the batch buys
-    * it); when the table is hash-clustered
-    * ON the key, files holding none of the batch's buckets drop too
-    * (one distinct agg, collect bounded by numBuckets — min/max stats
-    * cannot narrow a hash-distributed key, this can). At 100 TB a CDC
-    * batch touching one day's keys resolves against that day's files,
-    * not the decade. Conservative by construction: files without a
-    * recorded stat or bucket entry always stay (unknown ≠ empty), so
-    * a pruned file provably holds NO batch key — pruning is a scan
-    * reducer, never a semantic change (matched-row detection over the
-    * survivors equals detection over the full file list).
+  /** A change batch's key range as a conjunct (one agg over the
+    * batch); None when every batch key is NULL — no row can match.
     */
-  private[sources] def prunedFilesForKeys(spark: SparkSession, m: Manifest,
-                                          key: String, keys: DataFrame)
-      : Seq[String] = {
-    import org.apache.spark.sql.functions.{col, lit, max, min, pmod, xxhash64}
-    // probe at the table's recorded type (type-sensitive hash; a
-    // narrower batch key must hash like the stored mapping does)
-    val typedKey = col(key).cast(m.schema(key).dataType)
-    val hasKeyStats = m.stats.keys.exists(_._2 == key)
-    val statsPruned =
-      if (!hasKeyStats) m.files
-      else {
-        val b = keys.agg(min(col(key)), max(col(key))).head()
-        if (b.isNullAt(0)) Seq.empty else pruneFiles(m, key, b.get(0), b.get(1))
-      }
-    m.bucketSpec match {
-      case Some((bk, n)) if bk == key =>
-        val wanted = keys
-          .select(pmod(xxhash64(typedKey), lit(n.toLong)).cast("int"))
-          .distinct().collect().map(_.getInt(0)).toSet
-        statsPruned.filter(rel => m.buckets.get(rel).forall(wanted.contains))
-      case _ => statsPruned
+  private def batchKeyRange(key: String, keys: DataFrame)
+      : Option[Prune.Conjunct] = {
+    import org.apache.spark.sql.functions.{col, max, min}
+    val b = keys.agg(min(col(key)), max(col(key))).head()
+    if (b.isNullAt(0)) None
+    else Some(Prune.Range(key, Some(b.get(0)), Some(b.get(1))))
+  }
+
+  /** A change batch's bucket ids when `m` is hash-clustered on `key`
+    * (one distinct agg, collect bounded by numBuckets).
+    */
+  private def batchBuckets(m: Manifest, key: String, keys: DataFrame)
+      : Seq[Prune.Conjunct] = {
+    import org.apache.spark.sql.functions.{col, lit, pmod, xxhash64}
+    m.bucketSpec.toSeq.collect { case (bk, n) if bk == key =>
+      Prune.Buckets(keys.select(pmod(xxhash64(col(key).cast(m.schema(key)
+        .dataType)), lit(n.toLong)).cast("int"))
+        .distinct().collect().map(_.getInt(0)).toSet)
     }
   }
 
   /** The LATEST live version read pruned to the files that may hold
-    * any of `keys` ([[prunedFilesForKeys]]), deletion vectors applied
-    * — the target side of a small-batch SQL MERGE's payload join:
-    * matched-row payloads resolve against the files that can match,
-    * never the table. Returns the frame plus (chosen, total) file
-    * counts so callers (and specs) can audit that pruning happened.
+    * any of `keys`, deletion vectors applied — the target side of a
+    * small-batch SQL MERGE's payload join, with the conjuncts
+    * [[mergeOnRead]]'s mask planning evaluates: when the manifest
+    * carries footer stats on the key, files outside the batch's
+    * [min, max] key range drop ([[batchKeyRange]]); when the table is
+    * hash-clustered ON the key, files holding none of the batch's
+    * buckets drop too ([[batchBuckets]] — min/max stats cannot narrow
+    * a hash-distributed key, this can). At 100 TB a CDC batch touching
+    * one day's keys resolves against that day's files, not the decade.
+    * Conservative by construction: files without a recorded stat or
+    * bucket entry always stay (unknown ≠ empty), so a pruned file
+    * provably holds NO batch key. Returns the frame plus (chosen,
+    * total) file counts so callers (and specs) can audit that pruning
+    * happened.
     */
   private[graft] def readLatestForKeys(spark: SparkSession, tableDir: String,
                                        key: String, keys: DataFrame)
       : (DataFrame, Int, Int) = {
     val m = assemble(spark, tableDir, resolveForRead(spark, tableDir, None))
-    val pruned = prunedFilesForKeys(spark, m, key, keys)
+    val range =
+      if (!m.stats.keys.exists(_._2 == key)) Some(Nil)
+      else batchKeyRange(key, keys).map(Seq(_))
+    val pruned = range.fold(Seq.empty[String])(r =>
+      prunedFiles(Some(spark), m, r ++ batchBuckets(m, key, keys), m.files))
     (readFiles(spark, tableDir, m, pruned), pruned.size, m.files.size)
-  }
-
-  /** A DML predicate's prunable conjuncts as a SERIALIZABLE per-row
-    * checkpoint verdict — the candidate planner of [[dmlCandidates]],
-    * run inside the checkpoint job ([[liveEntriesCheckpointed]]) when
-    * one covers the version: `=`, `IN` (any candidate may be
-    * present) and one-sided ranges evaluate by
-    * [[FileStat.overlaps]]/mayGe/mayLe under the
-    * [[rangeStatsComparable]] guard. Conservative by construction —
-    * unknown shapes, unknown columns and incomparable types keep the
-    * file (a kept file is a scan cost, never a semantic change; the
-    * row filter owns exactness). `=`/`IN` on the bucket key also prune
-    * by bucket id ([[bucketIdsOf]]) — min/max stats cannot narrow a
-    * hash-distributed key, this can. Bloom verdicts are not applied
-    * (the planning rows carry no bloom bits).
-    */
-  private def ckptPredicateVerdict(spark: SparkSession, m: Manifest,
-      old: org.apache.spark.sql.types.StructType,
-      predicate: org.apache.spark.sql.Column): CkptFile => Boolean = {
-    val conjuncts = org.apache.spark.sql.graftbridge.Bridge
-      .prunableConjuncts(predicate)
-    val wanted: Option[Set[Int]] = m.bucketSpec.flatMap { case (bk, n) =>
-      val probes = conjuncts.collect {
-        case ("=", `bk`, vs) => vs
-        case ("in", `bk`, vs) if vs.nonEmpty => vs
-      }
-      if (probes.isEmpty) None
-      else Some(probes.map(vs => bucketIdsOf(spark, vs, old(bk).dataType, n))
-        .reduce(_ intersect _))
-    }
-    val hints = conjuncts
-      .flatMap {
-        case (op @ ("=" | ">=" | "<="), c, vs @ Seq(_))
-            if rangeStatsComparable(old, c) =>
-          Seq((op, m.physOf(c), vs))
-        case ("in", c, vs) if vs.nonEmpty && rangeStatsComparable(old, c) =>
-          Seq(("in", m.physOf(c), vs))
-        case _ => Nil
-      }
-    (r: CkptFile) =>
-      wanted.forall(w => r.bucket.forall(w.contains)) && hints.forall {
-        case ("=", c, Seq(v)) => r.stats.get(c).forall(s =>
-          FileStat(s.kind, s.min, s.max).overlaps(v, v))
-        case (">=", c, Seq(v)) => r.stats.get(c).forall(s =>
-          FileStat(s.kind, s.min, s.max).mayGe(v))
-        case ("<=", c, Seq(v)) => r.stats.get(c).forall(s =>
-          FileStat(s.kind, s.min, s.max).mayLe(v))
-        // IN: a file survives if ANY candidate value may be present
-        case ("in", c, vs) => r.stats.get(c).forall(s =>
-          vs.exists(v => FileStat(s.kind, s.min, s.max).overlaps(v, v)))
-        case _ => true
-      }
   }
 
   /** Row-level UPDATE as merge-on-read — `UPDATE t SET ... WHERE p`
@@ -6486,7 +6284,7 @@ object Snapshots {
         s"SET column '$c' is not in the table schema")
     }
     val matched = readFilesMeta(spark, tableDir, m,
-        dmlCandidates(spark, tableDir, base, predicate, "updateWhere"))
+        dmlCandidates(spark, tableDir, base, predicate))
       .filter(predicate)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     try {
@@ -6525,8 +6323,8 @@ object Snapshots {
       val written = newFileMeta.keys.toSeq.sorted
       val mPub = m.copy(version = version, schema = schema,
         dvs = m.dvs ++ dvs,
-        dataRows = addRowCounts(m.dataRows, n),
-        dvRows = addRowCounts(if (m.dvs.isEmpty) 0L else m.dvRows, n),
+        dataRows = m.dataRows + n,
+        dvRows = (if (m.dvs.isEmpty) 0L else m.dvRows) + n,
         pendingMarker = None)
       if (!publishManifestDelta(f, tableDir, mPub, base, Map.empty,
           freshSegEntries(mPub, written,
@@ -6637,6 +6435,7 @@ object Snapshots {
     // the planning walk; the driver holds O(masked files + touched
     // segments) metadata
     val entries = liveEntriesCheckpointed(spark, tableDir, base,
+      coverOf(spark, tableDir, base.header.version),
       (r: CkptFile) => maskedTails.contains(dataTail(r.file)),
       withStats = true)
     if (entries.isEmpty) // mask rows reference no live file: drop them
@@ -6689,6 +6488,189 @@ object Snapshots {
       : Map[String, Set[String]] =
     entries.groupBy(_.seg).map { case (s, es) => s -> es.iterator.map(_.file).toSet }
 
+  // ------------------------------------------------------------------
+  // The one file-pruning verdict. Every planner decides "can this file
+  // hold a matching row?" here: a predicate translates to [[Prune]]
+  // conjuncts (pushed V1 filters for the serving read, a DML
+  // predicate's prunable hints, explicit probes and ranges for the
+  // public planners), [[compileVerdict]] compiles them ONCE per
+  // planning call against the read version's schema, column mapping
+  // and bucket spec, and the compiled [[Verdict]] runs over checkpoint
+  // rows where the caller already walks files — over the assembled
+  // manifest's files on the driver (logical names, [[prunedFiles]]) or
+  // over checkpoint and tail rows inside [[liveEntriesCheckpointed]]
+  // (physical names, [[liveEntriesUnder]]). Anything unknown keeps the
+  // file: pruning is a scan reducer, and the row filter owns exactness.
+  // ------------------------------------------------------------------
+
+  /** The verdict's conjuncts, in LOGICAL column names, and their
+    * three translators. `KeyIn` is `col IN keys` (`=` is one key),
+    * `Range` an inclusive range with optional bounds, `Buckets` the
+    * bucket ids a file may hold (files without one keep).
+    */
+  private[sources] object Prune {
+    sealed trait Conjunct
+    final case class KeyIn(col: String, keys: Seq[Any]) extends Conjunct
+    final case class Range(col: String, lo: Option[Any], hi: Option[Any])
+      extends Conjunct
+    final case class Buckets(ids: Set[Int]) extends Conjunct
+    final case class IsNull(col: String) extends Conjunct
+    final case class NotNull(col: String) extends Conjunct
+
+    /** Explicit key probes and inclusive ranges (the public planners);
+      * a probe on a column `schema` lacks is refused, naming it.
+      */
+    def of(schema: org.apache.spark.sql.types.StructType,
+           probes: Seq[(String, Seq[Any])],
+           ranges: Seq[(String, Any, Any)]): Seq[Conjunct] =
+      probes.map { case (c, ks) =>
+        require(schema.fieldNames.contains(c), s"unknown probe column " +
+          s"'$c' (columns: ${schema.fieldNames.mkString(", ")})")
+        KeyIn(c, ks)
+      } ++ ranges.map { case (c, lo, hi) => Range(c, Option(lo), Option(hi)) }
+
+    /** Pushed V1 filters (the serving read). Decimal range literals do
+      * not translate ([[rangeStatsComparable]]); other shapes (Or, Not,
+      * string matches) are the row filter's alone.
+      */
+    def ofFilters(filters: Seq[org.apache.spark.sql.sources.Filter])
+        : Seq[Conjunct] = {
+      import org.apache.spark.sql.{sources => v1}
+      def bound(v: Any) =
+        Option(v).filterNot(_.isInstanceOf[java.math.BigDecimal])
+      def lower(c: String, v: Any) = bound(v).map(b => Range(c, Some(b), None))
+      def upper(c: String, v: Any) = bound(v).map(b => Range(c, None, Some(b)))
+      filters.flatMap {
+        case v1.EqualTo(c, v) => Some(KeyIn(c, Seq(v)))
+        case v1.EqualNullSafe(c, v) => Some(KeyIn(c, Seq(v)))
+        case v1.In(c, vs) => Some(KeyIn(c, vs.toSeq))
+        case v1.GreaterThan(c, v) => lower(c, v)
+        case v1.GreaterThanOrEqual(c, v) => lower(c, v)
+        case v1.LessThan(c, v) => upper(c, v)
+        case v1.LessThanOrEqual(c, v) => upper(c, v)
+        case v1.IsNull(c) => Some(IsNull(c))
+        case v1.IsNotNull(c) => Some(NotNull(c))
+        case _ => None
+      }
+    }
+
+    /** A DML predicate's prunable hints
+      * ([[org.apache.spark.sql.graftbridge.Bridge.prunableConjuncts]]).
+      */
+    def ofPredicate(predicate: org.apache.spark.sql.Column): Seq[Conjunct] =
+      org.apache.spark.sql.graftbridge.Bridge.prunableConjuncts(predicate)
+        .collect {
+          case ("=" | "in", c, vs) => KeyIn(c, vs)
+          case (">=", c, Seq(v)) => Range(c, Some(v), None)
+          case ("<=", c, Seq(v)) => Range(c, None, Some(v))
+        }
+  }
+
+  /** A compiled conjunction over one file's checkpoint row: pure and
+    * serializable (the checkpoint walk ships it in its task closure).
+    * `cols` are the columns its checks read and `bloomCols` those whose
+    * blooms they read, in the vocabulary it was compiled for.
+    */
+  private[sources] final case class Verdict(checks: Seq[CkptFile => Boolean],
+                                            cols: Set[String],
+                                            bloomCols: Set[String]) {
+    def keeps(r: CkptFile): Boolean = checks.forall(_(r))
+  }
+
+  /** Compile `conjuncts` against `head` (the read version's schema,
+    * column mapping and bucket spec) into one [[Verdict]], in physical
+    * names when `physical`. The per-file rules:
+    *  - `KeyIn`: bucket ids when the column is the bucket key, footer
+    *    stats through [[statMayContain]] (decimals exactly) and blooms —
+    *    a file survives if SOME key may be present. Bucket ids and bloom
+    *    bit positions come from Spark's own hash ([[probeHashes]]), so
+    *    probe and build can never drift; a bloom of another geometry
+    *    than this engine builds keeps. Past [[probeKeyBudget]] keys
+    *    only the bucket check is built.
+    *  - `Range`: [[FileStat.overlaps]]/`mayGe`/`mayLe`, never on decimal
+    *    columns ([[rangeStatsComparable]]).
+    *  - `IsNull`/`NotNull`: a recorded zero null count rules out
+    *    IS NULL, a null count equal to the file's rows IS NOT NULL.
+    * A conjunct on a column the schema lacks, or without a non-null key
+    * or bound, keeps every file; so does a `KeyIn` without a `spark`
+    * session to hash its keys (the range-only [[pruneFiles]]). Bloom
+    * bits are computed only for a column `hasBlooms` says may hold
+    * blooms (its blooms are unread otherwise).
+    */
+  private[sources] def compileVerdict(spark: Option[SparkSession],
+      head: Manifest, conjuncts: Seq[Prune.Conjunct], physical: Boolean,
+      hasBlooms: String => Boolean): Verdict = {
+    import Prune._
+    val schema = head.schema
+    def known(c: String) = schema.fieldNames.contains(c)
+    def name(c: String) = if (physical) head.physOf(c) else c
+    def inBuckets(ids: Set[Int]): CkptFile => Boolean =
+      _.bucket.forall(ids.contains)
+    var bloomCols = Set.empty[String]
+    def keyChecks(s: SparkSession, c: String, keys: Seq[Any])
+        : Seq[CkptFile => Boolean] = {
+      val (kt, p) = (schema(c).dataType, name(c))
+      val bucketed = head.bucketSpec.toSeq.collect { case (`c`, n) =>
+        inBuckets(probeHashes(s, keys, kt, Seq(None), n).map(_.head.toInt).toSet)
+      }
+      if (keys.size > probeKeyBudget(s)) return bucketed
+      val bits = if (!hasBlooms(p)) Nil else {
+        bloomCols += p
+        probeHashes(s, keys, kt, (0 until BloomK).map(Some(_)), BloomMBits)
+      }
+      bucketed :+ { (r: CkptFile) =>
+        r.stats.get(p).forall(st => keys.exists(statMayContain(st, kt, _))) &&
+          r.blooms.get(p).forall(b => bits.isEmpty ||
+            (b.mBits, b.k) != (BloomMBits, BloomK) ||
+            bits.exists(bloomMightContain(b, _)))
+      }
+    }
+    val checks = conjuncts.flatMap {
+      case Buckets(ids) => Seq(inBuckets(ids))
+      case KeyIn(c, ks) if known(c) && ks.exists(_ != null) =>
+        spark.toSeq.flatMap(keyChecks(_, c, ks.filter(_ != null).distinct))
+      case Range(c, lo, hi) if known(c) && rangeStatsComparable(schema, c) &&
+          (lo.isDefined || hi.isDefined) =>
+        val p = name(c)
+        Seq((r: CkptFile) => r.stats.get(p).forall(st => (lo, hi) match {
+          case (Some(l), Some(h)) => st.overlaps(l, h)
+          case (Some(l), None) => st.mayGe(l)
+          case (None, h) => h.forall(st.mayLe)
+        }))
+      case IsNull(c) if known(c) =>
+        val p = name(c)
+        Seq((r: CkptFile) => r.nulls.get(p).forall(_ > 0L))
+      case NotNull(c) if known(c) =>
+        val p = name(c)
+        Seq((r: CkptFile) => r.nulls.get(p).forall(_ != r.rows))
+      case _ => Nil
+    }
+    val cols = conjuncts.collect {
+      case KeyIn(c, _) => c; case Range(c, _, _) => c
+      case IsNull(c) => c; case NotNull(c) => c
+    }.filter(known).map(name).toSet
+    Verdict(checks, cols, bloomCols)
+  }
+
+  /** Of `candidates`, the files of the assembled manifest `m` that
+    * `conjuncts` cannot rule out — the verdict on the driver, over each
+    * file's metadata transcribed as a checkpoint row (only the columns
+    * the verdict reads). O(files) driver work, no filesystem access.
+    */
+  private[sources] def prunedFiles(spark: Option[SparkSession], m: Manifest,
+                                   conjuncts: Seq[Prune.Conjunct],
+                                   candidates: Seq[String]): Seq[String] = {
+    val v = compileVerdict(spark, m, conjuncts, physical = false,
+      c => m.blooms.keysIterator.exists(_._2 == c))
+    def of[A](rel: String, facts: Map[(String, String), A]): Map[String, A] =
+      v.cols.iterator.flatMap(c => facts.get((rel, c)).map(c -> _)).toMap
+    // every live file has a ledger row count; -1 (unknown) never
+    // equals a null count, so NotNull keeps
+    candidates.filter(rel => v.keeps(CkptFile(rel, m.buckets.get(rel),
+      m.fileRows.getOrElse(rel, -1L), 0L, of(rel, m.stats),
+      of(rel, m.nullCounts), "", of(rel, m.blooms))))
+  }
+
   /** The files of `version` that can contain rows with `column` in
     * [lo, hi] — manifest-stat file skipping, the driver-side analog of
     * parquet row-group pruning one level up. Files without a recorded
@@ -6696,12 +6678,8 @@ object Snapshots {
     * the stat's own kind (long/double/string). O(files) driver work on
     * the already-loaded manifest, no filesystem access.
     */
-  def pruneFiles(m: Manifest, column: String, lo: Any, hi: Any): Seq[String] = {
-    // decimal columns never range-stat-prune (unscaled footer ints vs
-    // value bounds — see [[rangeStatsComparable]]): keep everything
-    if (!rangeStatsComparable(m.schema, column)) return m.files
-    m.files.filter(f => m.stats.get((f, column)).forall(_.overlaps(lo, hi)))
-  }
+  def pruneFiles(m: Manifest, column: String, lo: Any, hi: Any): Seq[String] =
+    pruneFiles(m, Seq((column, lo, hi)))
 
   /** Conjunctive multi-column pruning: a file survives only if EVERY
     * `(column, lo, hi)` range can overlap its stats — the reader-side
@@ -6709,62 +6687,25 @@ object Snapshots {
     * layout gives tight per-file boxes in BOTH dimensions, so a 2-d
     * box predicate multiplies the two single-column skip rates.
     */
-  def pruneFiles(m: Manifest, preds: Seq[(String, Any, Any)]): Seq[String] = {
-    val ps = preds.filter { case (c, _, _) => rangeStatsComparable(m.schema, c) }
-    m.files.filter(f => ps.forall { case (c, lo, hi) =>
-      m.stats.get((f, c)).forall(_.overlaps(lo, hi)) })
-  }
+  def pruneFiles(m: Manifest, preds: Seq[(String, Any, Any)]): Seq[String] =
+    prunedFiles(None, m, Prune.of(m.schema, Nil, preds), m.files)
 
   /** Time travel + file skipping: the rows of `version` after pruning
     * files whose [min,max] for `column` cannot intersect [lo, hi].
     * The caller still applies the row-level filter — pruning is a scan
     * reducer, never a semantic change (exactly parquet's own
-    * footer-pruning contract).
-    *
-    * All-pruned contract (DIVERGES from [[readVersionCheckpointedProbes]],
-    * deliberately): this path refuses loudly, because it predates
-    * recorded schemas — a zero-file read had no schema to serve, and
-    * callers of the eager-manifest path have treated all-pruned as a
-    * probable predicate bug ever since. The checkpoint-planned twin
-    * serves the schema'd EMPTY frame instead (the stats proved no file
-    * overlaps; the recorded schema makes the zero-file frame well
-    * typed). Callers switching between the paths must expect the
-    * difference.
+    * footer-pruning contract). A range that misses every file serves
+    * the schema'd empty frame.
     */
   def readVersionPruned(spark: SparkSession, tableDir: String, version: Long,
-                        column: String, lo: Any, hi: Any): DataFrame = {
-    val m = readManifest(spark, tableDir, version)
-    val keep = pruneFiles(m, column, lo, hi)
-    require(keep.nonEmpty || m.files.isEmpty,
-      s"every file pruned — read the unpruned version for schema-only results")
-    readFiles(spark, tableDir, m, keep)
-  }
+                        column: String, lo: Any, hi: Any): DataFrame =
+    readVersionPruned(spark, tableDir, version, Seq((column, lo, hi)))
 
   /** Multi-predicate variant of [[readVersionPruned]]. */
   def readVersionPruned(spark: SparkSession, tableDir: String, version: Long,
                         preds: Seq[(String, Any, Any)]): DataFrame = {
     val m = readManifest(spark, tableDir, version)
-    val keep = pruneFiles(m, preds)
-    require(keep.nonEmpty || m.files.isEmpty,
-      s"every file pruned — read the unpruned version for schema-only results")
-    readFiles(spark, tableDir, m, keep)
-  }
-
-  /** The bucket ids `literals` hash to under the table's bucket spec.
-    * Evaluated through Spark's OWN `xxhash64` on the literal CAST to
-    * the stored column type — the write side hashed the native column,
-    * and xxhash64 is type-sensitive, so an `Int` literal probed
-    * against a `bigint` key must hash as bigint. One local job over
-    * `literals.size` rows, collect bounded by the same.
-    */
-  private def bucketIdsOf(spark: SparkSession, literals: Seq[Any],
-                          keyType: org.apache.spark.sql.types.DataType,
-                          n: Int): Set[Int] = {
-    import org.apache.spark.sql.functions.{col, lit, pmod, xxhash64}
-    import spark.implicits._
-    literals.map(_.toString).toDF("k")
-      .select(pmod(xxhash64(col("k").cast(keyType)), lit(n.toLong)).cast("int"))
-      .collect().map(_.getInt(0)).toSet
+    readFiles(spark, tableDir, m, pruneFiles(m, preds))
   }
 
   /** Point lookup: the rows of `version` whose `key` is in `keys`,
@@ -6777,7 +6718,8 @@ object Snapshots {
     * the unclustered tail. Deletion vectors apply as on any read; the
     * row-level `isin` filter still runs (bucket pruning is a scan
     * reducer — a bucket holds every key hashing to it). Works on
-    * unbucketed tables too (no pruning, same answer).
+    * unbucketed tables too (no pruning, same answer); keys no file can
+    * hold serve the schema'd empty frame.
     */
   def readVersionKeys(spark: SparkSession, tableDir: String,
                       key: String, keys: Seq[Any],
@@ -6788,11 +6730,8 @@ object Snapshots {
       "readVersionKeys keys must be non-null (SQL NULL never equals NULL " +
         "— an isin probe cannot match it, and the index probes cannot hash it)")
     val m = assemble(spark, tableDir, resolveForRead(spark, tableDir, version))
-    val keep = pruneForKeys(spark, m, m.files, key, keys)
-    // every file pruned ⇒ the keys cannot exist; one file is kept for
-    // the schema and the row filter (exact either way) returns empty
-    val keepNE = if (keep.nonEmpty) keep else m.files.take(1)
-    readFiles(spark, tableDir, m, keepNE).filter(col(key).isin(keys: _*))
+    readFiles(spark, tableDir, m, pruneForProbes(spark, m, m.files,
+      Seq(key -> keys))).filter(col(key).isin(keys: _*))
   }
 
   /** Per-column IN-list size past which the per-file stat/bloom
@@ -6806,71 +6745,22 @@ object Snapshots {
     * planner). Bucket pruning survives the budget: its wanted-set is
     * ≤ numBuckets however many keys probe, and its per-file verdict
     * is one Set lookup. Session-tunable via `graft.probe.maxKeys`;
-    * BOTH planners (manifest + checkpoint) read the same budget so
-    * their decisions stay identical.
+    * every planner compiles the one verdict under the same budget.
     */
   private def probeKeyBudget(spark: SparkSession): Int =
     graft.GraftConf.int(spark, "graft.probe.maxKeys", 1000)
 
-  /** Equality/IN pruning shared by [[readVersionKeys]] and the
-    * [[GraftRelation]] pushed-filter path: of `candidates`, the files
-    * that might hold ANY of `keys` in `key`, composing all three
-    * pruning primitives — bucket (when `key` is the table's bucket
-    * key), footer min/max stats, then per-file blooms. Bit positions
-    * and bucket ids are evaluated through Spark's own hash (one tiny
-    * local job), so probe and build can never drift. IN-lists past
-    * [[probeKeyBudget]] prune on buckets only (see its scaladoc).
-    */
-  private[sources] def pruneForKeys(spark: SparkSession, m: Manifest,
-                                    candidates: Seq[String], key: String,
-                                    keys: Seq[Any]): Seq[String] = {
-    val bucketPruned = m.bucketSpec match {
-      case Some((bk, n)) if bk == key =>
-        val wanted = bucketIdsOf(spark, keys, m.schema(key).dataType, n)
-        candidates.filter(rel => m.buckets.get(rel).forall(wanted.contains))
-      case _ => candidates
-    }
-    if (keys.size > probeKeyBudget(spark)) return bucketPruned
-    // stat pruning composes when the key carries footer stats: keep a
-    // file only if SOME wanted key overlaps its [min,max]. Decimal
-    // probes compare in the footer's OWN representation — unscaled
-    // integers at the column's scale (see [[statMayContain]]) — so
-    // decimal point lookups prune on stats too, with conservative
-    // keeps for any stat not decodable that way.
-    val keyType = m.schema(key).dataType
-    val statKeep = bucketPruned.filter(rel =>
-      m.stats.get((rel, key)).forall(st =>
-        keys.exists(k => statMayContain(st, keyType, k))))
-    // bloom pruning composes last: a file indexed on `key` survives
-    // only if SOME wanted key might be in its bloom — the primitive
-    // that prunes point lookups on columns the table is NOT clustered
-    // by (stats span, buckets absent). Bit positions evaluated through
-    // Spark's own hash, per bloom geometry present in the manifest.
-    val geometries = m.blooms.collect {
-      case ((_, c), b) if c == key => (b.mBits, b.k) }.toSet
-    val probeBits: Map[(Int, Int), Map[String, Seq[Long]]] =
-      geometries.map(g =>
-        g -> bloomProbeBits(spark, keys, keyType, g._1, g._2)).toMap
-    statKeep.filter(rel => m.blooms.get((rel, key)).forall { b =>
-      val bits = probeBits((b.mBits, b.k))
-      keys.exists(k => bloomMightContain(b, bits(k.toString)))
-    })
-  }
-
-  /** The one equality-probe-vs-footer-stat verdict both the manifest
-    * path ([[pruneForKeys]]) and the checkpoint-planned path
-    * ([[pruneFilesCheckpointedProbes]]) run — shared so their
-    * decisions can never drift. For non-decimal keys this is plain
-    * [[FileStat.overlaps]]. DECIMAL keys compare in the footer's OWN
-    * representation: int-backed parquet decimals (precision ≤ 18)
-    * record UNSCALED integers as "long"-kind stats, so the literal is
-    * rescaled EXACTLY to the column's scale and compared as its
-    * unscaled long — exact pruning, never a lossy double detour.
-    * Conservative keeps everywhere the decoding is not airtight: a
-    * non-"long" stat kind (binary-backed >18-digit decimals), a
-    * literal that does not rescale exactly (cannot equal any stored
-    * value, but the row filter owns that verdict), or a non-numeric
-    * literal. Scale-drift is impossible by construction: a
+  /** The equality-probe-vs-footer-stat rule of the one verdict. For
+    * non-decimal keys this is plain [[FileStat.overlaps]]. DECIMAL keys
+    * compare in the footer's OWN representation: int-backed parquet
+    * decimals (precision ≤ 18) record UNSCALED integers as "long"-kind
+    * stats, so the literal is rescaled EXACTLY to the column's scale
+    * and compared as its unscaled long — exact pruning, never a lossy
+    * double detour. Conservative keeps everywhere the decoding is not
+    * airtight: a non-"long" stat kind (binary-backed >18-digit
+    * decimals), a literal that does not rescale exactly (cannot equal
+    * any stored value, but the row filter owns that verdict), or a
+    * non-numeric literal. Scale-drift is impossible by construction: a
     * scale-growing decimal widening DROPS carried stats at the
     * widening commit (like blooms/NDVs) and a batch written at a
     * mismatched scale records none ([[batchScaleMismatchCols]]), so
@@ -6886,17 +6776,14 @@ object Snapshots {
       case _ => st.overlaps(k, k)
     }
 
-  /** Range-vs-footer-stat verdict shared by every range pruning path:
-    * DECIMAL columns of `schema` never stat-prune. Int-backed decimal footer stats are
-    * UNSCALED integers while a range bound compares by VALUE, so the
-    * comparison is meaningless; such predicates keep the file and the
-    * row filter owns them ([[readVersionFiltered]]'s documented rule
-    * for its pushed range filters, enforced here for every caller
-    * that takes `(column, lo, hi)` predicates). Equality/IN probes on
-    * decimals DO prune — through [[statMayContain]]'s exact
-    * unscaled-long decode, which a two-sided range cannot use (its
-    * bounds are not required to be representable at the column's
-    * scale).
+  /** The range rule of the one verdict: DECIMAL columns of `schema`
+    * never stat-prune. Int-backed decimal footer stats are UNSCALED
+    * integers while a range bound compares by VALUE, so the comparison
+    * is meaningless; such predicates keep the file and the row filter
+    * owns them. Equality/IN probes on decimals DO prune — through
+    * [[statMayContain]]'s exact unscaled-long decode, which a range
+    * cannot use (its bounds are not required to be representable at
+    * the column's scale).
     */
   private def rangeStatsComparable(
       schema: org.apache.spark.sql.types.StructType, column: String): Boolean =
@@ -6957,12 +6844,12 @@ object Snapshots {
 
   /** The [[GraftRelation]] read path: `version`'s rows (deletion
     * vectors applied) scanning only the files the pushed V1 filters
-    * cannot rule out. Top-level conjuncts prune: equality/IN through
-    * [[pruneForKeys]] (bucket ∧ stats ∧ bloom), one-sided ranges
-    * through footer stats; everything else (Or, Not, null tests,
-    * string matches) is left to the row-level filter the caller
+    * cannot rule out under the one pruning verdict ([[Prune.ofFilters]]:
+    * equality/IN, one-sided ranges, null tests); everything else (Or,
+    * Not, string matches) is left to the row-level filter the caller
     * re-applies — pruning here is a scan reducer, never a row filter,
-    * exactly the parquet footer-pruning contract one level up.
+    * exactly the parquet footer-pruning contract one level up. Filters
+    * no file can satisfy serve the schema'd empty frame.
     */
   def readVersionFiltered(spark: SparkSession, tableDir: String,
                           version: Option[Long],
@@ -6978,51 +6865,9 @@ object Snapshots {
     */
   private[sources] def readVersionFiltered(spark: SparkSession,
       tableDir: String, m: Manifest,
-      filters: Seq[org.apache.spark.sql.sources.Filter]): DataFrame = {
-    import org.apache.spark.sql.sources._
-    // RANGE predicates on decimal literals cannot be compared against
-    // footer stats (the parquet footer records UNSCALED integers for
-    // int-backed decimals, and mayGe/mayLe compare raw values) — they
-    // only filter rows. EQUALITY/IN probes DO prune: [[pruneForKeys]]
-    // compares decimals by their unscaled-long form
-    // ([[statMayContain]]), the footer's own representation.
-    def prunable(v: Any): Boolean = v match {
-      case _: java.math.BigDecimal | _: scala.math.BigDecimal => false
-      case _ => v != null
-    }
-    var keep = m.files
-    filters.foreach {
-      case EqualTo(c, v) if v != null =>
-        keep = pruneForKeys(spark, m, keep, c, Seq(v))
-      case EqualNullSafe(c, v) if v != null =>
-        keep = pruneForKeys(spark, m, keep, c, Seq(v))
-      case In(c, vs) if vs.nonEmpty && vs.forall(_ != null) =>
-        keep = pruneForKeys(spark, m, keep, c, vs.toIndexedSeq)
-      case GreaterThan(c, v) if prunable(v) =>
-        keep = keep.filter(rel => m.stats.get((rel, c)).forall(_.mayGe(v)))
-      case GreaterThanOrEqual(c, v) if prunable(v) =>
-        keep = keep.filter(rel => m.stats.get((rel, c)).forall(_.mayGe(v)))
-      case LessThan(c, v) if prunable(v) =>
-        keep = keep.filter(rel => m.stats.get((rel, c)).forall(_.mayLe(v)))
-      case LessThanOrEqual(c, v) if prunable(v) =>
-        keep = keep.filter(rel => m.stats.get((rel, c)).forall(_.mayLe(v)))
-      // null-count pruning (quality-filter predicates): a file with a
-      // recorded ZERO null count cannot satisfy IS NULL; a file whose
-      // null count equals its row count (all-null) cannot satisfy
-      // IS NOT NULL. Unknown counts keep the file — a scan reducer,
-      // never a row filter
-      case IsNull(c) =>
-        keep = keep.filter(rel => m.nullCounts.get((rel, c)).forall(_ > 0L))
-      case IsNotNull(c) =>
-        keep = keep.filter(rel =>
-          !m.nullCounts.get((rel, c)).contains(m.fileRows(rel)))
-      case _ => () // residual-only: the row filter handles it exactly
-    }
-    // all files pruned ⇒ no row can match; keep one file for the
-    // schema, the re-applied row filter returns empty
-    val keepNE = if (keep.nonEmpty) keep else m.files.take(1)
-    readFiles(spark, tableDir, m, keepNE)
-  }
+      filters: Seq[org.apache.spark.sql.sources.Filter]): DataFrame =
+    readFiles(spark, tableDir, m,
+      prunedFiles(Some(spark), m, Prune.ofFilters(filters), m.files))
 
   /** Re-cluster the latest version into the bucket layout (the
     * bucketed OPTIMIZE): one overwrite rewrite after which EVERY file
@@ -7191,6 +7036,7 @@ object Snapshots {
         "partition dirs — re-cluster via compactBucketed")
     // the unbucketed tail: planning rows without a bucket id
     val entries = liveEntriesCheckpointed(spark, tableDir, base,
+      coverOf(spark, tableDir, base.header.version),
       (r: CkptFile) => r.bucket.isEmpty)
     if (entries.isEmpty) return m.version
     val tail = entries.map(_.file)
@@ -8949,6 +8795,7 @@ object Snapshots {
     val m = base.header
     val min = minBytes
     val entries = liveEntriesCheckpointed(spark, tableDir, base,
+      coverOf(spark, tableDir, base.header.version),
       (r: CkptFile) => r.bytes < min)
     if (entries.size < 2) return m.version
     val small = entries.map(_.file)
@@ -9125,13 +8972,16 @@ object Snapshots {
         f.delete(checkpointDir(tableDir, v), true)
     }
     // crashed checkpoint builders leave `.tmp-*` dirs that no rename
-    // ever claimed — reap them past the same orphan cutoff that
-    // protects in-flight builds (dot-prefixed dirs are invisible to
-    // [[newestCheckpointAtOrBefore]], so nothing served is ever swept
-    // here)
+    // ever claimed, and a torn install or a crashed vacuum leaves a
+    // `ckpt-v*` dir without its sidecar — reap both, at any version,
+    // past the same orphan cutoff that protects in-flight builds
+    // ([[newestCheckpointAtOrBefore]] serves neither, so nothing served
+    // is ever swept here)
     val ckptRoot = new Path(tableDir, "_manifests/checkpoints")
     if (f.exists(ckptRoot)) f.listStatus(ckptRoot).foreach { st =>
-      if (st.getPath.getName.startsWith(".tmp-") &&
+      val n = st.getPath.getName
+      if ((n.startsWith(".tmp-") || (n.startsWith("ckpt-v") &&
+            !f.exists(new Path(st.getPath, CoveredSegsFile)))) &&
           st.getModificationTime < System.currentTimeMillis() - orphanRetainMs)
         f.delete(st.getPath, true)
     }

@@ -62,10 +62,11 @@ object Bridge {
     * lives in the bridge. Unknown shapes yield no hint (prune
     * nothing); NULL literals yield no hint (NULL never
     * equality-matches a stat range meaningfully). Decimal literals
-    * yield EQUALITY/IN hints only — `pruneForKeys` compares those by
+    * yield EQUALITY/IN hints only — the pruning verdict compares those by
     * their unscaled-long form at the column's scale, the footer's own
     * representation — never RANGE hints (mayGe/mayLe compare raw
-    * values against unscaled ints).
+    * values against unscaled ints). Values are external (a date is a
+    * `java.sql.Date`, not its internal day count).
     */
   def prunableConjuncts(c: Column): Seq[(String, String, Seq[Any])] = {
     import org.apache.spark.sql.catalyst.{expressions => ce}
@@ -89,12 +90,17 @@ object Bridge {
           if u.nameParts.length == 1 => Some(u.name)
       case _ => None
     }
+    // catalyst literals hold internal values (dates as day ints,
+    // timestamps as micros); hints carry the external ones, which the
+    // bucket and bloom probes cast back to the column type
+    def external(v: Any, dt: org.apache.spark.sql.types.DataType): Any =
+      org.apache.spark.sql.catalyst.CatalystTypeConverters.convertToScala(v, dt)
     def exVal(e: ce.Expression): Option[Any] = e match {
-      case ce.Literal(v, _) => ok(v)
+      case ce.Literal(v, dt) => ok(external(v, dt))
       case _ => None
     }
     def exValEq(e: ce.Expression): Option[Any] = e match {
-      case ce.Literal(v, _) => okEq(v)
+      case ce.Literal(v, dt) => okEq(external(v, dt))
       case _ => None
     }
     def fromExpr(e: ce.Expression): Seq[(String, String, Seq[Any])] = e match {

@@ -381,4 +381,59 @@ class SqlDmlSpec extends SparkSpec {
     assert(left.where(col("amt") === lit(BigDecimal("150.00"))
       .cast("decimal(9,2)")).count() === 0L)
   }
+
+  test("SQL DELETE on a bloom-indexed DATE column masks exactly the " +
+    "matching rows") {
+    val s = spark
+    import s.implicits._
+    val dir = graft.TempDirs.create("sqldml-datebloom")
+    val day0 = java.time.LocalDate.of(2024, 1, 1)
+    Snapshots.commit((0 until 64).map { i =>
+        (i.toLong, java.sql.Date.valueOf(day0.plusDays(i)))
+      }.toDF("id", "e").repartition(4), dir, "overwrite",
+      bloomColumns = Seq("e"))
+    view("dml_dbl", dir)
+    // SQL literals reach the DML candidate planner as catalyst values
+    // (a date is its day count); its bloom probes must hash the date
+    spark.sql("DELETE FROM dml_dbl WHERE e = DATE '2024-01-15'")
+    view("dml_dbl", dir)
+    spark.sql("DELETE FROM dml_dbl WHERE e IN (DATE '2024-02-20', DATE '2024-03-01')")
+    val left = Snapshots.readVersion(spark, dir).select("id").as[Long]
+      .collect().toSet
+    assert(left === (0L until 64L).toSet -- Set(14L, 50L, 60L))
+  }
+
+  test("bloom probes on a TIMESTAMP column hash the instant, not the JVM " +
+    "zone's wall time: lookups, deleteWhere and SQL DELETE in a session " +
+    "zone apart from the JVM's") {
+    val s = spark
+    import s.implicits._
+    val dir = graft.TempDirs.create("sqldml-tsbloom")
+    val t0 = java.time.Instant.parse("2024-01-01T00:00:00Z")
+    def at(i: Int) = java.sql.Timestamp.from(t0.plusSeconds(3600L * i))
+    Snapshots.commit((0 until 64).map(i => (i.toLong, at(i)))
+      .toDF("id", "t").repartition(4), dir, "overwrite",
+      bloomColumns = Seq("t"))
+    val zone = Seq("America/Los_Angeles", "Asia/Tokyo")
+      .find(_ != java.util.TimeZone.getDefault.getID).get
+    val saved = spark.conf.get("spark.sql.session.timeZone")
+    spark.conf.set("spark.sql.session.timeZone", zone)
+    try {
+      def ids(df: org.apache.spark.sql.DataFrame) =
+        df.select("id").as[Long].collect().toSet
+      assert(ids(Snapshots.readVersionKeys(spark, dir, "t", Seq(at(5)))) ===
+        Set(5L))
+      assert(ids(spark.read.format("graft").load(dir)
+        .where(col("t") === lit(at(6)))) === Set(6L))
+      Snapshots.deleteWhere(spark, dir, col("t") === lit(at(14)))
+      view("dml_tsbl", dir)
+      // 2024-01-02 10:00 UTC as wall time in the session zone
+      val wall = java.time.LocalDateTime.ofInstant(
+        at(34).toInstant, java.time.ZoneId.of(zone))
+        .toString.replace('T', ' ')
+      spark.sql(s"DELETE FROM dml_tsbl WHERE t = TIMESTAMP '$wall'")
+      assert(ids(Snapshots.readVersion(spark, dir)) ===
+        (0L until 64L).toSet -- Set(14L, 34L))
+    } finally spark.conf.set("spark.sql.session.timeZone", saved)
+  }
 }

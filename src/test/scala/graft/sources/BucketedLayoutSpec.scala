@@ -1851,7 +1851,7 @@ class BucketedLayoutSpec extends SparkSpec {
     // …and the planner's per-file maps equal the eager manifest's on
     // the surviving files (decisions-identical, not just row-identical)
     val planned = Snapshots.liveEntriesCheckpointed(spark, dir,
-      Snapshots.parseManifest(spark, dir, v),
+      Snapshots.parseManifest(spark, dir, v), Snapshots.coverOf(spark, dir, v),
       (_: Snapshots.CkptFile) => true)
     assert(planned.map(_.file).toSet === eager.files.toSet)
     assert(planned.flatMap(e => e.bucket.map(e.file -> _)).toMap ===

@@ -67,9 +67,47 @@ class GraftDataSourceSpec extends SparkSpec {
     assert(byKey.inputFiles.length === 1)
     val byBloom = Snapshots.readVersionFiltered(spark, bdir, None,
       Seq(EqualTo("tag", "nope")))
-    assert(byBloom.inputFiles.length === 1) // schema survivor only
+    assert(byBloom.inputFiles.isEmpty) // every file pruned
     assert(spark.read.format("graft").load(bdir)
       .filter(col("id") === 77L).count() === 1L)
+  }
+
+  test("a predicate that misses every file reads no file and serves the " +
+    "schema'd empty frame on every pruned read") {
+    val dir = graft.TempDirs.create("graft-ds-allpruned")
+    Snapshots.commit(frame(0 until 100, "a").coalesce(1), dir, "overwrite",
+      statsColumns = Seq("id"), bucketBy = Some(("id", 4)))
+    Snapshots.commit(frame(100 until 200, "b").coalesce(1), dir, "append",
+      statsColumns = Seq("id"))
+    val schema = Snapshots.readVersion(spark, dir).schema
+    /** The data bytes `df`'s collect reads, and its rows. */
+    def scan(df: org.apache.spark.sql.DataFrame): (Long, Int) = {
+      val bytes = new java.util.concurrent.atomic.AtomicLong
+      val listener = new org.apache.spark.scheduler.SparkListener {
+        override def onTaskEnd(
+            t: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit =
+          Option(t.taskMetrics).foreach(m =>
+            bytes.addAndGet(m.inputMetrics.bytesRead))
+      }
+      spark.sparkContext.addSparkListener(listener)
+      try {
+        val n = df.collect().length
+        Thread.sleep(500) // let the task-end events drain
+        (bytes.get, n)
+      } finally spark.sparkContext.removeSparkListener(listener)
+    }
+    val pruned = Snapshots.readVersionPruned(spark, dir, 1L, "id", 5000L, 6000L)
+    val keys = Snapshots.readVersionKeys(spark, dir, "id", Seq(5000L, 6001L))
+    val viaFormat = spark.read.format("graft").load(dir)
+      .filter(col("id") > 5000L)
+    Seq(pruned, keys).foreach(df => assert(df.inputFiles.isEmpty))
+    Seq(pruned, keys, viaFormat).foreach { df =>
+      assert(df.schema === schema)
+      assert(scan(df) === ((0L, 0)))
+    }
+    // the same reads over a matching predicate do read data
+    assert(scan(spark.read.format("graft").load(dir).filter(col("id") > 150L))
+      ._2 === 49)
   }
 
   test("write path: append/overwrite/ErrorIfExists/Ignore with index options") {

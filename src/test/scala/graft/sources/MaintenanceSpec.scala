@@ -337,6 +337,30 @@ class MaintenanceSpec extends SparkSpec {
     assert(Snapshots.readVersion(spark, dir).count() === 309L)
   }
 
+  test("checkpoint planning resolves its covering checkpoint once: one " +
+    "_covered_segs.txt open per planning call") {
+    val conf = spark.sparkContext.hadoopConfiguration
+    conf.set("fs.graftcount.impl", classOf[CountingLocalFs].getName)
+    val dir = "graftcount:" + graft.TempDirs.create("graft-maint-cover")
+    (0 until 2).foreach { i =>
+      Snapshots.commit(frame(i * 100 until i * 100 + 100, s"f$i").coalesce(1),
+        dir, if (i == 0) "overwrite" else "append", statsColumns = Seq("id"))
+    }
+    val ck = Snapshots.writeMetadataCheckpoint(spark, dir, Some(1L))
+    val sidecar = new org.apache.hadoop.fs.Path(ck, "_covered_segs.txt")
+      .toUri.getPath
+    def opens(): Int = Option(CountingLocalFs.opened.get(sidecar)).fold(0)(_.get)
+    Seq[(Seq[(String, Seq[Any])], Seq[(String, Any, Any)])](
+      (Nil, Nil), (Nil, Seq(("id", 10L, 20L))),
+      (Seq("id" -> Seq(150L)), Nil)).foreach { case (probes, ranges) =>
+      CountingLocalFs.opened.clear()
+      val kept = Snapshots.pruneFilesCheckpointedProbes(spark, dir, Some(1L),
+        probes, ranges)
+      assert(kept.nonEmpty)
+      assert(opens() === 1, s"$probes $ranges opened the sidecar ${opens()}×")
+    }
+  }
+
   test("commitUnique: fresh keys land; dups and replays are refused versionlessly") {
     val dir = freshDir()
     assert(Snapshots.commitUnique(frame(0 until 100, "a"), dir, "id") === 0L)

@@ -232,6 +232,24 @@ class ManifestShardingSpec extends SparkSpec {
       e.getMessage.contains("'removed'"), e.getMessage)
   }
 
+  test("a negative rows= or dvrows= ledger is refused, naming the file " +
+    "and the field") {
+    val dir = freshDir()
+    Snapshots.commit(frame(0 until 10, "a"), dir, "overwrite")
+    val mp = manifestOf(dir, 0L)
+    val lines = linesOf(mp)
+    Seq("rows", "dvrows").foreach { field =>
+      rewrite(mp, lines.map(l =>
+        if (l.startsWith(s"$field=")) s"$field=-1" else l))
+      val e = intercept[IllegalArgumentException](
+        Snapshots.readVersion(spark, dir).count())
+      assert(e.getMessage.contains(mp.toUri.getPath) &&
+        e.getMessage.contains(s"'$field'"), e.getMessage)
+    }
+    rewrite(mp, lines)
+    assert(Snapshots.readVersion(spark, dir).count() === 10L)
+  }
+
   test("a graft-manifest-v1 header is refused, naming the version") {
     val dir = freshDir()
     Snapshots.commit(frame(0 until 10, "a"), dir, "overwrite")
@@ -476,6 +494,19 @@ class ManifestShardingSpec extends SparkSpec {
     val preds: Seq[(String, Any, Any)] = Seq(("id", 12L, 14L))
     assert(Snapshots.pruneFilesCheckpointedProbes(spark, dir, Some(1L), Nil, preds)
       === Snapshots.pruneFiles(m, preds).sorted)
+    // vacuum reaps the sidecar-less dir at the live head; the writer
+    // then builds v1's checkpoint, and the planner serves from it (with
+    // v0's checkpoint gone there is no other to serve from)
+    Snapshots.vacuum(spark, dir, keepFromVersion = 0L, orphanRetainMs = 0L)
+    assert(!torn.exists(), "vacuum must reap the sidecar-less dir")
+    Snapshots.writeMetadataCheckpoint(spark, dir, Some(1L))
+    assert(new java.io.File(torn, "_covered_segs.txt").exists())
+    assert(fsOf(dir).delete(
+      new Path(dir, "_manifests/checkpoints/ckpt-v000000"), true))
+    assert(Snapshots.pruneFilesCheckpointedProbes(spark, dir, Some(1L), Nil, preds)
+      === Snapshots.pruneFiles(m, preds).sorted)
+    assert(Snapshots.pruneFilesCheckpointedProbes(spark, dir, Some(1L), Nil, Nil)
+      === m.files.sorted)
   }
 
   test("checkpoint planning as a Spark job over rows the driver has not " +
@@ -517,7 +548,7 @@ class ManifestShardingSpec extends SparkSpec {
         (r, jobs.get)
       } finally spark.sparkContext.removeSparkListener(listener)
     }
-    plan() // warms the bloom-geometry cache
+    plan() // warms the segment cache
     val (cached, cachedJobs) = withJobs(plan())
     // a new dir mtime is a checkpoint this process did not install: the
     // rows are read back with one Spark job per plan
@@ -526,6 +557,13 @@ class ManifestShardingSpec extends SparkSpec {
     assert(read === cached)
     assert(readJobs === cachedJobs + shapes.size,
       s"jobs: $readJobs read back, $cachedJobs driver-cached")
+    // DML candidate planning over the same rows: its key checks read
+    // blooms inside that one walk job, with no discovery job before it
+    val base = Snapshots.parseManifest(spark, dir, v)
+    val (dml, dmlJobs) = withJobs(Seq(col("tag") === "u7",
+      col("id").isin(42L, 511L)).map(Snapshots.dmlCandidates(spark, dir, base, _).sorted))
+    assert(dml === Seq(cached(3), cached(2)))
+    assert(dmlJobs === 2, s"jobs: $dmlJobs for two DML plans")
     shapes.zip(cached).foreach { case ((ps, rs), got) =>
       assert(got === Snapshots.pruneForProbes(spark, m,
         Snapshots.pruneFiles(m, rs), ps).sorted, s"divergence for $ps $rs")
@@ -606,7 +644,7 @@ class ManifestShardingSpec extends SparkSpec {
       ("tag", Seq("u7", "u33")),
       ("tag", Seq("zz-missing")))            // bloom prunes everything
     probes.foreach { case (key, keys) =>
-      val viaManifest = Snapshots.pruneForKeys(spark, m, m.files, key, keys).sorted
+      val viaManifest = Snapshots.pruneForProbes(spark, m, m.files, Seq(key -> keys)).sorted
       val viaCkpt = Snapshots.pruneFilesCheckpointedProbes(
         spark, dir, Some(v), Seq(key -> keys))
       assert(viaCkpt === viaManifest, s"keys-prune divergence for $key=$keys")
@@ -648,7 +686,7 @@ class ManifestShardingSpec extends SparkSpec {
       .foreach { case (key, keys) =>
         assert(Snapshots.pruneFilesCheckpointedProbes(
           spark, dir, Some(v2), Seq(key -> keys))
-          === Snapshots.pruneForKeys(spark, m2, m2.files, key, keys).sorted,
+          === Snapshots.pruneForProbes(spark, m2, m2.files, Seq(key -> keys)).sorted,
           s"tail keys-prune divergence for $key=$keys")
       }
     val servedTail = Snapshots.readVersionCheckpointedProbes(
@@ -786,7 +824,7 @@ class ManifestShardingSpec extends SparkSpec {
     // the probe prunes: only the middle commit's files can hold 150.00
     // (the r13 anyDecimal bypass kept every file on the stats leg)
     val probe: Seq[Any] = Seq(BigDecimal("150.00"))
-    val viaManifest = Snapshots.pruneForKeys(spark, m, m.files, "amt", probe)
+    val viaManifest = Snapshots.pruneForProbes(spark, m, m.files, Seq("amt" -> probe))
     val viaCkpt = Snapshots.pruneFilesCheckpointedProbes(
       spark, dir, Some(v), Seq("amt" -> probe))
     assert(viaCkpt === viaManifest.sorted, "decimal decisions must match")
@@ -800,7 +838,7 @@ class ManifestShardingSpec extends SparkSpec {
     val odd: Seq[Any] = Seq(BigDecimal("150.005"))
     assert(Snapshots.pruneFilesCheckpointedProbes(spark, dir, Some(v),
         Seq("amt" -> odd))
-      === Snapshots.pruneForKeys(spark, m, m.files, "amt", odd).sorted)
+      === Snapshots.pruneForProbes(spark, m, m.files, Seq("amt" -> odd)).sorted)
     assert(Snapshots.readVersionCheckpointedProbes(
       spark, dir, Seq("amt" -> odd), Some(v)).count() === 0L)
     // SCALE-growing widening: old files' unscaled stats are re-based —
@@ -815,7 +853,7 @@ class ManifestShardingSpec extends SparkSpec {
     val probe2: Seq[Any] = Seq(BigDecimal("150.000"))
     assert(Snapshots.pruneFilesCheckpointedProbes(
         spark, dir, Some(v2), Seq("amt" -> probe2))
-      === Snapshots.pruneForKeys(spark, m2, m2.files, "amt", probe2).sorted)
+      === Snapshots.pruneForProbes(spark, m2, m2.files, Seq("amt" -> probe2)).sorted)
     val afterWiden = Snapshots.readVersionCheckpointedProbes(
       spark, dir, Seq("amt" -> probe2), Some(v2))
     assert(afterWiden.count() === 1L,
@@ -844,7 +882,7 @@ class ManifestShardingSpec extends SparkSpec {
     val narrowProbe: Seq[Any] = Seq(BigDecimal("450.000"))
     assert(Snapshots.pruneFilesCheckpointedProbes(
         spark, dir, Some(v3), Seq("amt" -> narrowProbe))
-      === Snapshots.pruneForKeys(spark, m3, m3.files, "amt", narrowProbe)
+      === Snapshots.pruneForProbes(spark, m3, m3.files, Seq("amt" -> narrowProbe))
         .sorted)
     assert(Snapshots.readVersionCheckpointedProbes(
       spark, dir, Seq("amt" -> narrowProbe), Some(v3)).count() === 1L,
@@ -896,7 +934,7 @@ class ManifestShardingSpec extends SparkSpec {
     // compactSmall's candidate verdict over the planning walk, which
     // plans through the covering checkpoint here
     val got = Snapshots.liveEntriesCheckpointed(spark, dir,
-        Snapshots.parseManifest(spark, dir, v),
+        Snapshots.parseManifest(spark, dir, v), Snapshots.coverOf(spark, dir, v),
         (r: Snapshots.CkptFile) => r.bytes < minBytes)
       .map(e => e.file -> e.bytes).toMap
     assert(got.keySet === expected,
@@ -942,7 +980,7 @@ class ManifestShardingSpec extends SparkSpec {
     // five keys inside slab 1's v-range
     val probeV: Seq[Any] = Seq(100L, 110L, 120L, 130L, 140L).map(_ * 10)
     // under budget (default 1000): the v-stats really prune
-    val under = Snapshots.pruneForKeys(spark, m, m.files, "v", probeV)
+    val under = Snapshots.pruneForProbes(spark, m, m.files, Seq("v" -> probeV))
     assert(under.size < m.files.size, "stats must prune under budget")
     assert(Snapshots.pruneFilesCheckpointedProbes(spark, dir, Some(v0),
       Seq("v" -> probeV)) === under.sorted)
@@ -950,7 +988,7 @@ class ManifestShardingSpec extends SparkSpec {
     try {
       // over budget: v is unbucketed, so its conjunct keeps EVERY file
       // (conservative) — on both planners, identically
-      val over = Snapshots.pruneForKeys(spark, m, m.files, "v", probeV)
+      val over = Snapshots.pruneForProbes(spark, m, m.files, Seq("v" -> probeV))
       assert(over === m.files,
         "over-budget stats/bloom legs must keep every file")
       assert(Snapshots.pruneFilesCheckpointedProbes(spark, dir, Some(v0),
@@ -959,11 +997,11 @@ class ManifestShardingSpec extends SparkSpec {
       // the bucket key prunes exactly what it prunes under budget
       // (k carries no stats/bloom here, so under-budget IS bucket-only)
       val probeK: Seq[Any] = Seq(0L, 25L, 150L, 275L, 399L)
-      val kOver = Snapshots.pruneForKeys(spark, m, m.files, "k", probeK)
+      val kOver = Snapshots.pruneForProbes(spark, m, m.files, Seq("k" -> probeK))
       assert(Snapshots.pruneFilesCheckpointedProbes(spark, dir, Some(v0),
         Seq("k" -> probeK)) === kOver.sorted)
       spark.conf.unset("graft.probe.maxKeys")
-      val kUnder = Snapshots.pruneForKeys(spark, m, m.files, "k", probeK)
+      val kUnder = Snapshots.pruneForProbes(spark, m, m.files, Seq("k" -> probeK))
       spark.conf.set("graft.probe.maxKeys", "4")
       assert(kOver === kUnder,
         "bucket pruning must be budget-invariant")
@@ -1006,7 +1044,7 @@ class ManifestShardingSpec extends SparkSpec {
     def pruned(dir: String): (Seq[String], Int) = {
       val m = Snapshots.readManifest(spark, dir,
         Snapshots.latestVersion(spark, dir).get)
-      val kept = Snapshots.pruneForKeys(spark, m, m.files, "amt", probe)
+      val kept = Snapshots.pruneForProbes(spark, m, m.files, Seq("amt" -> probe))
       Snapshots.writeMetadataCheckpoint(spark, dir)
       val served =
         Snapshots.readVersionCheckpointedProbes(spark, dir, Seq("amt" -> probe))
@@ -1077,7 +1115,7 @@ class ManifestShardingSpec extends SparkSpec {
         val viaCkpt = Snapshots.pruneFilesCheckpointedProbes(
           spark, dir, Some(v), Seq(key -> keys))
         val viaManifest =
-          Snapshots.pruneForKeys(spark, m, m.files, key, keys).sorted
+          Snapshots.pruneForProbes(spark, m, m.files, Seq(key -> keys)).sorted
         assert(viaCkpt === viaManifest,
           s"trial=$trial bucketed=$bucketed bloomed=$bloomed $key=$keys")
       }

@@ -189,8 +189,7 @@ class PartitionedTableSpec extends SparkSpec {
     // frame); a range on the stats column narrows; an unprunable
     // shape keeps everything — with or without a covering checkpoint
     def pruned(p: org.apache.spark.sql.Column) =
-      Snapshots.dmlCandidates(spark, dir, Snapshots.parseManifest(spark, dir, 0L),
-        p, "test")
+      Snapshots.dmlCandidates(spark, dir, Snapshots.parseManifest(spark, dir, 0L), p)
     def checkPlanner(): Seq[String] = {
       val onlyF = pruned(col("o_orderstatus") === "F")
       assert(onlyF.nonEmpty && onlyF.size < total)

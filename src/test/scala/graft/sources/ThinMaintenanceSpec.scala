@@ -48,7 +48,7 @@ class ThinMaintenanceSpec extends SparkSpec {
                          rels: Set[String]): Set[String] = {
     val all = Snapshots.liveEntriesCheckpointed(spark, dir,
       Snapshots.parseManifest(spark, dir, version),
-      (_: Snapshots.CkptFile) => true)
+      Snapshots.coverOf(spark, dir, version), (_: Snapshots.CkptFile) => true)
     all.filter(e => rels.contains(e.file)).map(_.seg).toSet
   }
 
